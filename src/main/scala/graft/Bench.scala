@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     messages): produce avro/json to files, consume back in
   *     E2E_PARSE and TRANSPORTE modes; reported as msg/s next to the
   *     reference's 6 253.95 msg/s README number.
-  *  2. queries — headline relational + llmops queries on
+  *  2. queries — every `SparkEntry.defs` entry, in declared order, on
   *     SPARK_GRAFT_SF_DIR, each materialized through the noop sink
   *     (full execution, zero sink cost — `.count()` would let Catalyst
   *     prune the plan to a metadata scan).
@@ -92,7 +92,6 @@ object Bench {
   private def timeEntry(spark: SparkSession, passes: Int)(
       go: () => Unit): (Timing, EntryStats) = {
     val (memStart, diskStart) = storageBytes(spark)
-    val snapStart = cacheMissSnapshot()
     val artStart = artifactSnapshot()
     val gcStart = gcMillis()
     val loadStart = load1()
@@ -102,7 +101,6 @@ object Bench {
     val (evStart, _) = EvictionClock.snapshot()
     val (trStart, tcStart) = TaskClock.snapshot()
     val warm = time(go())
-    val snapWarm = cacheMissSnapshot()
     val artWarm = artifactSnapshot()
     val gcWarm = gcMillis()
     val rbWarm = readBytes()
@@ -138,7 +136,6 @@ object Bench {
       retries += 1
     }
     val timed = passData.map(_._1)
-    val snapTimed = cacheMissSnapshot()
     val artTimed = artifactSnapshot()
     val gcTimed = gcMillis()
     val rbTimed = readBytes()
@@ -148,8 +145,6 @@ object Bench {
     val probeEnd = probeMs()
     val loadEnd = load1()
     val stealEnd = stealJiffies()
-    val warmM = missDelta(snapStart, snapWarm)
-    val timedM = missDelta(snapWarm, snapTimed)
     val artsWarm = artifactDelta(artStart, artWarm)
     val artsTimed = artifactDelta(artWarm, artTimed)
     val stealAll =
@@ -161,7 +156,7 @@ object Bench {
     val rebuildSecTimed = artsTimed.map(_.buildSec).sum
     val st = EntryStats(memStart, diskStart,
       (gcWarm - gcStart) / 1000.0, (gcTimed - gcWarm) / 1000.0,
-      warmM, timedM, loadStart, loadEnd, stealAll,
+      loadStart, loadEnd, stealAll,
       probeStart, probeMid, probeEnd,
       ioDelta(rbStart, rbWarm), ioDelta(rbWarm, rbTimed),
       (trWarm - trStart) / 1e3, (trTimed - trWarm) / 1e3,
@@ -178,41 +173,12 @@ object Bench {
     (Timing(warm, timed), st)
   }
 
-  /** Per-cache miss counters by short name — the round-7 verdict's
-    * ask: run-level booleans were too coarse to say WHICH artifact a
-    * slow entry rebuilt (q92's 12.9 s driver anomaly was undiagnosable
-    * from `artifact_cache_hit: true` alone). Every entry's detail now
-    * carries its own warm/timed miss deltas from this snapshot. */
-  private def cacheMissSnapshot(): Map[String, Long] = Map(
-    "shingle" -> graft.llmops.TextOps.shingleCacheStats._2,
-    "shingleDf" -> graft.llmops.TextOps.dfShingleCacheStats._2,
-    "label" -> graft.llmops.TextOps.labelCacheStats._2,
-    "sig" -> graft.llmops.TextOps.sigCacheStats._2,
-    "pair" -> graft.llmops.TextOps.pairCacheStats._2,
-    "neardup" -> graft.llmops.TextOps.neardupCacheStats._2,
-    "pairCount" -> graft.llmops.TextOps.pairCountCacheStats._2,
-    "incrNear" -> graft.llmops.TextOps.incrNearCacheStats._2,
-    "bpe" -> graft.llmops.TextOps.bpeCacheStats._2,
-    "dupGram" -> graft.llmops.TextOps.dupGramCacheStats._2,
-    "q51hot" -> graft.queries.Queries.q51HotCacheStats._2,
-    "sweep" -> graft.queries.RelOps.sweepCacheStats._2,
-    "auc" -> graft.queries.RelOps.aucCacheStats._2,
-    "codebook" -> graft.llmops.VectorOps.codebookCacheStats._2,
-    "cosPair" -> graft.llmops.VectorOps.cosPairCacheStats._2,
-    "exactTopk" -> graft.llmops.VectorOps.exactTopkCacheStats._2,
-    "codeTopk" -> graft.llmops.VectorOps.codeTopkCacheStats._2,
-    "lshPair" -> graft.llmops.VectorOps.lshPairCacheStats._2,
-    "ivfCert" -> graft.llmops.VectorOps.ivfCertCacheStats._2)
-
-  /** Round-14 verdict #1: the per-NAME miss counters above say an
-    * artifact rebuilt, but not what the rebuild COST — q220's min grew
-    * 41% (320→451 task-s) and q53's 5× with no code change to either,
-    * and both classified "clean" because the run-wide hit flags can't
-    * land a shared artifact's rebuild on the entry that paid for it.
-    * The PlanCache registry snapshot carries (hits, misses, cumulative
-    * build seconds) for EVERY cache — including ones the hand-wired
-    * short-name list above never knew (pack_parted, bucketed_tables,
-    * km_codes…) — and the per-entry deltas below become
+  /** Round-14 verdict #1: a run-wide hit flag cannot land a shared
+    * artifact's rebuild on the entry that paid for it (q220's min grew
+    * 41%, 320→451 task-s, and q53's 5× with no code change to either,
+    * and both classified "clean"). The PlanCache registry snapshot
+    * carries (hits, misses, cumulative build seconds) for EVERY
+    * registered cache, and the per-entry deltas below become
     * `{built, hit, build_sec}` rows in the bench detail. */
   private def artifactSnapshot(): Map[String, (Long, Long, Double, Long)] =
     graft.operators.PlanCache.allStats
@@ -287,8 +253,6 @@ object Bench {
       diskStartBytes: Long,
       gcWarmSec: Double,
       gcTimedSec: Double,
-      warmMisses: Map[String, Long],
-      timedMisses: Map[String, Long],
       load1Start: Double,
       load1End: Double,
       stealSec: Double,
@@ -521,12 +485,6 @@ object Bench {
       if (f.length > 8) f(8).toLong else -1L
     } catch { case _: Exception => -1L }
 
-  private def missDelta(before: Map[String, Long],
-      after: Map[String, Long]): Map[String, Long] =
-    after.collect { case (k, v) if v - before.getOrElse(k, 0L) > 0 =>
-      k -> (v - before.getOrElse(k, 0L))
-    }
-
   /** Storage-layer observability for the bench tail (round-6 verdict
     * #1: the suite now persists many artifacts across the whole run —
     * pair graphs, signatures, codebooks, exact top-k — and regressions
@@ -547,8 +505,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val cpus = GraftSession.defaultCores
     val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ >= 1).getOrElse(3)
     val spark = GraftSession.builder("graft-bench", cores = cpus).getOrCreate()
@@ -649,15 +606,15 @@ object Bench {
       serdeRuns.foreach { case (name, _) =>
         results(name) = Timing(serdeWarm(name), serdeTimed(name))
       }
-      flush(spark, results, stats, passes, serdePasses, 0L, 0L, 0L, conf, sfDir,
-        cpus, partial = true)
+      flush(spark, results, stats, passes, serdePasses, conf, sfDir, cpus,
+        partial = true)
     }
     val serdeLoadEnd = load1()
     serdeRuns.foreach { case (name, _) =>
       val timed = serdeTimed(name)
       val stealVals = serdeSteal(name).filter(_ >= 0)
       val stealSum = if (stealVals.isEmpty) -1.0 else stealVals.sum
-      stats(name) = EntryStats(0L, 0L, -1.0, -1.0, Map.empty, Map.empty,
+      stats(name) = EntryStats(0L, 0L, -1.0, -1.0,
         serdeLoadStart, serdeLoadEnd, stealSum,
         -1.0, serdeProbeMid, serdeProbeMax, -1L, -1L,
         -1.0, serdeRun(name).sum, -1.0, serdeCpu(name).sum,
@@ -691,176 +648,30 @@ object Bench {
         case e: Throwable =>
           System.err.println(s"[bench] codec $codec failed: ${e.getMessage}")
       }
-      flush(spark, results, stats, passes, serdePasses, 0L, 0L, 0L, conf, sfDir,
-        cpus, partial = true)
+      flush(spark, results, stats, passes, serdePasses, conf, sfDir, cpus,
+        partial = true)
     }
 
-    // ---- phase 2: headline queries at the SF dir
-    val headline = Seq(
-      "q10_pricing_summary", "q11_revenue_nation", "q12_top_customers",
-      "q13_window_orders", "q17_distinct", "q20_latest_by_key", "q21_tumbling",
-      "q30_textstats", "q35_jaccard_pairs", "q37_neardup_lsh", "q38_simhash",
-      "q39_neardup_capped", "q40_cosine_topk", "q41_ann_lsh", "q43_cos_neardup",
-      "q45_media_meta", "q50_bucketed_join", "q53_simhash_neardup",
-      // round-2 operators, added so r3+ regressions are visible
-      "q55_vocab_topk", "q56_seq_pack", "q57_stratified_sample",
-      "q59_decontaminate", "q60_partition_pruning", "sq1_stream_tumbling",
-      // round-3 operators
-      "q48_rolling_hash", "q62_repetition", "q63_chunk_overlap",
-      "sq4_stream_sliding", "q64_lm_score", "q65_trunc_fidelity",
-      "q66_scene_cuts", "q67_dedup_clusters", "sq5_stream_enrich",
-      "q68_mix_weights", "q69_modality_agreement", "q70_bpe_merges",
-      "q71_bpe_tokenize",
-      // round-4: the cheap previously-uncovered entries (verdict #5 —
-      // regressions in them were invisible) + the new capped LM
-      "q42_label_centroids", "q46_frame_sample", "q52_sketches",
-      "q54_frame_features", "q58_embed_quantize", "q61_ivf_recall",
-      "sq2_stream_dedup", "sq3_stream_join", "q72_lm_score_capped",
-      // round-5 operators
-      "q73_bpe_exhausted", "q74_kmeans_codebook", "q75_pagerank",
-      "q76_zorder_pruned", "q77_dup_ngrams", "q78_semdedup",
-      "q79_dedup_survivors", "q80_cms_topk", "q81_bm25",
-      // round-5 second batch: funnel, quota, PQ/ADC, streaming sessions
-      "q82_funnel", "q83_source_quota", "q84_pq_adc_recall",
-      "sq6_sessionize", "q85_audio_energy", "q86_thumbnail",
-      // round-6: the 26 previously-untimed entries (round-5 verdict #2
-      // — regressions in them were invisible; all individually cheap)
-      // + the new EventTimeTimeout sessionizer
-      "q01_metrics", "q02_por_particao", "q03_warmup", "q04_transporte",
-      "q05_tail_scan", "q06_rollup_formato", "q10_pricing_sql",
-      "q14_rollup_orders", "q15_setops", "q16_semi_anti", "q18_asof_join",
-      "q19_cube_orders", "q22_sessionize", "q24_range_join",
-      "q25_grouping_sets", "q26_pivot_events", "q27_percentiles",
-      "q31_langid", "q32_quality", "q33_fingerprint", "q34_exact_dedup",
-      "q36_minhash_sig", "q44_ivf_topk", "q47_ann_recall",
-      "q49_confluent_wire", "q51_salted_join", "sq7_sessionize_timeout",
-      "q87_bloom_decontaminate",
-      // round-7 operators
-      "q88_containment", "q89_ivfpq_recall", "sq8_stream_sketch",
-      "q90_source_overlap", "q91_vocab_coverage", "q92_incremental_dedup",
-      "q93_pmi_collocations", "sq9_stream_incr_dedup", "q94_quality_sample",
-      "q95_pii_redact", "q96_editdist_verify",
-      // round-8 operators
-      "q97_retention_cohorts", "q98_transitions", "q99_blocklist_filter",
-      "q100_zipf_slope", "q101_phrase_search",
-      // round-9 operators
-      "q102_label_separation", "q103_winnowing", "q104_dedup_report",
-      "q105_image_phash", "q106_reconcile", "sq10_stream_dedup_ttl",
-      // round-10 operators
-      "q107_span_dedup", "q108_gopher_rules", "q109_jl_projection",
-      "q110_token_entropy", "sq11_stream_left_join",
-      "q111_temperature_mix", "q112_user_anomaly", "sq12_stream_rollup",
-      // round-8 second wave
-      "q113_bloom_join", "q114_gapfill_locf", "q115_rolling_peak",
-      "q116_triangles", "q117_skyline", "q118_fuzzy_join",
-      "q119_hll_incremental", "sq13_stream_profile",
-      "q120_scd2", "q121_table_checksum", "q122_ab_test",
-      "q123_interval_peak", "sq14_foreach_sink", "q124_json_extract",
-      "q125_confusion_matrix", "q126_roc_auc",
-      "q127_ks_drift", "q128_mutual_info",
-      "q129_user_trend", "q130_changepoint",
-      "q131_rollup_cascade", "q132_pit_join",
-      "q133_hierarchy", "q134_lateral_topk",
-      "q135_profile", "q136_benford", "q137_avro_evolution",
-      "sq15_stream_timer_session", "sq16_stream_lastn",
-      "sq17_stream_type_counts", "q138_prefix_jaccard",
-      // round-9 (continuous-build round 9) operators
-      "q139_histogram", "q140_winsorize", "q141_itemsets",
-      "q142_unpivot", "q143_notin_nulls", "q144_asof_tolerance",
-      "q145_ivm_view", "q146_bfs_paths",
-      "sq18_stream_join_chain", "q147_cluster_split",
-      "q148_pps_sample", "q149_skew_report", "q150_equidepth_hist",
-      "q151_cdc_apply", "q152_embed_audit", "q153_graph_profile",
-      "q154_multitouch", "q155_bottomk_quantile",
-      "q156_observed_metrics", "q157_dynamic_overwrite",
-      "q158_label_prop", "sq19_late_data",
-      "q159_pipe_syntax", "q160_variant_shred", "q161_collation",
-      "q162_param_sql", "q163_window_zoo", "q164_setops_all",
-      "q165_paginate", "q166_group_by_all", "sq20_update_mode",
-      "q167_chunk_manifest", "q168_format_roundtrip", "q169_merge_schema",
-      "q170_join_hints", "q171_hof_zoo", "q172_calendar_zoo",
-      "q173_corpus_diff", "q174_token_budget_select", "q175_psi_drift",
-      "q176_bottomk_sample", "q177_crawl_novelty", "sq21_stream_psi_monitor",
-      "q178_lr_quality", "q179_auc_midrank", "q180_calibration",
-      "q181_epoch_alloc", "q182_train_shuffle", "q183_preference_pairs",
-      "q184_hard_negatives", "q185_k_anonymity", "q186_span_corruption",
-      "q187_soft_dedup_weights", "q188_dsir_weights",
-      "q189_rank_agreement", "q190_retention_sweep",
-      "q191_rrf_fusion", "q192_margin_align", "q193_neighbor_jaccard",
-      "q194_mmr_diversify", "q195_silhouette", "q196_code_switch",
-      "q197_semantic_decon", "q198_ann_rank_eval", "q199_embed_drift",
-      "q200_cdc_chunks", "q201_assortativity",
-      "q202_source_sketch_jaccard", "q203_shuffle_quality",
-      "q204_context_pack", "q205_embed_coverage",
-      "q206_source_concentration", "q207_labeler_kappa",
-      "q208_marginal_novelty", "q209_cohort_retention",
-      "q210_funnel_steps", "q211_event_gaps",
-      // round-12 operators
-      "q212_hamming_topk", "q213_lsh_calibration",
-      "q214_weighted_jaccard", "sq22_stream_neardup_gate",
-      "q215_probe_sweep", "q216_dedup_sweep", "q217_pack_sweep",
-      // round-13 operators
-      "q218_mih_topk", "q219_source_datacard", "q220_lsh_geometry_sweep",
-      "sq23_stream_anomaly", "q221_semdedup_sweep", "q222_sql_udf",
-      "q223_approx_quantile_cert", "q224_join_cardinality",
-      "q225_attribution_sweep", "q226_cluster_quality",
-      // round-14 operators
-      "q227_split_survivors", "q228_template_coverage", "q229_split_leakage",
-      "q230_embedding_outliers", "q231_tokenizer_fertility",
-      "q232_phash_neardup", "sq24_stream_distinct", "q233_rfm_segments",
-      "q234_ivf_balance", "sq25_session_window", "q235_exec_immediate",
-      "q236_sql_script", "q237_sql_table_fn", "q238_rrf_sweep",
-      // round-15 operators
-      "q239_ivf_add_batch", "q240_bm25_staleness", "q241_knn_hubness",
-      "q242_codebook_sweep", "q243_exact_topk_blocked",
-      "q244_state_inspect",
-      // round-15 second batch
-      "q245_kcore", "q246_l_diversity", "q247_seasonal_residuals",
-      "q248_compaction_bins", "q249_audio_segments",
-      "sq26_stream_full_outer", "q250_tfidf_terms", "q251_salt_planner",
-      "q252_noised_release", "q253_listagg", "q254_approx_topk_cert")
-    // shingle-index misses during TIMED passes only (warm passes are
-    // expected to build it once per session+dir)
-    var timedIndexMisses = 0L
-    var timedLabelMisses = 0L
-    var timedArtifactMisses = 0L
-    // optional inter-entry settle (round-7 verdict #4: driver-run
-    // entries showed timed > warm variance consistent with GC or box
-    // co-scheduling; a short pause decorrelates an entry's timed
-    // passes from its predecessor's allocation burst). Default off —
-    // the per-entry gc/miss telemetry is the primary diagnostic.
-    val settleMs = sys.env.get("SPARK_GRAFT_BENCH_SETTLE_MS")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption).filter(_ > 0)
+    // ---- phase 2: every registered query at the SF dir, in declared order
     // optional comma-separated entry filter (the Verify
     // SPARK_GRAFT_ONLY counterpart) for local iteration on a few
     // changed entries; unset — the driver's path — times everything
     val benchOnly = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    headline.filter(n => benchOnly.forall(_.contains(n))).foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[bench] unknown headline query: $name")
-        case Some(fn) =>
-          settleMs.foreach(Thread.sleep)
-          // per-query isolation: one failure must not lose the run
-          try {
-            val (t, st) = timeEntry(spark, passes)(
-              () => run(fn(spark, sfDir)))
-            timedIndexMisses += st.timedMisses.getOrElse("shingle", 0L)
-            timedLabelMisses += st.timedMisses.getOrElse("label", 0L)
-            timedArtifactMisses +=
-              (st.timedMisses - "shingle" - "label").values.sum
-            results(name) = t
-            stats(name) = st
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              results(name) = Timing(-1.0, Seq.empty)
-          }
-          // flush after EVERY entry: a killed/timed-out run still
-          // leaves a parseable partial artifact at the well-known path
-          flush(spark, results, stats, passes, serdePasses, timedIndexMisses,
-            timedLabelMisses, timedArtifactMisses, conf, sfDir, cpus, partial = true)
+    SparkEntry.defs.filter(d => benchOnly.forall(_.contains(d.name))).foreach { d =>
+      // per-query isolation: one failure must not lose the run
+      try {
+        val (t, st) = timeEntry(spark, passes)(() => run(d.run(spark, sfDir)))
+        results(d.name) = t
+        stats(d.name) = st
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] ${d.name} failed: ${e.getMessage}")
+          results(d.name) = Timing(-1.0, Seq.empty)
       }
+      // flush after EVERY entry: a killed/timed-out run still
+      // leaves a parseable partial artifact at the well-known path
+      flush(spark, results, stats, passes, serdePasses, conf, sfDir, cpus, partial = true)
     }
     // ---- recheck phase (round-9 verdict #1: six entries regressed
     // ≥2× on unchanged code with clean gc/miss telemetry; hypothesis
@@ -891,8 +702,7 @@ object Bench {
       }
     }
     val (compactLine, _) =
-      flush(spark, results, stats, passes, serdePasses, timedIndexMisses,
-        timedLabelMisses, timedArtifactMisses, conf, sfDir, cpus,
+      flush(spark, results, stats, passes, serdePasses, conf, sfDir, cpus,
         partial = false, recheck = recheck)
     // stdout carries the COMPACT line only: the full line (detail,
     // mins) grew past what the driver's log scrape windows (BENCH_r04
@@ -964,14 +774,10 @@ object Bench {
 
   private def flush(spark: SparkSession, results: collection.Map[String, Timing],
       stats: collection.Map[String, EntryStats],
-      passes: Int, serdePasses: Int, timedIndexMisses: Long, timedLabelMisses: Long,
-      timedArtifactMisses: Long, conf: EngineConf, sfDir: String,
+      passes: Int, serdePasses: Int, conf: EngineConf, sfDir: String,
       cpus: Int, partial: Boolean,
       recheck: collection.Map[String, Timing] = Map.empty): (String, String) = {
     def num(v: Double, places: Int): String = jnum(v, places)
-    def missJson(m: Map[String, Long]): String =
-      m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }
-        .mkString("{", ",", "}")
     // round-14 verdict #1: per-entry artifact rows — a rebuilt shared
     // artifact lands (with its measured build seconds) on the entry
     // whose window paid for it; empty windows are omitted so the
@@ -999,13 +805,8 @@ object Bench {
       val timed = t.timed.map(num(_, 3)).mkString("[", ",", "]")
       // per-entry telemetry (round-7 verdict #1/#4): GC seconds spent
       // during the warm and timed passes, persisted storage at entry
-      // start, and named artifact-cache misses — empty miss maps are
-      // omitted so the steady state reads clean
+      // start, and the artifact rows of both windows
       val extra = stats.get(k).map { st =>
-        val wm = if (st.warmMisses.isEmpty) ""
-                 else s""","warm_misses":${missJson(st.warmMisses)}"""
-        val tm = if (st.timedMisses.isEmpty) ""
-                 else s""","timed_misses":${missJson(st.timedMisses)}"""
         s""","gc_warm_sec":${num(st.gcWarmSec, 3)}""" +
           s""","gc_timed_sec":${num(st.gcTimedSec, 3)}""" +
           s""","mem_start":${st.memStartBytes},"disk_start":${st.diskStartBytes}""" +
@@ -1037,8 +838,7 @@ object Bench {
             s""","retry_passes":${st.retryPasses}""") +
           s""","cause_class":"${st.causeClass}"""" +
           artJson("artifacts_warm", st.artifactsWarm) +
-          artJson("artifacts_timed", st.artifactsTimed) +
-          wm + tm
+          artJson("artifacts_timed", st.artifactsTimed)
       }.getOrElse("")
       s""""$k":{"warm":${num(t.warm, 3)},"min":${num(t.min, 3)},""" +
         s""""median":${num(t.median, 3)},"timed":$timed$extra}"""
@@ -1048,6 +848,12 @@ object Bench {
     val qmedians = medians.map { case (k, v) => s""""$k":${num(v, 3)}""" }
       .mkString("{", ",", "}")
     val (persistedMem, persistedDisk) = storageBytes(spark)
+    // run-level hit flags: true iff no entry's TIMED window rebuilt the
+    // named artifact (warm passes are expected to build each once per
+    // session and dir); artifact_cache_hit covers every other cache
+    val timedBuilds =
+      stats.values.flatMap(_.artifactsTimed).filter(_.built > 0).map(_.name).toSet
+    val ownFlagCaches = Set("shingle_index", "cluster_labels")
     // end-of-run sentinel retimes (empty until the recheck phase runs;
     // small, so it rides in BOTH the compact and full lines): per
     // sentinel `[min, mid_run_min]` — ratio ≈ 1 exonerates cumulative
@@ -1064,9 +870,10 @@ object Bench {
       // their own count (round-4 ADVICE: one global count
       // misdescribed the serde detail arrays)
       s""""timed_passes":$passes,"serde_timed_passes":$serdePasses,""" +
-        s""""shingle_index_hit":${timedIndexMisses == 0},""" +
-        s""""label_cache_hit":${timedLabelMisses == 0},""" +
-        s""""artifact_cache_hit":${timedArtifactMisses == 0},"partial":$partial,""" +
+        s""""shingle_index_hit":${!timedBuilds("shingle_index")},""" +
+        s""""label_cache_hit":${!timedBuilds("cluster_labels")},""" +
+        s""""artifact_cache_hit":${(timedBuilds -- ownFlagCaches).isEmpty},""" +
+        s""""partial":$partial,""" +
         s""""persisted_mem_bytes":$persistedMem,""" +
         s""""persisted_disk_bytes":$persistedDisk,""" +
         s""""probe_baseline_ms":${num(probeBaselineMs, 2)},""" +

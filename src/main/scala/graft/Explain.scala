@@ -13,16 +13,12 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = GraftSession.builder("graft-explain", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate("graft-explain")
     // ad-hoc conf experiments: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k.trim, v.trim)
     })
-    GraftSession.registerFunctions(spark)
     val fn = SparkEntry.queries(name)
     val df = fn(spark, sfDir)
     println(s"==== $name @ $sfDir ====")

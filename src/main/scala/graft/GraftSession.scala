@@ -36,9 +36,17 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
-  def defaultCores: Int =
-    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
+  /** Local parallelism: `SPARK_GRAFT_CPUS` if set, else every core. */
+  def defaultCores: Int = parseCores(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** A set value that is not a whole number >= 1 fails fast with a
+    * message naming the variable. */
+  private[graft] def parseCores(raw: Option[String]): Int = raw match {
+    case None => Runtime.getRuntime.availableProcessors()
+    case Some(v) => v.trim.toIntOption.filter(_ >= 1).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS='$v' is not an integer >= 1"))
+  }
 
   def getOrCreate(appName: String = "graft"): SparkSession = {
     val s = builder(appName).getOrCreate()

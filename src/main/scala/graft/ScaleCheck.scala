@@ -475,9 +475,7 @@ object ScaleCheck {
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_scale10")
     val ops = args.headOption.map(_.split(",").map(_.trim).toSeq)
       .getOrElse(DefaultOps)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = GraftSession.builder("graft-scale", cores = cpus).getOrCreate()
+    val spark = GraftSession.builder("graft-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(out).mkdirs()
     materialize(spark, base, out)

@@ -250,9 +250,7 @@ object ScaleSweep {
     val passes = sys.env.get("SPARK_GRAFT_SWEEP_PASSES")
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
       .filter(_ >= 1).getOrElse(2)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = GraftSession.builder("graft-sweep", cores = cpus).getOrCreate()
+    val spark = GraftSession.builder("graft-sweep").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // missing rungs materialize from the rung below them (idempotent):

@@ -5,103 +5,29 @@ import graft.queries.{MiningOps, PipelineOps, Queries, RelOps, SqlSurfaceOps}
 import graft.streaming.StreamOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** One registered operator: its name, its DataFrame pipeline over an
+  * sfDir, and the equivalent ANSI SQL that DuckDB runs over the same
+  * parquet tables as its oracle. */
+final case class QueryDef(
+    name: String,
+    run: (SparkSession, String) => DataFrame,
+    oracleSql: String)
+
+/** The query registry — see SURVEY.md §7. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Queries.q11RevenueNation(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2.
-    * sq1 runs as a REAL streaming query (AvailableNow → memory sink);
-    * its oracle is the batch SQL — streaming/batch equivalence is the
-    * check. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.all ++ RelOps.all ++ MiningOps.all ++ SqlSurfaceOps.all ++ PipelineOps.all ++ TextOps.all ++ VectorOps.all ++ MultimodalOps.all ++ Map(
-      "sq1_stream_tumbling" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq1StreamTumbling(s, dir)),
-      "sq2_stream_dedup" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq2StreamDedup(s, dir)),
-      "sq3_stream_join" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq3StreamJoin(s, dir)),
-      "sq4_stream_sliding" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq4StreamSliding(s, dir)),
-      "sq5_stream_enrich" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq5StreamEnrich(s, dir)),
-      "sq6_sessionize" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq6Sessionize(s, dir)),
-      "sq7_sessionize_timeout" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq7SessionizeTimeout(s, dir)),
-      "sq8_stream_sketch" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq8StreamSketch(s, dir)),
-      "sq9_stream_incr_dedup" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq9StreamIncrDedup(s, dir)),
-      "sq10_stream_dedup_ttl" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq10StreamDedupTtl(s, dir)),
-      "sq11_stream_left_join" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq11StreamLeftJoin(s, dir)),
-      "sq12_stream_rollup" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq12StreamRollup(s, dir)),
-      "sq13_stream_profile" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq13StreamProfile(s, dir)),
-      "sq14_foreach_sink" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq14ForeachBatchSink(s, dir)),
-      "sq15_stream_timer_session" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq15StreamTimerSession(s, dir)),
-      "sq16_stream_lastn" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq16StreamLastn(s, dir)),
-      "sq17_stream_type_counts" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq17StreamTypeCounts(s, dir)),
-      "sq18_stream_join_chain" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq18StreamJoinChain(s, dir)),
-      "sq19_late_data" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq19LateDataAudit(s, dir)),
-      "sq20_update_mode" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq20UpdateMode(s, dir)),
-      "sq21_stream_psi_monitor" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq21StreamPsiMonitor(s, dir)),
-      "sq22_stream_neardup_gate" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq22StreamNeardupGate(s, dir)),
-      "sq23_stream_anomaly" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq23StreamAnomaly(s, dir)),
-      "sq24_stream_distinct" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq24StreamDistinct(s, dir)),
-      "sq25_session_window" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq25SessionWindow(s, dir)),
-      "sq26_stream_full_outer" ->
-        ((s: SparkSession, dir: String) => StreamOps.sq26StreamFullOuter(s, dir)),
-      "q244_state_inspect" ->
-        ((s: SparkSession, dir: String) => StreamOps.q244StateInspect(s, dir)))
+  /** Every operator from SURVEY.md §2, each module's `defs` in order. */
+  lazy val defs: Seq[QueryDef] =
+    Queries.defs ++ RelOps.defs ++ MiningOps.defs ++ SqlSurfaceOps.defs ++
+      PipelineOps.defs ++ TextOps.defs ++ VectorOps.defs ++ MultimodalOps.defs ++
+      StreamOps.defs
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Queries.oracle ++ RelOps.oracle ++ MiningOps.oracle ++ SqlSurfaceOps.oracle ++ PipelineOps.oracle ++ TextOps.oracle ++ VectorOps.oracle ++ MultimodalOps.oracle ++ Map(
-      "sq1_stream_tumbling" -> Queries.q21Sql,
-      "sq2_stream_dedup" -> StreamOps.sq2Sql,
-      "sq3_stream_join" -> StreamOps.sq3Sql,
-      "sq4_stream_sliding" -> StreamOps.sq4Sql,
-      "sq5_stream_enrich" -> StreamOps.sq5Sql,
-      "sq6_sessionize" -> Queries.q22Sql,
-      "sq7_sessionize_timeout" -> Queries.q22Sql,
-      "sq8_stream_sketch" -> StreamOps.sq8Sql,
-      "sq9_stream_incr_dedup" -> StreamOps.sq9Sql,
-      "sq10_stream_dedup_ttl" -> StreamOps.sq10Sql,
-      "sq11_stream_left_join" -> StreamOps.sq11Sql,
-      "sq12_stream_rollup" -> StreamOps.sq12Sql,
-      "sq13_stream_profile" -> StreamOps.sq13Sql,
-      "sq14_foreach_sink" -> StreamOps.sq14Sql,
-      // same oracle as sq6/sq7: the flush tick makes timer output = q22
-      "sq15_stream_timer_session" -> Queries.q22Sql,
-      "sq16_stream_lastn" -> StreamOps.sq16Sql,
-      "sq17_stream_type_counts" -> StreamOps.sq17Sql,
-      "sq18_stream_join_chain" -> StreamOps.sq18Sql,
-      "sq19_late_data" -> StreamOps.sq19Sql,
-      "sq20_update_mode" -> StreamOps.sq20Sql,
-      "sq21_stream_psi_monitor" -> StreamOps.sq21Sql,
-      "sq22_stream_neardup_gate" -> StreamOps.sq22Sql,
-      "sq23_stream_anomaly" -> StreamOps.sq23Sql,
-      "sq24_stream_distinct" -> StreamOps.sq24Sql,
-      "sq25_session_window" -> StreamOps.sq25Sql,
-      "sq26_stream_full_outer" -> StreamOps.sq26Sql,
-      "q244_state_inspect" -> StreamOps.q244Sql)
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    defs.map(d => d.name -> d.run).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    defs.map(d => d.name -> d.oracleSql).toMap
 }

@@ -1,5 +1,6 @@
 package graft.llmops
 
+import graft.QueryDef
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -838,29 +839,16 @@ object MultimodalOps {
        |)
        |ORDER BY media_id, chunk_idx""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q167_chunk_manifest" -> (q167ChunkManifest _),
-    "q45_media_meta" -> (q45MediaMeta _),
-    "q46_frame_sample" -> (q46FrameSample _),
-    "q54_frame_features" -> (q54FrameFeatures _),
-    "q66_scene_cuts" -> (q66SceneCuts _),
-    "q85_audio_energy" -> (q85AudioEnergy _),
-    "q249_audio_segments" -> (q249AudioSegments _),
-    "q86_thumbnail" -> (q86Thumbnail _),
-    "q105_image_phash" -> (q105ImagePhash _),
-    "q232_phash_neardup" -> (q232PhashNeardup _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q167_chunk_manifest" -> q167Sql,
-    "q45_media_meta" -> q45Sql,
-    "q46_frame_sample" -> q46Sql,
-    "q54_frame_features" -> q54Sql,
-    "q66_scene_cuts" -> q66Sql,
-    "q85_audio_energy" -> q85Sql,
-    "q249_audio_segments" -> q249Sql,
-    "q86_thumbnail" -> q86Sql,
-    "q105_image_phash" -> q105Sql,
-    "q232_phash_neardup" -> q232Sql
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q167_chunk_manifest", q167ChunkManifest, q167Sql),
+    QueryDef("q45_media_meta", q45MediaMeta, q45Sql),
+    QueryDef("q46_frame_sample", q46FrameSample, q46Sql),
+    QueryDef("q54_frame_features", q54FrameFeatures, q54Sql),
+    QueryDef("q66_scene_cuts", q66SceneCuts, q66Sql),
+    QueryDef("q85_audio_energy", q85AudioEnergy, q85Sql),
+    QueryDef("q249_audio_segments", q249AudioSegments, q249Sql),
+    QueryDef("q86_thumbnail", q86Thumbnail, q86Sql),
+    QueryDef("q105_image_phash", q105ImagePhash, q105Sql),
+    QueryDef("q232_phash_neardup", q232PhashNeardup, q232Sql)
   )
 }

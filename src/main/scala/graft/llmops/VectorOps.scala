@@ -1,5 +1,6 @@
 package graft.llmops
 
+import graft.QueryDef
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -69,10 +70,7 @@ object VectorOps {
     * recomputed subplan in the vector module). persist() is LAZY, so
     * building the consumer face runs no job — the recall certs keep
     * their plan-construction-without-jobs invariant. */
-  private[graft] val exactTopkCache =
-    new graft.operators.PlanCache[DataFrame]("exact_topk")((_, df) => df.unpersist())
-
-  def exactTopkCacheStats: (Long, Long) = (exactTopkCache.hits, exactTopkCache.misses)
+  private[graft] val exactTopkCache = graft.operators.PlanCache.persisted("exact_topk")
 
   /** Consumer face of the exact top-k (used by q47/q61's recall rows). */
   private[graft] def exactTopk(s: SparkSession, dir: String): DataFrame =
@@ -233,8 +231,7 @@ object VectorOps {
   /** The published blocked exact top-k (q40's exactTopkCache pattern;
     * release = unpersist). */
   private[graft] val blockedTopkCache =
-    new graft.operators.PlanCache[DataFrame]("exact_topk_blocked")(
-      (_, df) => df.unpersist())
+    graft.operators.PlanCache.persisted("exact_topk_blocked")
 
   private def q243Plan(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
@@ -285,8 +282,7 @@ object VectorOps {
     * (PlanCache like every other memo: a regenerated fixture at the
     * same path invalidates instead of silently serving a stale count
     * into [[planesFor]] bucket sizing, and the map stays bounded). */
-  private val embCount =
-    new graft.operators.PlanCache[Long]("emb_count")((_, _) => ())
+  private val embCount = new graft.operators.PlanCache[Long]("emb_count")()
 
   private def nVectors(s: SparkSession, dir: String): Long = {
     val p = s"$dir/embeddings.parquet"
@@ -396,10 +392,7 @@ object VectorOps {
     * arithmetic — the expensive part — builds once per (session,
     * fixture signature). In production terms: the ANN index build is
     * a separate stage whose output every query batch reuses. */
-  private[graft] val lshPairCache =
-    new graft.operators.PlanCache[DataFrame]("lsh_topk_pairs")((_, df) => df.unpersist())
-
-  def lshPairCacheStats: (Long, Long) = (lshPairCache.hits, lshPairCache.misses)
+  private[graft] val lshPairCache = graft.operators.PlanCache.persisted("lsh_topk_pairs")
 
   /** q41: ANN top-k via multi-table hyperplane-LSH with single-bit
     * multi-probe. Join key = (table, bucket) — an equi-join Catalyst
@@ -775,10 +768,7 @@ object VectorOps {
 
   /** q43's certified cosine near-dup pair set as a session artifact
     * (consumed by q69's embedding branch). */
-  private[graft] val cosPairCache =
-    new graft.operators.PlanCache[DataFrame]("cos_pairs")((_, df) => df.unpersist())
-
-  def cosPairCacheStats: (Long, Long) = (cosPairCache.hits, cosPairCache.misses)
+  private[graft] val cosPairCache = graft.operators.PlanCache.persisted("cos_pairs")
 
   /** Consumer face of the q43 pair set (the simhashPairs pattern). */
   private[graft] def cosPairs(s: SparkSession, dir: String): DataFrame =
@@ -1101,10 +1091,7 @@ object VectorOps {
     * pair-set discipline for the IVF certification: the cell ranking +
     * probe join + exact re-rank rebuilt per action was the entry's
     * whole steady-state cost; the result is n×k id pairs). */
-  private[graft] val ivfCertCache =
-    new graft.operators.PlanCache[DataFrame]("ivf_cert_approx")((_, df) => df.unpersist())
-
-  def ivfCertCacheStats: (Long, Long) = (ivfCertCache.hits, ivfCertCache.misses)
+  private[graft] val ivfCertCache = graft.operators.PlanCache.persisted("ivf_cert_approx")
 
   def q61IvfRecall(s: SparkSession, dir: String): DataFrame = {
     val approx = ivfCertCache.get(s, dir, embSig(dir))(
@@ -1422,17 +1409,9 @@ object VectorOps {
     * artifact. Release is a no-op: localCheckpoint blocks are freed by
     * the ContextCleaner once the evicted entry — their only
     * reference — is dropped. */
-  private[graft] val codesCache =
-    new graft.operators.PlanCache[DataFrame]("km_codes")((_, _) => ())
+  private[graft] val codesCache = new graft.operators.PlanCache[DataFrame]("km_codes")()
   private[graft] val codebookCache =
-    new graft.operators.PlanCache[Seq[Seq[Long]]]("km_codebook")((_, _) => ())
-
-  /** Cache counters for the bench's self-diagnosis (the
-    * shingle_index_hit pattern): a timed vector pass that misses is
-    * paying a scan/train cost the steady state would not. */
-  def codebookCacheStats: (Long, Long) =
-    (codesCache.hits + codebookCache.hits,
-      codesCache.misses + codebookCache.misses)
+    new graft.operators.PlanCache[Seq[Seq[Long]]]("km_codebook")()
 
   private def embSig(dir: String): Long =
     graft.sources.FsSig.of(s"$dir/embeddings.parquet")
@@ -1462,10 +1441,7 @@ object VectorOps {
     * once per (session, fixture) and consumed persisted (the
     * exactTopkCache pattern at the code level). persist() is lazy, so
     * consumers run no job at plan construction. */
-  private[graft] val codeTopkCache =
-    new graft.operators.PlanCache[DataFrame]("code_topk")((_, df) => df.unpersist())
-
-  def codeTopkCacheStats: (Long, Long) = (codeTopkCache.hits, codeTopkCache.misses)
+  private[graft] val codeTopkCache = graft.operators.PlanCache.persisted("code_topk")
 
   private def codeExactTopk(s: SparkSession, dir: String): DataFrame =
     codeTopkCache.get(s, dir, embSig(dir))(
@@ -3291,82 +3267,46 @@ object VectorOps {
        |  ON coalesce(oc.label, nc.label, od.label) = nd.label
        |ORDER BY label""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q40_cosine_topk" -> (q40CosineTopk _),
-    "q41_ann_lsh" -> (q41AnnLsh _),
-    "q42_label_centroids" -> (q42LabelCentroids _),
-    "q43_cos_neardup" -> (q43CosNeardup _),
-    "q44_ivf_topk" -> (q44IvfTopk _),
-    "q47_ann_recall" -> (q47AnnRecall _),
-    "q125_confusion_matrix" -> (q125ConfusionMatrix _),
-    "q58_embed_quantize" -> (q58Quantize _),
-    "q61_ivf_recall" -> (q61IvfRecall _),
-    "q65_trunc_fidelity" -> (q65TruncFidelity _),
-    "q74_kmeans_codebook" -> (q74KmeansCodebook _),
-    "q78_semdedup" -> (q78Semdedup _),
-    "q84_pq_adc_recall" -> (q84PqAdcRecall _),
-    "q89_ivfpq_recall" -> (q89IvfpqRecall _),
-    "q102_label_separation" -> (q102LabelSeparation _),
-    "q158_label_prop" -> (q158LabelProp _),
-    "q109_jl_projection" -> (q109JlProjection _),
-    "q184_hard_negatives" -> (q184HardNegatives _),
-    "q194_mmr_diversify" -> (q194MmrDiversify _),
-    "q195_silhouette" -> (q195Silhouette _),
-    "q197_semantic_decon" -> (q197SemanticDecon _),
-    "q198_ann_rank_eval" -> (q198AnnRankEval _),
-    "q199_embed_drift" -> (q199EmbedDrift _),
-    "q212_hamming_topk" -> (q212HammingTopk _),
-    "q215_probe_sweep" -> (q215ProbeSweep _),
-    "q218_mih_topk" -> (q218MihTopk _),
-    "q221_semdedup_sweep" -> (q221SemdedupSweep _),
-    "q230_embedding_outliers" -> (q230EmbeddingOutliers _),
-    "q234_ivf_balance" -> (q234IvfBalance _),
-    "q239_ivf_add_batch" -> (q239IvfAddBatch _),
-    "q241_knn_hubness" -> (q241KnnHubness _),
-    "q242_codebook_sweep" -> (q242CodebookSweep _),
-    "q243_exact_topk_blocked" -> (q243ExactTopkBlocked _)
-  )
-
   /** Every entry is oracle-checked, including the adaptive ANN paths
     * (round-6 verdict #4): q44's oracle re-derives the data-adaptive
     * quantizer at any SF; q41's pins the geometry its planesFor(n)
     * resolves to at the driver's sf0.01 gate (see each query's
     * scaladoc). The fixed-geometry certifications q47 (LSH) and q61
     * (IVF) additionally hash-pin recall rows. */
-  val oracle: Map[String, String] = Map(
-    "q40_cosine_topk" -> q40Sql,
-    "q41_ann_lsh" -> q41Sql,
-    "q44_ivf_topk" -> q44Sql,
-    "q102_label_separation" -> q102Sql,
-    "q158_label_prop" -> q158Sql,
-    "q109_jl_projection" -> q109Sql,
-    "q42_label_centroids" -> q42Sql,
-    "q43_cos_neardup" -> q43Sql,
-    "q47_ann_recall" -> q47Sql,
-    "q58_embed_quantize" -> q58Sql,
-    "q61_ivf_recall" -> q61Sql,
-    "q65_trunc_fidelity" -> q65Sql,
-    "q74_kmeans_codebook" -> q74Sql,
-    "q78_semdedup" -> q78Sql,
-    "q84_pq_adc_recall" -> q84Sql,
-    "q89_ivfpq_recall" -> q89Sql,
-    "q125_confusion_matrix" -> q125Sql,
-    "q184_hard_negatives" -> q184Sql,
-    "q194_mmr_diversify" -> q194Sql,
-    "q195_silhouette" -> q195Sql,
-    "q197_semantic_decon" -> q197Sql,
-    "q198_ann_rank_eval" -> q198Sql,
-    "q199_embed_drift" -> q199Sql,
-    "q212_hamming_topk" -> q212Sql,
-    "q215_probe_sweep" -> q215Sql,
-    "q218_mih_topk" -> q218Sql,
-    "q221_semdedup_sweep" -> q221Sql,
-    "q230_embedding_outliers" -> q230Sql,
-    "q234_ivf_balance" -> q234Sql,
-    "q239_ivf_add_batch" -> q239Sql,
-    "q241_knn_hubness" -> q241Sql,
-    "q242_codebook_sweep" -> q242Sql,
-    "q243_exact_topk_blocked" -> q243Sql
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q40_cosine_topk", q40CosineTopk, q40Sql),
+    QueryDef("q41_ann_lsh", q41AnnLsh, q41Sql),
+    QueryDef("q42_label_centroids", q42LabelCentroids, q42Sql),
+    QueryDef("q43_cos_neardup", q43CosNeardup, q43Sql),
+    QueryDef("q44_ivf_topk", q44IvfTopk, q44Sql),
+    QueryDef("q47_ann_recall", q47AnnRecall, q47Sql),
+    QueryDef("q125_confusion_matrix", q125ConfusionMatrix, q125Sql),
+    QueryDef("q58_embed_quantize", q58Quantize, q58Sql),
+    QueryDef("q61_ivf_recall", q61IvfRecall, q61Sql),
+    QueryDef("q65_trunc_fidelity", q65TruncFidelity, q65Sql),
+    QueryDef("q74_kmeans_codebook", q74KmeansCodebook, q74Sql),
+    QueryDef("q78_semdedup", q78Semdedup, q78Sql),
+    QueryDef("q84_pq_adc_recall", q84PqAdcRecall, q84Sql),
+    QueryDef("q89_ivfpq_recall", q89IvfpqRecall, q89Sql),
+    QueryDef("q102_label_separation", q102LabelSeparation, q102Sql),
+    QueryDef("q158_label_prop", q158LabelProp, q158Sql),
+    QueryDef("q109_jl_projection", q109JlProjection, q109Sql),
+    QueryDef("q184_hard_negatives", q184HardNegatives, q184Sql),
+    QueryDef("q194_mmr_diversify", q194MmrDiversify, q194Sql),
+    QueryDef("q195_silhouette", q195Silhouette, q195Sql),
+    QueryDef("q197_semantic_decon", q197SemanticDecon, q197Sql),
+    QueryDef("q198_ann_rank_eval", q198AnnRankEval, q198Sql),
+    QueryDef("q199_embed_drift", q199EmbedDrift, q199Sql),
+    QueryDef("q212_hamming_topk", q212HammingTopk, q212Sql),
+    QueryDef("q215_probe_sweep", q215ProbeSweep, q215Sql),
+    QueryDef("q218_mih_topk", q218MihTopk, q218Sql),
+    QueryDef("q221_semdedup_sweep", q221SemdedupSweep, q221Sql),
+    QueryDef("q230_embedding_outliers", q230EmbeddingOutliers, q230Sql),
+    QueryDef("q234_ivf_balance", q234IvfBalance, q234Sql),
+    QueryDef("q239_ivf_add_batch", q239IvfAddBatch, q239Sql),
+    QueryDef("q241_knn_hubness", q241KnnHubness, q241Sql),
+    QueryDef("q242_codebook_sweep", q242CodebookSweep, q242Sql),
+    QueryDef("q243_exact_topk_blocked", q243ExactTopkBlocked, q243Sql)
   )
 
   // ---------------------------------------------- q125 confusion matrix
@@ -3465,9 +3405,7 @@ object VectorOps {
     * family's single biggest cost. vec-count × 3 longs; the
     * [[graft.sources.FsSig]] keying and MEMORY_AND_DISK lifecycle
     * match the module's other artifacts. */
-  private[graft] val signCodeCache =
-    new graft.operators.PlanCache[DataFrame]("sign_codes")(
-      (_, df) => df.unpersist())
+  private[graft] val signCodeCache = graft.operators.PlanCache.persisted("sign_codes")
 
   private def signCodes(s: SparkSession, dir: String): DataFrame =
     signCodeCache.get(s, dir, graft.sources.FsSig.of(s"$dir/embeddings.parquet"))(

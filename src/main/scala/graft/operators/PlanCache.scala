@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.util.concurrent.atomic.AtomicLong
 
@@ -29,7 +29,7 @@ import java.util.concurrent.atomic.AtomicLong
   * build cost the steady state would not, and the JSON should say so.
   */
 final class PlanCache[V](val name: String, maxEntries: Int = 8)(
-    release: (SparkSession, V) => Unit,
+    release: (SparkSession, V) => Unit = (_: SparkSession, _: V) => (),
     releaseLocal: V => Unit = (_: V) => ()) {
 
   private final case class Entry(sig: Long, value: V)
@@ -185,6 +185,12 @@ object PlanCache {
     * uniqueness guarantee `allStats` relies on). */
   def registeredNames: Seq[String] =
     registry.synchronized { registry.map(_.name).toSeq }
+
+  /** A cache of persisted DataFrames: a superseded or evicted entry is
+    * unpersisted. Value caches (counts, codebooks) keep the no-op
+    * release default. */
+  def persisted(name: String): PlanCache[DataFrame] =
+    new PlanCache[DataFrame](name)((_, df) => df.unpersist())
 
   private val tmpDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
   private lazy val hookInstalled: Unit = {

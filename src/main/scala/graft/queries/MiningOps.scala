@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QueryDef
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1115,8 +1116,7 @@ object MiningOps {
 
   /** Memoized events row count per (session, dir) for the q155 gate
     * probe — fixture-signature guarded like the q135 orders memo. */
-  private val eventsCountMemo =
-    new graft.operators.PlanCache[Long]("events_count")((_, _) => ())
+  private val eventsCountMemo = new graft.operators.PlanCache[Long]("events_count")()
 
   private[graft] def nEvents(s: SparkSession, dir: String): Long = {
     val p = s"$dir/events.parquet"
@@ -1706,57 +1706,31 @@ object MiningOps {
 
   // ------------------------------------------------ registry
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q139_histogram" -> (q139Histogram _),
-    "q140_winsorize" -> (q140Winsorize _),
-    "q141_itemsets" -> (q141Itemsets _),
-    "q142_unpivot" -> (q142Unpivot _),
-    "q143_notin_nulls" -> (q143NotinNulls _),
-    "q144_asof_tolerance" -> (q144AsofTolerance _),
-    "q145_ivm_view" -> (q145IvmView _),
-    "q146_bfs_paths" -> (q146BfsPaths _),
-    "q148_pps_sample" -> (q148PpsSample _),
-    "q149_skew_report" -> (q149SkewReport _),
-    "q150_equidepth_hist" -> (q150EquidepthHist _),
-    "q151_cdc_apply" -> (q151CdcApply _),
-    "q152_embed_audit" -> (q152EmbedAudit _),
-    "q154_multitouch" -> (q154Multitouch _),
-    "q155_bottomk_quantile" -> (q155BottomkQuantile _),
-    "q223_approx_quantile_cert" -> (q223ApproxQuantileCert _),
-    "q224_join_cardinality" -> (q224JoinCardinality _),
-    "q225_attribution_sweep" -> (q225AttributionSweep _),
-    "q156_observed_metrics" -> (q156ObservedMetrics _),
-    "q157_dynamic_overwrite" -> (q157DynamicOverwrite _),
-    "q247_seasonal_residuals" -> (q247SeasonalResiduals _),
-    "q248_compaction_bins" -> (q248CompactionBins _),
-    "q251_salt_planner" -> (q251SaltPlanner _),
-    "q168_format_roundtrip" -> (q168FormatRoundtrip _),
-    "q169_merge_schema" -> (q169MergeSchema _))
-
-  val oracle: Map[String, String] = Map(
-    "q139_histogram" -> q139Sql,
-    "q140_winsorize" -> q140Sql,
-    "q141_itemsets" -> q141Sql,
-    "q142_unpivot" -> q142Sql,
-    "q143_notin_nulls" -> q143Sql,
-    "q144_asof_tolerance" -> q144Sql,
-    "q145_ivm_view" -> q145Sql,
-    "q146_bfs_paths" -> q146Sql,
-    "q148_pps_sample" -> q148Sql,
-    "q149_skew_report" -> q149Sql,
-    "q150_equidepth_hist" -> q150Sql,
-    "q151_cdc_apply" -> q151Sql,
-    "q152_embed_audit" -> q152Sql,
-    "q154_multitouch" -> q154Sql,
-    "q155_bottomk_quantile" -> q155Sql,
-    "q223_approx_quantile_cert" -> q223Sql,
-    "q224_join_cardinality" -> q224Sql,
-    "q225_attribution_sweep" -> q225Sql,
-    "q156_observed_metrics" -> q156Sql,
-    "q157_dynamic_overwrite" -> q157Sql,
-    "q247_seasonal_residuals" -> q247Sql,
-    "q248_compaction_bins" -> q248Sql,
-    "q251_salt_planner" -> q251Sql,
-    "q168_format_roundtrip" -> q168Sql,
-    "q169_merge_schema" -> q169Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q139_histogram", q139Histogram, q139Sql),
+    QueryDef("q140_winsorize", q140Winsorize, q140Sql),
+    QueryDef("q141_itemsets", q141Itemsets, q141Sql),
+    QueryDef("q142_unpivot", q142Unpivot, q142Sql),
+    QueryDef("q143_notin_nulls", q143NotinNulls, q143Sql),
+    QueryDef("q144_asof_tolerance", q144AsofTolerance, q144Sql),
+    QueryDef("q145_ivm_view", q145IvmView, q145Sql),
+    QueryDef("q146_bfs_paths", q146BfsPaths, q146Sql),
+    QueryDef("q148_pps_sample", q148PpsSample, q148Sql),
+    QueryDef("q149_skew_report", q149SkewReport, q149Sql),
+    QueryDef("q150_equidepth_hist", q150EquidepthHist, q150Sql),
+    QueryDef("q151_cdc_apply", q151CdcApply, q151Sql),
+    QueryDef("q152_embed_audit", q152EmbedAudit, q152Sql),
+    QueryDef("q154_multitouch", q154Multitouch, q154Sql),
+    QueryDef("q155_bottomk_quantile", q155BottomkQuantile, q155Sql),
+    QueryDef("q223_approx_quantile_cert", q223ApproxQuantileCert, q223Sql),
+    QueryDef("q224_join_cardinality", q224JoinCardinality, q224Sql),
+    QueryDef("q225_attribution_sweep", q225AttributionSweep, q225Sql),
+    QueryDef("q156_observed_metrics", q156ObservedMetrics, q156Sql),
+    QueryDef("q157_dynamic_overwrite", q157DynamicOverwrite, q157Sql),
+    QueryDef("q247_seasonal_residuals", q247SeasonalResiduals, q247Sql),
+    QueryDef("q248_compaction_bins", q248CompactionBins, q248Sql),
+    QueryDef("q251_salt_planner", q251SaltPlanner, q251Sql),
+    QueryDef("q168_format_roundtrip", q168FormatRoundtrip, q168Sql),
+    QueryDef("q169_merge_schema", q169MergeSchema, q169Sql)
+  )
 }

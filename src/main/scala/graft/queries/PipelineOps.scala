@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QueryDef
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -2280,59 +2281,32 @@ object PipelineOps {
        |  END AS clump_ratio
        |FROM p CROSS JOIN e""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q173_corpus_diff" -> (q173CorpusDiff _),
-    "q174_token_budget_select" -> (q174TokenBudgetSelect _),
-    "q175_psi_drift" -> (q175PsiDrift _),
-    "q176_bottomk_sample" -> (q176BottomkSample _),
-    "q177_crawl_novelty" -> (q177CrawlNovelty _),
-    "q178_lr_quality" -> (q178LrQuality _),
-    "q179_auc_midrank" -> (q179AucMidrank _),
-    "q180_calibration" -> (q180Calibration _),
-    "q181_epoch_alloc" -> (q181EpochAlloc _),
-    "q182_train_shuffle" -> (q182TrainShuffle _),
-    "q183_preference_pairs" -> (q183PreferencePairs _),
-    "q185_k_anonymity" -> (q185KAnonymity _),
-    "q246_l_diversity" -> (q246LDiversity _),
-    "q252_noised_release" -> (q252NoisedRelease _),
-    "q186_span_corruption" -> (q186SpanCorruption _),
-    "q187_soft_dedup_weights" -> (q187SoftDedupWeights _),
-    "q188_dsir_weights" -> (q188DsirWeights _),
-    "q189_rank_agreement" -> (q189RankAgreement _),
-    "q190_retention_sweep" -> (q190RetentionSweep _),
-    "q191_rrf_fusion" -> (q191RrfFusion _),
-    "q238_rrf_sweep" -> (q238RrfSweep _),
-    "q192_margin_align" -> (q192MarginAlign _),
-    "q203_shuffle_quality" -> (q203ShuffleQuality _),
-    "q204_context_pack" -> (q204ContextPack _),
-    "q205_embed_coverage" -> (q205EmbedCoverage _),
-    "q206_source_concentration" -> (q206SourceConcentration _))
-
-  val oracle: Map[String, String] = Map(
-    "q173_corpus_diff" -> q173Sql,
-    "q174_token_budget_select" -> q174Sql,
-    "q175_psi_drift" -> q175Sql,
-    "q176_bottomk_sample" -> q176Sql,
-    "q177_crawl_novelty" -> q177Sql,
-    "q178_lr_quality" -> q178Sql,
-    "q179_auc_midrank" -> q179Sql,
-    "q180_calibration" -> q180Sql,
-    "q181_epoch_alloc" -> q181Sql,
-    "q182_train_shuffle" -> q182Sql,
-    "q183_preference_pairs" -> q183Sql,
-    "q185_k_anonymity" -> q185Sql,
-    "q246_l_diversity" -> q246Sql,
-    "q252_noised_release" -> q252Sql,
-    "q186_span_corruption" -> q186Sql,
-    "q187_soft_dedup_weights" -> q187Sql,
-    "q188_dsir_weights" -> q188Sql,
-    "q189_rank_agreement" -> q189Sql,
-    "q190_retention_sweep" -> q190Sql,
-    "q191_rrf_fusion" -> q191Sql,
-    "q238_rrf_sweep" -> q238Sql,
-    "q192_margin_align" -> q192Sql,
-    "q203_shuffle_quality" -> q203Sql,
-    "q204_context_pack" -> q204Sql,
-    "q205_embed_coverage" -> q205Sql,
-    "q206_source_concentration" -> q206Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q173_corpus_diff", q173CorpusDiff, q173Sql),
+    QueryDef("q174_token_budget_select", q174TokenBudgetSelect, q174Sql),
+    QueryDef("q175_psi_drift", q175PsiDrift, q175Sql),
+    QueryDef("q176_bottomk_sample", q176BottomkSample, q176Sql),
+    QueryDef("q177_crawl_novelty", q177CrawlNovelty, q177Sql),
+    QueryDef("q178_lr_quality", q178LrQuality, q178Sql),
+    QueryDef("q179_auc_midrank", q179AucMidrank, q179Sql),
+    QueryDef("q180_calibration", q180Calibration, q180Sql),
+    QueryDef("q181_epoch_alloc", q181EpochAlloc, q181Sql),
+    QueryDef("q182_train_shuffle", q182TrainShuffle, q182Sql),
+    QueryDef("q183_preference_pairs", q183PreferencePairs, q183Sql),
+    QueryDef("q185_k_anonymity", q185KAnonymity, q185Sql),
+    QueryDef("q246_l_diversity", q246LDiversity, q246Sql),
+    QueryDef("q252_noised_release", q252NoisedRelease, q252Sql),
+    QueryDef("q186_span_corruption", q186SpanCorruption, q186Sql),
+    QueryDef("q187_soft_dedup_weights", q187SoftDedupWeights, q187Sql),
+    QueryDef("q188_dsir_weights", q188DsirWeights, q188Sql),
+    QueryDef("q189_rank_agreement", q189RankAgreement, q189Sql),
+    QueryDef("q190_retention_sweep", q190RetentionSweep, q190Sql),
+    QueryDef("q191_rrf_fusion", q191RrfFusion, q191Sql),
+    QueryDef("q238_rrf_sweep", q238RrfSweep, q238Sql),
+    QueryDef("q192_margin_align", q192MarginAlign, q192Sql),
+    QueryDef("q203_shuffle_quality", q203ShuffleQuality, q203Sql),
+    QueryDef("q204_context_pack", q204ContextPack, q204Sql),
+    QueryDef("q205_embed_coverage", q205EmbedCoverage, q205Sql),
+    QueryDef("q206_source_concentration", q206SourceConcentration, q206Sql)
+  )
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QueryDef
 import graft.functions.GraftFunctions
 import graft.sources.GenFixtures
 import org.apache.spark.sql.expressions.Window
@@ -8,9 +9,9 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** The t2 correctness surface (SURVEY.md §2.3): every query exists
-  * twice — as an idiomatic DataFrame pipeline here, and as ANSI SQL in
-  * [[Queries.oracle]] that the driver runs in DuckDB over the same
-  * parquet inputs.
+  * twice — as an idiomatic DataFrame pipeline here, and as ANSI SQL
+  * (the `oracleSql` of its [[Queries.defs]] entry) that DuckDB runs
+  * over the same parquet inputs.
   *
   * Oracle-parity rules (FIXTURES.md §D):
   *  - double SUMs go through exact DECIMAL casts, final CAST to DOUBLE
@@ -589,11 +590,7 @@ object Queries {
     * bench pass). localCheckpoint cuts the lineage so neither join
     * side re-runs the frequency aggregation; release unpersists the
     * checkpointed blocks. */
-  private val q51HotCache =
-    new graft.operators.PlanCache[DataFrame]("q51_hotkeys")(
-      (_, df) => { df.unpersist(blocking = false); () })
-
-  def q51HotCacheStats: (Long, Long) = (q51HotCache.hits, q51HotCache.misses)
+  private val q51HotCache = graft.operators.PlanCache.persisted("q51_hotkeys")
 
   def q51SaltedJoin(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
@@ -1577,88 +1574,47 @@ object Queries {
 
   // --------------------------------------------------------------- registry
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_metrics" -> (q01Metrics _),
-    "q02_por_particao" -> (q02PorParticao _),
-    "q03_warmup" -> (q03Warmup _),
-    "q04_transporte" -> (q04Transporte _),
-    "q05_tail_scan" -> (q05TailScan _),
-    "q06_rollup_formato" -> (q06Rollup _),
-    "q10_pricing_summary" -> (q10Pricing _),
-    "q10_pricing_sql" -> (q10PricingViaSql _),
-    "q11_revenue_nation" -> (q11RevenueNation _),
-    "q12_top_customers" -> (q12TopCustomers _),
-    "q13_window_orders" -> (q13WindowOrders _),
-    "q14_rollup_orders" -> (q14RollupOrders _),
-    "q15_setops" -> (q15SetOps _),
-    "q16_semi_anti" -> (q16SemiAnti _),
-    "q17_distinct" -> (q17Distinct _),
-    "q18_asof_join" -> (q18AsofJoin _),
-    "q19_cube_orders" -> (q19CubeOrders _),
-    "q20_latest_by_key" -> (q20LatestByKey _),
-    "q21_tumbling" -> (q21Tumbling _),
-    "q22_sessionize" -> (q22Sessionize _),
-    "q24_range_join" -> (q24RangeJoin _),
-    "q25_grouping_sets" -> (q25GroupingSets _),
-    "q26_pivot_events" -> (q26PivotEvents _),
-    "q27_percentiles" -> (q27Percentiles _),
-    "q49_confluent_wire" -> (q49ConfluentWire _),
-    "q137_avro_evolution" -> (q137AvroEvolution _),
-    "q50_bucketed_join" -> (q50BucketedJoin _),
-    "q51_salted_join" -> (q51SaltedJoin _),
-    "q60_partition_pruning" -> (q60PartitionPruning _),
-    "q76_zorder_pruned" -> (q76ZorderPruned _),
-    "q52_sketches" -> (q52Sketches _),
-    "q80_cms_topk" -> (q80CmsTopk _),
-    "q82_funnel" -> (q82Funnel _),
-    "q83_source_quota" -> (q83SourceQuota _),
-    "q97_retention_cohorts" -> (q97RetentionCohorts _),
-    "q98_transitions" -> (q98Transitions _),
-    "q106_reconcile" -> (q106Reconcile _),
-    "q112_user_anomaly" -> (q112UserAnomaly _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q01_metrics" -> q01Sql,
-    "q02_por_particao" -> q02Sql,
-    "q03_warmup" -> q03Sql,
-    "q04_transporte" -> q04Sql,
-    "q05_tail_scan" -> q05Sql,
-    "q06_rollup_formato" -> q06Sql,
-    "q10_pricing_summary" -> q10Sql,
-    "q10_pricing_sql" -> q10Sql,
-    "q11_revenue_nation" -> q11Sql,
-    "q12_top_customers" -> q12Sql,
-    "q13_window_orders" -> q13Sql,
-    "q14_rollup_orders" -> q14Sql,
-    "q15_setops" -> q15Sql,
-    "q16_semi_anti" -> q16Sql,
-    "q17_distinct" -> q17Sql,
-    "q18_asof_join" -> q18Sql,
-    "q19_cube_orders" -> q19Sql,
-    "q20_latest_by_key" -> q20Sql,
-    "q21_tumbling" -> q21Sql,
-    "q22_sessionize" -> q22Sql,
-    "q24_range_join" -> q24Sql,
-    "q25_grouping_sets" -> q25Sql,
-    "q26_pivot_events" -> q26Sql,
-    "q27_percentiles" -> q27Sql,
-    "q49_confluent_wire" -> q49Sql,
-    "q137_avro_evolution" -> q137Sql,
-    "q50_bucketed_join" -> q50Sql,
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q01_metrics", q01Metrics, q01Sql),
+    QueryDef("q02_por_particao", q02PorParticao, q02Sql),
+    QueryDef("q03_warmup", q03Warmup, q03Sql),
+    QueryDef("q04_transporte", q04Transporte, q04Sql),
+    QueryDef("q05_tail_scan", q05TailScan, q05Sql),
+    QueryDef("q06_rollup_formato", q06Rollup, q06Sql),
+    QueryDef("q10_pricing_summary", q10Pricing, q10Sql),
+    QueryDef("q10_pricing_sql", q10PricingViaSql, q10Sql),
+    QueryDef("q11_revenue_nation", q11RevenueNation, q11Sql),
+    QueryDef("q12_top_customers", q12TopCustomers, q12Sql),
+    QueryDef("q13_window_orders", q13WindowOrders, q13Sql),
+    QueryDef("q14_rollup_orders", q14RollupOrders, q14Sql),
+    QueryDef("q15_setops", q15SetOps, q15Sql),
+    QueryDef("q16_semi_anti", q16SemiAnti, q16Sql),
+    QueryDef("q17_distinct", q17Distinct, q17Sql),
+    QueryDef("q18_asof_join", q18AsofJoin, q18Sql),
+    QueryDef("q19_cube_orders", q19CubeOrders, q19Sql),
+    QueryDef("q20_latest_by_key", q20LatestByKey, q20Sql),
+    QueryDef("q21_tumbling", q21Tumbling, q21Sql),
+    QueryDef("q22_sessionize", q22Sessionize, q22Sql),
+    QueryDef("q24_range_join", q24RangeJoin, q24Sql),
+    QueryDef("q25_grouping_sets", q25GroupingSets, q25Sql),
+    QueryDef("q26_pivot_events", q26PivotEvents, q26Sql),
+    QueryDef("q27_percentiles", q27Percentiles, q27Sql),
+    QueryDef("q49_confluent_wire", q49ConfluentWire, q49Sql),
+    QueryDef("q137_avro_evolution", q137AvroEvolution, q137Sql),
+    QueryDef("q50_bucketed_join", q50BucketedJoin, q50Sql),
     // identical ANSI text: the salted join must be identity-preserving
-    "q51_salted_join" -> q50Sql,
-    "q60_partition_pruning" -> q60Sql,
-    "q76_zorder_pruned" -> q76Sql,
+    QueryDef("q51_salted_join", q51SaltedJoin, q50Sql),
+    QueryDef("q60_partition_pruning", q60PartitionPruning, q60Sql),
+    QueryDef("q76_zorder_pruned", q76ZorderPruned, q76Sql),
     // exact twins + pinned-true bound booleans (sketch values are
     // engine-specific; a sketch regression flips a boolean)
-    "q52_sketches" -> q52Sql,
-    "q80_cms_topk" -> q80Sql,
-    "q82_funnel" -> q82Sql,
-    "q83_source_quota" -> q83Sql,
-    "q97_retention_cohorts" -> q97Sql,
-    "q98_transitions" -> q98Sql,
-    "q106_reconcile" -> q106Sql,
-    "q112_user_anomaly" -> q112Sql
-)
+    QueryDef("q52_sketches", q52Sketches, q52Sql),
+    QueryDef("q80_cms_topk", q80CmsTopk, q80Sql),
+    QueryDef("q82_funnel", q82Funnel, q82Sql),
+    QueryDef("q83_source_quota", q83SourceQuota, q83Sql),
+    QueryDef("q97_retention_cohorts", q97RetentionCohorts, q97Sql),
+    QueryDef("q98_transitions", q98Transitions, q98Sql),
+    QueryDef("q106_reconcile", q106Reconcile, q106Sql),
+    QueryDef("q112_user_anomaly", q112UserAnomaly, q112Sql)
+  )
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QueryDef
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -262,9 +263,7 @@ object RelOps {
     * graph stack materializes its edge table once and runs the
     * analytics suite over it. MEMORY_AND_DISK; [[graft.sources.FsSig]]
     * keying invalidates on fixture regeneration. */
-  private[graft] val edgeCache =
-    new graft.operators.PlanCache[DataFrame]("affinity_edges")(
-      (_, df) => df.unpersist())
+  private[graft] val edgeCache = graft.operators.PlanCache.persisted("affinity_edges")
 
   private[graft] def cooccurEdges(s: SparkSession, dir: String): DataFrame =
     edgeCache.get(s, dir, graft.sources.FsSig.of(s"$dir/events.parquet"))(
@@ -799,10 +798,7 @@ object RelOps {
     * peer-aggregation semantics are preserved. The peak is a scalar
     * aggregate broadcast back, never a partitionBy(lit(1)) annotation
     * over the boundary stream. */
-  private[graft] val sweepCache =
-    new graft.operators.PlanCache[DataFrame]("sweep_bounds")((_, df) => df.unpersist())
-
-  def sweepCacheStats: (Long, Long) = (sweepCache.hits, sweepCache.misses)
+  private[graft] val sweepCache = graft.operators.PlanCache.persisted("sweep_bounds")
 
   def q123IntervalPeak(s: SparkSession, dir: String): DataFrame = {
     val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
@@ -927,10 +923,7 @@ object RelOps {
     * spark_partition_id between the totals and window references —
     * the range partitioner samples, so two evaluations could
     * otherwise disagree on boundaries and corrupt the offsets). */
-  private[graft] val aucCache =
-    new graft.operators.PlanCache[DataFrame]("auc_groups")((_, df) => df.unpersist())
-
-  def aucCacheStats: (Long, Long) = (aucCache.hits, aucCache.misses)
+  private[graft] val aucCache = graft.operators.PlanCache.persisted("auc_groups")
 
   /** q126: ROC-AUC via the tie-corrected rank-sum identity — the
     * score-quality read ("does `value` separate purchases from the
@@ -1576,8 +1569,7 @@ object RelOps {
     * probe — fixture-signature guarded like every other memo (a
     * regenerated fixture invalidates instead of serving a stale count
     * into the plan choice). */
-  private val ordersCount =
-    new graft.operators.PlanCache[Long]("orders_count")((_, _) => ())
+  private val ordersCount = new graft.operators.PlanCache[Long]("orders_count")()
 
   private def nOrders(s: SparkSession, dir: String): Long = {
     val p = s"$dir/orders.parquet"
@@ -2343,71 +2335,37 @@ object RelOps {
 
   // --------------------------------------------------------------- registry
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q113_bloom_join" -> (q113BloomJoin _),
-    "q114_gapfill_locf" -> (q114GapfillLocf _),
-    "q115_rolling_peak" -> (q115RollingPeak _),
-    "q116_triangles" -> (q116Triangles _),
-    "q117_skyline" -> (q117Skyline _),
-    "q118_fuzzy_join" -> (q118FuzzyJoin _),
-    "q119_hll_incremental" -> (q119HllIncremental _),
-    "q120_scd2" -> (q120Scd2 _),
-    "q121_table_checksum" -> (q121TableChecksum _),
-    "q122_ab_test" -> (q122AbTest _),
-    "q123_interval_peak" -> (q123IntervalPeak _),
-    "q124_json_extract" -> (q124JsonExtract _),
-    "q126_roc_auc" -> (q126RocAuc _),
-    "q127_ks_drift" -> (q127KsDrift _),
-    "q128_mutual_info" -> (q128MutualInfo _),
-    "q129_user_trend" -> (q129UserTrend _),
-    "q130_changepoint" -> (q130Changepoint _),
-    "q131_rollup_cascade" -> (q131RollupCascade _),
-    "q132_pit_join" -> (q132PitJoin _),
-    "q133_hierarchy" -> (q133Hierarchy _),
-    "q134_lateral_topk" -> (q134LateralTopk _),
-    "q135_profile" -> (q135Profile _),
-    "q136_benford" -> (q136Benford _),
-    "q153_graph_profile" -> (q153GraphProfile _),
-    "q193_neighbor_jaccard" -> (q193NeighborJaccard _),
-    "q201_assortativity" -> (q201Assortativity _),
-    "q209_cohort_retention" -> (q209CohortRetention _),
-    "q210_funnel_steps" -> (q210FunnelSteps _),
-    "q211_event_gaps" -> (q211EventGaps _),
-    "q233_rfm_segments" -> (q233RfmSegments _),
-    "q245_kcore" -> (q245Kcore _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q113_bloom_join" -> q113Sql,
-    "q114_gapfill_locf" -> q114Sql,
-    "q115_rolling_peak" -> q115Sql,
-    "q116_triangles" -> q116Sql,
-    "q117_skyline" -> q117Sql,
-    "q118_fuzzy_join" -> q118Sql,
-    "q119_hll_incremental" -> q119Sql,
-    "q120_scd2" -> q120Sql,
-    "q121_table_checksum" -> q121Sql,
-    "q122_ab_test" -> q122Sql,
-    "q123_interval_peak" -> q123Sql,
-    "q124_json_extract" -> q124Sql,
-    "q126_roc_auc" -> q126Sql,
-    "q127_ks_drift" -> q127Sql,
-    "q128_mutual_info" -> q128Sql,
-    "q129_user_trend" -> q129Sql,
-    "q130_changepoint" -> q130Sql,
-    "q131_rollup_cascade" -> q131Sql,
-    "q132_pit_join" -> q132Sql,
-    "q133_hierarchy" -> q133Sql,
-    "q134_lateral_topk" -> q134Sql,
-    "q135_profile" -> q135Sql,
-    "q136_benford" -> q136Sql,
-    "q153_graph_profile" -> q153Sql,
-    "q193_neighbor_jaccard" -> q193Sql,
-    "q201_assortativity" -> q201Sql,
-    "q209_cohort_retention" -> q209Sql,
-    "q210_funnel_steps" -> q210Sql,
-    "q211_event_gaps" -> q211Sql,
-    "q233_rfm_segments" -> q233Sql,
-    "q245_kcore" -> q245Sql
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q113_bloom_join", q113BloomJoin, q113Sql),
+    QueryDef("q114_gapfill_locf", q114GapfillLocf, q114Sql),
+    QueryDef("q115_rolling_peak", q115RollingPeak, q115Sql),
+    QueryDef("q116_triangles", q116Triangles, q116Sql),
+    QueryDef("q117_skyline", q117Skyline, q117Sql),
+    QueryDef("q118_fuzzy_join", q118FuzzyJoin, q118Sql),
+    QueryDef("q119_hll_incremental", q119HllIncremental, q119Sql),
+    QueryDef("q120_scd2", q120Scd2, q120Sql),
+    QueryDef("q121_table_checksum", q121TableChecksum, q121Sql),
+    QueryDef("q122_ab_test", q122AbTest, q122Sql),
+    QueryDef("q123_interval_peak", q123IntervalPeak, q123Sql),
+    QueryDef("q124_json_extract", q124JsonExtract, q124Sql),
+    QueryDef("q126_roc_auc", q126RocAuc, q126Sql),
+    QueryDef("q127_ks_drift", q127KsDrift, q127Sql),
+    QueryDef("q128_mutual_info", q128MutualInfo, q128Sql),
+    QueryDef("q129_user_trend", q129UserTrend, q129Sql),
+    QueryDef("q130_changepoint", q130Changepoint, q130Sql),
+    QueryDef("q131_rollup_cascade", q131RollupCascade, q131Sql),
+    QueryDef("q132_pit_join", q132PitJoin, q132Sql),
+    QueryDef("q133_hierarchy", q133Hierarchy, q133Sql),
+    QueryDef("q134_lateral_topk", q134LateralTopk, q134Sql),
+    QueryDef("q135_profile", q135Profile, q135Sql),
+    QueryDef("q136_benford", q136Benford, q136Sql),
+    QueryDef("q153_graph_profile", q153GraphProfile, q153Sql),
+    QueryDef("q193_neighbor_jaccard", q193NeighborJaccard, q193Sql),
+    QueryDef("q201_assortativity", q201Assortativity, q201Sql),
+    QueryDef("q209_cohort_retention", q209CohortRetention, q209Sql),
+    QueryDef("q210_funnel_steps", q210FunnelSteps, q210Sql),
+    QueryDef("q211_event_gaps", q211EventGaps, q211Sql),
+    QueryDef("q233_rfm_segments", q233RfmSegments, q233Sql),
+    QueryDef("q245_kcore", q245Kcore, q245Sql)
   )
 }

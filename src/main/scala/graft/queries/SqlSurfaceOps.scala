@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QueryDef
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -701,8 +702,7 @@ object SqlSurfaceOps {
   /** Row count of the orders table per (session, dir) — one count on
     * first use, signature-guarded (the q51 hot-keys discipline); the
     * dispatch must not pay a count job per call. */
-  private val ordersCountCache =
-    new graft.operators.PlanCache[Long]("orders_count_tvf")((_, _) => ())
+  private val ordersCountCache = new graft.operators.PlanCache[Long]("orders_count_tvf")()
 
   /** The window-rank twin stated against a given table name — the
     * >100× dispatch arm AND (via [[q237Sql]]) the oracle text. */
@@ -760,39 +760,22 @@ object SqlSurfaceOps {
        |FROM ranked WHERE rk <= $ListaggTopK
        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q237_sql_table_fn" -> (q237SqlTableFn _),
-    "q235_exec_immediate" -> (q235ExecImmediate _),
-    "q236_sql_script" -> (q236SqlScript _),
-    "q222_sql_udf" -> (q222SqlUdf _),
-    "q159_pipe_syntax" -> (q159PipeSyntax _),
-    "q160_variant_shred" -> (q160VariantShred _),
-    "q161_collation" -> (q161Collation _),
-    "q162_param_sql" -> (q162ParamSql _),
-    "q163_window_zoo" -> (q163WindowZoo _),
-    "q164_setops_all" -> (q164SetopsAll _),
-    "q165_paginate" -> (q165Paginate _),
-    "q166_group_by_all" -> (q166GroupByAll _),
-    "q170_join_hints" -> (q170JoinHints _),
-    "q171_hof_zoo" -> (q171HofZoo _),
-    "q172_calendar_zoo" -> (q172CalendarZoo _),
-    "q253_listagg" -> (q253Listagg _))
-
-  val oracle: Map[String, String] = Map(
-    "q237_sql_table_fn" -> q237Sql,
-    "q253_listagg" -> q253Sql,
-    "q235_exec_immediate" -> q235Sql,
-    "q236_sql_script" -> q236Sql,
-    "q222_sql_udf" -> q222Sql,
-    "q159_pipe_syntax" -> q159Sql,
-    "q160_variant_shred" -> q160Sql,
-    "q161_collation" -> q161Sql,
-    "q162_param_sql" -> q162Sql,
-    "q163_window_zoo" -> q163Sql,
-    "q164_setops_all" -> q164Sql,
-    "q165_paginate" -> q165Sql,
-    "q166_group_by_all" -> q166Sql,
-    "q170_join_hints" -> q170Sql,
-    "q171_hof_zoo" -> q171Sql,
-    "q172_calendar_zoo" -> q172Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q237_sql_table_fn", q237SqlTableFn, q237Sql),
+    QueryDef("q235_exec_immediate", q235ExecImmediate, q235Sql),
+    QueryDef("q236_sql_script", q236SqlScript, q236Sql),
+    QueryDef("q222_sql_udf", q222SqlUdf, q222Sql),
+    QueryDef("q159_pipe_syntax", q159PipeSyntax, q159Sql),
+    QueryDef("q160_variant_shred", q160VariantShred, q160Sql),
+    QueryDef("q161_collation", q161Collation, q161Sql),
+    QueryDef("q162_param_sql", q162ParamSql, q162Sql),
+    QueryDef("q163_window_zoo", q163WindowZoo, q163Sql),
+    QueryDef("q164_setops_all", q164SetopsAll, q164Sql),
+    QueryDef("q165_paginate", q165Paginate, q165Sql),
+    QueryDef("q166_group_by_all", q166GroupByAll, q166Sql),
+    QueryDef("q170_join_hints", q170JoinHints, q170Sql),
+    QueryDef("q171_hof_zoo", q171HofZoo, q171Sql),
+    QueryDef("q172_calendar_zoo", q172CalendarZoo, q172Sql),
+    QueryDef("q253_listagg", q253Listagg, q253Sql)
+  )
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.QueryDef
+import graft.queries.Queries
 import graft.sources.TsBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
@@ -2428,4 +2430,40 @@ object StreamOps {
       |WHERE h + INTERVAL 1 HOUR <= wm.w
       |GROUP BY 1, 2
       |ORDER BY janela_ms, event_type""".stripMargin
+
+
+  // --------------------------------------------------------------- registry
+
+  /** Each streaming entry runs as a real streaming query; its oracle is
+    * batch SQL, so the check is streaming/batch equivalence. */
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("sq1_stream_tumbling", sq1StreamTumbling, Queries.q21Sql),
+    QueryDef("sq2_stream_dedup", sq2StreamDedup, sq2Sql),
+    QueryDef("sq3_stream_join", sq3StreamJoin, sq3Sql),
+    QueryDef("sq4_stream_sliding", sq4StreamSliding, sq4Sql),
+    QueryDef("sq5_stream_enrich", sq5StreamEnrich, sq5Sql),
+    QueryDef("sq6_sessionize", sq6Sessionize, Queries.q22Sql),
+    QueryDef("sq7_sessionize_timeout", sq7SessionizeTimeout, Queries.q22Sql),
+    QueryDef("sq8_stream_sketch", sq8StreamSketch, sq8Sql),
+    QueryDef("sq9_stream_incr_dedup", sq9StreamIncrDedup, sq9Sql),
+    QueryDef("sq10_stream_dedup_ttl", sq10StreamDedupTtl, sq10Sql),
+    QueryDef("sq11_stream_left_join", sq11StreamLeftJoin, sq11Sql),
+    QueryDef("sq12_stream_rollup", sq12StreamRollup, sq12Sql),
+    QueryDef("sq13_stream_profile", sq13StreamProfile, sq13Sql),
+    QueryDef("sq14_foreach_sink", sq14ForeachBatchSink, sq14Sql),
+    // same oracle as sq6/sq7: the flush tick makes timer output = q22
+    QueryDef("sq15_stream_timer_session", sq15StreamTimerSession, Queries.q22Sql),
+    QueryDef("sq16_stream_lastn", sq16StreamLastn, sq16Sql),
+    QueryDef("sq17_stream_type_counts", sq17StreamTypeCounts, sq17Sql),
+    QueryDef("sq18_stream_join_chain", sq18StreamJoinChain, sq18Sql),
+    QueryDef("sq19_late_data", sq19LateDataAudit, sq19Sql),
+    QueryDef("sq20_update_mode", sq20UpdateMode, sq20Sql),
+    QueryDef("sq21_stream_psi_monitor", sq21StreamPsiMonitor, sq21Sql),
+    QueryDef("sq22_stream_neardup_gate", sq22StreamNeardupGate, sq22Sql),
+    QueryDef("sq23_stream_anomaly", sq23StreamAnomaly, sq23Sql),
+    QueryDef("sq24_stream_distinct", sq24StreamDistinct, sq24Sql),
+    QueryDef("sq25_session_window", sq25SessionWindow, sq25Sql),
+    QueryDef("sq26_stream_full_outer", sq26StreamFullOuter, sq26Sql),
+    QueryDef("q244_state_inspect", q244StateInspect, q244Sql)
+  )
 }

@@ -143,19 +143,23 @@ class CoreSpec extends AnyFunSuite {
   test("driver contract: oracle keys resolve, registries disjoint, entry non-empty") {
     val q = SparkEntry.queries
     val o = SparkEntry.oracleSql
+    // a repeated name would shadow an entry silently in the derived maps
+    val names = SparkEntry.defs.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"duplicate query names: ${names.diff(names.distinct)}")
     // an oracle for a query that does not exist would silently weaken
     // the gate (the driver skips unknown names)
-    assert(o.keySet.subsetOf(q.keySet), s"oracle-only keys: ${o.keySet -- q.keySet}")
-    // the merged map must not shadow: component registries stay disjoint
-    val parts = Seq(graft.queries.Queries.all, graft.queries.RelOps.all,
-      graft.queries.MiningOps.all, graft.queries.SqlSurfaceOps.all,
-      graft.queries.PipelineOps.all,
-      graft.llmops.TextOps.all, graft.llmops.VectorOps.all,
-      graft.llmops.MultimodalOps.all)
-    val streaming = 27 // sq1..sq26 + q244_state_inspect, added inline in SparkEntry
-    assert(q.size == parts.map(_.size).sum + streaming,
-      "duplicate query names across registries would shadow silently")
+    assert(q.keySet == o.keySet, s"keys differ: ${(q.keySet -- o.keySet) ++ (o.keySet -- q.keySet)}")
     assert(SparkEntry.entry(spark).count() > 0, "driver smoke: entry must return rows")
+  }
+
+  test("SPARK_GRAFT_CPUS: unset means every core; below 1 or non-numeric fails fast") {
+    assert(GraftSession.parseCores(None) == Runtime.getRuntime.availableProcessors())
+    assert(GraftSession.parseCores(Some(" 8 ")) == 8)
+    Seq("0", "-2", "x").foreach { v =>
+      val e = intercept[IllegalArgumentException](GraftSession.parseCores(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$v'"))
+    }
   }
 
   test("bench summary line: bounded size, parseable, slowest-10 — at full surface scale") {

@@ -25,6 +25,12 @@ class Round15Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  /** Hits and misses summed over the k-means code frame and codebook. */
+  private def codebookStats: (Long, Long) = {
+    val cs = Seq(graft.llmops.VectorOps.codesCache, graft.llmops.VectorOps.codebookCache)
+    (cs.map(_.hits).sum, cs.map(_.misses).sum)
+  }
+
   // ------------------------------ PlanCache build-seconds + registry
 
   test("PlanCache: get() misses accumulate measured build seconds; " +
@@ -125,9 +131,9 @@ class Round15Spec extends AnyFunSuite with BeforeAndAfterAll {
     "(codebook cache: zero new misses) and the balance algebra holds") {
     // trainer publishes the codebook artifact for this (session, dir)
     graft.llmops.VectorOps.q74KmeansCodebook(spark, sf).collect()
-    val (h0, m0) = graft.llmops.VectorOps.codebookCacheStats
+    val (h0, m0) = codebookStats
     val out = graft.llmops.VectorOps.q239IvfAddBatch(spark, sf).collect()
-    val (h1, m1) = graft.llmops.VectorOps.codebookCacheStats
+    val (h1, m1) = codebookStats
     assert(m1 == m0, "q239 must not retrain (no codebook/code cache miss)")
     assert(h1 > h0, "q239 must consume the published codebook artifact")
     assert(out.nonEmpty)
@@ -196,9 +202,9 @@ class Round15Spec extends AnyFunSuite with BeforeAndAfterAll {
       assert(ms > 0.0 && ms <= 1.0)
       assert(r.getAs[Long]("inertia") > 0L)
     }
-    val (_, m0) = graft.llmops.VectorOps.codebookCacheStats
+    val (_, m0) = codebookStats
     graft.llmops.VectorOps.q242CodebookSweep(spark, sf).collect()
-    val (_, m1) = graft.llmops.VectorOps.codebookCacheStats
+    val (_, m1) = codebookStats
     assert(m1 == m0, "second sweep call must hit every codebook artifact")
   }
 

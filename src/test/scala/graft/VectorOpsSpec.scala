@@ -19,6 +19,8 @@ class VectorOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  private def stats(c: graft.operators.PlanCache[_]): (Long, Long) = (c.hits, c.misses)
+
   private def topkSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
     df.collect().groupBy(_.getAs[Long]("vec_id"))
       .map { case (k, rs) => k -> rs.map(_.getAs[Long]("neighbor_id")).toSet }
@@ -67,9 +69,9 @@ class VectorOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // pipeline
     val q43 = VectorOps.q43CosNeardup(spark, dir)
     q43.collect()
-    val (hitsBefore, missesBefore) = VectorOps.cosPairCacheStats
+    val (hitsBefore, missesBefore) = stats(VectorOps.cosPairCache)
     val consumed = VectorOps.cosPairs(spark, dir)
-    val (hitsAfter, missesAfter) = VectorOps.cosPairCacheStats
+    val (hitsAfter, missesAfter) = stats(VectorOps.cosPairCache)
     assert(hitsAfter == hitsBefore + 1 && missesAfter == missesBefore,
       "consumer face must HIT the published artifact, not rebuild the pipeline")
     assert(consumed.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
@@ -84,9 +86,9 @@ class VectorOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // session+fixture, consumed persisted everywhere else
     val q40 = VectorOps.q40CosineTopk(spark, dir)
     q40.collect()
-    val (hitsBefore, missesBefore) = VectorOps.exactTopkCacheStats
+    val (hitsBefore, missesBefore) = stats(VectorOps.exactTopkCache)
     val consumed = VectorOps.exactTopk(spark, dir)
-    val (hitsAfter, missesAfter) = VectorOps.exactTopkCacheStats
+    val (hitsAfter, missesAfter) = stats(VectorOps.exactTopkCache)
     assert(hitsAfter == hitsBefore + 1 && missesAfter == missesBefore,
       "consumer face must HIT the published exact top-k, not rebuild the cross join")
     assert(consumed.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
@@ -98,9 +100,9 @@ class VectorOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q84 and q89 share the integer-code exact baseline through codeTopkCache") {
     VectorOps.q84PqAdcRecall(spark, dir).collect()
-    val (hitsBefore, missesBefore) = VectorOps.codeTopkCacheStats
+    val (hitsBefore, missesBefore) = stats(VectorOps.codeTopkCache)
     VectorOps.q89IvfpqRecall(spark, dir).collect()
-    val (hitsAfter, missesAfter) = VectorOps.codeTopkCacheStats
+    val (hitsAfter, missesAfter) = stats(VectorOps.codeTopkCache)
     assert(hitsAfter > hitsBefore && missesAfter == missesBefore,
       "q89's exact side must consume the baseline q84 already built")
   }
