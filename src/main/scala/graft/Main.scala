@@ -32,21 +32,11 @@ object Main {
     }
     val (mode, dir) = (args(0).toUpperCase, args(1))
     val conf = EngineConf.fromEnv()
-    val spark = GraftSession.getOrCreate(s"graft-$mode")
     // O22: running progress at the reference's 100k cadence
     // (overridable via GRAFT_PROGRESS_EVERY), covering every action
-    // the pipeline runs
-    // defensive parse: a non-numeric or non-positive override falls
-    // back to the default cadence with a warning instead of crashing
-    // before mode dispatch
-    val every = sys.env.get("GRAFT_PROGRESS_EVERY")
-      .flatMap { v =>
-        val parsed = scala.util.Try(v.trim.toLong).toOption.filter(_ > 0)
-        if (parsed.isEmpty)
-          System.err.println(s"GRAFT_PROGRESS_EVERY inválido ('$v'); usando padrão")
-        parsed
-      }
-      .getOrElse(graft.operators.ProgressTicker.IntervaloLog)
+    // the pipeline runs; a bad value fails here, before the session
+    val every = graft.operators.ProgressTicker.everyFromEnv()
+    val spark = GraftSession.getOrCreate(s"graft-$mode")
     try graft.operators.ProgressTicker.withTicker(spark, every) {
       val report = mode match {
         case "PRODUTOR_AVRO"   => produce(spark, conf, dir, avro = true)
@@ -74,15 +64,19 @@ object Main {
   /** Generate + serialize + partitioned write (reference produce path,
     * ProdutorAvro.java:55-105 / ProdutorJson.java:45-95). The explicit
     * round-robin partition column is carried through the write so a
-    * later reader sees the same layout as the 18-partition topic. */
+    * later reader sees the same layout as the 18-partition topic.
+    * Producer-callback metrics count the messages past the warm-up, over
+    * what was sent. */
   def produce(spark: SparkSession, conf: EngineConf, dir: String, avro: Boolean): DataFrame = {
     val msgs = Generator.messages(spark, conf)
     val raw = if (avro) Generator.rawAvro(msgs) else Generator.rawJson(msgs)
     val fmt = if (avro) "avro" else "json"
+    val counted = col("sequencia") > conf.warmupMensagens
     graft.sources.KafkaIO.brokersFromEnv() match {
       case Some(brokers) =>
         // live topic write (reference: ProdutorAvro.java:69-95) — the
-        // explicit partition column pins the (i-1)%P record partitioner.
+        // explicit partition column pins the (i-1)%P record partitioner;
+        // rows already arrive one topic partition per generator slice.
         // Avro values ship in the Confluent wire format: the schema id
         // comes from the registry client (register-or-lookup under the
         // topic's value subject, exactly what KafkaAvroSerializer does —
@@ -97,34 +91,34 @@ object Main {
             raw.withColumn("valor",
               graft.functions.GraftFunctions.confluentWrap(col("valor"), wireId))
           } else raw
-        val sink = graft.sources.KafkaIO
-          .toSinkFrame(toSend.repartition(conf.numParticoes, col("particao")))
-        graft.sources.KafkaIO.writeBatch(sink, brokers, topic,
-          conf.compressionType.toLowerCase)
-        // producer-callback metrics: over what was sent (the serialized
-        // record INCLUDING the wire header, like the reference's
-        // callback sizes)
-        Metrics.report(
-          toSend.filter(col("sequencia") > conf.warmupMensagens),
+        graft.sources.KafkaIO.writeBatch(graft.sources.KafkaIO.toSinkFrame(toSend), brokers,
+          topic, conf.compressionType.toLowerCase)
+        // the kafka sink runs its own RDD action, which never completes
+        // an observation: the report recomputes over the sent plan (the
+        // serialized record INCLUDING the wire header, like the
+        // reference's callback sizes)
+        Metrics.report(toSend.filter(counted),
           octet_length(col("valor")).cast("long"), col("sucesso"), col("timestamp"), conf)
       case None =>
-        // offline analogue: topic → partitioned parquet dir.
-        // repartition by the explicit partition column (O7) — mirrors the
-        // producer's (i-1)%P record partitioner on the wire layout;
-        // COMPRESSION_TYPE maps onto the file codec (the reference's
-        // producer compression axis — ConfiguracaoKafka.java:112-118;
-        // parquet accepts the same names: none/lz4/snappy/gzip/zstd)
-        raw.repartition(conf.numParticoes, col("particao"))
+        // offline analogue: topic → partitioned parquet dir, one job.
+        // Each generator slice holds one topic partition, so the write
+        // needs no shuffle; coalescing contiguous slices runs it as one
+        // wave of at most one task per core, and at most P tasks keep
+        // each partition's k slices in one task, so each particao=k dir
+        // still gets one file. COMPRESSION_TYPE maps onto the file
+        // codec (the reference's producer compression axis —
+        // ConfiguracaoKafka.java:112-118; parquet accepts the same
+        // names: none/lz4/snappy/gzip/zstd). `valor` is unique per
+        // row, so a dictionary for it would be built and then dropped.
+        // The report aggregates ride on the write as an observation.
+        val (observed, obs) = Metrics.observed(raw,
+          octet_length(col("valor")).cast("long"), col("sucesso"), col("timestamp"), counted)
+        observed.coalesce(math.min(spark.sparkContext.defaultParallelism, conf.numParticoes))
           .write.mode("overwrite").partitionBy("particao")
           .option("compression", conf.compressionType.toLowerCase)
+          .option("parquet.enable.dictionary#valor", "false")
           .parquet(s"$dir/messages_raw_$fmt")
-        // metrics over what was actually written (the producer callback
-        // counts sent-record sizes) — generate+serialize runs ONCE, in the
-        // write above; the report only re-reads lengths
-        val written = spark.read.parquet(s"$dir/messages_raw_$fmt")
-        Metrics.report(
-          written.filter(col("sequencia") > conf.warmupMensagens),
-          octet_length(col("valor")).cast("long"), col("sucesso"), col("timestamp"), conf)
+        Metrics.observedReport(spark, obs, conf)
     }
   }
 
@@ -144,7 +138,9 @@ object Main {
         graft.sources.KafkaIO.fromSourceFrame(
           graft.sources.KafkaIO.readAll(spark, brokers,
             graft.sources.KafkaIO.topicoMensagens(avro)))
-      case None => spark.read.parquet(s"$dir/messages_raw_$fmt")
+      case None =>
+        // the layout produce wrote, declared: no schema-inference job
+        spark.read.schema(SchemaDef.topicType(avro)).parquet(s"$dir/messages_raw_$fmt")
     }
     // live Avro values carry the 5-byte Confluent wire header the
     // producer framed (see produce): strip it before decode — the
@@ -155,6 +151,10 @@ object Main {
     val avroBody =
       if (live.isDefined) graft.functions.GraftFunctions.confluentStrip(col("valor"))
       else col("valor")
+    // bytes on the wire: the offline JSON `valor` is a UTF-8 string,
+    // whose `length` would count characters (a scan of every byte)
+    // where the live path's binary value and produce count bytes
+    val bytes = octet_length(col("valor")).cast("long").as("bytes")
     val parsed = conf.benchMode match {
       case "TRANSPORTE" =>
         // size-only projection (O15): no decode of `valor`. The record
@@ -165,8 +165,7 @@ object Main {
         // whose purpose is transport throughput printed 0.00.
         // no decode => no sequencia; the warm-up filter (a processed-
         // count heuristic in the reference) does not apply here
-        raw.select(col("particao"),
-          length(col("valor")).cast("long").as("bytes"),
+        raw.select(col("particao"), bytes,
           lit(true).as("ok"),
           col("timestamp").as("ts"),
           lit(Long.MaxValue).as("seq"))
@@ -174,8 +173,7 @@ object Main {
         val payload =
           if (avro) AvroSerde.from_avro(avroBody, SchemaDef.mensagemAvroJson)
           else from_json(col("valor").cast("string"), SchemaDef.mensagemType)
-        raw.select(col("particao"), length(col("valor")).cast("long").as("bytes"),
-            payload.as("m"))
+        raw.select(col("particao"), bytes, payload.as("m"))
           .select(col("particao"), col("bytes"),
             col("m").isNotNull.as("ok"),
             col("m.timestamp").as("ts"),

@@ -8,6 +8,10 @@ import org.apache.spark.sql.functions._
   */
 object GraftFunctions {
 
+  /** The separator the deterministic generators join their md5 inputs
+    * with (U+0001, which no input string contains). */
+  val Sep = "\u0001"
+
   /** True integral division — the SQL `div` operator (Catalyst
     * IntegralDivide), NOT `/`-then-cast. On long columns Spark's `/`
     * is double division truncated via cast, which matches DuckDB's
@@ -28,7 +32,7 @@ object GraftFunctions {
     * md5 hex of the inputs.
     */
   def deterministicUuid(cols: Column*): Column = {
-    val h = md5(concat_ws("", cols: _*))
+    val h = md5(concat_ws(Sep, cols: _*))
     concat_ws("-",
       substring(h, 1, 8), substring(h, 9, 4), substring(h, 13, 4),
       substring(h, 17, 4), substring(h, 21, 12))
@@ -42,10 +46,16 @@ object GraftFunctions {
   def deterministicText(len: Int, cols: Column*): Column = {
     require(len > 0)
     val blocks = (0 until (len + 31) / 32).map { i =>
-      md5(concat_ws("", (cols :+ lit(i)): _*))
+      md5(concat_ws(Sep, (cols :+ lit(i)): _*))
     }
     substring(concat(blocks: _*), 1, len)
   }
+
+  /** The deterministic `dados` array of a message (see
+    * [[GenRegistros]]). */
+  def genRegistros(seed: Long, sequencia: Column, n: Int): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      GenRegistros(seed, org.apache.spark.sql.graft.ColumnBridge.expression(sequencia), n))
 
   /** Deterministic uniform double in [0, bound) from a seeded hash —
     * replaces `random.nextDouble() * 1000`

@@ -70,13 +70,35 @@ final case class EngineConf(
   /** Sizing rule: each Registro is assumed ~200 serialized bytes
     * (reference: util/GeradorCargaEstruturada.java:49-50,62-64). */
   def registrosPorMensagem: Int = math.max(1, tamanhoMensagemKB * 1024 / 200)
+
+  /** This configuration, or an `IllegalArgumentException` naming the
+    * first out-of-range setting by its environment name and value: a
+    * partition count of 0 would route every message to a null
+    * partition, and a negative count would silently produce nothing. */
+  def validate(): EngineConf = {
+    def atLeast(name: String, v: Long, min: Long): Unit =
+      require(v >= min, s"$name=$v must be >= $min")
+    atLeast("NUM_PARTICOES", numParticoes, 1)
+    atLeast("CONSUMER_THREADS", consumerThreads, 1)
+    atLeast("TAMANHO_MENSAGEM_KB", tamanhoMensagemKB, 1)
+    atLeast("TOTAL_MENSAGENS", totalMensagens, 0)
+    atLeast("WARMUP_MENSAGENS", warmupMensagens, 0)
+    this
+  }
 }
 
 object EngineConf {
-  /** Read from env with the reference's names/defaults. */
+  /** Read from env with the reference's names/defaults, then
+    * [[EngineConf.validate]]. A set value that does not parse fails
+    * with its name and value. */
   def fromEnv(env: Map[String, String] = sys.env): EngineConf = {
-    def l(k: String, d: Long) = env.get(k).map(_.trim.toLong).getOrElse(d)
-    def i(k: String, d: Int)  = env.get(k).map(_.trim.toInt).getOrElse(d)
+    def num[T](k: String, d: T)(parse: String => Option[T]): T = env.get(k) match {
+      case None => d
+      case Some(v) => parse(v.trim).getOrElse(
+        throw new IllegalArgumentException(s"$k='$v' is not an integer"))
+    }
+    def l(k: String, d: Long) = num(k, d)(_.toLongOption)
+    def i(k: String, d: Int)  = num(k, d)(_.toIntOption)
     def s(k: String, d: String) = env.getOrElse(k, d)
     val parts = i("NUM_PARTICOES", 18)
     EngineConf(
@@ -88,7 +110,7 @@ object EngineConf {
       compressionType   = s("COMPRESSION_TYPE", "lz4"),
       warmupMensagens   = l("WARMUP_MENSAGENS", 0L),
       seed              = l("GRAFT_SEED", 42L)
-    )
+    ).validate()
   }
 }
 
@@ -114,6 +136,18 @@ object SchemaDef {
     StructField("dados", ArrayType(registroType, containsNull = false), nullable = false),
     StructField("versao", StringType, nullable = false)
   ))
+
+  /** The offline topic dir `graft.Main` produce writes and consume
+    * reads (`messages_raw_{avro,json}`): the record envelope, the
+    * serialized `valor` (Avro binary or JSON text), and the `particao`
+    * directory column last, all nullable, as a parquet read infers it. */
+  def topicType(avro: Boolean): StructType = StructType(Seq(
+    StructField("chave", StringType),
+    StructField("sequencia", LongType),
+    StructField("timestamp", LongType),
+    StructField("sucesso", BooleanType),
+    StructField("valor", if (avro) BinaryType else StringType),
+    StructField("particao", IntegerType)))
 
   /** Avro record schema (JSON) semantically equivalent to the
     * reference's .avsc — field names, types, order, and the `versao`

@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.model.EngineConf
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 
 /** The reference's core "query": the streaming metrics accumulator and
   * its derived report (reference: util/MetricasDesempenho.java:29-105),
@@ -21,12 +22,23 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
 object Metrics {
 
   /** Counter aggregation columns (the `registrarMensagem` semantics:
-    * bytes only added when > 0). */
-  def counterAggs(bytes: Column, sucesso: Column): Seq[Column] = Seq(
-    count(lit(1)).as("totalMensagens"),
-    coalesce(sum(when(sucesso, 1L).otherwise(0L)), lit(0L)).as("mensagensSucesso"),
-    coalesce(sum(when(sucesso, 0L).otherwise(1L)), lit(0L)).as("mensagensComErro"),
-    coalesce(sum(when(bytes > 0, bytes).otherwise(0L)), lit(0L)).as("totalBytes"))
+    * bytes only added when > 0), over the rows where `keep` holds. */
+  def counterAggs(bytes: Column, sucesso: Column, keep: Column = lit(true)): Seq[Column] = {
+    def kept(c: Column) = when(keep, c)
+    Seq(
+      count(kept(lit(1))).as("totalMensagens"),
+      coalesce(sum(kept(when(sucesso, 1L).otherwise(0L))), lit(0L)).as("mensagensSucesso"),
+      coalesce(sum(kept(when(sucesso, 0L).otherwise(1L))), lit(0L)).as("mensagensComErro"),
+      coalesce(sum(kept(when(bytes > 0, bytes).otherwise(0L))), lit(0L)).as("totalBytes"))
+  }
+
+  /** The report's six aggregates: the counters plus the event-time
+    * span, over the rows where `keep` holds. */
+  def reportAggs(bytes: Column, sucesso: Column, ts: Column,
+                 keep: Column = lit(true)): Seq[Column] =
+    counterAggs(bytes, sucesso, keep) ++ Seq(
+      coalesce(min(when(keep, ts)), lit(0L)).as("timestampInicio"),
+      coalesce(max(when(keep, ts)), lit(0L)).as("timestampFim"))
 
   /** Derived-metric columns over the four counters + duration.
     * Formulas and zero-guards per MetricasDesempenho.java:45-72:
@@ -61,10 +73,12 @@ object Metrics {
     */
   def report(df: DataFrame, bytes: Column, sucesso: Column, ts: Column,
              conf: EngineConf = EngineConf()): DataFrame = {
-    val aggs = counterAggs(bytes, sucesso) ++ Seq(
-      coalesce(min(ts), lit(0L)).as("timestampInicio"),
-      coalesce(max(ts), lit(0L)).as("timestampFim"))
-    val counters = df.agg(aggs.head, aggs.tail: _*)
+    val aggs = reportAggs(bytes, sucesso, ts)
+    derive(df.agg(aggs.head, aggs.tail: _*), conf)
+  }
+
+  /** The report row from a one-row frame of the [[reportAggs]] values. */
+  private def derive(counters: DataFrame, conf: EngineConf): DataFrame = {
     val dur = col("timestampFim") - col("timestampInicio")
     counters
       .select((col("*") +: derivedCols(dur)): _*)
@@ -119,14 +133,26 @@ object Metrics {
       org.apache.spark.sql.Encoders.product[Counters]
   }
 
-  /** Single-pass variant: attach the counters as an `Observation` so a
-    * benchmark action yields metrics without a second job (the
-    * reference accumulates during its send/poll loop — same one-pass
-    * property; Dataset.observe is streaming-safe too). Returns the
-    * observed DataFrame; read `obs.get` after an action completes. */
-  def observed(df: DataFrame, bytes: Column, sucesso: Column): (DataFrame, Observation) = {
-    val obs = Observation("graft_metrics")
-    val aggs = counterAggs(bytes, sucesso)
+  /** Single-pass variant: attach the [[reportAggs]] as an
+    * `Observation`, so the action that consumes the rows (a write)
+    * yields the metrics without a second job; the reference likewise
+    * accumulates during its send/poll loop. Returns the observed frame;
+    * after one action on it, [[observedReport]] reads the report. Only
+    * an action on the returned frame itself completes the observation. */
+  def observed(df: DataFrame, bytes: Column, sucesso: Column, ts: Column,
+               keep: Column = lit(true)): (DataFrame, Observation) = {
+    val obs = Observation()
+    val aggs = reportAggs(bytes, sucesso, ts, keep)
     (df.observe(obs, aggs.head, aggs.tail: _*), obs)
+  }
+
+  /** The [[report]] row of a completed [[observed]] run, as a local
+    * frame (no Spark job). Every aggregate is a non-null long. */
+  def observedReport(spark: SparkSession, obs: Observation, conf: EngineConf): DataFrame = {
+    val m = obs.get
+    val names = m.keys.toSeq // derive selects by name, so any order serves
+    val schema = StructType(names.map(StructField(_, LongType, nullable = false)))
+    derive(spark.createDataFrame(
+      java.util.List.of(Row.fromSeq(names.map(m))), schema), conf)
   }
 }

@@ -54,6 +54,14 @@ object ProgressTicker {
   /** The reference's log cadence (ProdutorAvro.java:24). */
   val IntervaloLog: Long = 100_000L
 
+  /** The cadence `GRAFT_PROGRESS_EVERY` sets (default [[IntervaloLog]]);
+    * a value that is not an integer >= 1 fails with its name and value. */
+  def everyFromEnv(env: Map[String, String] = sys.env): Long =
+    env.get("GRAFT_PROGRESS_EVERY").fold(IntervaloLog) { v =>
+      v.trim.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"GRAFT_PROGRESS_EVERY='$v' is not an integer >= 1"))
+    }
+
   private def logSink(count: Long, mb: Double): Unit =
     // the reference's message, same shape and precision
     println(f"Progresso: $count mensagens processadas ($mb%.2f MB processados)")

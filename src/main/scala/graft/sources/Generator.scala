@@ -3,7 +3,9 @@ package graft.sources
 import graft.functions.AvroSerde
 import graft.functions.GraftFunctions._
 import graft.model.{EngineConf, SchemaDef}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Distributed, deterministic message generator — the Spark-native
@@ -11,10 +13,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * (reference: util/GeradorCargaEstruturada.java:17-74 and
   * aplicacoes/ProdutorAvro.java:55-70).
   *
-  * Shape: `spark.range(1, n+1)` (already partition-parallel, no driver
-  * loop) + pure column expressions. Everything is a codegen'd builtin;
-  * at 100 TB this scales linearly with executors because each task
-  * generates its own range slice independently — zero shuffle.
+  * Shape: `spark.range` (already partition-parallel, no driver loop)
+  * + pure column expressions + one codegen'd payload expression
+  * ([[graft.functions.GenRegistros]]) for `dados`; at 100 TB this
+  * scales linearly with executors because each task generates its own
+  * range slice independently — zero shuffle.
   *
   * Determinism: the reference uses unseeded Random/UUID/now(); we
   * derive every field from (seed, sequencia, indice) hashes so t2
@@ -25,49 +28,46 @@ object Generator {
   /** Fixed epoch base for deterministic "timestamps": 2024-01-01T00:00Z. */
   val BaseTs: Long = 1704067200000L
 
-  /** Payload columns for one message row, given a `sequencia` column. */
-  private def payloadCols(seed: Long, nRegistros: Int)(seq: Column): Seq[(String, Column)] = {
-    val s = lit(seed)
-    def registro(i: Column) = struct(
-      i.cast("int").as("indice"),
-      deterministicText(100, s, seq, i, lit("texto")).as("texto"),
-      deterministicUniform(1000.0, s, seq, i, lit("numero")).as("numero"),
-      (lit(BaseTs) + seq).as("timestamp"),
-      deterministicUuid(s, seq, i, lit("uuid")).as("uuid"))
-    Seq(
-      "id" -> deterministicUuid(s, seq, lit("id")),
-      "timestamp" -> (lit(BaseTs) + seq),
-      "sequencia" -> seq,
-      "dados" -> transform(sequence(lit(0), lit(nRegistros - 1)), i => registro(i)),
-      "versao" -> lit("1.0"))
-  }
-
   /** The `messages` table with envelope columns (FIXTURES.md §A):
     * chave/particao per the reference's producer record
     * (ProdutorAvro.java:67-68: key "msg-"+i, partition (i-1)%P),
     * bytes_avro/bytes_json = serialized sizes on each path, sucesso =
     * deterministic error injection (1 in 97 fails) standing in for the
     * producer-callback error accounting (ProdutorAvro.java:74-90).
+    *
+    * Layout: the range is laid out partition-major, so each of its
+    * P×k slices holds the messages of exactly one topic partition, in
+    * `sequencia` order (k = ceil(cores/P), at least 1). With m =
+    * ceil(n/P) ids per partition, id ↦ sequencia = (id % m)·P + id div m
+    * + 1, and ids whose sequencia passes n are dropped. A partitioned
+    * write therefore needs no shuffle, and contiguous slices keep
+    * `particao` order when coalesced.
     */
   def messages(spark: SparkSession, conf: EngineConf): DataFrame = {
+    conf.validate()
     val n = conf.totalMensagens
-    val base = spark.range(1, n + 1).toDF("sequencia")
-    val withPayload = payloadCols(conf.seed, conf.registrosPorMensagem)(col("sequencia"))
-      .foldLeft(base) { case (df, (name, c)) =>
-        if (name == "sequencia") df else df.withColumn(name, c)
-      }
-    val payload = struct(
-      col("id"), col("timestamp"), col("sequencia"), col("dados"), col("versao"))
-    withPayload
-      .withColumn("chave", concat(lit("msg-"), col("sequencia")))
-      .withColumn("particao",
-        pmod(col("sequencia") - 1, lit(conf.numParticoes.toLong)).cast("int"))
+    val p = conf.numParticoes.toLong
+    val m = math.max(1L, (n + p - 1) / p)
+    val k = math.max(1L, (spark.sparkContext.defaultParallelism + p - 1) / p)
+    val id = col("id")
+    // m >= 1, so neither % nor div can yield null
+    val seq = ColumnBridge.column(KnownNotNull(ColumnBridge.expression(
+      (id % m) * p + idiv(id, lit(m)) + 1)))
+    val s = lit(conf.seed)
+    spark.range(0, m * p, 1, (p * k).toInt)
+      .select(seq.as("sequencia"))
+      .filter(col("sequencia") <= n)
+      .select(col("sequencia"),
+        concat(lit("msg-"), col("sequencia")).as("chave"),
+        pmod(col("sequencia") - 1, lit(p)).cast("int").as("particao"),
+        deterministicUuid(s, col("sequencia"), lit("id")).as("id"),
+        (lit(BaseTs) + col("sequencia")).as("timestamp"),
+        lit("1.0").as("versao"),
+        genRegistros(conf.seed, col("sequencia"), conf.registrosPorMensagem).as("dados"))
       .withColumn("bytes_avro",
-        length(AvroSerde.to_avro(payload, SchemaDef.mensagemAvroJson)).cast("long"))
-      .withColumn("bytes_json", octet_length(to_json(payload)).cast("long"))
+        length(AvroSerde.to_avro(payloadStruct, SchemaDef.mensagemAvroJson)).cast("long"))
+      .withColumn("bytes_json", octet_length(to_json(payloadStruct)).cast("long"))
       .withColumn("sucesso", pmod(col("sequencia"), lit(97L)) =!= 0)
-      .select("sequencia", "chave", "particao", "id", "timestamp", "versao",
-        "dados", "bytes_avro", "bytes_json", "sucesso")
   }
 
   /** Serialized views, the analogue of the two producer wire formats:

@@ -2081,9 +2081,11 @@ object StreamOps {
     val incrMod = T.IncrMod
     withStreamShuffle(s) { fs =>
       // the corpus LSH index a production gate keeps persisted: q37's
-      // banding of the HISTORY docs' signature table (session artifact)
+      // banding of the HISTORY docs' signature table, read through the
+      // caller's session `s` — the artifact is keyed by session, and
+      // `fs` is new on every call
       val hist = T.bandedSigs(
-        T.minhashSigs(fs, dir).filter(col("doc_id") % incrMod =!= 0))
+        T.minhashSigs(s, dir).filter(col("doc_id") % incrMod =!= 0))
         .select(col("band"), col("bh")).distinct()
       val stream = withInRowBands(
         fs.readStream.schema(documentsSchema)

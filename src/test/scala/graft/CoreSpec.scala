@@ -111,7 +111,7 @@ class CoreSpec extends AnyFunSuite {
   }
 
   test("observed metrics match agg metrics in one pass") {
-    val (df, obs) = Metrics.observed(msgs, $"bytes_avro", $"sucesso")
+    val (df, obs) = Metrics.observed(msgs, $"bytes_avro", $"sucesso", $"timestamp")
     df.write.format("noop").mode("overwrite").save()
     val m = obs.get
     assert(m("totalMensagens") == 100L)

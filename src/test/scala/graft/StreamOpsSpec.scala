@@ -260,4 +260,14 @@ class StreamOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().head
     assert(got == expected)
   }
+
+  test("sq22 reads the signature artifact through the caller's session: a rerun hits minhash_sigs") {
+    val sigs = graft.llmops.TextOps.sigCache
+    val first = StreamOps.sq22StreamNeardupGate(spark, dir).collect().toSeq
+    val (hits, misses) = (sigs.hits, sigs.misses)
+    val second = StreamOps.sq22StreamNeardupGate(spark, dir).collect().toSeq
+    assert(sigs.misses == misses, "the second run rebuilt the signature table")
+    assert(sigs.hits > hits, "the second run did not read the signature table")
+    assert(first.nonEmpty && second == first)
+  }
 }
