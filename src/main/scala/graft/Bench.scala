@@ -2,9 +2,13 @@ package graft
 
 import graft.model.EngineConf
 import graft.sources.Generator
+import graft.streaming.StreamOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Benchmark main (driver-run per round → BENCH_r{N}.json).
+/** Benchmark main (driver-run per round → BENCH_r{N}.json) and the one
+  * measurement core every measuring main times through ([[measure]]).
   *
   * Two phases, mirroring the reference's methodology (README.md
   * benchmark modes: produce = generate+serialize+send, consume =
@@ -18,6 +22,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     SPARK_GRAFT_SF_DIR, each materialized through the noop sink
   *     (full execution, zero sink cost — `.count()` would let Catalyst
   *     prune the plan to a metadata scan).
+  *
+  * `runMain graft.Bench q41_ann_lsh,q67_dedup_clusters` is entry-list
+  * mode: only the named entries are timed (no serde, codec or recheck
+  * phase), into the same artifact and stdout lines, and each entry's
+  * executed plan of its last timed pass is printed after it.
   *
   * SELF-DIAGNOSING (round-2 verdict #1: the driver's numbers ran
   * 3-13× the builder's same-config measurements, and a single cold
@@ -40,7 +49,7 @@ object Bench {
 
   /** Locale-fixed number formatting (the f-interpolator honors the
     * JVM default locale and would emit comma decimals — invalid JSON). */
-  private def jnum(v: Double, places: Int): String =
+  private[graft] def jnum(v: Double, places: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${places}f", Double.box(v))
 
   private def time(f: => Unit): Double = {
@@ -50,7 +59,7 @@ object Bench {
   }
 
   /** Execute the full plan with no sink cost. */
-  private def run(df: DataFrame): Unit =
+  private[graft] def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   final case class Timing(warm: Double, timed: Seq[Double]) {
@@ -67,10 +76,15 @@ object Bench {
     def min: Double = if (timed.isEmpty) -1.0 else timed.min
   }
 
-  /** One warm pass + `passes` timed passes. */
-  private def measure(passes: Int)(go: () => Unit): Timing = {
-    val warm = time(go())
-    Timing(warm, (1 to passes).map(_ => time(go())))
+  /** One timed pass: wall seconds, the executors' summed task run and
+    * CPU seconds, hypervisor steal seconds (−1 where unreadable), and
+    * the Spark jobs, stages and tasks the pass ran. */
+  private[graft] final case class Pass(wall: Double, taskRun: Double,
+      taskCpu: Double, steal: Double, jobs: Long, stages: Long, tasks: Long)
+
+  /** One measured entry: its warm pass and its timed passes. */
+  private[graft] final case class Measured(warm: Double, passes: Vector[Pass]) {
+    def timing: Timing = Timing(warm, passes.map(_.wall))
   }
 
   /** Steal seconds in the MIN pass above which that pass is considered
@@ -81,96 +95,123 @@ object Bench {
   private[graft] val StealRetrySec = 0.5
   private val MaxStealRetries = 2
 
-  /** The fully-instrumented measurement of one bench entry: one warm
-    * pass + `passes` timed passes (+ steal retries), with every
-    * attribution signal captured per window — artifact-cache deltas
-    * with measured build seconds (round-14 verdict #1), timed-window
-    * steal (round-14 ADVICE), per-pass task clocks and steal, pressure
-    * evictions net of explicit unpersists, probes, GC, block-layer
-    * reads — and the mechanical `cause_class`. Shared by phase 2 and
-    * the codec sweep so every entry in the artifact self-labels. */
+  /** The session of a measuring main: the engine's own
+    * ([[GraftSession.getOrCreate]]) with the task and eviction clocks
+    * registered. */
+  private[graft] def session(appName: String): SparkSession = {
+    val spark = GraftSession.getOrCreate(appName)
+    TaskClock.register(spark.sparkContext)
+    EvictionClock.register(spark.sparkContext)
+    spark
+  }
+
+  /** THE measurement loop: one untimed warm pass of each `go`, then
+    * `passes` timed rounds over all of them. One `go` is the plain warm +
+    * N loop; several run round-robin (the serde legs — round-3 verdict
+    * #3), so a contention burst degrades one pass of every entry instead
+    * of every pass of one. After the rounds, a `go` whose min pass ran
+    * under more than [[StealRetrySec]] of steal gets up to `stealRetries`
+    * extra passes. Every pass is bracketed by [[TaskClock]] and steal
+    * snapshots taken after the listener bus drained, so its clocks and
+    * job/stage/task counts are its own. `afterWarm` runs once between the
+    * warm passes and the first round; `afterRound` after every round,
+    * with the passes so far. */
+  private[graft] def measure(spark: SparkSession, passes: Int,
+      gos: Seq[() => Unit], afterWarm: () => Unit = () => (),
+      afterRound: Seq[Measured] => Unit = _ => (),
+      stealRetries: Int = 0): Seq[Measured] = {
+    def drain(): Unit =
+      // a bus still busy after its 10 s bound leaves the stragglers to
+      // the next snapshot's delta rather than failing the entry
+      try org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      catch { case _: java.util.concurrent.TimeoutException => }
+    def onePass(go: () => Unit): Pass = {
+      val c0 = TaskClock.counts()
+      val sj0 = stealJiffies()
+      val w = time(go())
+      drain()
+      val c1 = TaskClock.counts()
+      val sj1 = stealJiffies()
+      Pass(w, (c1.runMs - c0.runMs) / 1e3, (c1.cpuNs - c0.cpuNs) / 1e9,
+        if (sj0 < 0 || sj1 < 0) -1.0 else (sj1 - sj0) / 100.0,
+        c1.jobs - c0.jobs, c1.stages - c0.stages, c1.tasks - c0.tasks)
+    }
+    val warm = gos.map { go => val w = time(go()); drain(); w }
+    afterWarm()
+    val timed = Array.fill(gos.size)(Vector.empty[Pass])
+    def measured = gos.indices.map(i => Measured(warm(i), timed(i)))
+    (1 to passes).foreach { _ =>
+      gos.indices.foreach(i => timed(i) :+= onePass(gos(i)))
+      afterRound(measured)
+    }
+    gos.indices.foreach { i =>
+      var retries = 0
+      while (retries < stealRetries && timed(i).minBy(_.wall).steal > StealRetrySec) {
+        timed(i) :+= onePass(gos(i))
+        retries += 1
+      }
+    }
+    measured
+  }
+
+  /** Every cumulative counter an entry window is read against. */
+  private final case class Snap(artifacts: Map[String, (Long, Long, Double, Long)],
+      gcMs: Long, readBytes: Long, evicted: Long, pressure: Long,
+      clock: TaskClock.Counts, steal: Long)
+
+  private def snap(): Snap = Snap(graft.operators.PlanCache.allStats,
+    gcMillis(), readBytes(), EvictionClock.snapshot()._1,
+    EvictionClock.pressureSnapshot(), TaskClock.counts(), stealJiffies())
+
+  /** The fully-instrumented measurement of one bench entry: [[measure]]
+    * with steal retries, and every attribution signal captured per window
+    * — artifact-cache deltas with measured build seconds (round-14
+    * verdict #1), timed-window steal (round-14 ADVICE), per-pass task
+    * clocks and steal, pressure evictions net of explicit unpersists,
+    * probes, GC, block-layer reads — and the mechanical `cause_class`.
+    * Shared by phase 2 and the codec sweep so every entry in the
+    * artifact self-labels. */
   private def timeEntry(spark: SparkSession, passes: Int)(
       go: () => Unit): (Timing, EntryStats) = {
     val (memStart, diskStart) = storageBytes(spark)
-    val artStart = artifactSnapshot()
-    val gcStart = gcMillis()
     val loadStart = load1()
-    val stealStart = stealJiffies()
+    val start = snap()
     val probeStart = probeMs()
-    val rbStart = readBytes()
-    val (evStart, _) = EvictionClock.snapshot()
-    val (trStart, tcStart) = TaskClock.snapshot()
-    val warm = time(go())
-    val artWarm = artifactSnapshot()
-    val gcWarm = gcMillis()
-    val rbWarm = readBytes()
-    val (evWarm, _) = EvictionClock.snapshot()
-    val prWarm = EvictionClock.pressureSnapshot()
-    val (trWarm, tcWarm) = TaskClock.snapshot()
     // round-14 ADVICE: the steal window compared against timed-pass
     // inflation starts AFTER the warm pass — warm-pass steal used to
     // satisfy the ≥25% threshold and mislabel timed inflation "steal"
-    val stealWarm = stealJiffies()
-    val probeMid = probeMs()
-    // per-PASS executor clocks (round-13 verdict #2) + per-pass steal
-    // (round-14 verdict #7): the cause classifier compares the worst
-    // wall pass against the best one, and the retry logic needs to
-    // know whether the MIN pass itself ran under steal. Async listener
-    // delivery can shift a straggling task-end into the next pass's
-    // delta — acceptable at the ≥1.5× ratios the classifier reads.
-    def onePass(): (Double, Double, Double, Double) = {
-      val (rp0, cp0) = TaskClock.snapshot()
-      val sj0 = stealJiffies()
-      val w = time(go())
-      val (rp1, cp1) = TaskClock.snapshot()
-      val sj1 = stealJiffies()
-      (w, (rp1 - rp0) / 1e3, (cp1 - cp0) / 1e9,
-        if (sj0 < 0 || sj1 < 0) -1.0 else (sj1 - sj0) / 100.0)
-    }
-    var passData = (1 to passes).map(_ => onePass()).toVector
-    var retries = 0
-    def minPassSteal: Double =
-      passData(passData.indices.minBy(passData(_)._1))._4
-    while (minPassSteal > StealRetrySec && retries < MaxStealRetries) {
-      passData :+= onePass()
-      retries += 1
-    }
-    val timed = passData.map(_._1)
-    val artTimed = artifactSnapshot()
-    val gcTimed = gcMillis()
-    val rbTimed = readBytes()
-    val (evTimed, _) = EvictionClock.snapshot()
-    val prTimed = EvictionClock.pressureSnapshot()
-    val (trTimed, tcTimed) = TaskClock.snapshot()
+    var warmed = start
+    var probeMid = -1.0
+    val m = measure(spark, passes, Seq(go),
+      afterWarm = () => { warmed = snap(); probeMid = probeMs() },
+      stealRetries = MaxStealRetries).head
+    val end = snap()
     val probeEnd = probeMs()
     val loadEnd = load1()
-    val stealEnd = stealJiffies()
-    val artsWarm = artifactDelta(artStart, artWarm)
-    val artsTimed = artifactDelta(artWarm, artTimed)
-    val stealAll =
-      if (stealStart < 0 || stealEnd < 0) -1.0
-      else (stealEnd - stealStart) / 100.0
-    val stealTimedSec =
-      if (stealWarm < 0 || stealEnd < 0) -1.0
-      else (stealEnd - stealWarm) / 100.0
-    val rebuildSecTimed = artsTimed.map(_.buildSec).sum
+    val timing = m.timing
+    val artsWarm = artifactDelta(start.artifacts, warmed.artifacts)
+    val artsTimed = artifactDelta(warmed.artifacts, end.artifacts)
+    def stealSec(from: Snap): Double =
+      if (from.steal < 0 || end.steal < 0) -1.0 else (end.steal - from.steal) / 100.0
+    val stealTimedSec = stealSec(warmed)
+    val pressureTimed = end.pressure - warmed.pressure
     val st = EntryStats(memStart, diskStart,
-      (gcWarm - gcStart) / 1000.0, (gcTimed - gcWarm) / 1000.0,
-      loadStart, loadEnd, stealAll,
+      (warmed.gcMs - start.gcMs) / 1000.0, (end.gcMs - warmed.gcMs) / 1000.0,
+      loadStart, loadEnd, stealSec(start),
       probeStart, probeMid, probeEnd,
-      ioDelta(rbStart, rbWarm), ioDelta(rbWarm, rbTimed),
-      (trWarm - trStart) / 1e3, (trTimed - trWarm) / 1e3,
-      (tcWarm - tcStart) / 1e9, (tcTimed - tcWarm) / 1e9,
-      passData.map(_._2), passData.map(_._3),
-      evWarm - evStart, evTimed - evWarm,
-      causeClass(timed, passData.map(_._2), passData.map(_._3),
+      ioDelta(start.readBytes, warmed.readBytes), ioDelta(warmed.readBytes, end.readBytes),
+      (warmed.clock.runMs - start.clock.runMs) / 1e3,
+      (end.clock.runMs - warmed.clock.runMs) / 1e3,
+      (warmed.clock.cpuNs - start.clock.cpuNs) / 1e9,
+      (end.clock.cpuNs - warmed.clock.cpuNs) / 1e9,
+      m.passes, warmed.evicted - start.evicted, end.evicted - warmed.evicted,
+      causeClass(timing.timed, m.passes.map(_.taskRun), m.passes.map(_.taskCpu),
         stealTimedSec, probeMid, probeEnd, probeBaselineMs,
-        prTimed - prWarm, rebuildSecTimed),
+        pressureTimed, artsTimed.map(_.buildSec).sum),
       artifactsWarm = artsWarm, artifactsTimed = artsTimed,
-      stealTimedSec = stealTimedSec, stealPasses = passData.map(_._4),
-      pressureEvictedTimed = prTimed - prWarm,
-      retryPasses = retries)
-    (Timing(warm, timed), st)
+      stealTimedSec = stealTimedSec, pressureEvictedTimed = pressureTimed,
+      retryPasses = m.passes.size - passes)
+    (timing, st)
   }
 
   /** Round-14 verdict #1: a run-wide hit flag cannot land a shared
@@ -180,9 +221,6 @@ object Bench {
     * carries (hits, misses, cumulative build seconds) for EVERY
     * registered cache, and the per-entry deltas below become
     * `{built, hit, build_sec}` rows in the bench detail. */
-  private def artifactSnapshot(): Map[String, (Long, Long, Double, Long)] =
-    graft.operators.PlanCache.allStats
-
   private[graft] final case class ArtifactDelta(
       name: String, built: Long, hit: Long, buildSec: Double,
       published: Long = 0L)
@@ -247,7 +285,9 @@ object Bench {
     *    task RUN inflated but task CPU flat → tasks sat descheduled
     *    (32-way co-scheduling / bandwidth starvation — invisible to
     *    the single-thread probe); both flat with wall inflated →
-    *    driver-side or scheduler gap. */
+    *    driver-side or scheduler gap.
+    * `passes` carries each timed pass's clocks, steal and job/stage/task
+    * counts; `batchMs` a streaming entry's micro-batch phase split. */
   private final case class EntryStats(
       memStartBytes: Long,
       diskStartBytes: Long,
@@ -261,15 +301,14 @@ object Bench {
       probeEndMs: Double,
       readWarmBytes: Long,
       readTimedBytes: Long,
-      taskRunWarmSec: Double = -1.0,
-      taskRunTimedSec: Double = -1.0,
-      taskCpuWarmSec: Double = -1.0,
-      taskCpuTimedSec: Double = -1.0,
-      taskRunPasses: Seq[Double] = Seq.empty,
-      taskCpuPasses: Seq[Double] = Seq.empty,
-      evictedWarm: Long = 0L,
-      evictedTimed: Long = 0L,
-      causeClass: String = "clean",
+      taskRunWarmSec: Double,
+      taskRunTimedSec: Double,
+      taskCpuWarmSec: Double,
+      taskCpuTimedSec: Double,
+      passes: Seq[Pass],
+      evictedWarm: Long,
+      evictedTimed: Long,
+      causeClass: String,
       // round-14 verdict #1: per-entry artifact-cache activity
       // (built/hit counts + measured build seconds) split by window
       artifactsWarm: Seq[ArtifactDelta] = Seq.empty,
@@ -278,11 +317,11 @@ object Bench {
       // all-window stealSec above stays for continuity), and evictions
       // net of explicit unpersists (pressure drops only)
       stealTimedSec: Double = -1.0,
-      stealPasses: Seq[Double] = Seq.empty,
       pressureEvictedTimed: Long = 0L,
       // round-14 verdict #7: extra passes run because the min pass saw
       // hypervisor steal above the retry threshold
-      retryPasses: Int = 0)
+      retryPasses: Int = 0,
+      batchMs: Seq[(String, Long)] = Seq.empty)
 
   /** Round-13 verdict #1/#2: apply the PERF.md §9 attribution table
     * MECHANICALLY per entry, so an inflated entry self-labels in the
@@ -322,9 +361,7 @@ object Bench {
       rebuildSecTimed: Double = 0.0): String = {
     if (timed.isEmpty) return "none"
     val mn = timed.min
-    val sorted = timed.sorted
-    val med = if (sorted.size % 2 == 1) sorted(sorted.size / 2)
-              else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
+    val med = Timing(0.0, timed).median
     if (med < mn * 1.5 || med - mn < 0.2) return "clean"
     val inflation = timed.sum - timed.size * mn
     if (evictedTimed > 0) return "evicted"
@@ -345,18 +382,39 @@ object Bench {
     "driver-gap"
   }
 
-  /** Cumulative executor task clocks (run wall ms, CPU ns), fed by a
-    * task-end listener registered once per bench JVM. Both counters
-    * are cumulative and monotone, so per-entry deltas stay exact even
-    * though the listener bus delivers asynchronously — a straggling
-    * task-end lands in the NEXT snapshot's delta instead of being
-    * lost (attribution at ≥3× inflation does not need ms precision). */
+  /** Cumulative executor task clocks (run wall ms, CPU ns) and counts of
+    * the jobs, stages and tasks run, fed by a listener registered once
+    * per measuring session. Every counter is cumulative and monotone, so
+    * a window's delta is exact once the listener bus has drained
+    * ([[measure]] drains after every pass). */
   private[graft] object TaskClock
       extends org.apache.spark.scheduler.SparkListener {
     val runMs = new java.util.concurrent.atomic.AtomicLong(0L)
     val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
+    private val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
+    private val stages = new java.util.concurrent.atomic.AtomicLong(0L)
+    private val tasks = new java.util.concurrent.atomic.AtomicLong(0L)
+    /** Stage id → the job whose start event declared it (round-15
+      * ADVICE: by the exact `stageIds` of `SparkListenerJobStart`, not
+      * "the job that started last", which concurrent jobs such as q168's
+      * parallel legs misattribute). A stage counts once, when it
+      * completes; the stages a job skipped are dropped at its end. */
+    private val stageJob =
+      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Integer]()
+    override def onJobStart(
+        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet()
+      js.stageIds.foreach(stageJob.put(_, Int.box(js.jobId)))
+    }
+    override def onStageCompleted(
+        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+      if (stageJob.remove(sc.stageInfo.stageId) != null) stages.incrementAndGet()
+    override def onJobEnd(
+        je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+      stageJob.values.removeIf(_.intValue == je.jobId)
     override def onTaskEnd(
         te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
       val m = te.taskMetrics
       if (m != null) {
         runMs.addAndGet(m.executorRunTime)
@@ -364,6 +422,10 @@ object Bench {
       }
     }
     def snapshot(): (Long, Long) = (runMs.get(), cpuNs.get())
+    final case class Counts(runMs: Long, cpuNs: Long, jobs: Long,
+        stages: Long, tasks: Long)
+    def counts(): Counts =
+      Counts(runMs.get(), cpuNs.get(), jobs.get(), stages.get(), tasks.get())
     /** Idempotent registration (round-13 ADVICE: a second bare
       * addSparkListener in the same JVM — e.g. a spec re-running the
       * bench path — would double-count every task's run/CPU time).
@@ -475,7 +537,7 @@ object Bench {
   private def stealJiffies(): Long =
     try {
       // Files.readString, not Source.fromFile: this runs twice per
-      // bench entry and an unclosed Source leaks a file handle each
+      // bench pass and an unclosed Source leaks a file handle each
       // call (~480 fds across a 241-entry run, in a harness where fd
       // exhaustion has been observed — round-10 ADVICE).
       val cpu = java.nio.file.Files
@@ -503,29 +565,49 @@ object Bench {
       .map(_.getCollectionTime).filter(_ > 0).sum
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = GraftSession.defaultCores
-    val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ >= 1).getOrElse(3)
-    val spark = GraftSession.builder("graft-bench", cores = cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // round-12 verdict #2: the executors' own clock per entry — the
-    // attribution signal a single-thread probe cannot provide.
-    // register() is remove-then-add, so a re-entrant bench (or a spec
-    // that already registered the singleton) can never double-count.
-    TaskClock.register(spark.sparkContext)
-    EvictionClock.register(spark.sparkContext)
+  /** The last query execution the session finished: in entry-list mode,
+    * read after an entry's passes (which drain the listener bus), it is
+    * the plan its last timed pass actually ran, AQE re-plans included. */
+  private final class LastPlan extends QueryExecutionListener {
+    @volatile var last: Option[QueryExecution] = None
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      last = Some(qe)
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    def executedPlan: String = last.fold("(no plan recorded)")(_.executedPlan.toString)
+  }
 
-    // ---- phase 1: serde, the reference's README workload shape
+  /** What one bench run reports against: its session, fixture dir, core
+    * count, pass counts, serde message count and artifact path. */
+  private final case class Ctx(spark: SparkSession, sfDir: String, cpus: Int,
+      passes: Int, serdePasses: Int, serdeMsgs: Long, out: java.nio.file.Path)
+
+  def main(args: Array[String]): Unit = {
+    // an entry list resolves before the session starts: a typo fails here
+    val only = args.headOption.map(a => SparkEntry.select(a.split(",").toSeq))
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val passes = GraftSession.envPositive("SPARK_GRAFT_BENCH_PASSES", 3)
+    val spark = session("graft-bench")
+    run(spark, sfDir, passes, only, benchOutPath)
+    spark.stop()
+  }
+
+  /** One bench run on `spark`. Without an entry list (`only` empty) it is
+    * the full run: serde, codec sweep, every `SparkEntry.defs` entry and
+    * the recheck sentinels. With one, only those entries, each
+    * followed on stdout by its executed plan. Both write the same
+    * artifact to `out` and end stdout with the same lines. */
+  private[graft] def run(spark: SparkSession, sfDir: String, passes: Int,
+      only: Option[Seq[QueryDef]], out: java.nio.file.Path): Unit = {
     val conf = EngineConf(totalMensagens = 100000, tamanhoMensagemKB = 1,
       warmupMensagens = 0, seed = 42)
-    val tmp = graft.operators.PlanCache.tempDir("graft_bench_")
+    val ctx = Ctx(spark, sfDir, GraftSession.defaultCores, passes,
+      math.max(passes, 5), conf.totalMensagens, out)
     val results = scala.collection.mutable.LinkedHashMap[String, Timing]()
     val stats = scala.collection.mutable.LinkedHashMap[String, EntryStats]()
+    def flushPartial(): Unit = flush(ctx, results, stats, partial = true)
 
     // JVM/codegen warm-up (not reported)
-    run(Generator.messages(spark, conf.copy(totalMensagens = 5000)))
+    if (only.isEmpty) noop(Generator.messages(spark, conf.copy(totalMensagens = 5000)))
 
     // calibration-probe baseline: median of 7 after 3 JIT warm-ups,
     // taken while the session is otherwise idle — every per-entry
@@ -536,134 +618,107 @@ object Bench {
       ps(ps.size / 2)
     }
 
-    // ---- phase 1b prep: the compression axis (reference
-    // ConfiguracaoKafka.java:112-118 — producer compression.type is a
-    // first-class benchmark variable there; here it maps onto the
-    // file codec exactly as Main.produce does). The default (lz4)
-    // rides in the main serde entries; the sweep adds the other
-    // codecs the reference exposes, each in its own dir so a consume
-    // entry reads files written with that codec.
-    val codecSweep = Seq("none", "snappy", "gzip", "zstd")
+    if (only.isEmpty) {
+      // ---- phase 1: serde, the reference's README workload shape.
+      // The exact CLI pipelines (produce = generate+serialize+write,
+      // consume = read+[parse]+metrics). The warm pass covers JIT,
+      // codegen cache and page cache for each mode's files — round 1
+      // timed each mode once, cold, in a fixed order, and the ordering
+      // artifacts were visible (json TRANSPORTE measured slower than
+      // json E2E_PARSE, impossible in steady state).
+      val tmp = graft.operators.PlanCache.tempDir("graft_bench_")
+      val e2e = conf.copy(benchMode = "E2E_PARSE")
+      val transp = conf.copy(benchMode = "TRANSPORTE")
+      val serdeRuns: Seq[(String, () => Unit)] = Seq(
+        "produce_avro" -> (() => Main.produce(spark, conf, tmp, avro = true).collect()),
+        "produce_json" -> (() => Main.produce(spark, conf, tmp, avro = false).collect()),
+        "consume_avro_e2e" -> (() => Main.consume(spark, e2e, tmp, avro = true).collect()),
+        "consume_json_e2e" -> (() => Main.consume(spark, e2e, tmp, avro = false).collect()),
+        "consume_avro_transporte" -> (() => Main.consume(spark, transp, tmp, avro = true).collect()),
+        "consume_json_transporte" -> (() => Main.consume(spark, transp, tmp, avro = false).collect()))
+      // serde phase hardening (round-3 verdict #3: these are the
+      // headline reference-parity numbers and showed 3× pass spreads
+      // under box contention): ≥5 timed passes each — they are
+      // seconds-cheap — INTERLEAVED round-robin across the six entries.
+      // Round-14 verdict #2: the legs carry the same per-pass
+      // task-clock/steal telemetry and `cause_class` as the query
+      // entries; probes run once per round-robin CYCLE (a per-timing
+      // probe would add ~10 ms to every sub-second pass), and a run
+      // killed mid-phase still leaves a parseable partial with every
+      // completed cycle (round-4 ADVICE).
+      val names = serdeRuns.map(_._1)
+      val loadStart = load1()
+      var probeMid = -1.0
+      var probeMax = -1.0
+      val serde = measure(spark, ctx.serdePasses, serdeRuns.map(_._2),
+        afterWarm = () => { probeMid = probeMs(); probeMax = probeMid },
+        afterRound = ms => {
+          probeMax = math.max(probeMax, probeMs())
+          names.zip(ms).foreach { case (n, m) => results(n) = m.timing }
+          flushPartial()
+        })
+      val loadEnd = load1()
+      names.zip(serde).foreach { case (name, m) =>
+        val steals = m.passes.map(_.steal).filter(_ >= 0)
+        val stealSum = if (steals.isEmpty) -1.0 else steals.sum
+        val run = m.passes.map(_.taskRun)
+        val cpu = m.passes.map(_.taskCpu)
+        stats(name) = EntryStats(0L, 0L, -1.0, -1.0, loadStart, loadEnd, stealSum,
+          -1.0, probeMid, probeMax, -1L, -1L, -1.0, run.sum, -1.0, cpu.sum,
+          m.passes, 0L, 0L,
+          causeClass(m.timing.timed, run, cpu, stealSum,
+            probeMid, probeMax, probeBaselineMs, 0L),
+          stealTimedSec = stealSum)
+      }
 
-    // the exact CLI pipelines (produce = generate+serialize+write,
-    // consume = read+[parse]+metrics). The warm pass covers JIT,
-    // codegen cache and page cache for each mode's files — round 1
-    // timed each mode once, cold, in a fixed order, and the ordering
-    // artifacts were visible (json TRANSPORTE measured slower than
-    // json E2E_PARSE, impossible in steady state).
-    val e2e = conf.copy(benchMode = "E2E_PARSE")
-    val transp = conf.copy(benchMode = "TRANSPORTE")
-    val serdeRuns: Seq[(String, () => Unit)] = Seq(
-      "produce_avro" -> (() => Main.produce(spark, conf, tmp, avro = true).collect()),
-      "produce_json" -> (() => Main.produce(spark, conf, tmp, avro = false).collect()),
-      "consume_avro_e2e" -> (() => Main.consume(spark, e2e, tmp, avro = true).collect()),
-      "consume_json_e2e" -> (() => Main.consume(spark, e2e, tmp, avro = false).collect()),
-      "consume_avro_transporte" -> (() => Main.consume(spark, transp, tmp, avro = true).collect()),
-      "consume_json_transporte" -> (() => Main.consume(spark, transp, tmp, avro = false).collect()))
-    // serde phase hardening (round-3 verdict #3: these are the
-    // headline reference-parity numbers and showed 3× pass spreads
-    // under box contention): ≥5 timed passes each — they are
-    // seconds-cheap — and the passes are INTERLEAVED round-robin
-    // across the six entries, so one contention burst degrades one
-    // pass of every entry instead of every pass of one entry.
-    // Round-14 verdict #2: these legs now carry the same per-pass
-    // task-clock/steal telemetry and `cause_class` as the query
-    // entries (they were 6 of the 14 unclassified entries) — each
-    // individual (entry, pass) timing is bracketed by TaskClock and
-    // steal snapshots; probes run once per round-robin CYCLE (a
-    // per-timing probe would add ~10 ms to every sub-second pass).
-    val serdePasses = math.max(passes, 5)
-    val serdeLoadStart = load1()
-    val serdeWarm = serdeRuns.map { case (name, go) => name -> time(go()) }.toMap
-    val serdeProbeMid = probeMs()
-    val serdeTimed = scala.collection.mutable.LinkedHashMap[String, Vector[Double]](
-      serdeRuns.map { case (name, _) => name -> Vector.empty[Double] }: _*)
-    val serdeRun = scala.collection.mutable.LinkedHashMap[String, Vector[Double]](
-      serdeRuns.map { case (name, _) => name -> Vector.empty[Double] }: _*)
-    val serdeCpu = scala.collection.mutable.LinkedHashMap[String, Vector[Double]](
-      serdeRuns.map { case (name, _) => name -> Vector.empty[Double] }: _*)
-    val serdeSteal = scala.collection.mutable.LinkedHashMap[String, Vector[Double]](
-      serdeRuns.map { case (name, _) => name -> Vector.empty[Double] }: _*)
-    var serdeProbeMax = serdeProbeMid
-    (1 to serdePasses).foreach { _ =>
-      serdeRuns.foreach { case (name, go) =>
-        val (rp0, cp0) = TaskClock.snapshot()
-        val sj0 = stealJiffies()
-        val w = time(go())
-        val (rp1, cp1) = TaskClock.snapshot()
-        val sj1 = stealJiffies()
-        serdeTimed(name) = serdeTimed(name) :+ w
-        serdeRun(name) = serdeRun(name) :+ (rp1 - rp0) / 1e3
-        serdeCpu(name) = serdeCpu(name) :+ (cp1 - cp0) / 1e9
-        serdeSteal(name) = serdeSteal(name) :+
-          (if (sj0 < 0 || sj1 < 0) -1.0 else (sj1 - sj0) / 100.0)
+      // ---- phase 1b: compression sweep (reference
+      // ConfiguracaoKafka.java:112-118 — producer compression.type is a
+      // first-class benchmark variable there; here it maps onto the
+      // file codec exactly as Main.produce does). The default (lz4)
+      // rides in the serde entries above; each other codec writes its
+      // own dir so its consume entry reads files written with it. Avro
+      // produce + E2E consume per codec, 3 timed passes each — the
+      // entries are sub-second and the axis wants the ORDERING across
+      // codecs, not tail precision.
+      Seq("none", "snappy", "gzip", "zstd").foreach { codec =>
+        val cconf = conf.copy(compressionType = codec)
+        val cdir = graft.operators.PlanCache.tempDir(s"graft_bench_${codec}_")
+        try {
+          val (pT, pS) = timeEntry(spark, 3)(
+            () => Main.produce(spark, cconf, cdir, avro = true).collect())
+          results(s"produce_avro_$codec") = pT
+          stats(s"produce_avro_$codec") = pS
+          val (cT, cS) = timeEntry(spark, 3)(
+            () => Main.consume(spark, cconf.copy(benchMode = "E2E_PARSE"),
+              cdir, avro = true).collect())
+          results(s"consume_avro_e2e_$codec") = cT
+          stats(s"consume_avro_e2e_$codec") = cS
+        } catch {
+          // a codec missing from the runtime (e.g. no native lib) skips
+          // its entries rather than killing the run
+          case e: Throwable =>
+            System.err.println(s"[bench] codec $codec failed: ${e.getMessage}")
+        }
+        flushPartial()
       }
-      serdeProbeMax = math.max(serdeProbeMax, probeMs())
-      // crash-artifact guarantee inside the (now longer) serde phase:
-      // a run killed mid-phase still leaves a parseable partial with
-      // every completed round-robin pass, matching phase 2's
-      // flush-after-every-entry discipline (round-4 ADVICE)
-      serdeRuns.foreach { case (name, _) =>
-        results(name) = Timing(serdeWarm(name), serdeTimed(name))
-      }
-      flush(spark, results, stats, passes, serdePasses, conf, sfDir, cpus,
-        partial = true)
-    }
-    val serdeLoadEnd = load1()
-    serdeRuns.foreach { case (name, _) =>
-      val timed = serdeTimed(name)
-      val stealVals = serdeSteal(name).filter(_ >= 0)
-      val stealSum = if (stealVals.isEmpty) -1.0 else stealVals.sum
-      stats(name) = EntryStats(0L, 0L, -1.0, -1.0,
-        serdeLoadStart, serdeLoadEnd, stealSum,
-        -1.0, serdeProbeMid, serdeProbeMax, -1L, -1L,
-        -1.0, serdeRun(name).sum, -1.0, serdeCpu(name).sum,
-        serdeRun(name), serdeCpu(name), 0L, 0L,
-        causeClass(timed, serdeRun(name), serdeCpu(name), stealSum,
-          serdeProbeMid, serdeProbeMax, probeBaselineMs, 0L),
-        stealTimedSec = stealSum, stealPasses = serdeSteal(name))
     }
 
-    // ---- phase 1b: compression sweep (avro produce + E2E consume per
-    // codec; 3 timed passes each — the entries are sub-second and the
-    // axis wants the ORDERING across codecs, not tail precision)
-    codecSweep.foreach { codec =>
-      val cconf = conf.copy(compressionType = codec)
-      val cdir = graft.operators.PlanCache.tempDir(s"graft_bench_${codec}_")
-      try {
-        // full instrumentation (round-14 verdict #2: the 8 codec legs
-        // were unclassified) — same helper as the query entries
-        val (pT, pS) = timeEntry(spark, 3)(
-          () => Main.produce(spark, cconf, cdir, avro = true).collect())
-        results(s"produce_avro_$codec") = pT
-        stats(s"produce_avro_$codec") = pS
-        val (cT, cS) = timeEntry(spark, 3)(
-          () => Main.consume(spark, cconf.copy(benchMode = "E2E_PARSE"),
-            cdir, avro = true).collect())
-        results(s"consume_avro_e2e_$codec") = cT
-        stats(s"consume_avro_e2e_$codec") = cS
-      } catch {
-        // a codec missing from the runtime (e.g. no native lib) skips
-        // its entries rather than killing the run
-        case e: Throwable =>
-          System.err.println(s"[bench] codec $codec failed: ${e.getMessage}")
-      }
-      flush(spark, results, stats, passes, serdePasses, conf, sfDir, cpus,
-        partial = true)
+    // ---- phase 2: the queries at the SF dir, in declared order
+    val plans = only.map { _ =>
+      val l = new LastPlan
+      spark.listenerManager.register(l)
+      l
     }
-
-    // ---- phase 2: every registered query at the SF dir, in declared order
-    // optional comma-separated entry filter (the Verify
-    // SPARK_GRAFT_ONLY counterpart) for local iteration on a few
-    // changed entries; unset — the driver's path — times everything
-    val benchOnly = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.defs.filter(d => benchOnly.forall(_.contains(d.name))).foreach { d =>
+    only.getOrElse(SparkEntry.defs).foreach { d =>
       // per-query isolation: one failure must not lose the run
       try {
-        val (t, st) = timeEntry(spark, passes)(() => run(d.run(spark, sfDir)))
+        val (t, st) = timeEntry(spark, passes)(() => noop(d.run(spark, sfDir)))
         results(d.name) = t
-        stats(d.name) = st
+        stats(d.name) = st.copy(batchMs = StreamOps.lastBatchMs(d.name))
+        plans.foreach { p =>
+          println(s"==== ${d.name} executed plan (last timed pass) ====")
+          println(p.executedPlan)
+        }
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] ${d.name} failed: ${e.getMessage}")
@@ -671,8 +726,10 @@ object Bench {
       }
       // flush after EVERY entry: a killed/timed-out run still
       // leaves a parseable partial artifact at the well-known path
-      flush(spark, results, stats, passes, serdePasses, conf, sfDir, cpus, partial = true)
+      flushPartial()
     }
+    plans.foreach(spark.listenerManager.unregister)
+
     // ---- recheck phase (round-9 verdict #1: six entries regressed
     // ≥2× on unchanged code with clean gc/miss telemetry; hypothesis
     // (a) was cumulative session state across the 200-entry run).
@@ -680,30 +737,24 @@ object Bench {
     // same JVM, with everything accumulated: if the recheck min ≈ the
     // mid-run min, cumulative state is exonerated and a mid-run spike
     // was the box; if recheck ≫ mid-run, state accumulation is real
-    // and the artifact says so directly. zstd consume rides along for
-    // the same reason (its r9 curve was monotone within one entry).
-    // round-10 verdict #6: two round-10 heavies join the sentinel set
-    // so the cumulative-state exoneration covers the new surface;
-    // round 12: sq18 joins — it is the suite's most expensive entry
-    // AND the most steal-sensitive (the r12 closeout measured 143 s
-    // of hypervisor steal across its window), so its end-of-run
-    // retime separates a mid-run steal burst from real cost
-    val sentinels = Seq("q45_media_meta", "q47_ann_recall", "q51_salted_join",
+    // and the artifact says so directly. Round 10 added two heavies;
+    // round 12 added sq18 — the suite's most expensive and most
+    // steal-sensitive entry, whose end-of-run retime separates a
+    // mid-run steal burst from real cost.
+    val recheck = scala.collection.mutable.LinkedHashMap[String, Timing]()
+    if (only.isEmpty) Seq("q45_media_meta", "q47_ann_recall", "q51_salted_join",
       "q88_containment", "q89_ivfpq_recall", "sq7_sessionize_timeout",
       "q193_neighbor_jaccard", "q202_source_sketch_jaccard",
-      "sq18_stream_join_chain")
-    val recheck = scala.collection.mutable.LinkedHashMap[String, Timing]()
-    sentinels.foreach { name =>
+      "sq18_stream_join_chain").foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
-        try recheck(name) = measure(passes)(() => run(fn(spark, sfDir)))
+        try recheck(name) =
+          measure(spark, passes, Seq(() => noop(fn(spark, sfDir)))).head.timing
         catch { case e: Throwable =>
           System.err.println(s"[bench] recheck $name failed: ${e.getMessage}")
         }
       }
     }
-    val (compactLine, _) =
-      flush(spark, results, stats, passes, serdePasses, conf, sfDir, cpus,
-        partial = false, recheck = recheck)
+    val (compactLine, _) = flush(ctx, results, stats, partial = false, recheck = recheck)
     // stdout carries the COMPACT line only: the full line (detail,
     // mins) grew past what the driver's log scrape windows (BENCH_r04
     // captured only the tail of a ~6 KB line → parsed: null); the
@@ -721,19 +772,13 @@ object Bench {
     // (entry count, total, slowest-10) as the LAST stdout lines, once
     // prefixed for grep anchoring and once bare, so any tail window
     // ends with one complete parseable record.
-    val summary = summaryLine(results, conf.totalMensagens, sfDir, cpus)
+    val summary = summaryLine(results, conf.totalMensagens, sfDir, ctx.cpus,
+      out.toAbsolutePath.toString)
     println(s"BENCH_SUMMARY: $summary")
     println(summary)
-    System.err.println(s"[bench] full artifact: ${benchOutPath.toAbsolutePath}")
-    spark.stop()
+    System.err.println(s"[bench] full artifact: ${out.toAbsolutePath}")
   }
 
-  /** Build the bench JSON from the results so far and write it to the
-    * well-known output path (sbt decorates stdout with [info]/[error]
-    * prefixes, so consumers read the file — SPARK_GRAFT_BENCH_OUT if
-    * set, else ./bench_out.json; see README "Benchmark output").
-    * `partial` marks in-progress snapshots. Returns (compact headline
-    * line for stdout, full line written to the file). */
   /** The ≤1 KB tail summary: entry count, total, the ten slowest
     * entries by MIN. Its SIZE is the contract — the driver's tail capture
     * truncates long lines from the FRONT, so the last stdout record
@@ -767,17 +812,22 @@ object Bench {
   }
 
   /** Canonical full-artifact path (SPARK_GRAFT_BENCH_OUT if set, else
-    * ./bench_out.json). */
+    * ./bench_out.json; see README "Benchmark output"). */
   private def benchOutPath: java.nio.file.Path =
     java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
 
-  private def flush(spark: SparkSession, results: collection.Map[String, Timing],
-      stats: collection.Map[String, EntryStats],
-      passes: Int, serdePasses: Int, conf: EngineConf, sfDir: String,
-      cpus: Int, partial: Boolean,
+  /** Build the bench JSON from the results so far and write it to
+    * `ctx.out` (sbt decorates stdout with [info]/[error] prefixes, so
+    * consumers read the file). `partial` marks in-progress snapshots.
+    * Returns (compact headline line for stdout, full line written to the
+    * file). */
+  private def flush(ctx: Ctx, results: collection.Map[String, Timing],
+      stats: collection.Map[String, EntryStats], partial: Boolean,
       recheck: collection.Map[String, Timing] = Map.empty): (String, String) = {
     def num(v: Double, places: Int): String = jnum(v, places)
+    def nums(vs: Seq[Double], places: Int): String =
+      vs.map(num(_, places)).mkString("[", ",", "]")
     // round-14 verdict #1: per-entry artifact rows — a rebuilt shared
     // artifact lands (with its measured build seconds) on the entry
     // whose window paid for it; empty windows are omitted so the
@@ -798,14 +848,14 @@ object Bench {
     val total = mins.values.filter(_ >= 0).sum
     val totalMedian = medians.values.filter(_ >= 0).sum
     val msgsPerSecAvro = mins.get("consume_avro_e2e")
-      .filter(_ > 0).map(conf.totalMensagens / _).getOrElse(0.0)
+      .filter(_ > 0).map(ctx.serdeMsgs / _).getOrElse(0.0)
     val qs = mins.map { case (k, v) => s""""$k":${num(v, 3)}""" }
       .mkString("{", ",", "}")
     val detail = results.map { case (k, t) =>
-      val timed = t.timed.map(num(_, 3)).mkString("[", ",", "]")
       // per-entry telemetry (round-7 verdict #1/#4): GC seconds spent
       // during the warm and timed passes, persisted storage at entry
-      // start, and the artifact rows of both windows
+      // start, per-pass clocks and job/stage/task counts, and the
+      // artifact rows of both windows
       val extra = stats.get(k).map { st =>
         s""","gc_warm_sec":${num(st.gcWarmSec, 3)}""" +
           s""","gc_timed_sec":${num(st.gcTimedSec, 3)}""" +
@@ -822,32 +872,33 @@ object Bench {
           s""","task_run_timed_sec":${num(st.taskRunTimedSec, 3)}""" +
           s""","task_cpu_warm_sec":${num(st.taskCpuWarmSec, 3)}""" +
           s""","task_cpu_timed_sec":${num(st.taskCpuTimedSec, 3)}""" +
-          (if (st.taskRunPasses.isEmpty) "" else
-            s""","task_run_passes":${st.taskRunPasses.map(num(_, 3))
-              .mkString("[", ",", "]")}""" +
-            s""","task_cpu_passes":${st.taskCpuPasses.map(num(_, 3))
-              .mkString("[", ",", "]")}""") +
+          s""","task_run_passes":${nums(st.passes.map(_.taskRun), 3)}""" +
+          s""","task_cpu_passes":${nums(st.passes.map(_.taskCpu), 3)}""" +
+          s""","jobs":${st.passes.map(_.jobs).mkString("[", ",", "]")}""" +
+          s""","stages":${st.passes.map(_.stages).mkString("[", ",", "]")}""" +
+          s""","tasks":${st.passes.map(_.tasks).mkString("[", ",", "]")}""" +
           s""","evicted_warm":${st.evictedWarm}""" +
           s""","evicted_timed":${st.evictedTimed}""" +
           s""","pressure_evicted_timed":${st.pressureEvictedTimed}""" +
           s""","steal_timed_sec":${num(st.stealTimedSec, 2)}""" +
-          (if (st.stealPasses.isEmpty) "" else
-            s""","steal_passes":${st.stealPasses.map(num(_, 2))
-              .mkString("[", ",", "]")}""") +
+          s""","steal_passes":${nums(st.passes.map(_.steal), 2)}""" +
           (if (st.retryPasses == 0) "" else
             s""","retry_passes":${st.retryPasses}""") +
           s""","cause_class":"${st.causeClass}"""" +
           artJson("artifacts_warm", st.artifactsWarm) +
-          artJson("artifacts_timed", st.artifactsTimed)
+          artJson("artifacts_timed", st.artifactsTimed) +
+          (if (st.batchMs.isEmpty) "" else
+            s""","batch_ms":""" + st.batchMs.map { case (phase, ms) =>
+              s""""$phase":$ms""" }.mkString("{", ",", "}"))
       }.getOrElse("")
       s""""$k":{"warm":${num(t.warm, 3)},"min":${num(t.min, 3)},""" +
-        s""""median":${num(t.median, 3)},"timed":$timed$extra}"""
+        s""""median":${num(t.median, 3)},"timed":${nums(t.timed, 3)}$extra}"""
     }.mkString("{", ",", "}")
     // the contended-window view: medians per entry (the r13-and-prior
     // headline), kept for round-over-round continuity
     val qmedians = medians.map { case (k, v) => s""""$k":${num(v, 3)}""" }
       .mkString("{", ",", "}")
-    val (persistedMem, persistedDisk) = storageBytes(spark)
+    val (persistedMem, persistedDisk) = storageBytes(ctx.spark)
     // run-level hit flags: true iff no entry's TIMED window rebuilt the
     // named artifact (warm passes are expected to build each once per
     // session and dir); artifact_cache_hit covers every other cache
@@ -869,7 +920,7 @@ object Bench {
       // entries run math.max(passes,5) interleaved passes and carry
       // their own count (round-4 ADVICE: one global count
       // misdescribed the serde detail arrays)
-      s""""timed_passes":$passes,"serde_timed_passes":$serdePasses,""" +
+      s""""timed_passes":${ctx.passes},"serde_timed_passes":${ctx.serdePasses},""" +
         s""""shingle_index_hit":${!timedBuilds("shingle_index")},""" +
         s""""label_cache_hit":${!timedBuilds("cluster_labels")},""" +
         s""""artifact_cache_hit":${(timedBuilds -- ownFlagCaches).isEmpty},""" +
@@ -882,7 +933,7 @@ object Bench {
         s""""evicted_blocks_total":${EvictionClock.snapshot()._1},""" +
         s""""pressure_evicted_total":${EvictionClock.pressureSnapshot()},""" +
         s""""unpersisted_rdds_total":${EvictionClock.snapshot()._2},""" +
-        s""""sf":"$sfDir","cpus":$cpus,"serde_msgs":${conf.totalMensagens},""" +
+        s""""sf":"${ctx.sfDir}","cpus":${ctx.cpus},"serde_msgs":${ctx.serdeMsgs},""" +
         s""""avro_e2e_msgs_per_sec":${num(msgsPerSecAvro, 1)}}"""
     val headline =
       s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$qs,""" +
@@ -894,7 +945,7 @@ object Bench {
     // or a kill mid-write — must see either the previous complete
     // artifact or the new one, never a truncated file): temp file in
     // the target directory, then rename
-    val outPath = benchOutPath.toAbsolutePath
+    val outPath = ctx.out.toAbsolutePath
     try {
       val tmpFile = java.nio.file.Files.createTempFile(
         outPath.getParent, ".bench_out_", ".tmp")

@@ -39,14 +39,22 @@ object GraftSession {
   /** Local parallelism: `SPARK_GRAFT_CPUS` if set, else every core. */
   def defaultCores: Int = parseCores(sys.env.get("SPARK_GRAFT_CPUS"))
 
-  /** A set value that is not a whole number >= 1 fails fast with a
-    * message naming the variable. */
-  private[graft] def parseCores(raw: Option[String]): Int = raw match {
-    case None => Runtime.getRuntime.availableProcessors()
+  private[graft] def parseCores(raw: Option[String]): Int =
+    parsePositive("SPARK_GRAFT_CPUS", raw, Runtime.getRuntime.availableProcessors())
+
+  /** A positive-integer setting: `default` when unset; a set value that
+    * is not a whole number >= 1 fails fast with a message naming the
+    * variable and the value. */
+  private[graft] def parsePositive(name: String, raw: Option[String],
+      default: => Int): Int = raw match {
+    case None => default
     case Some(v) => v.trim.toIntOption.filter(_ >= 1).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS='$v' is not an integer >= 1"))
+      throw new IllegalArgumentException(s"$name='$v' is not an integer >= 1"))
   }
+
+  /** [[parsePositive]] over the environment variable `name`. */
+  def envPositive(name: String, default: Int): Int =
+    parsePositive(name, sys.env.get(name), default)
 
   def getOrCreate(appName: String = "graft"): SparkSession = {
     val s = builder(appName).getOrCreate()

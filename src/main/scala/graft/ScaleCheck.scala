@@ -17,21 +17,13 @@ import org.apache.spark.sql.functions._
   * detonations. Copies do not collide across salts, so corpus-level
   * stats scale ~10× while within-copy structure matches the base.
   * Vectors: 4 copies, each dimension shifted by a small per-copy
-  * constant — distinct vectors, same geometry class.
+  * constant — distinct vectors, same geometry class. Each side is timed
+  * by [[Bench.measure]]: one warm pass, then the min of two timed.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<base> SPARK_GRAFT_SCALE_OUT=<dir>
   *        sbt "runMain graft.ScaleCheck [op,op,...]"
   */
 object ScaleCheck {
-
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime()
-    f
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  private def run(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
 
   /** Build the scaled tables once (idempotent per out dir). */
   def materialize(s: SparkSession, base: String, out: String): Unit = {
@@ -473,43 +465,37 @@ object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_scale10")
-    val ops = args.headOption.map(_.split(",").map(_.trim).toSeq)
-      .getOrElse(DefaultOps)
-    val spark = GraftSession.builder("graft-scale").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val ops = args.headOption.fold(DefaultOps)(a =>
+      SparkEntry.select(a.split(",").toSeq).map(_.name))
+    val spark = Bench.session("graft-scale")
     new java.io.File(out).mkdirs()
     materialize(spark, base, out)
 
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-
-    def drill(name: String, baseGo: () => Unit,
-        scaledGo: () => Unit): String = {
-      val bw = time(baseGo())
-      val b = math.min(time(baseGo()), time(baseGo()))
-      val sw = time(scaledGo())
-      val sc = math.min(time(scaledGo()), time(scaledGo()))
+    def drill(name: String, baseDf: () => DataFrame,
+        scaledDf: () => DataFrame): String = {
+      def timing(df: () => DataFrame) =
+        Bench.measure(spark, 2, Seq(() => Bench.noop(df()))).head.timing
+      val b = timing(baseDf)
+      val s = timing(scaledDf)
+      def num(v: Double) = Bench.jnum(v, 2)
       val line =
-        s"""{"op":"$name","base_warm":${num(bw)},"base":${num(b)},""" +
-          s""""scaled_warm":${num(sw)},"scaled":${num(sc)},""" +
-          s""""growth":${num(sc / b)}}"""
+        s"""{"op":"$name","base_warm":${num(b.warm)},"base":${num(b.min)},""" +
+          s""""scaled_warm":${num(s.warm)},"scaled":${num(s.min)},""" +
+          s""""growth":${num(s.min / b.min)}}"""
       println(line)
       line
     }
 
-    val lines = ops.flatMap { name =>
-      if (name == "q105_image_phash") {
+    val lines = ops.map {
+      case name @ "q105_image_phash" =>
         val (bdf, sdf) = q105Drill(spark)
-        Some(drill(name, () => run(bdf), () => run(sdf)))
-      } else if (name == "q167_chunk_manifest") {
+        drill(name, () => bdf, () => sdf)
+      case name @ "q167_chunk_manifest" =>
         val (bdf, sdf) = q167Drill(spark)
-        Some(drill(name, () => run(bdf), () => run(sdf)))
-      } else SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[scale] unknown op: $name"); None
-        case Some(fn) =>
-          Some(drill(name,
-            () => run(fn(spark, base)), () => run(fn(spark, out))))
-      }
+        drill(name, () => bdf, () => sdf)
+      case name =>
+        val fn = SparkEntry.queries(name)
+        drill(name, () => fn(spark, base), () => fn(spark, out))
     }
     println(s"""{"scale_check":"done","base":"$base","scaled":"$out","ops":${lines.size}}""")
     spark.stop()

@@ -16,9 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exchanges appearing only at scale would mean the plan shape itself
   * degrades — e.g. a broadcast silently flipping to a shuffle join).
   *
-  * Output: one JSON line per (op, dir) with warm/min wall, shuffle /
-  * broadcast exchange counts from the initial physical plan, and the
-  * dir's document/vector row counts; a final summary line.
+  * Output: one JSON line per (op, dir) with warm/min wall (timed by
+  * [[Bench.measure]]), shuffle / broadcast exchange counts from the
+  * initial physical plan, and the dir's document/vector row counts; a
+  * final summary line. The plan an op actually ran at a rung is
+  * `SPARK_GRAFT_SF_DIR=<rung> runMain graft.Bench <op>`.
   *
   * Usage:
   *   SPARK_GRAFT_SWEEP_DIRS=dir1,dir2,dir3 \
@@ -114,15 +116,6 @@ object ScaleSweep {
       case ((o, dbase), reason)
         if o == op && dir.stripSuffix("/").split('/').last == dbase => reason
     }
-
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime()
-    f
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  private def run(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
 
   /** (shuffle, broadcast) exchange counts from the initial physical
     * plan string (the PlanSpec idiom — AQE can only COALESCE from
@@ -245,13 +238,10 @@ object ScaleSweep {
     val dirs = sys.env.getOrElse("SPARK_GRAFT_SWEEP_DIRS",
         "/root/testdata/sf0.01,/root/testdata/sf0.1,/tmp/graft_sf1")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val ops = args.headOption.map(_.split(",").map(_.trim).toSeq)
-      .getOrElse(DefaultOps)
-    val passes = sys.env.get("SPARK_GRAFT_SWEEP_PASSES")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ >= 1).getOrElse(2)
-    val spark = GraftSession.builder("graft-sweep").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val ops = args.headOption.fold(DefaultOps)(a =>
+      SparkEntry.select(a.split(",").toSeq).map(_.name))
+    val passes = GraftSession.envPositive("SPARK_GRAFT_SWEEP_PASSES", 2)
+    val spark = Bench.session("graft-sweep")
 
     // missing rungs materialize from the rung below them (idempotent):
     // the first missing one via ScaleCheck's full-table construction,
@@ -276,59 +266,28 @@ object ScaleSweep {
       }
     }
 
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-
-    // diagnostic mode: dump each op's initial physical plan per rung
-    // (no execution) so an exchange-count drift between rungs can be
-    // attributed to the specific join that changed strategy
-    if (sys.env.contains("SPARK_GRAFT_SWEEP_EXPLAIN")) {
-      ops.foreach { name =>
-        SparkEntry.queries.get(name).foreach { fn =>
-          dirs.foreach { d =>
-            println(s"=== $name @ $d ===")
-            println(fn(spark, d).queryExecution.executedPlan.toString)
-          }
-        }
-      }
-      spark.stop()
-      return
-    }
-
     dirs.foreach { d =>
       println(s"""{"dir":"$d","documents":${rows(spark, d, "documents")},""" +
         s""""embeddings":${rows(spark, d, "embeddings")}}""")
     }
 
-    val lines = ops.flatMap { name =>
-      SparkEntry.queries.get(name) match {
-        case None =>
-          System.err.println(s"[sweep] unknown op: $name"); None
-        case Some(fn) =>
-          dirs.map { d =>
-            skipReason(name, d) match {
-              case Some(reason) =>
-                val line = s"""{"op":"$name","dir":"$d","skipped":true,""" +
-                  s""""reason":"$reason"}"""
-                println(line)
-                line
-              case None => sweepEntry(spark, name, fn, d, passes, num)
-            }
-          }
-      }
+    val lines = for (name <- ops; d <- dirs) yield skipReason(name, d) match {
+      case Some(reason) =>
+        val line = s"""{"op":"$name","dir":"$d","skipped":true,""" +
+          s""""reason":"$reason"}"""
+        println(line)
+        line
+      case None => sweepEntry(spark, name, SparkEntry.queries(name), d, passes)
     }
     println(s"""{"scale_sweep":"done","dirs":${dirs.size},"entries":${lines.size}}""")
     spark.stop()
   }
 
   private def sweepEntry(spark: SparkSession, name: String,
-      fn: (SparkSession, String) => DataFrame, d: String, passes: Int,
-      num: Double => String): String = {
-    val df = fn(spark, d)
-    val (sh, bc) = exchangeCounts(df)
+      fn: (SparkSession, String) => DataFrame, d: String, passes: Int): String = {
+    val (sh, bc) = exchangeCounts(fn(spark, d))
     val p = if (OutputBound(name)) 1 else passes
-    val warm = time(run(fn(spark, d)))
-    val timed = (1 to p).map(_ => time(run(fn(spark, d)))).min
+    val t = Bench.measure(spark, p, Seq(() => Bench.noop(fn(spark, d)))).head.timing
     // stateful streaming ops additionally report the last
     // run's peak state rows (round-11 verdict #4: bounded
     // state must be MEASURED per rung, not argued)
@@ -336,8 +295,8 @@ object ScaleSweep {
       .map(v => s""","state_rows_peak":$v""").getOrElse("") +
       graft.streaming.StreamOps.lastStateFinal(name)
         .map(v => s""","state_rows_final":$v""").getOrElse("")
-    val line = s"""{"op":"$name","dir":"$d","warm":${num(warm)},""" +
-      s""""min":${num(timed)},"shuffle_exchanges":$sh,""" +
+    val line = s"""{"op":"$name","dir":"$d","warm":${Bench.jnum(t.warm, 2)},""" +
+      s""""min":${Bench.jnum(t.min, 2)},"shuffle_exchanges":$sh,""" +
       s""""broadcast_exchanges":$bc$statePeak}"""
     println(line)
     line

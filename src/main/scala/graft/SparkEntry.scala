@@ -30,4 +30,17 @@ object SparkEntry {
 
   lazy val oracleSql: Map[String, String] =
     defs.map(d => d.name -> d.oracleSql).toMap
+
+  /** The named entries, in declared order. Names are trimmed and blanks
+    * dropped; an empty selection, or any unknown name, throws one
+    * IllegalArgumentException naming every unknown entry, so a main
+    * fails before its session starts. */
+  def select(names: Seq[String]): Seq[QueryDef] = {
+    val want = names.map(_.trim).filter(_.nonEmpty)
+    val unknown = want.filterNot(queries.contains)
+    if (want.isEmpty) throw new IllegalArgumentException("no entry named")
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown entries: ${unknown.distinct.mkString(", ")}")
+    defs.filter(d => want.contains(d.name))
+  }
 }

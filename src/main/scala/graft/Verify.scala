@@ -3,17 +3,20 @@ import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.defs result → parquet, in
   * declared order, plus oracle_sql.json, for the DuckDB compare
   * (`tools/check_oracle.py`). The session is the engine's own (GraftSession), so the
-  * oracle gate runs under the config Bench and graft.Main use. */
+  * oracle gate runs under the config Bench and graft.Main use.
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [name,name,...]` — the
+  * optional third argument dumps only the named entries; without it
+  * every entry is dumped. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val (sfDir, outDir) = (args(0), args(1))
+    val entries = args.lift(2).fold(SparkEntry.defs)(a => SparkEntry.select(a.split(",").toSeq))
     val spark = GraftSession.getOrCreate("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated query filter for local iteration
-    // (unset — the driver's path — dumps everything).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.defs.filter(d => only.forall(_.contains(d.name))).foreach { d =>
+    entries.foreach { d =>
+      // on stderr, so a log warning can be attributed to its entry
+      System.err.println(s"[verify] ${d.name}")
       try d.run(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/${d.name}")
       catch { case e: Throwable =>

@@ -97,20 +97,26 @@ object StreamOps {
     if (stateFinals.containsKey(family)) Some(stateFinals.get(family)) else None
 
   private def recordStatePeak(family: String, q: StreamingQuery): Unit = {
-    val totals = q.recentProgress
-      .map(p => p.stateOperators.map(_.numRowsTotal).sum)
+    val progress = q.recentProgress
+    val totals = progress.map(p => p.stateOperators.map(_.numRowsTotal).sum)
     statePeaks.put(family, totals.foldLeft(0L)(math.max))
     stateFinals.put(family, totals.lastOption.getOrElse(0L))
-    progressLog.put(family, q.recentProgress.toSeq.map(_.json))
+    batchMs.put(family, BatchPhases.map(ph => ph ->
+      progress.map(p => Option(p.durationMs.get(ph)).fold(0L)(_.longValue)).sum))
   }
 
-  /** Full progress JSON of the family's last run (micro-batch count +
-    * durationMs breakdown) — diagnostic surface for [[graft.StreamProf]];
-    * costs one map put per run, nothing on the micro-batch path. */
-  private val progressLog =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-  def lastProgress(family: String): Seq[String] =
-    Option(progressLog.get(family)).getOrElse(Seq.empty)
+  /** The micro-batch phases of a query's `durationMs` progress split. */
+  val BatchPhases: Seq[String] = Seq("addBatch", "walCommit", "commitOffsets",
+    "getBatch", "latestOffset", "queryPlanning", "triggerExecution")
+
+  /** Per [[BatchPhases]] phase, the milliseconds the family's last run
+    * spent in it, summed over its micro-batches (empty before a run) —
+    * the bench's `batch_ms`; one map put per run, nothing on the
+    * micro-batch path. */
+  private val batchMs =
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
+  def lastBatchMs(family: String): Seq[(String, Long)] =
+    Option(batchMs.get(family)).getOrElse(Seq.empty)
 
   /** Streaming source over the events parquet (file source — the
     * offline stand-in for the Kafka source; same DataFrame downstream). */

@@ -161,53 +161,4 @@ class CoreSpec extends AnyFunSuite {
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$v'"))
     }
   }
-
-  test("bench summary line: bounded size, parseable, slowest-10 — at full surface scale") {
-    // the driver's tail capture truncates long lines from the FRONT
-    // (BENCH_r8-r10 all parsed null); the LAST stdout record must fit
-    // any scrape window whole even at 300+ entries with long names
-    val results = scala.collection.mutable.LinkedHashMap(
-      (1 to 300).map(i =>
-        f"q${i}%03d_some_quite_long_operator_name_$i" ->
-          Bench.Timing(1.0, Seq(i / 100.0, i / 99.0, i / 101.0))): _*)
-    results("consume_avro_e2e") = Bench.Timing(0.4, Seq(0.326, 0.33, 0.32))
-    val line = Bench.summaryLine(results, 100000, "/root/testdata/sf0.1", 32)
-    assert(line.length <= 1024, s"summary must stay under 1 KB: ${line.length}")
-    assert(!line.contains("\n"))
-    // structurally valid JSON with the contract fields (no JSON lib on
-    // the classpath — assert the shape directly)
-    assert(line.startsWith("""{"metric":"total","value":"""))
-    assert(line.endsWith("}") && line.contains(""""n":301"""))
-    assert(line.contains(""""queries":{"""))
-    assert(line.contains(""""avro_e2e_msgs_per_sec":"""))
-    // the ten slowest by MIN (round-13 verdict #1: the headline is
-    // the steal-robust min, not the contention-prone median), descending
-    val qs = """"(q\d+_[a-z_0-9]+)":""".r.findAllMatchIn(
-      line.substring(line.indexOf("\"queries\":"))).map(_.group(1)).toSeq
-    assert(qs.size == 10)
-    assert(qs.head == "q300_some_quite_long_operator_name_300")
-    val mins = qs.map(n => results(n).min)
-    assert(mins == mins.sorted.reverse, "top-10 must be descending")
-    // the summary's total is the sum of entry MINs
-    val v = """"value":([0-9.]+)""".r.findFirstMatchIn(line).get.group(1).toDouble
-    val expected = results.values.map(_.min).filter(_ >= 0).sum
-    assert(math.abs(v - expected) < 0.01, s"value must be min-based: $v vs $expected")
-    // a pathological SPARK_GRAFT_BENCH_OUT path must not break the
-    // 1 KB contract: the path is dropped, the line stays parseable
-    val longPath = "/tmp/" + ("x" * 1500) + "/bench_out.json"
-    val clipped = Bench.summaryLine(results, 100000, "/root/testdata/sf0.1",
-      32, artifactPath = longPath)
-    assert(clipped.length <= 1024, s"long-path summary overflows: ${clipped.length}")
-    assert(!clipped.contains("full_artifact"))
-    assert(clipped.endsWith("}") && clipped.contains(""""n":301"""))
-  }
-
-  test("bench calibration probe: fixed work, sane wall time, not elided") {
-    // JIT warm-up, then the probe must land in a plausible band — wide
-    // enough for any box, tight enough to catch an elided loop (<0.1ms)
-    // or a broken iteration count (>10s)
-    (1 to 3).foreach(_ => Bench.probeMs())
-    val ms = (1 to 3).map(_ => Bench.probeMs())
-    assert(ms.forall(m => m > 0.1 && m < 10000.0), s"probe out of band: $ms")
-  }
 }

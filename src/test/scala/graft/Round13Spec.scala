@@ -444,55 +444,6 @@ class Round13Spec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  // -------------------------------------------------- sweep skip rows
-
-  test("sweep declared skips: sq18@1000x emits an explicit artifact row; " +
-    "reasons are JSON-safe and carry the measured attempts") {
-    val r = ScaleSweep.skipReason("sq18_stream_join_chain", "/tmp/graft_sf10")
-    assert(r.isDefined, "the sq18 1000x envelope declaration must be a skip ROW")
-    assert(r.get.contains("38 min") && r.get.contains("88 min"),
-      "a declared skip must cite its measured attempts, not just assert")
-    // the reason is interpolated into a JSON string literal unescaped —
-    // keep the registry free of characters that would break the line
-    ScaleSweep.DeclaredSkips.values.foreach { reason =>
-      assert(!reason.exists(c => c == '"' || c == '\\' || c == '\n'),
-        s"skip reason must be JSON-literal-safe: $reason")
-    }
-    // skips are rung-specific: the same op still RUNS below the envelope
-    assert(ScaleSweep.skipReason("sq18_stream_join_chain", "/tmp/graft_sf1").isEmpty)
-    assert(ScaleSweep.skipReason("sq3_stream_join", "/tmp/graft_sf10").isEmpty)
-    // round-13 ADVICE: the match is basename-EXACT — a hypothetical
-    // graft_sf100 rung (or any path merely containing the substring)
-    // must not inherit the graft_sf10 skip; a trailing slash is inert
-    assert(ScaleSweep.skipReason("sq18_stream_join_chain", "/tmp/graft_sf100").isEmpty)
-    assert(ScaleSweep.skipReason("sq18_stream_join_chain",
-      "/tmp/other_graft_sf10_copy").isEmpty)
-    assert(ScaleSweep.skipReason("sq18_stream_join_chain", "/tmp/graft_sf10/").isDefined)
-  }
-
-  // ------------------------------------------------- bench task clock
-
-  test("bench task clock: executor run/CPU clocks accumulate across a job " +
-    "(round-12 verdict #2 — the attribution signal a 1-thread probe lacks)") {
-    // register() is remove-then-add: re-registering the singleton in
-    // the same JVM (this spec after a bench run) cannot double-count
-    Bench.TaskClock.register(spark.sparkContext)
-    val (r0, c0) = Bench.TaskClock.snapshot()
-    // enough per-task work that executorRunTime rounds above 0 ms
-    spark.range(0L, 20000000L, 1L, 8)
-      .selectExpr("sum(id % 1000)").collect()
-    // the listener bus delivers asynchronously — poll to the deadline
-    val deadline = System.currentTimeMillis() + 15000
-    var snap = Bench.TaskClock.snapshot()
-    while ((snap._1 <= r0 || snap._2 <= c0) &&
-        System.currentTimeMillis() < deadline) {
-      Thread.sleep(50)
-      snap = Bench.TaskClock.snapshot()
-    }
-    assert(snap._1 > r0, "executor run-time must accumulate task wall")
-    assert(snap._2 > c0, "executor CPU-time must accumulate task CPU")
-  }
-
   test("q155: the sampler-only certification holds at the bench SF " +
     "(where the exact twin no longer runs)") {
     val rows = MiningOps.q155BottomkQuantile(spark, "/root/testdata/sf0.1").collect()

@@ -40,7 +40,7 @@ relation where the SQL standard (and DuckDB) emits the grand total —
 pinned as KNOWN DIVERGENCE in EdgeCaseSpec.
 
 Sweep (per family):
-  SPARK_GRAFT_ONLY=<keys> sbt -batch "runMain graft.Verify <dir> <out>"
+  sbt -batch "runMain graft.Verify <dir> <out> <keys>"
   python3 tools/check_oracle.py <out> <dir>
 """
 import os
