@@ -77,10 +77,12 @@ object Bench {
   }
 
   /** One timed pass: wall seconds, the executors' summed task run and
-    * CPU seconds, hypervisor steal seconds (−1 where unreadable), and
-    * the Spark jobs, stages and tasks the pass ran. */
+    * CPU seconds, hypervisor steal seconds (−1 where unreadable), the
+    * Spark jobs, stages and tasks the pass ran, and the classes codegen
+    * compiled during it. */
   private[graft] final case class Pass(wall: Double, taskRun: Double,
-      taskCpu: Double, steal: Double, jobs: Long, stages: Long, tasks: Long)
+      taskCpu: Double, steal: Double, jobs: Long, stages: Long, tasks: Long,
+      compiles: Long)
 
   /** One measured entry: its warm pass and its timed passes. */
   private[graft] final case class Measured(warm: Double, passes: Vector[Pass]) {
@@ -113,9 +115,10 @@ object Bench {
     * under more than [[StealRetrySec]] of steal gets up to `stealRetries`
     * extra passes. Every pass is bracketed by [[TaskClock]] and steal
     * snapshots taken after the listener bus drained, so its clocks and
-    * job/stage/task counts are its own. `afterWarm` runs once between the
-    * warm passes and the first round; `afterRound` after every round,
-    * with the passes so far. */
+    * job/stage/task counts are its own; its compile count is the
+    * JVM-wide codegen compilation count over the same window.
+    * `afterWarm` runs once between the warm passes and the first round;
+    * `afterRound` after every round, with the passes so far. */
   private[graft] def measure(spark: SparkSession, passes: Int,
       gos: Seq[() => Unit], afterWarm: () => Unit = () => (),
       afterRound: Seq[Measured] => Unit = _ => (),
@@ -128,13 +131,15 @@ object Bench {
     def onePass(go: () => Unit): Pass = {
       val c0 = TaskClock.counts()
       val sj0 = stealJiffies()
+      val k0 = compiles()
       val w = time(go())
       drain()
       val c1 = TaskClock.counts()
       val sj1 = stealJiffies()
       Pass(w, (c1.runMs - c0.runMs) / 1e3, (c1.cpuNs - c0.cpuNs) / 1e9,
         if (sj0 < 0 || sj1 < 0) -1.0 else (sj1 - sj0) / 100.0,
-        c1.jobs - c0.jobs, c1.stages - c0.stages, c1.tasks - c0.tasks)
+        c1.jobs - c0.jobs, c1.stages - c0.stages, c1.tasks - c0.tasks,
+        compiles() - k0)
     }
     val warm = gos.map { go => val w = time(go()); drain(); w }
     afterWarm()
@@ -153,6 +158,10 @@ object Bench {
     }
     measured
   }
+
+  /** Classes compiled by codegen (Janino) in this JVM so far. */
+  private def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Every cumulative counter an entry window is read against. */
   private final case class Snap(artifacts: Map[String, (Long, Long, Double, Long)],
@@ -854,8 +863,8 @@ object Bench {
     val detail = results.map { case (k, t) =>
       // per-entry telemetry (round-7 verdict #1/#4): GC seconds spent
       // during the warm and timed passes, persisted storage at entry
-      // start, per-pass clocks and job/stage/task counts, and the
-      // artifact rows of both windows
+      // start, per-pass clocks, job/stage/task counts and codegen
+      // compiles, and the artifact rows of both windows
       val extra = stats.get(k).map { st =>
         s""","gc_warm_sec":${num(st.gcWarmSec, 3)}""" +
           s""","gc_timed_sec":${num(st.gcTimedSec, 3)}""" +
@@ -877,6 +886,7 @@ object Bench {
           s""","jobs":${st.passes.map(_.jobs).mkString("[", ",", "]")}""" +
           s""","stages":${st.passes.map(_.stages).mkString("[", ",", "]")}""" +
           s""","tasks":${st.passes.map(_.tasks).mkString("[", ",", "]")}""" +
+          s""","compiles":${st.passes.map(_.compiles).mkString("[", ",", "]")}""" +
           s""","evicted_warm":${st.evictedWarm}""" +
           s""","evicted_timed":${st.evictedTimed}""" +
           s""","pressure_evicted_timed":${st.pressureEvictedTimed}""" +

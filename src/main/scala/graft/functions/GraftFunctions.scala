@@ -57,6 +57,12 @@ object GraftFunctions {
     org.apache.spark.sql.graft.ColumnBridge.column(
       GenRegistros(seed, org.apache.spark.sql.graft.ColumnBridge.expression(sequencia), n))
 
+  /** The per-document near-dup sketch `struct<sh, m, n_sh>` of a text
+    * column (see [[DocSketch]]). */
+  def docSketch(text: Column): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      DocSketch(org.apache.spark.sql.graft.ColumnBridge.expression(text)))
+
   /** Deterministic uniform double in [0, bound) from a seeded hash —
     * replaces `random.nextDouble() * 1000`
     * (util/GeradorCargaEstruturada.java:23). */

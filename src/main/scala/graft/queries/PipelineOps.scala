@@ -22,7 +22,7 @@ object PipelineOps {
     s.read.parquet(s"$dir/$name.parquet")
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    s.read.schema(graft.model.SchemaDef.documentsType).parquet(s"$dir/documents.parquet")
 
   private def events(s: SparkSession, dir: String): DataFrame =
     graft.sources.TsBridge.normalize(t(s, dir, "events"))

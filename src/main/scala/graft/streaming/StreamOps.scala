@@ -54,21 +54,35 @@ object StreamOps {
       _ => TsBridge.tsTypeOf(s.read.parquet(path)))
 
   /** Spark's file stream source lists a DIRECTORY; the testdata tables
-    * are single parquet files. Stage a per-run temp dir containing a
-    * symlink to the file. */
+    * are single parquet files. Stage a temp dir containing a symlink to
+    * the file, ONE per source file and signature: every run over the
+    * same file reuses it (each query lists it under its own
+    * checkpoint, so sharing leaks no offsets), and a regenerated file
+    * replaces and deletes its superseded dir. Staging per run left a
+    * new dir and two exit hooks behind on every stream run. */
+  private val stagedDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
+
   private[streaming] def stageAsDir(path: String): String = {
     val f = java.nio.file.Paths.get(path)
     if (java.nio.file.Files.isDirectory(f)) path
     else {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_")
-      val link = d.resolve(f.getFileName)
-      // deleteOnExit runs LIFO and cannot remove a non-empty dir —
-      // register child (the symlink) AFTER the parent so it is deleted
-      // first and both actually go away
-      d.toFile.deleteOnExit()
-      java.nio.file.Files.createSymbolicLink(link, f)
-      link.toFile.deleteOnExit()
-      d.toString
+      val sig = graft.sources.FsSig.of(path)
+      stagedDirs.compute(path, (_, old) =>
+        if (old != null && old._1 == sig) old
+        else {
+          if (old != null)
+            graft.operators.PlanCache.deleteRecursively(java.nio.file.Paths.get(old._2))
+          val d = java.nio.file.Files.createTempDirectory("graft_stream_")
+          val link = d.resolve(f.getFileName)
+          // deleteOnExit runs LIFO and cannot remove a non-empty dir —
+          // register child (the symlink) AFTER the parent so it is
+          // deleted first and both actually go away
+          d.toFile.deleteOnExit()
+          java.nio.file.Files.createSymbolicLink(link, f)
+          link.toFile.deleteOnExit()
+          (sig, d.toString)
+        })._2
     }
   }
 
@@ -471,7 +485,7 @@ object StreamOps {
         .select(md5(graft.llmops.TextOps.normText(col("text"))).as("fp"))
         .distinct()
         .withColumn("x_hit", lit(true))
-      val q = fs.readStream.schema(documentsSchema)
+      val q = fs.readStream.schema(graft.model.SchemaDef.documentsType)
         .parquet(stageAsDir(s"$dir/documents.parquet"))
         .filter(col("doc_id") % incrMod === 0)
         .select(col("doc_id"), md5(fp).as("fp"))
@@ -498,14 +512,6 @@ object StreamOps {
        |FROM fp f LEFT JOIN hist h USING (fp)
        |WHERE f.is_new ORDER BY f.doc_id""".stripMargin
 
-  /** documents schema for the file stream source (driver testdata). */
-  val documentsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** SQ2: STREAMING exact deduplication — the training-data dedup
     * primitive run as a real streaming query: normalized-text md5
     * fingerprints deduped per source with `dropDuplicates` state,
@@ -519,7 +525,7 @@ object StreamOps {
     val name = s"sq2_${System.nanoTime()}"
     val fp = md5(regexp_replace(lower(trim(col("text"))), "\\s+", " "))
     withStreamShuffle(s) { fs =>
-      val q = fs.readStream.schema(documentsSchema)
+      val q = fs.readStream.schema(graft.model.SchemaDef.documentsType)
         .parquet(stageAsDir(s"$dir/documents.parquet"))
         .select(col("source"), fp.as("fp"))
         .dropDuplicates("source", "fp")
@@ -2094,7 +2100,7 @@ object StreamOps {
         T.minhashSigs(s, dir).filter(col("doc_id") % incrMod =!= 0))
         .select(col("band"), col("bh")).distinct()
       val stream = withInRowBands(
-        fs.readStream.schema(documentsSchema)
+        fs.readStream.schema(graft.model.SchemaDef.documentsType)
           .parquet(stageAsDir(s"$dir/documents.parquet"))
           .filter(col("doc_id") % incrMod === 0))
       val probed = (0 until T.Bands).foldLeft(stream) { (df, bnd) =>

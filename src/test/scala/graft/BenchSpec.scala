@@ -174,6 +174,17 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("measure: a batch entry's timed passes compile no class; every sq2 pass " +
+    "compiles in its forked session") {
+    def compiles(name: String): Seq[Long] = {
+      val q = SparkEntry.queries(name)
+      Bench.measure(spark, 2, Seq(() => Bench.noop(q(spark, dir)))).head.passes.map(_.compiles)
+    }
+    assert(compiles("q30_textstats") == Seq(0L, 0L))
+    val sq2 = compiles("sq2_stream_dedup")
+    assert(sq2.size == 2 && sq2.forall(_ > 0), s"sq2 compiles: $sq2")
+  }
+
   // ------------------------------------------------- entry-list mode
 
   /** One entry-list bench run at sf0.001 (one timed pass, plus any steal
@@ -219,5 +230,14 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bm.get("triggerExecution").asLong > 0 &&
       bm.get("addBatch").asLong <= bm.get("triggerExecution").asLong)
     assert(!detail.get("q11_revenue_nation").has("batch_ms"))
+  }
+
+  test("entry-list mode: every entry carries per-pass codegen compiles") {
+    val detail = entryListRun._1.get("detail")
+    Seq("q11_revenue_nation", "sq1_stream_tumbling").foreach { e =>
+      val d = detail.get(e)
+      assert(d.get("compiles").size == d.get("timed").size, e)
+      assert(d.get("compiles").elements.asScala.forall(_.asLong >= 0), e)
+    }
   }
 }

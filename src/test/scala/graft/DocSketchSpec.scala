@@ -1,0 +1,168 @@
+package graft
+
+import graft.functions.GraftFunctions.docSketch
+import graft.llmops.TextOps
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
+
+/** The per-document MinHash sketch: `DocSketch` against the exploded
+  * formulation it replaced, the `minhash_sigs` artifact it builds, the
+  * near-dup answers verified from it, and the declared `documents`
+  * schema its build reads with. */
+class DocSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private val testdata = s"${sys.props("user.home")}/testdata"
+  private val sf001 = s"$testdata/sf0.01"
+  private var spark: SparkSession = _
+
+  override def beforeAll(): Unit = {
+    spark = GraftSession.builder("doc-sketch-test", cores = 4).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+  }
+  override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  private def withCodegen[T](on: Boolean)(body: => T): T = {
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), on.toString)
+    spark.conf.set(keys(1), if (on) "CODEGEN_ONLY" else "NO_CODEGEN")
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The exploded formulation DocSketch replaces, kept as its oracle:
+    * split → posexplode → two leads → distinct (doc_id, shingle) rows →
+    * md5 base hash → per-doc min of each permutation and the row count,
+    * plus the shingle set. */
+  private def builtinSigs(docs: DataFrame): DataFrame = {
+    val w = Window.partitionBy("doc_id").orderBy("pos")
+    val ex = docs.select(col("doc_id"), split(col("text"), "\\s+").as("w"))
+      .select(col("doc_id"), posexplode(col("w")).as(Seq("pos", "tk")))
+      .select(col("doc_id"), col("tk"),
+        lead("tk", 1).over(w).as("t2"), lead("tk", 2).over(w).as("t3"))
+      .filter(col("t3").isNotNull)
+      .select(col("doc_id"), concat_ws(" ", col("tk"), col("t2"), col("t3")).as("shingle"))
+      .distinct()
+      .withColumn("h", TextOps.baseHash(col("shingle")))
+    val aggs = (0 until TextOps.MinhashK)
+      .map(j => min((col("h") * TextOps.aj(j) + TextOps.bj(j)) % TextOps.MinhashP).as(s"m$j")) ++
+      Seq(count(lit(1)).as("n_sh"), collect_set(col("shingle")).as("sh"))
+    ex.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** `(doc_id, m0..m15, n_sh, sorted sh)` per document, sorted by doc. */
+  private def sigRows(df: DataFrame): Seq[(Long, Seq[Long], Long, Seq[String])] =
+    df.collect().toSeq.map { r =>
+      (r.getAs[Long]("doc_id"),
+        (0 until TextOps.MinhashK).map(j => r.getAs[Long](s"m$j")),
+        r.getAs[Long]("n_sh"),
+        r.getAs[scala.collection.Seq[String]]("sh").toSeq.sorted)
+    }.sortBy(_._1)
+
+  private val edgeTexts: Seq[String] = Seq(
+    null, "", "one", "two words", "three words here", "   ", "\t\n",
+    " lead space words", "trail space words ", "  both  ends  here  ",
+    "tab\tsep\tarated\twords", "new\nline\r\nwords here",
+    "a  b   c    d", "x y x y x y x y", "same same same same same",
+    "три слова юникода ещё раз", "的 了 是 在 不 的 了 是", "😀 a 😀 a 😀 b",
+    "nbsp\u00a0is not\u00a0whitespace here")
+
+  private def edgeDocs: DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(
+      edgeTexts.zipWithIndex.map { case (t, i) => Row(-1L - i, t) }.asJava,
+      org.apache.spark.sql.types.StructType(
+        graft.model.SchemaDef.documentsType.fields.take(2)))
+  }
+
+  test("DocSketch equals the exploded formulation on the sf0.01 corpus and edge rows, " +
+    "codegen'd and interpreted") {
+    val docs = spark.read.parquet(s"$sf001/documents.parquet")
+      .select("doc_id", "text").union(edgeDocs)
+    for (codegen <- Seq(true, false)) withCodegen(codegen) {
+      val sk = docs.select(col("doc_id"), docSketch(col("text")).as("sk"))
+      assert(sk.schema("sk").dataType == graft.functions.DocSketch.Type)
+      val got = sk.filter(col("sk").isNotNull)
+        .select(col("doc_id") +: (0 until TextOps.MinhashK)
+          .map(j => col("sk.m").getItem(j).as(s"m$j")) :+
+          col("sk.n_sh").as("n_sh") :+ col("sk.sh").as("sh"): _*)
+      val want = builtinSigs(docs)
+      val (g, w) = (sigRows(got), sigRows(want))
+      assert(g.size == w.size, s"codegen=$codegen: ${g.size} sketches vs ${w.size} docs")
+      g.zip(w).foreach { case (a, b) => assert(a == b, s"codegen=$codegen") }
+      // sh is a set: no repeats, and n_sh is its size
+      got.collect().foreach { r =>
+        val sh = r.getAs[scala.collection.Seq[String]]("sh")
+        assert(sh.distinct.size == sh.size && sh.size == r.getAs[Long]("n_sh"))
+      }
+      // the null and short rows have no sketch, and the edge rows that
+      // do are the ones with at least 3 split tokens
+      val edgeGot = g.map(_._1).filter(_ < 0).toSet
+      val edgeWant = edgeTexts.zipWithIndex.collect {
+        case (t, i) if t != null && t.split("\\s+", -1).length >= 3 => -1L - i
+      }.toSet
+      assert(edgeGot == edgeWant, s"codegen=$codegen")
+    }
+  }
+
+  test("minhash_sigs (doc_id, m0..m15, n_sh) is row-identical to the exploded-index build") {
+    val cols = "doc_id" +: (0 until TextOps.MinhashK).map(j => s"m$j") :+ "n_sh"
+    val art = TextOps.minhashSigs(spark, sf001)
+    assert(art.columns.toSeq == cols :+ "sh")
+    val got = art.select(cols.map(col): _*)
+    val want = builtinSigs(spark.read.parquet(s"$sf001/documents.parquet"))
+      .select(cols.map(col): _*)
+    assert(got.count() == want.count())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
+  /** Row count and md5 of the sorted rows of an answer. */
+  private def digest(df: DataFrame): (Int, String) = {
+    val rows = df.collect().map(_.toString).sorted
+    val md = java.security.MessageDigest.getInstance("MD5")
+    rows.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
+    (rows.length, md.digest().map("%02x".format(_)).mkString)
+  }
+
+  test("q37, q39 and q92 at sf0.01 equal their outputs from the exploded-index build") {
+    // digests of the answers the exploded shingle-index verification
+    // gave (the same rows the DuckDB oracles give)
+    val want = Map(
+      "q37_neardup_lsh" -> ((25, "598fd3b0b2fab2393903356429c554b3")),
+      "q39_neardup_capped" -> ((25, "598fd3b0b2fab2393903356429c554b3")),
+      "q92_incremental_dedup" -> ((100, "a9aeeff9036ef19af884bbe99830d671")))
+    want.foreach { case (name, d) =>
+      assert(digest(SparkEntry.queries(name)(spark, sf001)) == d, name)
+    }
+  }
+
+  test("the declared documents schema equals the footer's at sf0.01 and sf0.1") {
+    Seq(sf001, s"$testdata/sf0.1").foreach { d =>
+      assert(spark.read.parquet(s"$d/documents.parquet").schema ==
+        graft.model.SchemaDef.documentsType, d)
+    }
+  }
+
+  test("building q37's DataFrame on a fresh directory starts no Spark job") {
+    val fresh = graft.operators.PlanCache.tempDir("graft_sketch_fresh_")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf001/documents.parquet"),
+      java.nio.file.Paths.get(s"$fresh/documents.parquet"))
+    val sc = spark.sparkContext
+    Bench.TaskClock.register(sc)
+    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+    val before = Bench.TaskClock.counts()
+    val misses = TextOps.sigCache.misses
+    val q37 = TextOps.q37NeardupLsh(spark, fresh)
+    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+    val after = Bench.TaskClock.counts()
+    assert(TextOps.sigCache.misses == misses + 1, "a fresh directory builds minhash_sigs")
+    assert(after.jobs == before.jobs, s"${after.jobs - before.jobs} jobs while building q37")
+    assert(q37.count() == TextOps.q37NeardupLsh(spark, sf001).count())
+  }
+}

@@ -270,4 +270,26 @@ class StreamOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sigs.hits > hits, "the second run did not read the signature table")
     assert(first.nonEmpty && second == first)
   }
+
+  test("two sq2 runs over one documents file leave one staging dir") {
+    val d = graft.operators.PlanCache.tempDir("graft_stage_")
+    val docs = java.nio.file.Paths.get(s"$d/documents.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/documents.parquet"), docs)
+    def staged(): Seq[java.nio.file.Path] = {
+      import scala.jdk.CollectionConverters._
+      val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator.asScala.toSeq.filter { p =>
+        p.getFileName.toString.startsWith("graft_stream_") && {
+          val link = p.resolve(docs.getFileName)
+          java.nio.file.Files.isSymbolicLink(link) &&
+          java.nio.file.Files.readSymbolicLink(link) == docs
+        }
+      } finally ls.close()
+    }
+    val first = StreamOps.sq2StreamDedup(spark, d).collect().toSeq
+    val second = StreamOps.sq2StreamDedup(spark, d).collect().toSeq
+    assert(first.nonEmpty && second == first)
+    assert(staged().size == 1, s"staging dirs: ${staged()}")
+  }
 }
