@@ -41,9 +41,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   warm ≈ timed       → steady-state cost (environment if still slow)
   *   warm ≫ timed       → one-time build (cache/layout/JIT) dominated
   *   timed high-variance → box contention during the run
-  * `shingle_index_hit` additionally reports whether any TIMED pass
-  * rebuilt the persisted shingle index (it never should — a miss means
-  * the timed number includes a build cost steady state would not pay).
+  * `artifact_cache_hit` additionally reports whether any TIMED pass
+  * rebuilt a registered artifact (it never should — a miss means the
+  * timed number includes a build cost steady state would not pay).
   */
 object Bench {
 
@@ -914,7 +914,6 @@ object Bench {
     // session and dir); artifact_cache_hit covers every other cache
     val timedBuilds =
       stats.values.flatMap(_.artifactsTimed).filter(_.built > 0).map(_.name).toSet
-    val ownFlagCaches = Set("shingle_index", "cluster_labels")
     // end-of-run sentinel retimes (empty until the recheck phase runs;
     // small, so it rides in BOTH the compact and full lines): per
     // sentinel `[min, mid_run_min]` — ratio ≈ 1 exonerates cumulative
@@ -931,9 +930,8 @@ object Bench {
       // their own count (round-4 ADVICE: one global count
       // misdescribed the serde detail arrays)
       s""""timed_passes":${ctx.passes},"serde_timed_passes":${ctx.serdePasses},""" +
-        s""""shingle_index_hit":${!timedBuilds("shingle_index")},""" +
         s""""label_cache_hit":${!timedBuilds("cluster_labels")},""" +
-        s""""artifact_cache_hit":${(timedBuilds -- ownFlagCaches).isEmpty},""" +
+        s""""artifact_cache_hit":${(timedBuilds - "cluster_labels").isEmpty},""" +
         s""""partial":$partial,""" +
         s""""persisted_mem_bytes":$persistedMem,""" +
         s""""persisted_disk_bytes":$persistedDisk,""" +

@@ -25,10 +25,8 @@ object GraftSession {
       // 64 KB floor. Scale-safe: once a shuffle carries real volume the
       // parallelismFirst/advisory sizing (bytes ÷ cluster parallelism,
       // 64 MB advisory) dominates and this floor is never the binding
-      // constraint — it only governs the tiny-shuffle regime. Env-
-      // overridable for deployments that want the stock floor back.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION", "64k"))
+      // constraint — it only governs the tiny-shuffle regime.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // driver testdata writes events.ts as parquet TIMESTAMP(NANOS),

@@ -399,52 +399,21 @@ object TextOps {
 
   // -------------------------------------------------- q35 jaccard near-dup
 
-  /** Distinct (doc_id, shingle) token-trigram rows.
-    *
-    * Formulated as posexplode + two window lead()s + distinct rather
-    * than a `transform` array lambda: higher-order functions are
-    * CodegenFallback (interpreted, ~8µs per element here) and every
-    * operator that references the array re-pays that cost; the window
-    * formulation is whole-stage-codegen'd end to end and evaluated
-    * once. Docs with <3 tokens contribute no rows (lead is null). */
-  private def shingleRows(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    tokenized(s, dir)
-      .select(col("doc_id"), posexplode(col("w")).as(Seq("pos", "tk")))
-      .select(col("doc_id"), col("tk"),
-        lead("tk", 1).over(w).as("t2"), lead("tk", 2).over(w).as("t3"))
-      .filter(col("t3").isNotNull)
-      .select(col("doc_id"), concat_ws(" ", col("tk"), col("t2"), col("t3")).as("shingle"))
-      .distinct()
-  }
-
-  /** Persisted shingle index, memoized per (session, dir) and guarded
-    * by the fixture signature. q35 references this subplan on both
-    * sides of its self-join, and the df index, q39's candidate
-    * generation, q87 and the other posting-list consumers build on it;
-    * it is the most expensive subplan in the module (posexplode + two
-    * windows + distinct) — without persist Spark RE-EXECUTES it per
-    * reference. MEMORY_AND_DISK so a corpus larger than executor memory
-    * spills instead of recomputing; at 100 TB the same role is played by
-    * materializing the index to a temp parquet once per dedup run.
-    * PlanCache unpersists superseded entries (regenerated fixture, or
-    * eviction past the size bound) — the round-2 TrieMap pinned them
-    * for the JVM lifetime. */
-  private[graft] val shingleCache = graft.operators.PlanCache.persisted("shingle_index")
-
+  /** Distinct (doc_id, shingle) token-trigram rows with each document's
+    * shingle count `n_sh`: a row-local explode of the `sh` sets in the
+    * [[minhashSigs]] artifact, so [[graft.functions.DocSketch]] is the
+    * only code that computes a trigram set and `minhash_sigs` the only
+    * persisted per-document shingle artifact. Docs with <3 tokens
+    * contribute no rows. */
   private def shingles(s: SparkSession, dir: String): DataFrame =
-    shingleCache.get(s, dir, graft.sources.FsSig.of(s"$dir/documents.parquet")) {
-      shingleRows(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    minhashSigs(s, dir).select(col("doc_id"), col("n_sh"), explode(col("sh")).as("shingle"))
 
-  /** df-annotated shingle index — the plain index plus each shingle's
-    * document frequency. The capped near-dup family (q39, q88) needs
-    * df for rare/hot classification, and the corpus-wide df window is
-    * a full shuffle of the index: without memoization both queries
+  /** df-annotated shingle index — the [[shingles]] rows plus each
+    * shingle's document frequency. The capped near-dup family (q39,
+    * q88) needs df for rare/hot classification, and the corpus-wide df
+    * is a full shuffle of the index: without memoization both queries
     * re-pay it every pass (and every bench repetition). Same lifecycle
-    * as [[shingleCache]]; one extra long column on top of the plain
-    * index is the storage cost. */
+    * as [[sigCache]]. */
   private[graft] val dfShingleCache =
     graft.operators.PlanCache.persisted("shingle_df_index")
 
@@ -476,7 +445,6 @@ object TextOps {
     * which can't produce >threshold pairs on long docs anyway). */
   def q35JaccardPairs(s: SparkSession, dir: String): DataFrame = {
     val ex = shingles(s, dir)
-      .withColumn("n_sh", count(lit(1)).over(Window.partitionBy("doc_id")))
     val a = ex.select(col("doc_id").as("doc_a"), col("n_sh").as("na"), col("shingle"))
     val b = ex.select(col("doc_id").as("doc_b"), col("n_sh").as("nb"), col("shingle"))
     a.join(b, Seq("shingle")).filter(col("doc_a") < col("doc_b"))
@@ -523,8 +491,9 @@ object TextOps {
 
   /** The MinHash SIGNATURE TABLE (doc_id, m0..m15, n_sh, sh) as a
     * session ARTIFACT: q36 reshapes it, q37 bands it, q92 bands both its
-    * probe and index sides from it, and [[verifyJaccard]] intersects its
-    * `sh` shingle sets for q37, q39 and q92. In a production MinHash
+    * probe and index sides from it, [[verifyJaccard]] intersects its
+    * `sh` shingle sets for q37, q39 and q92, and [[shingles]] explodes
+    * them for every inverted-index consumer. In a production MinHash
     * service this IS the persisted signature index (built once per
     * corpus, appended per batch).
     *
@@ -550,16 +519,32 @@ object TextOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
+  /** Band `bnd`'s hash: md5 of its [[RowsPerBand]] signature values,
+    * comma-joined, with `m(j)` the j-th signature value. The one band
+    * geometry of [[bandedSigs]] and sq22's in-row bands. */
+  private[graft] def bandHash(bnd: Int, m: Int => Column): Column =
+    md5(concat_ws(",", (0 until RowsPerBand).map(r => m(bnd * RowsPerBand + r)): _*))
+
   /** LSH banding of the signature table: (doc_id, band, bh) with the
-    * band hash = md5 of the band's [[RowsPerBand]] signature values.
-    * Shared by q37 and q92 so the banding geometry exists once. */
+    * band hash [[bandHash]]. Shared by q37, q92 and q213. */
   private[graft] def bandedSigs(sig: DataFrame): DataFrame =
     sig.select(col("doc_id"), explode(array((0 until Bands).map { bnd =>
-      struct(lit(bnd).as("band"),
-        md5(concat_ws(",", (0 until RowsPerBand).map(r => col(s"m${bnd * RowsPerBand + r}")): _*))
-          .as("bh"))
+      struct(lit(bnd).as("band"), bandHash(bnd, j => col(s"m$j")).as("bh"))
     }: _*)).as("bb"))
       .select(col("doc_id"), col("bb.band"), col("bb.bh"))
+
+  /** Oracle twin of the signature: the select list `m0..m15` of a
+    * GROUP BY over base hashes `h`. A def: the oracle map forces the
+    * SQL strings during object init. */
+  private[graft] def sigColsSql: String = (0 until MinhashK)
+    .map(j => s"min((h * ${aj(j)} + ${bj(j)}) % $MinhashP) AS m$j").mkString(",\n    ")
+
+  /** Oracle twin of [[bandedSigs]]: one `(doc_id, band, bh)` SELECT per
+    * band over a `sig` CTE, UNION ALL'd. */
+  private[graft] def bandRowsSql: String = (0 until Bands).map { bnd =>
+    val cols = (0 until RowsPerBand).map(r => s"m${bnd * RowsPerBand + r}").mkString(", ")
+    s"SELECT doc_id, $bnd AS band, md5(concat_ws(',', $cols)) AS bh FROM sig"
+  }.mkString("\n  UNION ALL ")
 
   /** q36: MinHash signatures, flat (doc_id, perm, sig) — the verifiable
     * core of MinHash-LSH dedup. Per-doc computation only (explode +
@@ -628,13 +613,7 @@ object TextOps {
       .orderBy("doc_a", "doc_b")
   }
 
-  val q37Sql: String = {
-    val sigCols = (0 until MinhashK)
-      .map(j => s"min((h * ${aj(j)} + ${bj(j)}) % $MinhashP) AS m$j").mkString(",\n    ")
-    val bandRows = (0 until Bands).map { bnd =>
-      val cols = (0 until RowsPerBand).map(r => s"m${bnd * RowsPerBand + r}").mkString(", ")
-      s"SELECT doc_id, $bnd AS band, md5(concat_ws(',', $cols)) AS bh FROM sig"
-    }.mkString("\n  UNION ALL ")
+  val q37Sql: String =
     s"""WITH sh AS (
        |  SELECT doc_id, $shinglesSql AS sh
        |  FROM (SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents)
@@ -643,10 +622,10 @@ object TextOps {
        |), ex AS (
        |  SELECT doc_id, ${baseHashSql("shingle")} AS h FROM ex0
        |), sig AS (
-       |  SELECT doc_id, $sigCols
+       |  SELECT doc_id, $sigColsSql
        |  FROM ex GROUP BY doc_id
        |), banded AS (
-       |  $bandRows
+       |  $bandRowsSql
        |), cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM banded a JOIN banded b
@@ -659,7 +638,6 @@ object TextOps {
        |WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
        |    / len(list_distinct(sa.sh || sb.sh)) >= 0.5
        |ORDER BY doc_a, doc_b""".stripMargin
-  }
 
   // ----------------------------------------- q39 capped-index near-dup
 
@@ -833,7 +811,7 @@ object TextOps {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** q88 over the corpus: the persisted shingle index feeds candidate
+  /** q88 over the corpus: the df-annotated shingle index feeds candidate
     * generation AND both verification sides (the q35/q37/q39 reuse).
     * Cost discipline is q39's — the rare-shingle join bounds Σ freq²,
     * verification tracks output size. */
@@ -993,10 +971,10 @@ object TextOps {
   }
 
   /** The q53 near-dup pair graph as a session ARTIFACT — the most
-    * multiply-consumed frame in the module after the shingle index
+    * multiply-consumed frame in the module after the signature artifact
     * (clustering q67, modality agreement q69, PageRank q75, source
     * overlap q90 all start from it). Published by q53's runs, built
-    * on demand otherwise; MEMORY_AND_DISK like the shingle index. */
+    * on demand otherwise; MEMORY_AND_DISK like the signature artifact. */
   private[graft] val pairCache = graft.operators.PlanCache.persisted("simhash_pairs")
 
   /** Consumer face of the pair graph (the kmeansLearn pattern). */
@@ -1277,13 +1255,7 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  lazy val q92Sql: String = {
-    val sigCols = (0 until MinhashK)
-      .map(j => s"min((h * ${aj(j)} + ${bj(j)}) % $MinhashP) AS m$j").mkString(",\n    ")
-    val bandRows = (0 until Bands).map { bnd =>
-      val cols = (0 until RowsPerBand).map(r => s"m${bnd * RowsPerBand + r}").mkString(", ")
-      s"SELECT doc_id, $bnd AS band, md5(concat_ws(',', $cols)) AS bh FROM sig"
-    }.mkString("\n  UNION ALL ")
+  lazy val q92Sql: String =
     s"""WITH fp AS (
        |  SELECT doc_id, doc_id % $IncrMod = 0 AS is_new, md5($normSql) AS fp
        |  FROM documents
@@ -1295,9 +1267,9 @@ object TextOps {
        |), ex0 AS (SELECT doc_id, unnest(sh) AS shingle FROM sh
        |), ex AS (SELECT doc_id, ${baseHashSql("shingle")} AS h FROM ex0
        |), nsh AS (SELECT doc_id, count(*) AS n_sh FROM ex0 GROUP BY doc_id
-       |), sig AS (SELECT doc_id, $sigCols FROM ex GROUP BY doc_id
+       |), sig AS (SELECT doc_id, $sigColsSql FROM ex GROUP BY doc_id
        |), banded AS (
-       |  $bandRows
+       |  $bandRowsSql
        |), cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM banded a JOIN banded b ON a.band = b.band AND a.bh = b.bh
@@ -1324,7 +1296,6 @@ object TextOps {
        |LEFT JOIN hist_fp hf USING (fp)
        |LEFT JOIN near n ON n.doc_a = f.doc_id
        |WHERE f.is_new ORDER BY f.doc_id""".stripMargin
-  }
 
   // --------------------------------- q93 PMI collocations (phrase mining)
 
@@ -1742,34 +1713,31 @@ object TextOps {
     * duplicate-trigram fractions plus top-token dominance. Documents
     * high on any of these are near-certain low-quality.
     *
-    * Scale shape: tokens and trigrams explode once each and aggregate
-    * BY doc_id — every shuffle key is the uniform doc_id, partial
-    * aggregation collapses per-doc counts map-side, and the output is
-    * one row per document. All ratios are integer-count subtractions
-    * with ONE final division (zero-guarded), so results are
-    * partition-independent and engine-exact. */
+    * Scale shape: the trigram counts are per-row values of one
+    * projection — n_tri is the trigram positions (size(w) − 2, 0 below
+    * 3 tokens) and d_tri the [[graft.functions.DocSketch]] set size —
+    * carried as keys through the token aggregation, which explodes the
+    * tokens once and aggregates BY doc_id: every shuffle key leads with
+    * the uniform doc_id, partial aggregation collapses per-doc counts
+    * map-side, and the output is one row per document. All ratios are
+    * integer-count subtractions with ONE final division (zero-guarded),
+    * so results are partition-independent and engine-exact. */
   def q62Repetition(s: SparkSession, dir: String): DataFrame = {
-    val tokCounts = tokenized(s, dir)
-      .select(col("doc_id"), explode(col("w")).as("t"))
-      .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id")
+    val perDoc = tokenized(s, dir).select(col("doc_id"), col("w"),
+      greatest(size(col("w")) - 2, lit(0)).cast("long").as("n_tri"),
+      coalesce(graft.functions.GraftFunctions.docSketch(col("text")).getField("n_sh"), lit(0L))
+        .as("d_tri"))
+    val counts = perDoc
+      .select(col("doc_id"), col("n_tri"), col("d_tri"), explode(col("w")).as("t"))
+      .groupBy("doc_id", "n_tri", "d_tri", "t").agg(count(lit(1)).as("c"))
+      .groupBy("doc_id", "n_tri", "d_tri")
       .agg(sum("c").as("n_tok"), count(lit(1)).as("d_tok"), max("c").as("top_tok"))
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val triCounts = tokenized(s, dir)
-      .select(col("doc_id"), posexplode(col("w")).as(Seq("pos", "tk")))
-      .select(col("doc_id"), col("tk"),
-        lead("tk", 1).over(w).as("t2"), lead("tk", 2).over(w).as("t3"))
-      .filter(col("t3").isNotNull)
-      .select(col("doc_id"), concat_ws(" ", col("tk"), col("t2"), col("t3")).as("tri"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tri"), count_distinct(col("tri")).as("d_tri"))
     def frac(n: Column, d: Column): Column =
       when(n === 0, lit(0.0)).otherwise((n - d).cast("double") / n)
-    tokCounts.join(triCounts, Seq("doc_id"), "left")
+    counts
       .select(col("doc_id"), col("n_tok"), col("d_tok"),
         frac(col("n_tok"), col("d_tok")).as("dup_tok_frac"),
-        frac(coalesce(col("n_tri"), lit(0L)), coalesce(col("d_tri"), lit(0L)))
-          .as("dup_tri_frac"),
+        frac(col("n_tri"), col("d_tri")).as("dup_tri_frac"),
         (col("top_tok").cast("double") / col("n_tok")).as("top_tok_frac"))
       .orderBy("doc_id")
   }
@@ -2097,9 +2065,10 @@ object TextOps {
     * suites are MBs, not TBs), so its distinct-shingle set BROADCASTS —
     * the contamination check is a map-side broadcast left-join over the
     * train shingles plus one per-doc aggregation: no all-pairs, no
-    * big-to-big shuffle join, reuses the persisted shingle index. Uses
-    * trigram shingles to share that index; production decontamination
-    * raises n (8-13) which only shrinks the hit rate, not the plan. */
+    * big-to-big shuffle join, reads the shingle sets of the persisted
+    * signature artifact. Uses trigram shingles to share that artifact;
+    * production decontamination raises n (8-13) which only shrinks the
+    * hit rate, not the plan. */
   def q59Decontaminate(s: SparkSession, dir: String): DataFrame = {
     val sh = shingles(s, dir)
     val evalIds = docs(s, dir).filter(col("source") === EvalSource).select("doc_id")
@@ -2846,7 +2815,7 @@ object TextOps {
     * anything in particular). Documents too short to shingle (<3
     * tokens) have no coverage and are excluded, same in both engines.
     *
-    * Scale shape: rides the PUBLISHED per-doc distinct shingle index;
+    * Scale shape: rides the PUBLISHED per-doc distinct shingle sets;
     * df is one partial-agg'd groupBy(source, shingle) over the
     * VOCABULARY; the per-source top-M is row_number ≤ literal
     * (InferWindowGroupLimit pushes the cut per-partition — the q55
@@ -3788,7 +3757,7 @@ object TextOps {
     * unique documents, and this measures exactly that residue.
     *
     * Shape: occurrence-level 8-grams via posexplode + 7 codegen'd
-    * window leads (the shingleRows idiom — no interpreted HOFs),
+    * window leads (no interpreted HOFs),
     * hashed to 60-bit md5 keys so the shuffle never carries gram
     * STRINGS; within-doc occurrences partial-agg to (doc, gram,
     * count) FIRST (map-side combine collapses intra-doc repeats
@@ -3831,7 +3800,7 @@ object TextOps {
   /** The corpus-duplicated gram SET (total occurrence count ≥ 2,
     * counting intra-doc repeats — the criterion both q77's coverage
     * and q107's cut list test). Output-bound (only boilerplate /
-    * repeated grams survive) and memoized like the shingle index:
+    * repeated grams survive) and memoized like the signature artifact:
     * without it each query pays one full gram aggregation per pass. */
   private[graft] val dupGramCache = graft.operators.PlanCache.persisted("dup_gram_set")
 
@@ -4660,9 +4629,6 @@ object TextOps {
   }
 
   val q202Sql: String = {
-    val sigMins = (0 until MinhashK)
-      .map(j => s"min((h * ${aj(j)} + ${bj(j)}) % $MinhashP) AS m$j")
-      .mkString(",\n    ")
     val matches = (0 until MinhashK)
       .map(j => s"CASE WHEN a.m$j = b.m$j THEN 1 ELSE 0 END")
       .mkString(" + ")
@@ -4677,7 +4643,7 @@ object TextOps {
        |  SELECT source, ${baseHashSql("shingle")} AS h FROM ss
        |), sig AS (
        |  SELECT source,
-       |    $sigMins
+       |    $sigColsSql
        |  FROM hs GROUP BY source
        |), est AS (
        |  SELECT a.source AS src_a, b.source AS src_b,
@@ -4935,7 +4901,6 @@ object TextOps {
     val ex = shingles(s, dir)
     val dfTbl = ex.groupBy("shingle").agg(count(lit(1)).as("df"))
     val ranked = ex.join(dfTbl, "shingle")
-      .withColumn("n_sh", count(lit(1)).over(Window.partitionBy("doc_id")))
       .withColumn("rk", row_number().over(
         Window.partitionBy("doc_id").orderBy("df", "shingle")))
       .withColumn("plen", col("n_sh") - ceil(lit(t) * col("n_sh")) + 1)
@@ -4949,17 +4914,17 @@ object TextOps {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     // PPJoin-style verify: per-PAIR set intersection over the two
-    // doc arrays — O(na+nb) per candidate with no row explosion (the
-    // first formulation joined candidates back through the exploded
-    // posting rows: Σ_cand na intermediate rows, which at sf0.1 cost
-    // more than the candidate generation it followed)
-    val docArr = ex.groupBy("doc_id")
-      .agg(collect_list("shingle").as("sa"), count(lit(1)).as("n"))
+    // docs' shingle sets from the signature artifact — O(na+nb) per
+    // candidate with no row explosion (the first formulation joined
+    // candidates back through the exploded posting rows: Σ_cand na
+    // intermediate rows, which at sf0.1 cost more than the candidate
+    // generation it followed)
+    val sig = minhashSigs(s, dir)
     cands
-      .join(docArr.select(col("doc_id").as("doc_a"), col("sa").as("xa"),
-        col("n").as("na")), "doc_a")
-      .join(docArr.select(col("doc_id").as("doc_b"), col("sa").as("xb"),
-        col("n").as("nb")), "doc_b")
+      .join(sig.select(col("doc_id").as("doc_a"), col("sh").as("xa"),
+        col("n_sh").as("na")), "doc_a")
+      .join(sig.select(col("doc_id").as("doc_b"), col("sh").as("xb"),
+        col("n_sh").as("nb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("xa"), col("xb"))).cast("long").as("common"),
         col("na"), col("nb"))
@@ -5330,7 +5295,8 @@ object TextOps {
     // guide §2.3/§3.1: shuffle fewer bytes, broadcast the small side.
     val candStream = ra.join(rb, Seq("shingle"))
       .filter(col("doc_a") < col("doc_b")).select("doc_a", "doc_b")
-    val banded = bandedSigs(minhashSigs(s, dir))
+    val sig = minhashSigs(s, dir)
+    val banded = bandedSigs(sig)
     val ca = banded.select(col("doc_id").as("doc_a"), col("band"), col("bh"))
     val cb = banded.select(col("doc_id").as("doc_b"), col("band"), col("bh"))
     val collide = ca.join(cb, Seq("band", "bh"))
@@ -5352,22 +5318,18 @@ object TextOps {
       .filter(col("hit") || sampled)
       .select("doc_a", "doc_b", "hit").distinct()
     // true Jaccard over FULL shingle sets, restricted to the kept
-    // pairs — computed against per-doc shingle SETS attached by id
-    // equi-join, not against exploded shingle rows: the row shape
-    // shuffled |kept| × doc-size rows (7.8 M at sf0.1) into a
+    // pairs — computed against the artifact's per-doc shingle SETS
+    // attached by id equi-join, not against exploded shingle rows: the
+    // row shape shuffled |kept| × doc-size rows (7.8 M at sf0.1) into a
     // (doc, shingle) join + re-aggregation, where the set shape
     // shuffles exactly |kept| rows carrying two bounded arrays and
-    // intersects them in one codegen'd expression. Shingle rows are
-    // per-doc DISTINCT (shingleRows ends in distinct()), so
-    // |array_intersect| equals the row-join count bit-for-bit.
-    val docSets = shingles(s, dir).groupBy("doc_id")
-      .agg(collect_list(col("shingle")).as("sh_set"))
+    // intersects them in one codegen'd expression. The `sh` sets are
+    // per-doc DISTINCT (DocSketch), so |array_intersect| equals the
+    // row-join count bit-for-bit.
     val common = size(array_intersect(col("set_a"), col("set_b")))
     val pairs = kept
-      .join(docSets.select(col("doc_id").as("doc_a"), col("sh_set").as("set_a")),
-        Seq("doc_a"))
-      .join(docSets.select(col("doc_id").as("doc_b"), col("sh_set").as("set_b")),
-        Seq("doc_b"))
+      .join(sig.select(col("doc_id").as("doc_a"), col("sh").as("set_a")), Seq("doc_a"))
+      .join(sig.select(col("doc_id").as("doc_b"), col("sh").as("set_b")), Seq("doc_b"))
       .select(col("hit"),
         (common.cast("double") /
           (size(col("set_a")) + size(col("set_b")) - common)).as("jaccard"))
@@ -5397,19 +5359,11 @@ object TextOps {
   final val CalibSampleMod = 8
 
   lazy val q213Sql: String = {
-    val sigCols = (0 until MinhashK)
-      .map(j => s"min((h * ${aj(j)} + ${bj(j)}) % $MinhashP) AS m$j")
-      .mkString(",\n    ")
     // the S-curve derived from the SAME constants as the Spark side
     // (left-assoc `*` chains in both engines → bit-identical doubles)
     val srSql = Seq.fill(RowsPerBand)("mid").mkString(" * ")
     val theorySql =
       "1.0 - " + Seq.fill(Bands)(s"(1.0 - $srSql)").mkString(" * ")
-    val bandRows = (0 until Bands).map { bnd =>
-      val cols = (0 until RowsPerBand)
-        .map(r => s"m${bnd * RowsPerBand + r}").mkString(", ")
-      s"SELECT doc_id, $bnd AS band, md5(concat_ws(',', $cols)) AS bh FROM sig"
-    }.mkString("\n  UNION ALL ")
     s"""WITH sh AS (
        |  SELECT doc_id, $shinglesSql AS sh
        |  FROM (SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents)
@@ -5426,9 +5380,9 @@ object TextOps {
        |), hx AS (
        |  SELECT doc_id, ${baseHashSql("shingle")} AS h FROM ex
        |), sig AS (
-       |  SELECT doc_id, $sigCols FROM hx GROUP BY doc_id
+       |  SELECT doc_id, $sigColsSql FROM hx GROUP BY doc_id
        |), banded AS (
-       |  $bandRows
+       |  $bandRowsSql
        |), collide AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM banded a JOIN banded b
@@ -5914,9 +5868,6 @@ object TextOps {
   }
 
   lazy val q220Sql: String = {
-    val sigCols = (0 until MinhashK)
-      .map(j => s"min((h * ${aj(j)} + ${bj(j)}) % $MinhashP) AS m$j")
-      .mkString(",\n    ")
     val bandRows = lshGeometries.flatMap { case (b, r) =>
       (0 until b).map { bnd =>
         val cols = (0 until r).map(i => s"m${bnd * r + i}").mkString(", ")
@@ -5933,7 +5884,7 @@ object TextOps {
        |), hx AS (
        |  SELECT doc_id, ${baseHashSql("shingle")} AS h FROM ex
        |), sig AS (
-       |  SELECT doc_id, $sigCols FROM hx GROUP BY doc_id
+       |  SELECT doc_id, $sigColsSql FROM hx GROUP BY doc_id
        |), bands AS (
        |  $bandRows
        |), sized AS (

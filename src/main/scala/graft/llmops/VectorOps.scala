@@ -1417,7 +1417,7 @@ object VectorOps {
     graft.sources.FsSig.of(s"$dir/embeddings.parquet")
 
   /** The materialized code frame, memoized per (session, dir) and
-    * signature-guarded like the shingle index. */
+    * signature-guarded like the other PlanCache artifacts. */
   private def kmCodesCk(s: SparkSession, dir: String): DataFrame =
     // spread the checkpoint across the cluster BEFORE materializing:
     // the code plan is narrow from the parquet scan (scan → broadcast

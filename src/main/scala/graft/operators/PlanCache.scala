@@ -25,7 +25,7 @@ import java.util.concurrent.atomic.AtomicLong
   *    dirs cannot grow the cache without limit.
   *
   * Hit/miss counters feed the bench's self-diagnosis (`BENCH_r{N}`'s
-  * `shingle_index_hit`): a timed pass that MISSES the cache is paying a
+  * `artifact_cache_hit`): a timed pass that MISSES the cache is paying a
   * build cost the steady state would not, and the JSON should say so.
   */
 final class PlanCache[V](val name: String, maxEntries: Int = 8)(

@@ -322,23 +322,6 @@ object PipelineOps {
 
   // --------------------------------------------- q177 crawl novelty
 
-  /** Word-trigram rows (doc_id, source, g) — the window formulation
-    * (posexplode + two leads), not an array lambda: higher-order
-    * functions are CodegenFallback, the window chain is whole-stage
-    * codegen'd (the TextOps shingle discipline; graft can't reuse
-    * that private index here because the grams must come from the
-    * DERIVED v2 snapshot, not the fixture). */
-  private def triRows(d: DataFrame): DataFrame = {
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    d.select(col("doc_id"), col("source"),
-      posexplode(split(col("text"), "\\s+")).as(Seq("pos", "tk")))
-      .select(col("doc_id"), col("source"), col("tk"),
-        lead("tk", 1).over(w).as("t2"), lead("tk", 2).over(w).as("t3"))
-      .filter(col("t3").isNotNull)
-      .select(col("doc_id"), col("source"),
-        concat_ws(" ", col("tk"), col("t2"), col("t3")).as("g"))
-  }
-
   /** q177: CRAWL NOVELTY RATE — of the next crawl's NEW content (q173's
     * added + changed docs, derived by digest, never by knowing the
     * mutation rule), what fraction of its distinct word-trigrams was
@@ -351,7 +334,8 @@ object PipelineOps {
     * an anti-join against the corpus vocabulary; at 100 TB the
     * vocabulary side is bloom-prefiltered exactly like q87 before the
     * exact join). Per-source outputs collapse at the final partial
-    * agg. */
+    * agg. A document's distinct trigrams are its DocSketch `sh` set,
+    * computed row-locally on either snapshot. */
   def q177CrawlNovelty(s: SparkSession, dir: String): DataFrame = {
     val v1 = docs(s, dir)
     val fresh = corpusV2(v1)
@@ -359,9 +343,9 @@ object PipelineOps {
         Seq("doc_id"), "left")
       .filter(col("h1").isNull || md5(col("text")) =!= col("h1"))
       .select("doc_id", "source", "text")
-    val vocab = triRows(v1.select(col("doc_id"), col("source"), col("text")))
-      .select("g").distinct().withColumn("x_seen", lit(true))
-    triRows(fresh).select("source", "g").distinct()
+    val g = explode(graft.functions.GraftFunctions.docSketch(col("text")).getField("sh")).as("g")
+    val vocab = v1.select(g).distinct().withColumn("x_seen", lit(true))
+    fresh.select(col("source"), g).distinct()
       .join(vocab, Seq("g"), "left")
       .groupBy("source")
       .agg(count(lit(1)).as("n_grams"),

@@ -2033,10 +2033,10 @@ object StreamOps {
     * the crawl-ingest gate, the near-dup face of sq9 exactly as sq9 is
     * the exact-dup face of q92: each arriving new-batch document
     * (doc_id ≡ 0 mod [[graft.llmops.TextOps.IncrMod]]) computes its
-    * k=16 MinHash signature IN-ROW (codegen'd higher-order functions
-    * over the shingle array — no shuffle, no state), bands it with the
-    * q37 geometry, and probes the STATIC history band index; a document
-    * whose every band misses is admitted.
+    * k=16 MinHash signature IN-ROW (its [[graft.functions.DocSketch]] —
+    * no shuffle, no state), bands it with the q37 geometry, and probes
+    * the STATIC history band index; a document whose every band misses
+    * is admitted.
     *
     * Scale shape: the stream side is a pure per-row map (signature +
     * 4 band hashes) feeding four stateless broadcast left joins against
@@ -2053,38 +2053,23 @@ object StreamOps {
     * Short documents (<3 words, no shingles) carry null band hashes —
     * null join keys never match, so they admit with 0 hits, matching
     * the batch index which never contains them. */
-  /** The per-row MinHash band hashes of a `text` column — distinct
-    * word-3-gram shingles → 60-bit md5 base hashes → k universal-hash
-    * minima → [[graft.llmops.TextOps.Bands]] band md5s, all inside one
-    * row (codegen'd higher-order functions; no shuffle, no state).
-    * Documents with <3 words get null band hashes (null join keys
-    * never match — they admit with 0 hits, matching the batch index
-    * which never contains them). Shared by [[sq22StreamNeardupGate]]
-    * and the spec that pins it against the BATCH signature build
-    * (TextOps.minhashSigs → bandedSigs) doc-for-doc — the two
-    * formulations of the same geometry must never drift. */
+  /** The per-row MinHash band hashes `bh0..bh3` of a `text` column:
+    * the row's [[graft.functions.DocSketch]] signature banded by
+    * [[graft.llmops.TextOps.bandHash]], the geometry of the batch
+    * index. The sketch is its own projection, so it is evaluated once
+    * per row, not once per band. Documents with <3 words have no
+    * sketch and get null band hashes (null join keys never match —
+    * they admit with 0 hits, matching the batch index which never
+    * contains them); `concat_ws` over null values would give md5(''),
+    * hence the guard. Shared by [[sq22StreamNeardupGate]] and the spec
+    * that pins it against the batch banding (TextOps.minhashSigs →
+    * bandedSigs) doc for doc. */
   private[graft] def withInRowBands(df: DataFrame): DataFrame = {
     val T = graft.llmops.TextOps
-    val shingleHashes = expr(
-      """transform(
-        |  array_distinct(transform(sequence(1, size(w) - 2),
-        |    i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1),
-        |                        element_at(w, i + 2)))),
-        |  sh -> cast(conv(substring(md5(sh), 1, 15), 16, 10) as bigint)
-        |          % """.stripMargin + T.MinhashP + ")")
-    val bandCols = (0 until T.Bands).map { bnd =>
-      val sig = (0 until T.RowsPerBand).map { r =>
-        val j = bnd * T.RowsPerBand + r
-        expr(s"array_min(transform(hs, h -> (h * ${T.aj(j)} + ${T.bj(j)}) % ${T.MinhashP}))")
-      }
-      when(size(col("hs")) > 0, md5(concat_ws(",", sig: _*)))
-        .otherwise(lit(null)).as(s"bh$bnd")
-    }
-    df.withColumn("w", split(col("text"), "\\s+"))
-      .withColumn("hs",
-        when(size(col("w")) >= 3, shingleHashes)
-          .otherwise(expr("cast(array() as array<bigint>)")))
-      .select(col("doc_id") +: bandCols: _*)
+    df.select(col("doc_id"), graft.functions.GraftFunctions.docSketch(col("text")).as("sk"))
+      .select(col("doc_id") +: (0 until T.Bands).map { bnd =>
+        when(col("sk").isNotNull, T.bandHash(bnd, j => col("sk.m").getItem(j))).as(s"bh$bnd")
+      }: _*)
   }
 
   def sq22StreamNeardupGate(s: SparkSession, dir: String): DataFrame = {
@@ -2126,23 +2111,15 @@ object StreamOps {
     * hashes left-joined to the distinct history band index. */
   val sq22Sql: String = {
     val T = graft.llmops.TextOps
-    val sigCols = (0 until T.MinhashK)
-      .map(j => s"min((h * ${T.aj(j)} + ${T.bj(j)}) % ${T.MinhashP}) AS m$j")
-      .mkString(",\n    ")
-    val bandRows = (0 until T.Bands).map { bnd =>
-      val cols = (0 until T.RowsPerBand)
-        .map(r => s"m${bnd * T.RowsPerBand + r}").mkString(", ")
-      s"SELECT doc_id, $bnd AS band, md5(concat_ws(',', $cols)) AS bh FROM sig"
-    }.mkString("\n  UNION ALL ")
     s"""WITH sh AS (
        |  SELECT doc_id, ${T.shinglesSql} AS sh
        |  FROM (SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents)
        |  WHERE len(w) >= 3
        |), ex AS (SELECT doc_id, unnest(sh) AS shingle FROM sh
        |), hx AS (SELECT doc_id, ${T.baseHashSql("shingle")} AS h FROM ex
-       |), sig AS (SELECT doc_id, $sigCols FROM hx GROUP BY doc_id
+       |), sig AS (SELECT doc_id, ${T.sigColsSql} FROM hx GROUP BY doc_id
        |), banded AS (
-       |  $bandRows
+       |  ${T.bandRowsSql}
        |), hist AS (
        |  SELECT DISTINCT band, bh FROM banded
        |  WHERE doc_id % ${T.IncrMod} <> 0

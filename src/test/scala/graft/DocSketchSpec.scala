@@ -131,12 +131,26 @@ class DocSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q37, q39 and q92 at sf0.01 equal their outputs from the exploded-index build") {
-    // digests of the answers the exploded shingle-index verification
-    // gave (the same rows the DuckDB oracles give)
+    // digests of the answers the exploded shingle-index build gave
+    // (the same rows the DuckDB oracles give), for every query that
+    // reads a document's trigram set
     val want = Map(
+      "q35_jaccard_pairs" -> ((25, "598fd3b0b2fab2393903356429c554b3")),
       "q37_neardup_lsh" -> ((25, "598fd3b0b2fab2393903356429c554b3")),
       "q39_neardup_capped" -> ((25, "598fd3b0b2fab2393903356429c554b3")),
-      "q92_incremental_dedup" -> ((100, "a9aeeff9036ef19af884bbe99830d671")))
+      "q59_decontaminate" -> ((475, "25aac18fd9f289a42870dbbf7ef3c562")),
+      "q62_repetition" -> ((500, "6272996d994c237494840e22d258a202")),
+      "q87_bloom_decontaminate" -> ((475, "3a27d018bffdc24c831739dde19e3bfe")),
+      "q88_containment" -> ((25, "f3fffd7be26cfc214f65c6a97962aec2")),
+      "q92_incremental_dedup" -> ((100, "a9aeeff9036ef19af884bbe99830d671")),
+      "q138_prefix_jaccard" -> ((25, "598fd3b0b2fab2393903356429c554b3")),
+      "q177_crawl_novelty" -> ((20, "0914e6a678e9390219ae78469b82c099")),
+      "q202_source_sketch_jaccard" -> ((190, "4290d5d69b011a290ea8854d206b5db5")),
+      "q208_marginal_novelty" -> ((10, "4e92bab21ddd757bb11163ff0ff84727")),
+      "q213_lsh_calibration" -> ((2, "83a603dbf8f0759ba65cd6e3aea1fad4")),
+      "q214_weighted_jaccard" -> ((25, "1c9361cdc3204dfbec47eac843ffb938")),
+      "q228_template_coverage" -> ((500, "39e5d68e0fd3be293ee6c68f2403a490")),
+      "sq22_stream_neardup_gate" -> ((100, "6ca1b3d4b7d16ee9895a795b0e0be4e5")))
     want.foreach { case (name, d) =>
       assert(digest(SparkEntry.queries(name)(spark, sf001)) == d, name)
     }
@@ -149,10 +163,17 @@ class DocSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("building q37's DataFrame on a fresh directory starts no Spark job") {
+  /** A new directory holding a copy of the sf0.01 documents, so no
+    * artifact is cached for it yet. */
+  private def freshDocs(): String = {
     val fresh = graft.operators.PlanCache.tempDir("graft_sketch_fresh_")
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf001/documents.parquet"),
       java.nio.file.Paths.get(s"$fresh/documents.parquet"))
+    fresh
+  }
+
+  test("building q37's DataFrame on a fresh directory starts no Spark job") {
+    val fresh = freshDocs()
     val sc = spark.sparkContext
     Bench.TaskClock.register(sc)
     org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
@@ -164,5 +185,16 @@ class DocSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TextOps.sigCache.misses == misses + 1, "a fresh directory builds minhash_sigs")
     assert(after.jobs == before.jobs, s"${after.jobs - before.jobs} jobs while building q37")
     assert(q37.count() == TextOps.q37NeardupLsh(spark, sf001).count())
+  }
+
+  test("q35 and q39 on a fresh directory share one minhash_sigs build; no shingle_index exists") {
+    val fresh = freshDocs()
+    val misses = TextOps.sigCache.misses
+    val q35 = TextOps.q35JaccardPairs(spark, fresh).count()
+    assert(TextOps.sigCache.misses == misses + 1, "q35 reads its shingles from minhash_sigs")
+    val q39 = TextOps.q39NeardupCapped(spark, fresh).count()
+    assert(TextOps.sigCache.misses == misses + 1, "q39 reuses q35's minhash_sigs build")
+    assert((q35, q39) == ((25L, 25L)))
+    assert(!graft.operators.PlanCache.registeredNames.contains("shingle_index"))
   }
 }

@@ -250,9 +250,10 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
   // ------------------------------------------------------------- sq22
 
   test("sq22: the in-row band hashes equal the batch signature build, doc for doc") {
-    // two formulations of one geometry: the stream side computes the
-    // signature with per-row HOFs, the batch side with explode+groupBy
-    // (TextOps.minhashSigs -> bandedSigs). They must never drift.
+    // one geometry on two paths: the stream side bands each row's
+    // DocSketch in-row, the batch side bands the minhash_sigs artifact
+    // (TextOps.minhashSigs -> bandedSigs). They must never drift, and
+    // short documents must keep null band hashes.
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val inRow = StreamOps.withInRowBands(docs).collect()
       .flatMap { r =>
