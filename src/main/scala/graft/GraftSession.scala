@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.{GraftLocalFileSystem, LocalFs}
 import org.apache.spark.sql.SparkSession
 
 /** One place to build the engine's SparkSession with scale-sane
@@ -33,6 +34,14 @@ object GraftSession {
       // which Spark 4 rejects by default; read as long nanos instead
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // graft adds no session artifacts, so per-session isolation buys
+      // nothing; with it on, every forked or cloned session (one per
+      // stream run, see StreamOps.withStreamShuffle) gets its own
+      // classloader, and Spark's generated-class cache, keyed by
+      // (classloader, code), compiled sq2's 8 classes on every run
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // `file:` without a forked chmod/readlink per file (sources/LocalFs)
+      .config(LocalFs.conf)
 
   /** Local parallelism: `SPARK_GRAFT_CPUS` if set, else every core. */
   def defaultCores: Int = parseCores(sys.env.get("SPARK_GRAFT_CPUS"))
@@ -58,7 +67,22 @@ object GraftSession {
     val s = builder(appName).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     registerFunctions(s)
+    warnIfStaleLocalFs(s)
     s
+  }
+
+  /** One WARN when `FileSystem.get(file:///)` is not graft's class: an
+    * earlier non-graft configuration in this JVM left a stock instance
+    * in Hadoop's JVM-wide cache, which ignores `fs.file.impl`. Answers
+    * do not depend on it; only the forked `chmod`/`readlink` per file
+    * comes back. */
+  private def warnIfStaleLocalFs(s: SparkSession): Unit = {
+    val found = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), s.sparkContext.hadoopConfiguration).getClass
+    if (found != classOf[GraftLocalFileSystem])
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"file:/// is served by a cached ${found.getName}, not " +
+          s"${classOf[GraftLocalFileSystem].getName}: local writes fork a process per file")
   }
 
   /** Expose the engine's custom Catalyst expressions to SQL — the
