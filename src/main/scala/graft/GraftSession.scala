@@ -59,6 +59,17 @@ object GraftSession {
       throw new IllegalArgumentException(s"$name='$v' is not an integer >= 1"))
   }
 
+  /** A setting with a fixed set of values, matched ignoring case:
+    * `default` when unset; any other value fails fast with a message
+    * naming the variable, the value and the values it takes. */
+  private[graft] def parseChoice[T](name: String, raw: Option[String],
+      choices: (String, T)*)(default: => T): T = raw match {
+    case None => default
+    case Some(v) => choices.collectFirst { case (k, t) if k.equalsIgnoreCase(v.trim) => t }
+      .getOrElse(throw new IllegalArgumentException(
+        s"$name='$v' is not one of ${choices.map(_._1).mkString(", ")}"))
+  }
+
   /** [[parsePositive]] over the environment variable `name`. */
   def envPositive(name: String, default: Int): Int =
     parsePositive(name, sys.env.get(name), default)

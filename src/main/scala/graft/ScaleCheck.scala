@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,7 +31,7 @@ object ScaleCheck {
     val docsOut = s"$out/documents.parquet"
     val embOut = s"$out/embeddings.parquet"
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(docsOut))) {
-      val docs = s.read.parquet(s"$base/documents.parquet")
+      val docs = Tables.read(s, base, "documents")
       val copies = (0 until 10).map { c =>
         docs.select(
           (col("doc_id") + lit(c * 10000000L)).as("doc_id"),
@@ -43,7 +44,7 @@ object ScaleCheck {
         .write.mode("overwrite").parquet(docsOut)
     }
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(embOut))) {
-      val emb = s.read.parquet(s"$base/embeddings.parquet")
+      val emb = Tables.read(s, base, "embeddings")
       val copies = (0 until 4).map { c =>
         emb.select(
           (col("vec_id") + lit(c * 10000000L)).as("vec_id"),
@@ -67,19 +68,13 @@ object ScaleCheck {
     val eventsOut = s"$out/events.parquet"
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/events.parquet")) &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(eventsOut))) {
-      val ev = s.read.parquet(s"$base/events.parquet")
+      val ev = Tables.read(s, base, "events")
       val copies = (0 until 10).map { c =>
         ev.withColumn("event_id", col("event_id") + lit(c * 1000000000L))
       }
       copies.reduce(_ unionAll _)
         .repartition(32)
         .write.mode("overwrite").parquet(eventsOut)
-    }
-    val custOut = s"$out/customer.parquet"
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/customer.parquet")) &&
-        !java.nio.file.Files.exists(java.nio.file.Paths.get(custOut))) {
-      s.read.parquet(s"$base/customer.parquet")
-        .write.mode("overwrite").parquet(custOut)
     }
     // 10× orders+lineitem with CONSISTENT key offsets — the q113
     // bloom-join drill needs both sides to grow together so the claim
@@ -92,33 +87,33 @@ object ScaleCheck {
     val ordersOut = s"$out/orders.parquet"
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/orders.parquet")) &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(ordersOut))) {
-      val ord = s.read.parquet(s"$base/orders.parquet")
+      val ord = Tables.read(s, base, "orders")
       (0 until 10).map(c => ord.withColumn("o_orderkey",
           col("o_orderkey") + lit(c * 1000000000L)))
         .reduce(_ unionAll _)
         .repartition(16)
         .write.mode("overwrite").parquet(ordersOut)
-      val li = s.read.parquet(s"$base/lineitem.parquet")
+      val li = Tables.read(s, base, "lineitem")
       (0 until 10).map(c => li.withColumn("l_orderkey",
           col("l_orderkey") + lit(c * 1000000000L)))
         .reduce(_ unionAll _)
         .repartition(32)
         .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
     }
-    // tiny dims copy over unscaled (round-9 consumers: q142's
-    // nation/supplier profile, q145's customer→nation chain) — the
-    // realistic shape: facts grow, dimensions don't
-    Seq("nation", "region", "supplier").foreach { d =>
+    // customer and the tiny dims copy over unscaled (round-9 consumers:
+    // q142's nation/supplier profile, q145's customer→nation chain) —
+    // the realistic shape: facts grow, dimensions don't
+    Seq("customer", "nation", "region", "supplier").foreach { d =>
       val dOut = s"$out/$d.parquet"
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/$d.parquet")) &&
           !java.nio.file.Files.exists(java.nio.file.Paths.get(dOut))) {
-        s.read.parquet(s"$base/$d.parquet").write.mode("overwrite").parquet(dOut)
+        Tables.read(s, base, d).write.mode("overwrite").parquet(dOut)
       }
     }
     val partOut = s"$out/part.parquet"
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/part.parquet")) &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(partOut))) {
-      val pt = s.read.parquet(s"$base/part.parquet")
+      val pt = Tables.read(s, base, "part")
       (0 until 10).map(c => pt.withColumn("p_partkey",
           col("p_partkey") + lit(c * 1000000000L)))
         .reduce(_ unionAll _)
@@ -445,7 +440,7 @@ object ScaleCheck {
   private def q105Drill(s: SparkSession): (DataFrame, DataFrame) = {
     import graft.llmops.MultimodalOps
     val base = MultimodalOps.imagePhashOf(MultimodalOps.thumbnailOf(
-      s.read.parquet(MultimodalOps.MediaPath)))
+      Tables.read(s, MultimodalOps.MediaPath)))
     val scaled = MultimodalOps.imagePhashOf(MultimodalOps.thumbnailOf(
       MultimodalOps.generate(s, graft.sources.GenFixtures.MediaRows * 10, seed = 42L)))
     (base, scaled)
@@ -456,7 +451,7 @@ object ScaleCheck {
     * nothing else). */
   private def q167Drill(s: SparkSession): (DataFrame, DataFrame) = {
     import graft.llmops.MultimodalOps
-    val base = MultimodalOps.chunkManifestOf(s.read.parquet(MultimodalOps.MediaPath))
+    val base = MultimodalOps.chunkManifestOf(Tables.read(s, MultimodalOps.MediaPath))
     val scaled = MultimodalOps.chunkManifestOf(
       MultimodalOps.generate(s, graft.sources.GenFixtures.MediaRows * 10, seed = 42L))
     (base, scaled)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Three-point scale sweep (PERF.md §7): times each target operator at
@@ -147,7 +148,7 @@ object ScaleSweep {
     import org.apache.spark.sql.functions._
     val docsOut = s"$out/documents.parquet"
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(docsOut))) {
-      val docs = s.read.parquet(s"$base/documents.parquet")
+      val docs = Tables.read(s, base, "documents")
       (0 until 10).map { c =>
         docs.select(
           (col("doc_id") * 10 + lit(c.toLong)).as("doc_id"),
@@ -160,7 +161,7 @@ object ScaleSweep {
     }
     val embOut = s"$out/embeddings.parquet"
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(embOut))) {
-      val emb = s.read.parquet(s"$base/embeddings.parquet")
+      val emb = Tables.read(s, base, "embeddings")
       (0 until 4).map { c =>
         emb.select(
           (col("vec_id") * 10 + lit(c.toLong)).as("vec_id"),
@@ -174,7 +175,7 @@ object ScaleSweep {
     val eventsOut = s"$out/events.parquet"
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/events.parquet")) &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(eventsOut))) {
-      val ev = s.read.parquet(s"$base/events.parquet")
+      val ev = Tables.read(s, base, "events")
       (0 until 10).map(c =>
           ev.withColumn("event_id", col("event_id") * 10 + lit(c.toLong)))
         .reduce(_ unionAll _)
@@ -190,7 +191,7 @@ object ScaleSweep {
     val liOut = s"$out/lineitem.parquet"
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/lineitem.parquet")) &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(liOut))) {
-      val li = s.read.parquet(s"$base/lineitem.parquet")
+      val li = Tables.read(s, base, "lineitem")
       (0 until 10).map(c =>
           li.withColumn("l_orderkey", col("l_orderkey") * 10 + lit(c.toLong)))
         .reduce(_ unionAll _)
@@ -207,7 +208,7 @@ object ScaleSweep {
     val custOut = s"$out/customer.parquet"
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/customer.parquet")) &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(custOut))) {
-      s.read.parquet(s"$base/customer.parquet")
+      Tables.read(s, base, "customer")
         .repartition(8)
         .write.mode("overwrite").parquet(custOut)
     }
@@ -218,7 +219,7 @@ object ScaleSweep {
     val ordOut = s"$out/orders.parquet"
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/orders.parquet")) &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(ordOut))) {
-      val ord = s.read.parquet(s"$base/orders.parquet")
+      val ord = Tables.read(s, base, "orders")
       (0 until 10).map(c =>
           ord.withColumn("o_orderkey", col("o_orderkey") * 10 + lit(c.toLong)))
         .reduce(_ unionAll _)
@@ -230,7 +231,7 @@ object ScaleSweep {
   private def rows(s: SparkSession, dir: String, table: String): Long = {
     val p = s"$dir/$table.parquet"
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-      s.read.parquet(p).count()
+      Tables.read(s, p).count()
     else -1L
   }
 

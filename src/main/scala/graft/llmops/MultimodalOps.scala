@@ -1,6 +1,7 @@
 package graft.llmops
 
 import graft.QueryDef
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -36,7 +37,6 @@ object MultimodalOps {
   val FrameSize = 64
   val HeaderLen = 11
 
-  private def media(s: SparkSession): DataFrame = s.read.parquet(MediaPath)
   private val mediaSql = s"read_parquet('$MediaPath')"
 
   // ------------------------------------------------------ fixture build
@@ -112,7 +112,7 @@ object MultimodalOps {
     * header (not the meta struct) — the "decode metadata without
     * decoding payload" path. Integer sums + final division only. */
   def q45MediaMeta(s: SparkSession, dir: String): DataFrame =
-    media(s)
+    Tables.read(s, MediaPath)
       .filter(validHeader(col("content")))
       .select(col("media_type"),
         beU16(col("content"), 6).as("w"),
@@ -147,7 +147,7 @@ object MultimodalOps {
     * feature-extraction stage. */
   def q46FrameSample(s: SparkSession, dir: String): DataFrame = {
     val ef = least(beU16(col("content"), 10), fullFrames(col("content")))
-    media(s).filter(col("media_type") === "video" && validHeader(col("content")))
+    Tables.read(s, MediaPath).filter(col("media_type") === "video" && validHeader(col("content")))
       .filter(ef > 0)
       .select(col("media_id"), col("content"),
         explode(sequence(lit(0), ((ef - 1) / SampleEvery).cast("int"))).as("s_i"))
@@ -192,7 +192,7 @@ object MultimodalOps {
     * stays inside whole-stage codegen. */
   def q54FrameFeatures(s: SparkSession, dir: String): DataFrame = {
     val ef = least(beU16(col("content"), 10), fullFrames(col("content")))
-    media(s).filter(col("media_type") === "video" && validHeader(col("content")))
+    Tables.read(s, MediaPath).filter(col("media_type") === "video" && validHeader(col("content")))
       .filter(ef > 0)
       .select(col("media_id"), col("content"),
         explode(sequence(lit(0), ((ef - 1) / SampleEvery).cast("int"))).as("s_i"))
@@ -254,7 +254,7 @@ object MultimodalOps {
     val ef = least(beU16(col("content"), 10), fullFrames(col("content")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("media_id").orderBy("frame_no")
-    media(s).filter(col("media_type") === "video" && validHeader(col("content")))
+    Tables.read(s, MediaPath).filter(col("media_type") === "video" && validHeader(col("content")))
       .filter(ef > 0)
       .select(col("media_id"), col("content"),
         explode(sequence(lit(0), (ef - 1).cast("int"))).as("frame_no"))
@@ -380,7 +380,7 @@ object MultimodalOps {
     * yield phantom [0, −1] windows; with the gate it degrades to zero
     * rows exactly like the oracle's empty `range(0, nf)`. */
   def q85AudioEnergy(s: SparkSession, dir: String): DataFrame =
-    audioEnergyOf(media(s).filter(col("media_type") === "audio"))
+    audioEnergyOf(Tables.read(s, MediaPath).filter(col("media_type") === "audio"))
 
   /** The per-window energy/voiced/run-start frame both q85 and q249
     * consume — the Spark twin of [[audioSegSqlCte]]: gate on a valid
@@ -503,7 +503,7 @@ object MultimodalOps {
     * aggregates. Energy stays BIGINT end to end (the q85 integer
     * discipline), so segment masses are bit-equal cross-engine. */
   def q249AudioSegments(s: SparkSession, dir: String): DataFrame =
-    audioSegmentsOf(media(s).filter(col("media_type") === "audio"))
+    audioSegmentsOf(Tables.read(s, MediaPath).filter(col("media_type") === "audio"))
 
   /** q249's core over any (media_id, content) audio frame — factored
     * so specs can feed crafted containers (all-silent, single-window
@@ -555,7 +555,7 @@ object MultimodalOps {
     * fill with a real image library, run here as codegen'd column
     * arithmetic so the oracle can pin every output pixel. */
   def q86Thumbnail(s: SparkSession, dir: String): DataFrame =
-    thumbnailOf(media(s)).orderBy("media_id", "ty", "tx")
+    thumbnailOf(Tables.read(s, MediaPath)).orderBy("media_id", "ty", "tx")
 
   /** The 2×2 box-filter thumbnail over any (media_id, media_type,
     * content) frame — factored so q105's perceptual hash composes on
@@ -625,7 +625,7 @@ object MultimodalOps {
     * Scale shape: pure composition on the per-row thumbnail map —
     * one media_id window for the total, one aggregation; no joins. */
   def q105ImagePhash(s: SparkSession, dir: String): DataFrame =
-    imagePhashOf(thumbnailOf(media(s)))
+    imagePhashOf(thumbnailOf(Tables.read(s, MediaPath)))
 
   /** The aHash core over any (media_id, ty, tx, v) thumbnail frame. */
   private[graft] def imagePhashOf(thumb: DataFrame): DataFrame = {
@@ -691,7 +691,7 @@ object MultimodalOps {
     * self-join (the q218 discipline); everything else is per-image
     * map work + one groupBy at image cardinality. */
   def q232PhashNeardup(s: SparkSession, dir: String): DataFrame =
-    q232Core(imagePhashOf(thumbnailOf(media(s)))
+    q232Core(imagePhashOf(thumbnailOf(Tables.read(s, MediaPath)))
       .select(col("media_id"), col("phash")))
 
   /** The audit over any (media_id, phash) frame — package-visible so
@@ -796,7 +796,7 @@ object MultimodalOps {
     * At 100 TB the manifest is what makes partial fetch possible:
     * a frame-sample reads its chunks, never the blob. */
   def q167ChunkManifest(s: SparkSession, dir: String): DataFrame =
-    chunkManifestOf(media(s))
+    chunkManifestOf(Tables.read(s, MediaPath))
 
   /** The manifest over any media frame (ScaleCheck drills the 10×
     * generated table through the same composition). */

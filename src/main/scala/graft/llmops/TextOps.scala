@@ -1,6 +1,7 @@
 package graft.llmops
 
 import graft.QueryDef
+import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -23,12 +24,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object TextOps {
 
-  /** The documents table, read with its declared schema: a bare
-    * `read.parquet` starts a one-task job to read the footer every time
-    * a DataFrame is built. */
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.schema(graft.model.SchemaDef.documentsType).parquet(s"$dir/documents.parquet")
-
   /** Whitespace tokens. Document texts are single-space separated; the
     * regex keeps semantics identical to DuckDB's string_split_regex.
     *
@@ -43,7 +38,7 @@ object TextOps {
 
   /** documents + a materialized token-array column `w`. */
   private def tokenized(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).withColumn("w", toks(col("text")))
+    Tables.read(s, dir, "documents").withColumn("w", toks(col("text")))
 
   /** Tiny per-language marker-word lists for the language-ID heuristic
     * (stopword-membership scoring — the classic cheap langid signal). */
@@ -202,7 +197,7 @@ object TextOps {
     * text (the exact-dedup key) plus a 60-bit integer prefix usable as
     * a uniform shard/bucket key at scale. */
   def q33Fingerprint(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .select(col("doc_id"), md5(normText(col("text"))).as("fingerprint"))
       .withColumn("fp_bucket", conv(substring(col("fingerprint"), 1, 15), 16, 10)
         .cast("long") % 1024)
@@ -379,7 +374,7 @@ object TextOps {
     * fingerprint — at 100 TB this is the standard dedup shape: the
     * md5 key distributes uniformly, so no skew. */
   def q34ExactDedup(s: SparkSession, dir: String): DataFrame = {
-    val fp = docs(s, dir).select(col("doc_id"), col("source"),
+    val fp = Tables.read(s, dir, "documents").select(col("doc_id"), col("source"),
       md5(normText(col("text"))).as("fp"))
     fp.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
@@ -511,7 +506,7 @@ object TextOps {
 
   private[graft] def minhashSigs(s: SparkSession, dir: String): DataFrame =
     sigCache.get(s, dir, graft.sources.FsSig.of(s"$dir/documents.parquet")) {
-      val sk = docs(s, dir).repartition(col("doc_id"))
+      val sk = Tables.read(s, dir, "documents").repartition(col("doc_id"))
         .select(col("doc_id"), graft.functions.GraftFunctions.docSketch(col("text")).as("sk"))
         .select(col("doc_id"), explode(when(col("sk").isNotNull, array(col("sk")))).as("sk"))
       sk.select(col("doc_id") +: (0 until MinhashK).map(j => col("sk.m").getItem(j).as(s"m$j")) :+
@@ -875,7 +870,7 @@ object TextOps {
     * engines). Pure per-doc map: explode(tokens × 60 bits) then two
     * re-groups by doc_id — partition-parallel, no cross-doc shuffle. */
   def q38Simhash(s: SparkSession, dir: String): DataFrame = {
-    val tok = docs(s, dir)
+    val tok = Tables.read(s, dir, "documents")
       .select(col("doc_id"), explode(array_distinct(toks(col("text")))).as("t"))
       .withColumn("h", conv(substring(md5(col("t")), 1, 15), 16, 10).cast("long"))
     val bits = tok.select(col("doc_id"), col("h"), explode(sequence(lit(0), lit(59))).as("bit"))
@@ -1029,7 +1024,7 @@ object TextOps {
     * aggregation is keyed by source pairs, bounded by min(#pairs,
     * #sources²). */
   def q90SourceOverlap(s: SparkSession, dir: String): DataFrame = {
-    val src = docs(s, dir).select(col("doc_id"), col("source"))
+    val src = Tables.read(s, dir, "documents").select(col("doc_id"), col("source"))
     val perSrc = src.groupBy("source").agg(count(lit(1)).as("n_docs"))
     val attributed = simhashPairs(s, dir)
       .join(src.select(col("doc_id").as("doc_a"), col("source").as("sa")), Seq("doc_a"))
@@ -1135,7 +1130,7 @@ object TextOps {
     * docs) pins similarity 1.0 in both engines — identical empties
     * are duplicates, not a ÷0. */
   def q96EditdistVerify(s: SparkSession, dir: String): DataFrame = {
-    val txt = docs(s, dir)
+    val txt = Tables.read(s, dir, "documents")
       .select(col("doc_id"), substring(col("text"), 1, VerifyPrefix).as("text"))
     simhashPairs(s, dir)
       .join(txt.select(col("doc_id").as("doc_a"), col("text").as("ta")), Seq("doc_a"))
@@ -1224,7 +1219,7 @@ object TextOps {
 
   def q92IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
     val isNew = (col("doc_id") % IncrMod) === 0
-    val fp = docs(s, dir).select(col("doc_id"), isNew.as("is_new"),
+    val fp = Tables.read(s, dir, "documents").select(col("doc_id"), isNew.as("is_new"),
       md5(normText(col("text"))).as("fp"))
     val histFp = fp.filter(!col("is_new")).select("fp").distinct()
       .withColumn("x_hit", lit(true))
@@ -1680,7 +1675,7 @@ object TextOps {
     val keepPct = SampleKeepPct.foldRight(lit(100): Column) { case ((l, p), els) =>
       when(col("lang") === l, lit(p)).otherwise(els)
     }
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .filter(bucket("s|", 100) < keepPct)
       .withColumn("split",
         when(bucket("t|", 10) < TrainOutOf10, lit("train")).otherwise(lit("eval")))
@@ -1796,7 +1791,7 @@ object TextOps {
     val t1 = regexp_replace(col("text"), EmailRe, "<EMAIL>")
     val t2 = regexp_replace(t1, IpRe, "<IP>")
     val t3 = regexp_replace(t2, PhoneRe, "<PHONE>")
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .select(col("source"),
         regexp_count(col("text"), lit(EmailRe)).as("ne"),
         regexp_count(t1, lit(IpRe)).as("ni"),
@@ -2071,7 +2066,8 @@ object TextOps {
     * hit rate, not the plan. */
   def q59Decontaminate(s: SparkSession, dir: String): DataFrame = {
     val sh = shingles(s, dir)
-    val evalIds = docs(s, dir).filter(col("source") === EvalSource).select("doc_id")
+    val evalIds = Tables.read(s, dir, "documents")
+      .filter(col("source") === EvalSource).select("doc_id")
     val evalSh = sh.join(broadcast(evalIds), Seq("doc_id"))
       .select("shingle").distinct().withColumn("hit", lit(1L))
     val trainSh = sh.join(broadcast(evalIds), Seq("doc_id"), "left_anti")
@@ -2143,7 +2139,8 @@ object TextOps {
     * property q59's row broadcast rests on. */
   def q87BloomDecontaminate(s: SparkSession, dir: String): DataFrame = {
     val sh = shingles(s, dir)
-    val evalIds = docs(s, dir).filter(col("source") === EvalSource).select("doc_id")
+    val evalIds = Tables.read(s, dir, "documents")
+      .filter(col("source") === EvalSource).select("doc_id")
     // materialized once: both the bloom build (the head() below) and
     // the broadcast exact set read it, and the eval slice is tiny by
     // construction (one source's documents)
@@ -2579,7 +2576,7 @@ object TextOps {
         q67DedupClusters(s, dir)
       }
       .select(col("doc_id"), col("cluster_root"), col("cluster_size"))
-    val verdicts = docs(s, dir).select(col("doc_id"), col("n_chars"))
+    val verdicts = Tables.read(s, dir, "documents").select(col("doc_id"), col("n_chars"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_chars"),
         coalesce(col("cluster_root"), col("doc_id")).as("cluster_root"),
@@ -2660,7 +2657,7 @@ object TextOps {
       s.conf.get("spark.sql.shuffle.partitions").toLong,
       pairCountCache.get(s, dir, sig)(
         simhashPairs(s, dir).count()) / 65536 + 1)).toInt
-    q227Core(docs(s, dir).select(col("doc_id"), col("n_chars")),
+    q227Core(Tables.read(s, dir, "documents").select(col("doc_id"), col("n_chars")),
       labels, simhashPairs(s, dir), loopParts)
   }
 
@@ -2823,7 +2820,7 @@ object TextOps {
     * join-back target is a sources×M-row frame (broadcast) and the
     * final per-doc count partial-aggregates map-side. */
   def q228TemplateCoverage(s: SparkSession, dir: String): DataFrame = {
-    val srcOf = docs(s, dir).select(col("doc_id"), col("source"))
+    val srcOf = Tables.read(s, dir, "documents").select(col("doc_id"), col("source"))
     val grams = shingles(s, dir).join(srcOf, Seq("doc_id"))
     val tdf = grams.groupBy("source", "shingle")
       .agg(count(lit(1)).as("df"))
@@ -2960,7 +2957,7 @@ object TextOps {
     * single-row aggregates. Empty corpus: counts 0, sums NULL, ratio
     * NULL — identical in both engines. */
   def q104DedupReport(s: SparkSession, dir: String): DataFrame = {
-    val exact = docs(s, dir)
+    val exact = Tables.read(s, dir, "documents")
       .select(col("source"), md5(normText(col("text"))).as("fp"))
       .groupBy("source", "fp").agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("n_exact_unique"),
@@ -3512,7 +3509,7 @@ object TextOps {
     val vocab = bpeCache.get(s, dir,
         graft.sources.FsSig.of(s"$dir/documents.parquet"))(bpeLearn(s, dir))._2
       .select(col("word"), size(col("syms")).cast("long").as("bpe_len"))
-    val srcOf = docs(s, dir).select(col("doc_id"), col("source"))
+    val srcOf = Tables.read(s, dir, "documents").select(col("doc_id"), col("source"))
     tokenized(s, dir)
       .select(col("doc_id"), explode(col("w")).as("word"))
       .join(srcOf, Seq("doc_id"))
@@ -4366,7 +4363,7 @@ object TextOps {
     * hazard). The windows run over the |sources|-sized table (tiny by
     * definition at any corpus scale). */
   def q111TemperatureMix(s: SparkSession, dir: String): DataFrame = {
-    val counts = docs(s, dir).groupBy("source").agg(count(lit(1)).as("n"))
+    val counts = Tables.read(s, dir, "documents").groupBy("source").agg(count(lit(1)).as("n"))
     val t = counts.withColumn("w",
       round(sqrt(col("n").cast("double")) * TempWeightScale).cast("long"))
     val g = t.agg(sum("w").as("tw"), expr("sum(n) div 2").as("b"))
@@ -4585,7 +4582,7 @@ object TextOps {
     * the q35 inverted-index discipline, never source×source set
     * materialization. */
   def q202SourceSketchJaccard(s: SparkSession, dir: String): DataFrame = {
-    val src = docs(s, dir).select(col("doc_id"), col("source"))
+    val src = Tables.read(s, dir, "documents").select(col("doc_id"), col("source"))
     val srcSig = minhashSigs(s, dir).join(src, Seq("doc_id"))
       .groupBy("source")
       .agg(min(col("m0")).as("m0"),
@@ -4979,7 +4976,7 @@ object TextOps {
       }
       .select(col("doc_id"), col("cluster_root"))
     val h2 = substring(md5(col("root").cast("string")), 1, 2)
-    docs(s, dir).select(col("doc_id"), col("source"))
+    Tables.read(s, dir, "documents").select(col("doc_id"), col("source"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), col("source"),
         coalesce(col("cluster_root"), col("doc_id")).as("root"))
@@ -5035,7 +5032,7 @@ object TextOps {
     * q55/q176 discipline) — the window never sorts a full source's
     * vocabulary globally. */
   def q250TfidfTerms(s: SparkSession, dir: String): DataFrame = {
-    val ns = docs(s, dir).count()
+    val ns = Tables.read(s, dir, "documents").count()
     val tok = tokenized(s, dir)
       .select(col("source"), col("doc_id"), explode(col("w")).as("token"))
     val tf = tok.groupBy("source", "token").agg(count(lit(1)).as("tf"))
@@ -5593,7 +5590,7 @@ object TextOps {
     // does not re-derive it (trainer/consumer split, see neardupCache)
     val pairs = neardupPairs(s, dir).select("doc_a", "doc_b", "jaccard")
     val dom = pairs.groupBy("doc_b").agg(max("jaccard").as("mj"))
-    val nDocs = docs(s, dir).agg(count(lit(1)).as("n_docs"))
+    val nDocs = Tables.read(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
     val grid = s.range(1)
       .select(explode(array(ths.map(lit(_)): _*)).as("threshold"))
     val np = grid.join(pairs, col("jaccard") >= col("threshold"), "left")
@@ -5721,7 +5718,7 @@ object TextOps {
     val qs = cum.groupBy("source").agg(
       min(when(col("cum") * 100 >= col("n") * 50, col("n_tok"))).as("p50_tokens"),
       min(when(col("cum") * 100 >= col("n") * 95, col("n_tok"))).as("p95_tokens"))
-    val ls = docs(s, dir).groupBy("source", "lang").agg(count(lit(1)).as("c"))
+    val ls = Tables.read(s, dir, "documents").groupBy("source", "lang").agg(count(lit(1)).as("c"))
       .groupBy("source").agg(
         count(lit(1)).as("n_langs"),
         sum("c").as("n"),

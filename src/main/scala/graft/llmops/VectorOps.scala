@@ -1,6 +1,7 @@
 package graft.llmops
 
 import graft.QueryDef
+import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -24,9 +25,6 @@ object VectorOps {
 
   val Dim = 64
   val TopK = 5
-
-  private def emb(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
 
   /** Codegen'd sequential-fold dot product (graft.functions.DotProduct)
     * — the builtin aggregate(zip_with(...)) route is an interpreted
@@ -79,7 +77,7 @@ object VectorOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private def exactTopkPlan(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", norm(col("v")))
     // the embeddings table is one small parquet file → a 1-partition
     // scan, and the nested-loop join streams ITS partitioning: without
@@ -143,7 +141,7 @@ object VectorOps {
     val indeg = exactTopk(s, dir)
       .select(col("neighbor_id").as("vec_id"))
       .groupBy("vec_id").agg(count(lit(1)).as("in_degree"))
-    val perVec = emb(s, dir).select(col("vec_id"))
+    val perVec = Tables.read(s, dir, "embeddings").select(col("vec_id"))
       .join(indeg, Seq("vec_id"), "left")
       .select(coalesce(col("in_degree"), lit(0L)).as("in_degree"))
     val hist = perVec.groupBy("in_degree").agg(count(lit(1)).as("n_vectors"))
@@ -234,7 +232,7 @@ object VectorOps {
     graft.operators.PlanCache.persisted("exact_topk_blocked")
 
   private def q243Plan(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", norm(col("v")))
     val a = e.select(col("vec_id"), col("v"), col("nrm"))
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
@@ -263,7 +261,7 @@ object VectorOps {
 
   // ------------------------------------------------- q41 LSH-bucketed ANN
 
-  /** LSH layout: `Tables` independent hash tables of `planesFor(n)`
+  /** LSH layout: `LshTables` independent hash tables of `planesFor(n)`
     * sign bits each, plus single-bit multi-probe on the query side.
     * With neighbors at cosine ≈ 0.4 (nearly orthogonal — the hard
     * case) a single table recalls <15%; OR-ing independent tables is
@@ -274,7 +272,7 @@ object VectorOps {
     * cross join (measured: at n=5000 with fixed 6 planes the ANN was
     * SLOWER than brute force). Recall lost to finer buckets is bought
     * back with tables/probes — compute, not correctness. */
-  val Tables = 6
+  val LshTables = 6
   val TargetBucket = 10
   val seed = 42L
 
@@ -286,7 +284,7 @@ object VectorOps {
 
   private def nVectors(s: SparkSession, dir: String): Long = {
     val p = s"$dir/embeddings.parquet"
-    embCount.get(s, p, graft.sources.FsSig.of(p))(emb(s, dir).count())
+    embCount.get(s, p, graft.sources.FsSig.of(p))(Tables.read(s, dir, "embeddings").count())
   }
 
   /** True iff q41's n-adaptive LSH geometry at this fixture equals the
@@ -346,7 +344,7 @@ object VectorOps {
   /** The q43 candidate-join discipline for the LSH top-k paths: the
     * (tbl, bucket) equi-join moves NARROW (id, tbl, bucket) rows,
     * pairs dedupe BEFORE any arithmetic (a pair can meet in up to
-    * Tables × probe-mask buckets — ~42 coincidences at radius 1 on 6
+    * LshTables × probe-mask buckets — ~42 coincidences at radius 1 on 6
     * tables, each previously paying a Dim-wide dot on 512 B rows),
     * and the vectors join back by id ONCE per distinct pair. At
     * 100 TB the index shuffle must carry ids, not embeddings. Emits
@@ -364,20 +362,20 @@ object VectorOps {
   }
 
   /** The q41/q47 candidate pair-sim pipeline at a given plane count:
-    * bucket every vector into `Tables` hash tables, probe own bucket +
+    * bucket every vector into `LshTables` hash tables, probe own bucket +
     * single-bit flips on the query side, and emit the deduped
     * (vec_id, neighbor_id, sim) candidate set ([[lshPairSims]]). */
   private[graft] def lshTopkPairsPlan(s: SparkSession, dir: String, planes: Int): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", norm(col("v")))
-    val withBuckets = withBucketCols(e, planes, Tables)
+    val withBuckets = withBucketCols(e, planes, LshTables)
     // candidate side: each vector in its own bucket per table
     val cand = withBuckets.select(col("vec_id").as("neighbor_id"),
-        tableStructs(Tables).as("tb"))
+        tableStructs(LshTables).as("tb"))
       .select(col("neighbor_id"), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
     // query side: own bucket + single-bit-flip probes, per table
     val probes = explode(array(probeMasks(planes, 1).map(lit(_)): _*))
-    val q = withBuckets.select(col("vec_id"), tableStructs(Tables).as("tb"))
+    val q = withBuckets.select(col("vec_id"), tableStructs(LshTables).as("tb"))
       .select(col("vec_id"),
         col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"), probes.as("flip"))
       .select(col("vec_id"), col("tbl"), expr("int(bucket ^ flip)").as("bucket"))
@@ -452,7 +450,8 @@ object VectorOps {
   }
 
   def q42LabelCentroids(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("label"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings")
+      .select(col("vec_id"), col("label"), col("embedding").as("v"))
     // centroid = element-wise mean: aggregate array-of-arrays by index
     val cent = labelCentroids(e)
     val joined = e.join(cent, Seq("label"))
@@ -522,7 +521,7 @@ object VectorOps {
     * total order). */
   def q102LabelSeparation(s: SparkSession, dir: String): DataFrame = {
     val cent = labelCentroids(
-        emb(s, dir).select(col("label"), col("embedding").as("v")))
+        Tables.read(s, dir, "embeddings").select(col("label"), col("embedding").as("v")))
       .withColumn("cnrm", norm(col("centroid")))
     val a = cent.select(col("label").as("label_a"), col("centroid").as("ca"),
       col("cnrm").as("na"))
@@ -574,7 +573,8 @@ object VectorOps {
     * labels) is re-derived by the SQL text itself, so unlike q41 the
     * oracle holds at ANY SF. */
   def q44IvfTopk(s: SparkSession, dir: String): DataFrame = {
-    val e0 = emb(s, dir).select(col("vec_id"), col("label"), col("embedding").as("v"))
+    val e0 = Tables.read(s, dir, "embeddings")
+      .select(col("vec_id"), col("label"), col("embedding").as("v"))
     val e = e0.select(col("vec_id"), col("v")).withColumn("nrm", norm(col("v")))
     // centroids: exact-DECIMAL element-wise mean per label (the q42
     // chain — bit-identical to the oracle's centCte)
@@ -666,7 +666,8 @@ object VectorOps {
     * per-vector rank-1 window (vec-local, never global); the output
     * and the totals frame are |cells| rows. */
   def q234IvfBalance(s: SparkSession, dir: String): DataFrame = {
-    val e0 = emb(s, dir).select(col("vec_id"), col("label"), col("embedding").as("v"))
+    val e0 = Tables.read(s, dir, "embeddings")
+      .select(col("vec_id"), col("label"), col("embedding").as("v"))
     val e = e0.select(col("vec_id"), col("v")).withColumn("nrm", norm(col("v")))
     val cent = labelCentroids(e0.select(col("label"), col("v")))
       .select(col("label").as("cell"), col("centroid"))
@@ -728,7 +729,7 @@ object VectorOps {
   /** Probe Hamming radius for the near-dup candidate generation —
     * wider than q41's top-k search (radius 1) because near-dup is a
     * THRESHOLD query: a missed candidate is a missed output row, not a
-    * slightly-worse rank. Radius-2 probes over `Tables` independent
+    * slightly-worse rank. Radius-2 probes over `LshTables` independent
     * tables put pair-recall at the threshold cosine ≥ 0.999 (checked
     * exhaustively against the cross join in VectorOpsSpec); real
     * corpora dedup at cos ≥ 0.95 where per-table collision odds are
@@ -744,7 +745,7 @@ object VectorOps {
     * the cross-join formulation this replaces is O(n²) rows through
     * the executors and dies at 100×.
     *
-    * FIXED geometry (RecallPlanes × Tables), and the oracle recomputes
+    * FIXED geometry (RecallPlanes × LshTables), and the oracle recomputes
     * the SAME LSH pipeline in SQL (the q47 pattern) rather than the
     * all-pairs truth: the round-2 oracle was the exact pair set, which
     * only hash-matched while empirical recall happened to be 1.0 at
@@ -794,13 +795,13 @@ object VectorOps {
     * multiset. Output is identical (same distinct pair set, same
     * rounded cosines). */
   private def cosNeardupPipeline(s: SparkSession, dir: String, planes: Int): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", norm(col("v")))
-    val wb = withBucketCols(e, planes, Tables)
-    val right = wb.select(col("vec_id").as("vec_b"), tableStructs(Tables).as("tb"))
+    val wb = withBucketCols(e, planes, LshTables)
+    val right = wb.select(col("vec_id").as("vec_b"), tableStructs(LshTables).as("tb"))
       .select(col("vec_b"), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
     val flips = explode(array(probeMasks(planes, NearDupProbeRadius).map(lit(_)): _*))
-    val left = wb.select(col("vec_id").as("vec_a"), tableStructs(Tables).as("tb"))
+    val left = wb.select(col("vec_id").as("vec_a"), tableStructs(LshTables).as("tb"))
       .select(col("vec_a"), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"),
         flips.as("flip"))
       .select(col("vec_a"), col("tbl"), expr("int(bucket ^ flip)").as("bucket"))
@@ -834,7 +835,7 @@ object VectorOps {
     * plays for q41/q44). Quadratic by construction; never registered
     * as a query. */
   private[graft] def cosNeardupExact(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", norm(col("v")))
     val a = e.select(col("vec_id").as("vec_a"), col("v"), col("nrm"))
     val b = e.select(col("vec_id").as("vec_b"), col("v").as("w"), col("nrm").as("wnrm"))
@@ -861,7 +862,7 @@ object VectorOps {
 
   /** `buckets` CTE body: one row per (vector, table) with its bucket. */
   private def sqlBucketRows(planes: Int): String =
-    (0 until Tables).map { t =>
+    (0 until LshTables).map { t =>
       s"SELECT vec_id, v, nrm, $t AS tbl, ${sqlBucketExpr(t, planes)} AS bucket FROM n"
     }.mkString("\n  UNION ALL ")
 
@@ -1104,7 +1105,7 @@ object VectorOps {
   /** The IVF certification's approximate top-k (vec_id, neighbor_id)
     * at the fixed pseudo-random quantizer. */
   private def ivfCertApproxPlan(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", norm(col("v")))
     val cents = ivfCentroids(IvfCells)
     val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
@@ -1223,8 +1224,9 @@ object VectorOps {
     * both engines), DECIMAL-summed, one final division. */
   def q65TruncFidelity(s: SparkSession, dir: String): DataFrame = {
     val pairs = exactTopk(s, dir).select(col("vec_id"), col("neighbor_id"), col("sim"))
-    val va = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
-    val vb = emb(s, dir).select(col("vec_id").as("neighbor_id"), col("embedding").as("w"))
+    val va = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
+    val vb = Tables.read(s, dir, "embeddings")
+      .select(col("vec_id").as("neighbor_id"), col("embedding").as("w"))
     // the truncated cosines are PROJECTION columns, not expressions
     // inside an explode: Generate evaluates its generator INTERPRETED,
     // so the original explode(array(struct(..dot..))) shape ran every
@@ -1318,7 +1320,7 @@ object VectorOps {
     * exact code assignment, not just the error magnitude. A flat range
     * (vmax == vmin) quantizes to code 0 with zero error. */
   def q58Quantize(s: SparkSession, dir: String): DataFrame = {
-    val base = emb(s, dir)
+    val base = Tables.read(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
       .withColumn("vmin", array_min(col("v")).cast("double"))
       .withColumn("vmax", array_max(col("v")).cast("double"))
@@ -1381,7 +1383,7 @@ object VectorOps {
     * (values ≤ 255, every sum far inside 2^53 — bit-exact in both
     * engines). */
   private def kmCodes(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
     val mm = e.select(min(array_min(col("v")).cast("double")).as("gmin"),
       max(array_max(col("v")).cast("double")).as("gmax"))
     // one `transform` lambda, NOT a 64-expression array literal: the
@@ -1845,7 +1847,7 @@ object VectorOps {
       return codes.select(col("vec_id"), lit(0).as("cid"),
         lit(true).as("kept")).limit(0)
     val asg = kmAssign(codes, cents).select(col("vec_id"), col("cid"))
-    val e = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", norm(col("v")))
     val pairs = asg.select(col("vec_id").as("vec_a"), col("cid"))
       .join(asg.select(col("vec_id").as("vec_b"), col("cid")), Seq("cid"))
@@ -2376,7 +2378,7 @@ object VectorOps {
     * cross join anywhere). */
   def q109JlProjection(s: SparkSession, dir: String): DataFrame = {
     val planes = jlPlanes
-    val e = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
     val b = e.select((col("vec_id") - 1).as("vec_id"), col("v").as("u"))
     val d2 = greatest(lit(0.0),
       dot(col("v"), col("v")) + dot(col("u"), col("u")) -
@@ -2449,7 +2451,7 @@ object VectorOps {
     * scale the exact artifact swaps for the q41 LSH pairs — same
     * consumer shape. */
   def q158LabelProp(s: SparkSession, dir: String): DataFrame = {
-    val lab = emb(s, dir).select(col("vec_id"), col("label"))
+    val lab = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("label"))
     val holdout = lab.filter(pmod(col("vec_id"), lit(PropHoldoutMod)) === 0)
       .select(col("vec_id"), col("label").as("true_label"))
     val labeled = lab.filter(pmod(col("vec_id"), lit(PropHoldoutMod)) =!= 0)
@@ -2538,7 +2540,7 @@ object VectorOps {
     * q40/q47 discipline); at 100 TB the candidate side composes with
     * q44's IVF routing to prune the scan — compute, not semantics. */
   def q184HardNegatives(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
+    val e = Tables.read(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
       .withColumn("nrm", norm(col("v")))
     val anchors = e.orderBy("vec_id").limit(HnAnchors)
@@ -2621,7 +2623,7 @@ object VectorOps {
     * compiles to WindowGroupLimit / TakeOrderedAndProject, never a
     * full sort. */
   private[graft] def q194PoolPlan(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", norm(col("v")))
     val qv = e.filter(col("vec_id") === MmrQueryId)
       .select(col("v").as("qv"), col("nrm").as("qn"))
@@ -2784,7 +2786,7 @@ object VectorOps {
     * corpora pin b := a (s = 0) rather than NULL — the convention
     * both engines share. */
   def q195Silhouette(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
+    val e = Tables.read(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
     val centn = labelCentroids(e)
       .select(col("label").as("l"), col("centroid").as("c"),
@@ -2884,7 +2886,8 @@ object VectorOps {
     * pass is one linear scan; the stats table is |labels| rows
     * (broadcast back); no corpus×corpus anywhere. */
   def q230EmbeddingOutliers(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("label"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings")
+      .select(col("vec_id"), col("label"), col("embedding").as("v"))
     val cents = labelCentroids(e)
     val scored = e.join(broadcast(cents), Seq("label"))
       .withColumn("diff", zip_with(col("v"), col("centroid"),
@@ -2965,7 +2968,7 @@ object VectorOps {
     * final agg is |sources| rows. No corpus×corpus pass anywhere; at
     * 100 TB this is exactly the q184 panel discipline. */
   def q197SemanticDecon(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", norm(col("v")))
     val panel = e.orderBy("vec_id").limit(EvalPanelN)
       .select(col("vec_id").as("p_id"), col("v").as("pv"),
@@ -2977,7 +2980,7 @@ object VectorOps {
         round(cosSim(dot(col("v"), col("pv")), col("nrm"), col("pn")), 6)
           .as("sim"))
       .groupBy("vec_id").agg(max("sim").as("max_sim"))
-    val src = s.read.parquet(s"$dir/documents.parquet")
+    val src = Tables.read(s, dir, "documents")
       .select(col("doc_id").as("vec_id"), col("source"))
     mx.join(src, Seq("vec_id"))
       .groupBy("source")
@@ -3180,7 +3183,7 @@ object VectorOps {
     * q106 full-outer audit convention). */
   def q199EmbedDrift(s: SparkSession, dir: String): DataFrame = {
     val d6 = org.apache.spark.sql.types.DecimalType(18, 6)
-    val e = emb(s, dir).select(col("vec_id"), col("label"),
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("label"),
       col("embedding").as("v"))
     def side(rem: Int): (DataFrame, DataFrame) = {
       val h = e.filter(pmod(col("vec_id"), lit(2)) === rem)
@@ -3328,7 +3331,8 @@ object VectorOps {
     * vectors score 0.0 to every centroid (the q40 discipline) and
     * land deterministically on the lowest label. */
   def q125ConfusionMatrix(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("label"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings")
+      .select(col("vec_id"), col("label"), col("embedding").as("v"))
     val cent = labelCentroids(e).select(col("label").as("clabel"), col("centroid"))
     // declared broadcast-tiny cartesian (the q42 shape): |labels| rows
     val scored = e.crossJoin(broadcast(cent))
@@ -3428,7 +3432,7 @@ object VectorOps {
     // explode, the bucket partial aggs, the pack itself) would run on
     // ONE task (q218 measured a 1.7 s single-task stage); hash-spread
     // the scan exactly like the round-15 code-frame artifact
-    emb(s, dir)
+    Tables.read(s, dir, "embeddings")
       .repartition(math.max(2, s.sparkContext.defaultParallelism / 4))
       .select(col("vec_id"), pack(0).as("lo"), pack(32).as("hi"))
   }
@@ -3439,7 +3443,7 @@ object VectorOps {
     * discipline), ties cut by neighbor_id. */
   private def hammingRerank(s: SparkSession, dir: String,
       shortlist: DataFrame): DataFrame = {
-    val v = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
+    val v = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", norm(col("v")))
     val qv = v.select(col("vec_id"), col("v"), col("nrm"))
     val nv = v.select(col("vec_id").as("neighbor_id"),
@@ -3685,7 +3689,7 @@ object VectorOps {
     val ths = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
     val pairs = cosPairs(s, dir).select(col("vec_a"), col("vec_b"), col("sim"))
     val dom = pairs.groupBy("vec_b").agg(max("sim").as("ms"))
-    val nVec = emb(s, dir).agg(count(lit(1)).as("n_vecs"))
+    val nVec = Tables.read(s, dir, "embeddings").agg(count(lit(1)).as("n_vecs"))
     val grid = s.range(1)
       .select(explode(array(ths.map(lit(_)): _*)).as("threshold"))
     val np = grid.join(pairs, col("sim") >= col("threshold"), "left")
@@ -3755,7 +3759,7 @@ object VectorOps {
     * Monotonicity (recall non-decreasing in probes) is spec-asserted —
     * the property that makes the curve readable as a tuning knob. */
   def q215ProbeSweep(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir).select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", norm(col("v")))
     val cents = ivfCentroids(IvfCells)
     val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))

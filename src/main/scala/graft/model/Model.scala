@@ -186,15 +186,4 @@ object SchemaDef {
     StructField("bytes_json", LongType, nullable = false),
     StructField("sucesso", BooleanType, nullable = false)
   ))
-
-  /** The `documents` testdata table as its parquet footer declares it
-    * (INT64 / BYTE_ARRAY, every column optional). Readers that declare
-    * it skip the schema-inference job a bare `read.parquet` starts, and
-    * a file stream source needs it up front. */
-  val documentsType: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
 }

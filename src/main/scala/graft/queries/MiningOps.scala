@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -18,12 +19,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * both dialects, identical expression shapes, timestamps as epoch us.
   */
 object MiningOps {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def events(s: SparkSession, dir: String): DataFrame =
-    graft.sources.TsBridge.normalize(t(s, dir, "events"))
 
   private def dec(c: Column, p: Int, sc: Int): Column = c.cast(DecimalType(p, sc))
 
@@ -46,7 +41,7 @@ object MiningOps {
     * window, no per-row driver work — at 100 TB this is a single
     * scan + a tiny shuffle. */
   def q139Histogram(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables.read(s, dir, "orders")
     // bounded action: one 1-row global bounds read (the q113 pattern)
     val r = o.agg(floor(min(col("o_totalprice"))).cast("long"),
       floor(max(col("o_totalprice"))).cast("long")).head()
@@ -117,7 +112,7 @@ object MiningOps {
     * approximate bounds) or q219's bucketed histogram-midrank; the
     * clip+mean stage is unchanged either way. */
   def q140Winsorize(s: SparkSession, dir: String): DataFrame = {
-    val e = events(s, dir)
+    val e = Tables.events(s, dir)
     val bounds = e.groupBy("event_type")
       .agg(expr("percentile_cont(0.05) WITHIN GROUP (ORDER BY value)").as("p05"),
         expr("percentile_cont(0.95) WITHIN GROUP (ORDER BY value)").as("p95"))
@@ -172,7 +167,7 @@ object MiningOps {
     * partial-aggregate before the support filter. The frequent-item
     * table broadcasts. */
   def q141Itemsets(s: SparkSession, dir: String): DataFrame = {
-    val b = t(s, dir, "lineitem")
+    val b = Tables.read(s, dir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
     val items = b.groupBy("p").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= MinSupport)
@@ -228,13 +223,13 @@ object MiningOps {
     * nation keys, a broadcast join against the 25-row nation table,
     * then Expand — melt itself is pipelined, zero exchange. */
   def q142Unpivot(s: SparkSession, dir: String): DataFrame = {
-    val cust = t(s, dir, "customer").groupBy(col("c_nationkey").as("nk"))
+    val cust = Tables.read(s, dir, "customer").groupBy(col("c_nationkey").as("nk"))
       .agg(count(lit(1)).cast("double").as("cust_n"),
         sum(dec(col("c_acctbal"), 18, 2)).cast("double").as("cust_bal"))
-    val supp = t(s, dir, "supplier").groupBy(col("s_nationkey").as("nk"))
+    val supp = Tables.read(s, dir, "supplier").groupBy(col("s_nationkey").as("nk"))
       .agg(count(lit(1)).cast("double").as("supp_n"),
         sum(dec(col("s_acctbal"), 18, 2)).cast("double").as("supp_bal"))
-    val wide = t(s, dir, "nation")
+    val wide = Tables.read(s, dir, "nation")
       .join(cust, col("n_nationkey") === cust("nk"), "left")
       .join(supp, col("n_nationkey") === supp("nk"), "left")
       .select(col("n_name"),
@@ -289,7 +284,7 @@ object MiningOps {
     * (+ a null flag) and broadcasts; the probe side is one scan. */
   def q143NotinNulls(s: SparkSession, dir: String): DataFrame =
     ScopedSql.run(s, dir, q143Sql,
-      "orders" -> t(s, dir, "orders"), "customer" -> t(s, dir, "customer"))
+      "orders" -> Tables.read(s, dir, "orders"), "customer" -> Tables.read(s, dir, "customer"))
 
   val q143Sql: String =
     """SELECT
@@ -324,7 +319,7 @@ object MiningOps {
     * window pass; no join at all on the Spark side. */
   def q144AsofTolerance(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = events(s, dir)
+    val e = Tables.events(s, dir)
     val clicks = e.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts"), lit(1).as("kind"), col("event_id"),
         lit(null).cast("timestamp").as("pts"))
@@ -382,10 +377,10 @@ object MiningOps {
     * to the accumulated history — the whole point of IVM at 100 TB;
     * state stays nations-sized, sums ride exact DECIMAL. */
   def q145IvmView(s: SparkSession, dir: String): DataFrame = {
-    val dims = t(s, dir, "customer")
-      .join(t(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
+    val dims = Tables.read(s, dir, "customer")
+      .join(Tables.read(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    val orders = t(s, dir, "orders")
+    val orders = Tables.read(s, dir, "orders")
     val batches = (0 until IvmBatches).map(i =>
       orders.filter(pmod(col("o_orderkey"), lit(IvmBatches)) === i))
     val state = batches.foldLeft(Option.empty[DataFrame]) { (st, delta) =>
@@ -511,7 +506,7 @@ object MiningOps {
     // referenced twice (totals + main): cut lineage so the range
     // partitioner's sampled boundaries cannot renumber pid between
     // the two subplans (the q56 persist rationale)
-    val parted = t(s, dir, "documents")
+    val parted = Tables.read(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
       .repartitionByRange(nPart, col("doc_id"))
       .withColumn("pid", spark_partition_id())
@@ -583,7 +578,7 @@ object MiningOps {
     * interpolation positions ever rank their multiplicities). */
   def q149SkewReport(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val counts = t(s, dir, "lineitem")
+    val counts = Tables.read(s, dir, "lineitem")
       .groupBy(col("l_orderkey").as("key")).agg(count(lit(1)).as("cnt"))
     val basic = counts.agg(
       count(lit(1)).as("n_keys"), sum(col("cnt")).as("n_rows"),
@@ -712,7 +707,7 @@ object MiningOps {
     val vb = when(col("value").isNull, lit(Long.MinValue))
       .when(isnan(col("value")), lit(Long.MaxValue))
       .when(col("value") < 0, -mag).otherwise(mag)
-    val ev = events(s, dir)
+    val ev = Tables.events(s, dir)
       .select(col("event_type"), col("value"), col("event_id"))
       .withColumn("vb", vb)
     // phase 1: per-(type, bucket) aggregates + exclusive prefix over
@@ -809,7 +804,7 @@ object MiningOps {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)
     val wAll = Window.partitionBy("user_id")
-    events(s, dir)
+    Tables.events(s, dir)
       .withColumn("rn", row_number().over(w))
       .withColumn("n_changes", count(lit(1)).over(wAll))
       .withColumn("first_us", min(unix_micros(col("ts"))).over(wAll))
@@ -855,7 +850,7 @@ object MiningOps {
     * label agg; the audit reads every byte once, which is exactly
     * what it must do. */
   def q152EmbedAudit(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
+    val e = Tables.read(s, dir, "embeddings")
     val v = col("embedding")
     val nrm = graft.functions.VectorExprs.norm(v)
     e.select(col("label"), nrm.as("nrm"),
@@ -911,7 +906,7 @@ object MiningOps {
     * at scale. */
   def q154Multitouch(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = events(s, dir)
+    val e = Tables.events(s, dir)
     val p = e.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("purchase_id"),
         unix_micros(col("ts")).as("pus"))
@@ -971,9 +966,9 @@ object MiningOps {
     * equi-join of count tables, one global aggregate. Nothing here
     * moves a fact row past its first partial aggregation. */
   def q224JoinCardinality(s: SparkSession, dir: String): DataFrame = {
-    val a = t(s, dir, "lineitem")
+    val a = Tables.read(s, dir, "lineitem")
       .groupBy(col("l_orderkey").as("k")).agg(count(lit(1)).as("ca"))
-    val b = t(s, dir, "orders")
+    val b = Tables.read(s, dir, "orders")
       .groupBy(col("o_orderkey").as("k")).agg(count(lit(1)).as("cb"))
     val both = col("ca").isNotNull && col("cb").isNotNull
     a.join(b, Seq("k"), "full_outer")
@@ -1040,7 +1035,7 @@ object MiningOps {
   def q225AttributionSweep(s: SparkSession, dir: String): DataFrame = {
     val grid = Seq(TouchWindowUs / 8, TouchWindowUs / 4,
       TouchWindowUs / 2, TouchWindowUs)
-    val e = events(s, dir)
+    val e = Tables.events(s, dir)
     val p = e.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("purchase_id"),
         unix_micros(col("ts")).as("pus"))
@@ -1121,7 +1116,7 @@ object MiningOps {
   private[graft] def nEvents(s: SparkSession, dir: String): Long = {
     val p = s"$dir/events.parquet"
     eventsCountMemo.get(s, p, graft.sources.FsSig.of(p))(
-      t(s, dir, "events").count())
+      Tables.read(s, dir, "events").count())
   }
 
   /** q155: BOTTOM-K QUANTILE SUMMARY, CERTIFIED — the mergeable
@@ -1161,7 +1156,7 @@ object MiningOps {
   private[graft] def q155Plan(s: SparkSession, dir: String,
       exactTwin: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = events(s, dir)
+    val e = Tables.events(s, dir)
     val w = Window.partitionBy("event_type")
       .orderBy(md5(col("event_id").cast("string")), col("event_id"))
     val est = e.withColumn("rk", row_number().over(w))
@@ -1239,7 +1234,7 @@ object MiningOps {
 
   private[graft] def q223Plan(s: SparkSession, dir: String,
       exactTwin: Boolean): DataFrame = {
-    val e = events(s, dir)
+    val e = Tables.events(s, dir)
     val est = e.groupBy("event_type")
       .agg(percentile_approx(col("value"), lit(0.5), lit(GkAccuracy)).as("gk"))
     val twin =
@@ -1288,7 +1283,7 @@ object MiningOps {
   def q156ObservedMetrics(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val obs = org.apache.spark.sql.Observation()
-    val li = t(s, dir, "lineitem")
+    val li = Tables.read(s, dir, "lineitem")
       .observe(obs, count(lit(1)).as("obs_rows"),
         sum(dec(col("l_quantity"), 18, 2)).as("obs_qty"),
         sum(col("l_quantity").isNull.cast("long")).as("obs_nulls"))
@@ -1350,7 +1345,7 @@ object MiningOps {
     * possible at 100 TB. */
   def q157DynamicOverwrite(s: SparkSession, dir: String): DataFrame = {
     val out = graft.operators.PlanCache.tempDir("graft_dynover_")
-    val d = t(s, dir, "documents")
+    val d = Tables.read(s, dir, "documents")
     // empty-corpus guard: a partitionBy write of zero rows leaves no
     // footer to re-infer — the profile is definitionally empty
     if (d.isEmpty)
@@ -1362,7 +1357,7 @@ object MiningOps {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("lang").parquet(out)
-    s.read.parquet(out)
+    Tables.read(s, out)
       .groupBy("lang")
       .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
       .orderBy("lang")
@@ -1411,7 +1406,7 @@ object MiningOps {
     * min / max) is partition-order-independent. */
   def q168FormatRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val o = t(s, dir, "orders")
+    val o = Tables.read(s, dir, "orders")
     def stats(df: DataFrame): (Long, Double, Long, Long, Long) = {
       val r = df.agg(count(lit(1)),
         sum(dec(col("o_totalprice"), 18, 2)).cast("double"),
@@ -1481,7 +1476,7 @@ object MiningOps {
     * per row); the scan itself stays columnar with per-file
     * projection into the union schema. */
   def q169MergeSchema(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables.read(s, dir, "orders")
     val out = graft.operators.PlanCache.tempDir("graft_msch_")
     o.filter(pmod(col("o_orderkey"), lit(2)) === 0)
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -1489,6 +1484,7 @@ object MiningOps {
     o.filter(pmod(col("o_orderkey"), lit(2)) === 1)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$out/v2")
+    // a bare read: Spark's own footer merge is what q169 exercises
     s.read.option("mergeSchema", "true").parquet(s"$out/v1", s"$out/v2")
       .groupBy(coalesce(col("o_orderpriority"), lit("PRE_SCHEMA")).as("prioridade"))
       .agg(count(lit(1)).as("n"),
@@ -1531,7 +1527,7 @@ object MiningOps {
     * input [[graft.operators.SkewOps.saltedJoin]] would consume for
     * per-key fanout at 100 TB. */
   def q251SaltPlanner(s: SparkSession, dir: String): DataFrame = {
-    val counts = t(s, dir, "lineitem")
+    val counts = Tables.read(s, dir, "lineitem")
       .groupBy(col("l_orderkey").as("key")).agg(count(lit(1)).as("cnt"))
     val tot = counts.agg(count(lit(1)).as("n_keys"), sum("cnt").as("n_rows"))
     counts.crossJoin(broadcast(tot))
@@ -1587,7 +1583,7 @@ object MiningOps {
     * octet_length), so the plan is bit-reproducible cross-engine. */
   def q248CompactionBins(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val inv = t(s, dir, "lineitem")
+    val inv = Tables.read(s, dir, "lineitem")
       .select(unix_millis(date_trunc("month", col("l_shipdate"))).as("period_ms"),
         (lit(CompactFixedRowBytes) + octet_length(col("l_returnflag")) +
           octet_length(col("l_linestatus"))).cast("long").as("eb"))
@@ -1659,7 +1655,7 @@ object MiningOps {
     * shuffle. */
   def q247SeasonalResiduals(s: SparkSession, dir: String): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val e = events(s, dir)
+    val e = Tables.events(s, dir)
       .filter(abs(col("value")) <= SeasMaxAbs)
       .select(col("event_id"), col("event_type"),
         expr("(unix_micros(ts) div 86400000000 + 4) % 7").as("dow"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
+import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,15 +18,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * discipline), stable ORDER BY in both dialects.
   */
 object PipelineOps {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.schema(graft.model.SchemaDef.documentsType).parquet(s"$dir/documents.parquet")
-
-  private def events(s: SparkSession, dir: String): DataFrame =
-    graft.sources.TsBridge.normalize(t(s, dir, "events"))
 
   private def dec(c: Column, p: Int, sc: Int): Column = c.cast(DecimalType(p, sc))
 
@@ -66,7 +58,7 @@ object PipelineOps {
     * cheapest possible "what changed" pass: one co-partitioned join
     * over digests plus a four-group aggregate. */
   def q173CorpusDiff(s: SparkSession, dir: String): DataFrame = {
-    val v1 = docs(s, dir)
+    val v1 = Tables.read(s, dir, "documents")
     val a = v1.select(col("doc_id"), md5(col("text")).as("h1"),
       length(col("text")).as("len1"))
     val b = corpusV2(v1).select(col("doc_id"), md5(col("text")).as("h2"),
@@ -139,7 +131,7 @@ object PipelineOps {
     * EXACTLY the global prefix — the DuckDB oracle runs the naive
     * global window and must agree row-for-row. */
   def q174TokenBudgetSelect(s: SparkSession, dir: String): DataFrame = {
-    val tok = docs(s, dir)
+    val tok = Tables.read(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         size(split(col("text"), "\\s+")).cast("long").as("nt"),
         size(array_distinct(split(col("text"), "\\s+"))).cast("long").as("nu"))
@@ -221,7 +213,7 @@ object PipelineOps {
     * ≤ |types|·10-row contingency table at the first partial agg —
     * everything downstream is table-sized. */
   def q175PsiDrift(s: SparkSession, dir: String): DataFrame = {
-    val g = events(s, dir)
+    val g = Tables.events(s, dir)
       .select(col("event_type"),
         least(floor(col("value") / PsiBucketWidth), lit(PsiMaxBucket))
           .cast("int").as("band"),
@@ -297,7 +289,7 @@ object PipelineOps {
     * shuffle, so the exchange carries ≤ k·parts rows per source, not
     * the corpus. Spec asserts WindowGroupLimit in the plan. */
   def q176BottomkSample(s: SparkSession, dir: String): DataFrame = {
-    val keyed = docs(s, dir).select(col("doc_id"), col("source"),
+    val keyed = Tables.read(s, dir, "documents").select(col("doc_id"), col("source"),
       md5(concat(lit("k|"), col("doc_id").cast("string"))).as("pri"))
     val w = Window.partitionBy("source").orderBy("pri", "doc_id")
     keyed.withColumn("rk", row_number().over(w))
@@ -337,7 +329,7 @@ object PipelineOps {
     * agg. A document's distinct trigrams are its DocSketch `sh` set,
     * computed row-locally on either snapshot. */
   def q177CrawlNovelty(s: SparkSession, dir: String): DataFrame = {
-    val v1 = docs(s, dir)
+    val v1 = Tables.read(s, dir, "documents")
     val fresh = corpusV2(v1)
       .join(v1.select(col("doc_id"), md5(col("text")).as("h1")),
         Seq("doc_id"), "left")
@@ -418,7 +410,7 @@ object PipelineOps {
     * `lang = 'en'` — the fastText-style setup where a cheap rule
     * labels and a linear model generalizes. */
   private def lrFeats(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .select(col("lang"), col("n_chars"),
         size(split(col("text"), "\\s+")).cast("long").as("nt"),
         size(array_distinct(split(col("text"), "\\s+"))).cast("long").as("nu"))
@@ -585,7 +577,7 @@ object PipelineOps {
     * score space (≤ 10⁴+1 rows, the q174 frame discipline), never
     * per-doc rows. */
   def q179AucMidrank(s: SparkSession, dir: String): DataFrame = {
-    val scored = docs(s, dir)
+    val scored = Tables.read(s, dir, "documents")
       .select(col("source"), col("lang"),
         size(split(col("text"), "\\s+")).cast("long").as("nt"),
         size(array_distinct(split(col("text"), "\\s+"))).cast("long").as("nu"))
@@ -779,7 +771,7 @@ object PipelineOps {
     * all run on that bounded frame (driver-scale windows, the q175
     * contingency-table discipline); the corpus is never re-touched. */
   def q181EpochAlloc(s: SparkSession, dir: String): DataFrame = {
-    val src = docs(s, dir)
+    val src = Tables.read(s, dir, "documents")
       .select(col("source"),
         size(split(col("text"), "\\s+")).cast("long").as("nt"))
       .filter(col("nt") > 0)
@@ -895,7 +887,7 @@ object PipelineOps {
     * exchange with 256 perfectly-sized, hash-balanced ranges — md5
     * prefixes are uniform); nothing ever single-partitions. */
   def q182TrainShuffle(s: SparkSession, dir: String): DataFrame = {
-    val keyed = docs(s, dir)
+    val keyed = Tables.read(s, dir, "documents")
       .select(col("doc_id"),
         size(split(col("text"), "\\s+")).cast("long").as("nt"),
         md5(concat(lit(s"$ShuffleSeed-"), col("doc_id").cast("string"))).as("k"))
@@ -962,7 +954,7 @@ object PipelineOps {
     * on (group, j), co-partitioned by the window shuffle. The corpus
     * is touched once; everything after is j·|groups| rows. */
   def q183PreferencePairs(s: SparkSession, dir: String): DataFrame = {
-    val scored = docs(s, dir)
+    val scored = Tables.read(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         size(split(col("text"), "\\s+")).cast("long").as("nt"),
         size(array_distinct(split(col("text"), "\\s+"))).cast("long").as("nu"))
@@ -1038,7 +1030,7 @@ object PipelineOps {
     * rollup (|groups| rows in, |sources| out). Nothing else touches
     * the corpus; both aggs map-side combine. */
   def q185KAnonymity(s: SparkSession, dir: String): DataFrame = {
-    val groups = docs(s, dir)
+    val groups = Tables.read(s, dir, "documents")
       .select(col("source"), col("lang"),
         graft.functions.GraftFunctions.idiv(col("n_chars"), lit(KAnonBand))
           .as("band"))
@@ -1097,7 +1089,7 @@ object PipelineOps {
     * first shuffle key prefix, so a fused governance pass would
     * co-partition both. */
   def q246LDiversity(s: SparkSession, dir: String): DataFrame = {
-    val cells = docs(s, dir)
+    val cells = Tables.read(s, dir, "documents")
       .select(col("source"),
         graft.functions.GraftFunctions.idiv(col("n_chars"), lit(KAnonBand))
           .as("band"),
@@ -1169,7 +1161,7 @@ object PipelineOps {
   def q252NoisedRelease(s: SparkSession, dir: String): DataFrame = {
     val seed = pmod(sum(col("doc_id")), lit(LcgM))
     val draw = pmod(seed * LcgA + LcgC, lit(LcgM))
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .groupBy("source", "lang")
       .agg(count(lit(1)).as("n"), draw.as("h"))
       .filter(col("n") >= KAnonK)
@@ -1215,7 +1207,7 @@ object PipelineOps {
     * (two HOF filters over sequence(0, n−1) — no explode, no
     * shuffle), then ONE partial agg to the |sources|-row report. */
   def q186SpanCorruption(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir)
+    val base = Tables.read(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         size(split(col("text"), "\\s+")).cast("long").as("n"))
       .filter(col("n") > 0)
@@ -1283,7 +1275,7 @@ object PipelineOps {
     * 100 TB a bucketed-by-digest layout makes it exchange-free) and
     * collapses to |sources| rows. Digests move, bodies never do. */
   def q187SoftDedupWeights(s: SparkSession, dir: String): DataFrame = {
-    val fp = docs(s, dir)
+    val fp = Tables.read(s, dir, "documents")
       .select(col("source"), md5(col("text")).as("fp"),
         size(split(col("text"), "\\s+")).cast("long").as("nt"))
       .filter(col("nt") > 0)
@@ -1352,7 +1344,7 @@ object PipelineOps {
     * against anything bigger than 1024 rows; per-doc and per-source
     * rollups are stacked partial aggs. */
   def q188DsirWeights(s: SparkSession, dir: String): DataFrame = {
-    val toks = docs(s, dir)
+    val toks = Tables.read(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         explode(split(col("text"), "\\s+")).as("t"))
       .filter(col("t") =!= "")
@@ -1433,7 +1425,7 @@ object PipelineOps {
     * per-doc), broadcast back onto the corpus; the moment pass is one
     * map-side-combinable aggregate to |sources| rows. */
   def q189RankAgreement(s: SparkSession, dir: String): DataFrame = {
-    val scored = docs(s, dir)
+    val scored = Tables.read(s, dir, "documents")
       .select(col("source"), col("n_chars"),
         size(split(col("text"), "\\s+")).cast("long").as("nt"),
         size(array_distinct(split(col("text"), "\\s+"))).cast("long").as("nu"))
@@ -1532,7 +1524,7 @@ object PipelineOps {
     * against that bucket table, never against the corpus. Exactly one
     * corpus-touching aggregate, whatever the grid resolution. */
   def q190RetentionSweep(s: SparkSession, dir: String): DataFrame = {
-    val buckets = docs(s, dir)
+    val buckets = Tables.read(s, dir, "documents")
       .select(
         size(split(col("text"), "\\s+")).cast("long").as("nt"),
         size(array_distinct(split(col("text"), "\\s+"))).cast("long").as("nu"))
@@ -1653,7 +1645,7 @@ object PipelineOps {
   private def rrfLegs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import graft.llmops.TextOps.{Bm25B, Bm25K1}
     // --- lexical leg: BM25 restricted to the query-term postings
-    val toksDf = docs(s, dir)
+    val toksDf = Tables.read(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), "\\s+").as("w"))
     val dls = toksDf.select(col("doc_id"), size(col("w")).cast("long").as("dl"))
     val stats = dls.agg(count(lit(1)).as("n_docs"),
@@ -1680,7 +1672,7 @@ object PipelineOps {
       .filter(col("lex_rank") <= FuseK)
       .select("doc_id", "lex_rank")
     // --- semantic leg: cosine against the broadcast query embedding
-    val e = t(s, dir, "embeddings")
+    val e = Tables.read(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", graft.functions.VectorExprs.norm(col("v")))
     val qv = e.filter(col("vec_id") === QueryVecId)
@@ -1899,7 +1891,7 @@ object PipelineOps {
     * forward and backward argmaxes are two window minima over one
     * already-computed frame, not a second similarity pass. */
   def q192MarginAlign(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
+    val e = Tables.read(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("v"), col("label"))
       .withColumn("nrm", graft.functions.VectorExprs.norm(col("v")))
     val x = e.filter(col("label") < 5)
@@ -2004,7 +1996,7 @@ object PipelineOps {
     * is frame-sized — at any corpus scale this costs one scan. */
   def q206SourceConcentration(s: SparkSession, dir: String): DataFrame = {
     val d10 = org.apache.spark.sql.types.DecimalType(28, 10)
-    val m = docs(s, dir)
+    val m = Tables.read(s, dir, "documents")
       .select(col("source"),
         size(split(col("text"), "\\s+")).cast("long").as("nt"))
       .groupBy("source").agg(sum("nt").as("x"))
@@ -2072,8 +2064,8 @@ object PipelineOps {
     * `(orphan)` row so the audit's totals always reconcile to both
     * table counts. */
   def q205EmbedCoverage(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"), col("source"))
-    val e = t(s, dir, "embeddings").select(col("vec_id"))
+    val d = Tables.read(s, dir, "documents").select(col("doc_id"), col("source"))
+    val e = Tables.read(s, dir, "embeddings").select(col("vec_id"))
     d.join(e, col("doc_id") === col("vec_id"), "full_outer")
       .select(
         when(col("doc_id").isNotNull, col("source"))
@@ -2140,7 +2132,7 @@ object PipelineOps {
     * projection. */
   def q204ContextPack(s: SparkSession, dir: String): DataFrame = {
     val fused = q191RrfFusion(s, dir).select("fused_rank", "doc_id")
-    val meta = docs(s, dir).select(col("doc_id"), col("source"),
+    val meta = Tables.read(s, dir, "documents").select(col("doc_id"), col("source"),
       size(split(col("text"), "\\s+")).cast("long").as("nt"))
     val wSrc = Window.partitionBy("source").orderBy("fused_rank")
     val wCum = Window.orderBy("fused_rank")
@@ -2201,7 +2193,7 @@ object PipelineOps {
     * measures the identical within-bucket adjacency. The expected
     * rate uses exact integer Σ n_s² with one double division. */
   def q203ShuffleQuality(s: SparkSession, dir: String): DataFrame = {
-    val keyed = docs(s, dir)
+    val keyed = Tables.read(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         md5(concat(lit(s"$ShuffleSeed-"), col("doc_id").cast("string")))
           .as("k"))

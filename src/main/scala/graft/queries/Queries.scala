@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.QueryDef
 import graft.functions.GraftFunctions
-import graft.sources.GenFixtures
+import graft.sources.{GenFixtures, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -26,11 +26,6 @@ object Queries {
     * read by Spark and DuckDB, so checks are purely about semantics. */
   val M: String = GenFixtures.MessagesPath
   private val mSql = s"read_parquet('$M')"
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def msgs(s: SparkSession): DataFrame = s.read.parquet(M)
 
   private def dec(c: Column, p: Int, sc: Int): Column = c.cast(DecimalType(p, sc))
 
@@ -76,7 +71,7 @@ object Queries {
       |  (ts_fim - ts_inicio) / total_mensagens AS ms_por_mensagem,
       |  mensagens_sucesso * 100.0 / total_mensagens AS taxa_sucesso""".stripMargin
 
-  def q01Metrics(s: SparkSession, dir: String): DataFrame = metricsAgg(msgs(s))
+  def q01Metrics(s: SparkSession, dir: String): DataFrame = metricsAgg(Tables.read(s, M))
 
   val q01Sql: String =
     s"""SELECT $metricsSqlDerived
@@ -85,7 +80,7 @@ object Queries {
   /** Q2 (O7 validation): Q1 grouped by particao; round-robin means
     * per-partition counts differ by <= 1. */
   def q02PorParticao(s: SparkSession, dir: String): DataFrame =
-    msgs(s).groupBy("particao")
+    Tables.read(s, M).groupBy("particao")
       .agg(
         count(lit(1)).as("total_mensagens"),
         sum(when(col("sucesso"), 1L).otherwise(0L)).as("mensagens_sucesso"),
@@ -102,7 +97,7 @@ object Queries {
 
   /** Q3 (O17): warm-up exclusion — Q1 over sequencia > 100. */
   def q03Warmup(s: SparkSession, dir: String): DataFrame =
-    metricsAgg(msgs(s).filter(col("sequencia") > 100))
+    metricsAgg(Tables.read(s, M).filter(col("sequencia") > 100))
 
   val q03Sql: String =
     s"""SELECT $metricsSqlDerived
@@ -112,7 +107,7 @@ object Queries {
     * Avro size-estimator column (ConsumidorAvro.java:182-191: per
     * registro 4+8+8+len(texto)+len(uuid); 0 for the JSON side). */
   def q04Transporte(s: SparkSession, dir: String): DataFrame = {
-    val m = msgs(s)
+    val m = Tables.read(s, M)
     val est = GraftFunctions.avroSizeEstimate(col("dados"))
     val avro = m.select(lit("avro").as("formato"), col("bytes_avro").as("bytes"),
       est.as("estimativa"))
@@ -143,7 +138,7 @@ object Queries {
     * messages by sequencia, re-aggregated. */
   def q05TailScan(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("particao").orderBy(col("sequencia").desc)
-    msgs(s).withColumn("rn", row_number().over(w))
+    Tables.read(s, M).withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 50)
       .groupBy("particao")
       .agg(count(lit(1)).as("n"), min("sequencia").as("seq_min"),
@@ -162,7 +157,7 @@ object Queries {
   /** Q7 (extension): rollup over (formato, particao) of the transport
     * profile; grouping NULLs replaced by sentinels for stable hashing. */
   def q06Rollup(s: SparkSession, dir: String): DataFrame = {
-    val m = msgs(s)
+    val m = Tables.read(s, M)
     val u = m.select(lit("avro").as("formato"), col("particao"), col("bytes_avro").as("bytes"))
       .unionAll(m.select(lit("json").as("formato"), col("particao"), col("bytes_json").as("bytes")))
     u.rollup("formato", "particao")
@@ -201,7 +196,7 @@ object Queries {
       WireSchemaId)
     val decoded = graft.functions.AvroSerde.from_avro(
       GraftFunctions.confluentStrip(col("wire")), graft.model.SchemaDef.mensagemAvroJson)
-    msgs(s).withColumn("wire", wire)
+    Tables.read(s, M).withColumn("wire", wire)
       .select(col("id"), col("sequencia"), col("wire"),
         GraftFunctions.confluentSchemaId(col("wire")).as("sid"), decoded.as("dec"))
       .agg(count(lit(1)).as("n"),
@@ -266,7 +261,7 @@ object Queries {
       payload, graft.model.SchemaDef.mensagemAvroJson)
     val dec = graft.functions.AvroSerde.from_avro_evolved(
       col("bin"), graft.model.SchemaDef.mensagemAvroJson, MensagemV2Json)
-    msgs(s).withColumn("bin", enc)
+    Tables.read(s, M).withColumn("bin", enc)
       .select(col("id"), col("sequencia"), dec.as("d"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("d.id") === col("id"), 1L).otherwise(0L)).as("n_id_ok"),
@@ -296,7 +291,7 @@ object Queries {
   /** Q10: pricing summary (hash agg, partial+final; TPC-H Q1 shape).
     * Exact DECIMAL accumulation; see class doc. */
   def q10Pricing(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables.read(s, dir, "lineitem")
     val disc = dec(lit(1), 3, 2) - dec(col("l_discount"), 4, 2)
     val price = dec(col("l_extendedprice"), 12, 2)
     // cast-in-session-TZ (UTC), NOT java.sql.Timestamp.valueOf which
@@ -336,17 +331,17 @@ object Queries {
     * (Catalyst plans both identically: same scan, same partial+final
     * aggregate.) */
   def q10PricingViaSql(s: SparkSession, dir: String): DataFrame =
-    ScopedSql.run(s, dir, q10Sql, "lineitem" -> t(s, dir, "lineitem"))
+    ScopedSql.run(s, dir, q10Sql, "lineitem" -> Tables.read(s, dir, "lineitem"))
 
   /** Q11: revenue by nation — star join; small dims (nation, region)
     * broadcast so the only shuffle is the lineitem-orders-customer
     * path, which AQE re-plans at runtime. */
   def q11RevenueNation(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val o = t(s, dir, "orders")
-    val c = t(s, dir, "customer")
-    val n = t(s, dir, "nation")
-    val r = t(s, dir, "region")
+    val li = Tables.read(s, dir, "lineitem")
+    val o = Tables.read(s, dir, "orders")
+    val c = Tables.read(s, dir, "customer")
+    val n = Tables.read(s, dir, "nation")
+    val r = Tables.read(s, dir, "region")
     val revenue = dec(col("l_extendedprice"), 12, 2) *
       (dec(lit(1), 3, 2) - dec(col("l_discount"), 4, 2))
     li.join(o, col("l_orderkey") === col("o_orderkey"))
@@ -375,9 +370,9 @@ object Queries {
   /** Q12: top-k — revenue per customer, top 10, fully deterministic
     * ordering (revenue is an exact decimal before the sort). */
   def q12TopCustomers(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val o = t(s, dir, "orders")
-    val c = t(s, dir, "customer")
+    val li = Tables.read(s, dir, "lineitem")
+    val o = Tables.read(s, dir, "orders")
+    val c = Tables.read(s, dir, "customer")
     val revenue = dec(col("l_extendedprice"), 12, 2) *
       (dec(lit(1), 3, 2) - dec(col("l_discount"), 4, 2))
     li.join(o, col("l_orderkey") === col("o_orderkey"))
@@ -406,7 +401,7 @@ object Queries {
     * total (exact decimal running sum). */
   def q13WindowOrders(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .withColumn("rn", row_number().over(w))
       .withColumn("total_acumulado",
         sum(dec(col("o_totalprice"), 12, 2))
@@ -429,7 +424,7 @@ object Queries {
 
   /** Q14: rollup over orders (status, priority). */
   def q14RollupOrders(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .rollup("o_orderstatus", "o_orderpriority")
       .agg(count(lit(1)).as("n"),
         sum(dec(col("o_totalprice"), 12, 2)).cast("double").as("total"))
@@ -449,8 +444,8 @@ object Queries {
   /** Q15: set ops — customers with orders (INTERSECT) and without
     * (EXCEPT), tagged and unioned. */
   def q15SetOps(s: SparkSession, dir: String): DataFrame = {
-    val ck = t(s, dir, "customer").select(col("c_custkey"))
-    val ok = t(s, dir, "orders").select(col("o_custkey").as("c_custkey"))
+    val ck = Tables.read(s, dir, "customer").select(col("c_custkey"))
+    val ok = Tables.read(s, dir, "orders").select(col("o_custkey").as("c_custkey"))
     val com = ck.intersect(ok).select(lit("com_pedido").as("tipo"), col("c_custkey"))
     val sem = ck.except(ok).select(lit("sem_pedido").as("tipo"), col("c_custkey"))
     com.unionAll(sem).orderBy("tipo", "c_custkey")
@@ -467,8 +462,8 @@ object Queries {
   /** Q16: semi/anti join counts (EXISTS / NOT EXISTS as left_semi /
     * left_anti — no row multiplication, broadcast-able at scale). */
   def q16SemiAnti(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val o = t(s, dir, "orders")
+    val c = Tables.read(s, dir, "customer")
+    val o = Tables.read(s, dir, "orders")
     val semi = c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
       .agg(count(lit(1)).as("clientes_com_pedido"))
     val anti = c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -487,7 +482,7 @@ object Queries {
 
   /** Q17: exact distinct aggregation over lineitem. */
   def q17Distinct(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").agg(
+    Tables.read(s, dir, "lineitem").agg(
       countDistinct(col("l_partkey")).as("partes_distintas"),
       countDistinct(col("l_suppkey")).as("fornecedores_distintos"),
       countDistinct(col("l_orderkey")).as("pedidos_distintos"),
@@ -530,11 +525,11 @@ object Queries {
       val id = math.abs((dir + System.nanoTime()).hashCode).toString
       val (liTbl, oTbl) = (s"graft_li_$id", s"graft_o_$id")
       val base = graft.operators.PlanCache.tempDir("graft_bucketed_")
-      t(s, dir, "lineitem")
+      Tables.read(s, dir, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount")
         .write.bucketBy(JoinBuckets, "l_orderkey").sortBy("l_orderkey")
         .option("path", s"$base/lineitem").format("parquet").saveAsTable(liTbl)
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .select("o_orderkey", "o_orderpriority")
         .write.bucketBy(JoinBuckets, "o_orderkey").sortBy("o_orderkey")
         .option("path", s"$base/orders").format("parquet").saveAsTable(oTbl)
@@ -593,8 +588,8 @@ object Queries {
   private val q51HotCache = graft.operators.PlanCache.persisted("q51_hotkeys")
 
   def q51SaltedJoin(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
-    val o = t(s, dir, "orders").select("o_orderkey", "o_orderpriority")
+    val li = Tables.read(s, dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
+    val o = Tables.read(s, dir, "orders").select("o_orderkey", "o_orderpriority")
     val revenue = dec(col("l_extendedprice"), 12, 2) *
       (dec(lit(1), 3, 2) - dec(col("l_discount"), 4, 2))
     val hot = q51HotCache.get(s, dir,
@@ -635,12 +630,12 @@ object Queries {
     * its file index are too). */
   private def ensureLangPartitioned(s: SparkSession, dir: String): Option[DataFrame] =
     partitionedDocs.get(s, dir, graft.sources.FsSig.of(s"$dir/documents.parquet")) {
-      val docs = t(s, dir, "documents")
+      val docs = Tables.read(s, dir, "documents")
       if (docs.isEmpty) None
       else {
         val base = graft.operators.PlanCache.tempDir("graft_partdocs_")
         docs.write.partitionBy("lang").mode("overwrite").parquet(base)
-        Some((base, s.read.parquet(base)))
+        Some((base, Tables.read(s, base)))
       }
     }.map(_._2)
 
@@ -654,7 +649,7 @@ object Queries {
     * pipeline routinely slices on (lang, source, date). */
   def q60PartitionPruning(s: SparkSession, dir: String): DataFrame = {
     val src = ensureLangPartitioned(s, dir)
-      .getOrElse(t(s, dir, "documents")) // empty: same schema, no layout
+      .getOrElse(Tables.read(s, dir, "documents")) // empty: same schema, no layout
     src.filter(col("lang") === "en")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("tot_chars"))
@@ -704,7 +699,7 @@ object Queries {
       : Option[(String, Long, Long, Double, Double)] =
     zorderedEvents.get(s, dir, graft.sources.FsSig.of(s"$dir/events.parquet")) {
       val base = graft.operators.PlanCache.tempDir("graft_zorder_")
-      val e = events(s, dir)
+      val e = Tables.events(s, dir)
       val b = e.agg(min("user_id").as("a"), max("user_id").as("b"),
         min("value").as("c"), max("value").as("d")).collect().head
       if (b.isNullAt(0)) None
@@ -755,7 +750,7 @@ object Queries {
   def q76ZorderPruned(s: SparkSession, dir: String): DataFrame = {
     val built = ensureZordered(s, dir)
     if (built.isEmpty)
-      return events(s, dir).filter(lit(false))   // empty day: no layout
+      return Tables.events(s, dir).filter(lit(false))   // empty day: no layout
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           (sum(round(col("value") * 100).cast("long")).cast("double") / 100.0)
@@ -776,8 +771,8 @@ object Queries {
         vb <- vbOf(math.max(ZLoV, vMin)) to vbOf(math.min(ZHiV, vMax))
       } yield morton(ub, vb)
     val pruned =
-      if (zbs.isEmpty) s.read.parquet(base).filter(lit(false))
-      else s.read.parquet(base).filter(col("zb").isin(zbs: _*))
+      if (zbs.isEmpty) Tables.read(s, base).filter(lit(false))
+      else Tables.read(s, base).filter(col("zb").isin(zbs: _*))
     pruned
       .filter(col("user_id").between(ZLoU, ZHiU) &&
         col("value").between(ZLoV, ZHiV))
@@ -798,12 +793,6 @@ object Queries {
 
   // ----------------------------------------------------------------- events
 
-  /** events with `ts` as a proper TimestampType — the vintage bridge
-    * handles both fixture encodings (TIMESTAMP(NANOS) longs / native
-    * micros), see [[graft.sources.TsBridge]]. */
-  private def events(s: SparkSession, dir: String): DataFrame =
-    graft.sources.TsBridge.normalize(t(s, dir, "events"))
-
   /** Q18: AS-OF join — for every click, the most recent purchase by
     * the same user at or before the click (event attribution).
     *
@@ -816,7 +805,7 @@ object Queries {
     * purchase TIMESTAMP is emitted, so equal-ts purchase ties cannot
     * make the result nondeterministic. */
   def q18AsofJoin(s: SparkSession, dir: String): DataFrame = {
-    val e = events(s, dir)
+    val e = Tables.events(s, dir)
     val clicks = e.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts"), lit(1).as("kind"), col("event_id"),
         lit(null).cast("timestamp").as("pts"))
@@ -850,7 +839,7 @@ object Queries {
     * dialects; Spark's grouping_id() would too but the explicit form
     * is dialect-portable). */
   def q19CubeOrders(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .cube("o_orderstatus", "o_orderpriority")
       .agg(count(lit(1)).as("n"),
         (grouping(col("o_orderstatus")) * 2 + grouping(col("o_orderpriority"))).as("gid"),
@@ -873,7 +862,7 @@ object Queries {
     * window-rank idiom; at scale this is one shuffle on user_id). */
   def q20LatestByKey(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)
-    events(s, dir)
+    Tables.events(s, dir)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("user_id"), col("event_id"), col("event_type"), col("value"),
@@ -891,7 +880,7 @@ object Queries {
     * streaming SQ1; values are 2-decimal so DECIMAL accumulation is
     * exact). */
   def q21Tumbling(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
+    Tables.events(s, dir)
       .groupBy(window(col("ts"), "1 hour").getField("start").as("janela"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(dec(col("value"), 18, 2)).cast("double").as("soma_valor"))
       .select(unix_millis(col("janela")).as("janela_ms"), col("event_type"), col("n"),
@@ -913,7 +902,7 @@ object Queries {
     * discovery scan; the oracle expresses the same thing as portable
     * conditional aggregation. */
   def q26PivotEvents(s: SparkSession, dir: String): DataFrame = {
-    val wide = events(s, dir)
+    val wide = Tables.events(s, dir)
       .groupBy("user_id")
       .pivot("event_type", EventTypes)
       .agg(count(lit(1)))
@@ -947,7 +936,7 @@ object Queries {
     * sort), and q155 (gated bottom-k sampler). A deployment never
     * runs q27 on an unbounded type — it runs a sibling and certifies. */
   def q27Percentiles(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
+    Tables.events(s, dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         expr("percentile_cont(0.5) WITHIN GROUP (ORDER BY value)").as("mediana"),
@@ -972,7 +961,7 @@ object Queries {
     val tiers = Seq((0.0, 100.0, "baixo"), (100.0, 500.0, "medio"),
       (500.0, 1000.0, "alto"), (1000.0, Double.MaxValue, "extremo"))
       .toDF("lo", "hi", "tier")
-    events(s, dir)
+    Tables.events(s, dir)
       .join(broadcast(tiers), col("value") >= col("lo") && col("value") < col("hi"))
       .groupBy("tier")
       .agg(count(lit(1)).as("n"),
@@ -994,7 +983,7 @@ object Queries {
     * Spark (the DataFrame API stops at rollup/cube), so this runs the
     * shared ANSI text via spark.sql like the oracle does. */
   def q25GroupingSets(s: SparkSession, dir: String): DataFrame =
-    ScopedSql.run(s, dir, q25Sql, "orders" -> t(s, dir, "orders"))
+    ScopedSql.run(s, dir, q25Sql, "orders" -> Tables.read(s, dir, "orders"))
 
   val q25Sql: String =
     """SELECT coalesce(o_orderstatus, 'TODOS') AS status,
@@ -1040,7 +1029,7 @@ object Queries {
 
   private[graft] def q52Plan(s: SparkSession, dir: String,
       exactTwin: Boolean): DataFrame = {
-    val ev = events(s, dir)
+    val ev = Tables.events(s, dir)
     if (!exactTwin) return q52SketchOnly(s, ev)
     // The distinct counts and the percentile family aggregate
     // SEPARATELY, then join on the 5-row group key: one Aggregate
@@ -1168,7 +1157,7 @@ object Queries {
     * collect; empty input degrades to zero rows with no driver
     * branch). The rank window runs AFTER the limit, over ≤ K rows. */
   def q80CmsTopk(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
+    val ev = Tables.events(s, dir)
     val sk = ev.agg(
       count_min_sketch(col("user_id"), lit(CmsEps), lit(CmsConf),
         lit(CmsSeed)).as("sk"),
@@ -1208,7 +1197,7 @@ object Queries {
   def q22Sessionize(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events(s, dir)
+    Tables.events(s, dir)
       .withColumn("us", unix_micros(col("ts")))
       .withColumn("prev_us", lag(col("us"), 1).over(w))
       .withColumn("novo",
@@ -1262,7 +1251,7 @@ object Queries {
     * single-row final reduce's partial aggregates. */
   def q82Funnel(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id")
-    events(s, dir).withColumn("us", unix_micros(col("ts")))
+    Tables.events(s, dir).withColumn("us", unix_micros(col("ts")))
       .withColumn("t1",
         min(when(col("event_type") === "view", col("us"))).over(w))
       .withColumn("t2",
@@ -1334,7 +1323,7 @@ object Queries {
     * independent), so the window-idiom SQL is its exact oracle. */
   def q83SourceQuota(s: SparkSession, dir: String): DataFrame = {
     val quota = udaf(new graft.operators.QuotaAggregator(QuotaCap))
-    t(s, dir, "documents")
+    Tables.read(s, dir, "documents")
       .select(col("source"), md5(col("doc_id").cast("string")).as("h"),
         col("doc_id"))
       .groupBy("source")
@@ -1373,7 +1362,7 @@ object Queries {
     * event relation. Determinism: counts are exact longs; one IEEE
     * division rounded to 6 dp. */
   def q97RetentionCohorts(s: SparkSession, dir: String): DataFrame = {
-    val active = events(s, dir)
+    val active = Tables.events(s, dir)
       .select(col("user_id"), to_date(date_trunc("day", col("ts"))).as("d"))
       .distinct()
     val wUser = Window.partitionBy("user_id")
@@ -1423,7 +1412,7 @@ object Queries {
   def q98Transitions(s: SparkSession, dir: String): DataFrame = {
     val wUser = Window.partitionBy("user_id").orderBy("us", "event_id")
     val wFrom = Window.partitionBy("from_type")
-    events(s, dir)
+    Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
       .withColumn("to_type", lead("event_type", 1).over(wUser))
@@ -1468,10 +1457,10 @@ object Queries {
     * carry NULL event sums (coalesced to 0 for the count, NULL for
     * the value — both engines identical). */
   def q106Reconcile(s: SparkSession, dir: String): DataFrame = {
-    val act = events(s, dir).groupBy(col("user_id"))
+    val act = Tables.events(s, dir).groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(18, 2))).as("v"))
-    val cust = t(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
+    val cust = Tables.read(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
     cust.join(act, col("c_custkey") === col("user_id"), "full_outer")
       .select(
         when(col("c_custkey").isNotNull && col("user_id").isNotNull, "matched")
@@ -1530,7 +1519,7 @@ object Queries {
     val wU = Window.partitionBy("user_id")
     val variance = (col("ss").cast("double") -
       col("sc").cast("double") * col("sc") / col("n")) / (col("n") - 1)
-    events(s, dir)
+    Tables.events(s, dir)
       .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("hour"))
       .agg(count(lit(1)).as("c"))
       .withColumn("n", count(lit(1)).over(wU))

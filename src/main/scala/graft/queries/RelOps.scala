@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
+import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,14 +17,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * dialects, identical expression shapes, timestamps as epoch ms/us.
   */
 object RelOps {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** events with `ts` as a proper TimestampType (both fixture
-    * vintages), the [[Queries]] discipline. */
-  private def events(s: SparkSession, dir: String): DataFrame =
-    graft.sources.TsBridge.normalize(t(s, dir, "events"))
 
   private def dec(c: Column, p: Int, sc: Int): Column = c.cast(DecimalType(p, sc))
 
@@ -73,7 +66,7 @@ object RelOps {
     * membership is pure builtin expressions (xxhash64 → element_at →
     * bitwiseAND) — whole-stage codegen, no UDF. */
   def q113BloomJoin(s: SparkSession, dir: String): DataFrame = {
-    val urgent = t(s, dir, "orders")
+    val urgent = Tables.read(s, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
     // bounded action: one count sizes the filter (the build side is
@@ -92,7 +85,7 @@ object RelOps {
     val contains = bloomHashes(col("l_orderkey"), m)
       .map(h => element_at(bw, wordIdx(h) + 1).bitwiseAND(bitMask(h)) =!= 0L)
       .reduce(_ && _)
-    t(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .filter(contains)
       .join(urgent, col("l_orderkey") === col("o_orderkey"))
       .groupBy("l_returnflag")
@@ -127,7 +120,7 @@ object RelOps {
     * window does the LOCF — users are independent. Values are exact
     * DECIMAL sums so the carried value is engine-identical. */
   def q114GapfillLocf(s: SparkSession, dir: String): DataFrame = {
-    val obs = events(s, dir)
+    val obs = Tables.events(s, dir)
       .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("n"), sum(dec(col("value"), 18, 2)).as("v"))
     val span = obs.groupBy("user_id").agg(min("day").as("mn"), max("day").as("mx"))
@@ -189,7 +182,7 @@ object RelOps {
       .rangeBetween(-RollingHorizonUs, 0)
     val wp = Window.partitionBy("user_id")
       .orderBy(col("n24").desc, col("us").asc, col("event_id").asc)
-    events(s, dir)
+    Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
         dec(col("value"), 18, 2).as("v"))
       .withColumn("n24", count(lit(1)).over(wr))
@@ -280,7 +273,7 @@ object RelOps {
   /** DISTINCT co-occurrence cells, per-cell pair join, partial-
     * aggregated edge weights, repeat-count threshold. */
   private[graft] def cooccurEdgePlan(s: SparkSession, dir: String): DataFrame = {
-    val g = events(s, dir)
+    val g = Tables.events(s, dir)
       .select(col("event_type").as("et"),
         expr(s"unix_micros(ts) div $TriBucketUs").as("b"), col("user_id").as("u"))
       .distinct()
@@ -430,13 +423,13 @@ object RelOps {
     * (equal (price, size) duplicates all survive; nothing strictly
     * better exists). */
   def q117Skyline(s: SparkSession, dir: String): DataFrame = {
-    val lvl = t(s, dir, "part")
+    val lvl = Tables.read(s, dir, "part")
       .groupBy(col("p_retailprice").as("price")).agg(max("p_size").as("msize"))
     val w = Window.orderBy("price").rowsBetween(Window.unboundedPreceding, -1)
     val frontier = lvl.withColumn("pm", max("msize").over(w))
       .filter(col("pm").isNull || col("pm") < col("msize"))
       .select(col("price"), col("msize"))
-    t(s, dir, "part").join(broadcast(frontier),
+    Tables.read(s, dir, "part").join(broadcast(frontier),
         col("p_retailprice") === col("price") && col("p_size") === col("msize"))
       .select("p_partkey", "p_name", "p_retailprice", "p_size")
       .orderBy("p_partkey")
@@ -473,7 +466,7 @@ object RelOps {
     * rankings; the unrounded threshold never gates (see
     * [[graft.functions.FuzzyOps]]). */
   def q118FuzzyJoin(s: SparkSession, dir: String): DataFrame = {
-    val part = t(s, dir, "part")
+    val part = Tables.read(s, dir, "part")
     val probes = part.filter(col("p_partkey") % 5 === 0)
       .select(col("p_partkey").as("probe_key"),
         translate(col("p_name"), "aeiou", "").as("dirty"))
@@ -538,7 +531,7 @@ object RelOps {
     * are engine-specific, so the oracle checks the exact side and
     * the bound, and a sketch regression flips a boolean. */
   def q119HllIncremental(s: SparkSession, dir: String): DataFrame = {
-    val e = events(s, dir)
+    val e = Tables.events(s, dir)
       .select(col("user_id"), date_trunc("day", col("ts")).as("day"))
     val daily = e.groupBy("day").agg(hll_sketch_agg(col("user_id")).as("sk"))
     val cum = daily.select(col("day").as("d"))
@@ -588,7 +581,7 @@ object RelOps {
     // (tied event timestamps across types), so the lead orders on
     // (from, type) — a total order over runs in both engines
     val wNext = Window.partitionBy("user_id").orderBy("valid_from_ms", "event_type")
-    events(s, dir)
+    Tables.events(s, dir)
       .select(col("user_id"), col("event_type"), col("event_id"),
         unix_micros(col("ts")).as("us"))
       .withColumn("grp", row_number().over(wAll) - row_number().over(wType))
@@ -648,15 +641,15 @@ object RelOps {
         .agg(count(lit(1)).as("n_rows"),
           sum(col("h").cast(DecimalType(38, 0))).cast("string").as("checksum"))
         .select(lit(tbl).as("tbl"), col("n_rows"), col("checksum"))
-    val cust = fp(t(s, dir, "customer"), "customer", Seq(
+    val cust = fp(Tables.read(s, dir, "customer"), "customer", Seq(
       col("c_custkey"), col("c_name"), col("c_nationkey"),
       dec(col("c_acctbal"), 18, 2), col("c_mktsegment")))
-    val ord = fp(t(s, dir, "orders"), "orders", Seq(
+    val ord = fp(Tables.read(s, dir, "orders"), "orders", Seq(
       col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
       dec(col("o_totalprice"), 18, 2),
       unix_millis(col("o_orderdate").cast("timestamp")),
       col("o_orderpriority")))
-    val part = fp(t(s, dir, "part"), "part", Seq(
+    val part = fp(Tables.read(s, dir, "part"), "part", Seq(
       col("p_partkey"), col("p_name"), col("p_brand"), col("p_type"),
       col("p_size"), dec(col("p_retailprice"), 18, 2)))
     cust.unionAll(ord).unionAll(part).orderBy("tbl")
@@ -702,7 +695,7 @@ object RelOps {
     // 1e30 — inside an int128-backed decimal, but DuckDB's DECIMAL(18)
     // (int64 physical) overflows in the multiply itself, so both
     // dialects carry the same widened shape
-    val g = events(s, dir)
+    val g = Tables.events(s, dir)
       .select(col("event_type"), (col("user_id") % 2).as("b"),
         dec(col("value"), 18, 2).cast(DecimalType(28, 2)).as("v"))
       .groupBy("event_type", "b")
@@ -805,7 +798,7 @@ object RelOps {
     val parted = sweepCache.get(s, s"$dir#$nPart",
         graft.sources.FsSig.of(s"$dir/events.parquet")) {
       val wAll = Window.partitionBy("user_id").orderBy("us", "event_id")
-      val sess = events(s, dir)
+      val sess = Tables.events(s, dir)
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
         .withColumn("pus", lag("us", 1).over(wAll))
         .withColumn("new_s",
@@ -894,7 +887,7 @@ object RelOps {
     * distinct-k partial-aggregates per group. */
   def q124JsonExtract(s: SparkSession, dir: String): DataFrame = {
     val kSchema = StructType(Seq(StructField("k", LongType)))
-    events(s, dir)
+    Tables.events(s, dir)
       .select(col("event_type"),
         from_json(col("props"), kSchema).getField("k").as("k"))
       .groupBy("event_type")
@@ -953,7 +946,7 @@ object RelOps {
     val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
     val g = aucCache.get(s, s"$dir#$nPart",
         graft.sources.FsSig.of(s"$dir/events.parquet")) {
-      events(s, dir)
+      Tables.events(s, dir)
         .select(col("value"), (col("event_type") === "purchase").cast("long").as("y"))
         .groupBy("value").agg(count(lit(1)).as("c"), sum("y").as("pc"))
         .repartitionByRange(nPart, col("value"))
@@ -1023,7 +1016,7 @@ object RelOps {
     * distinct-value groups, one per-type window over those groups
     * (bounded by value cardinality per type). */
   def q127KsDrift(s: SparkSession, dir: String): DataFrame = {
-    val g = events(s, dir)
+    val g = Tables.events(s, dir)
       .select(col("event_type"), col("value"), (col("user_id") % 2).as("b"))
       .groupBy("event_type", "value")
       .agg(sum(when(col("b") === 0, 1L).otherwise(0L)).as("ca"),
@@ -1092,7 +1085,7 @@ object RelOps {
     * to the contingency table at the first partial agg; everything
     * after is |table|-sized. */
   def q128MutualInfo(s: SparkSession, dir: String): DataFrame = {
-    val cells = events(s, dir)
+    val cells = Tables.events(s, dir)
       .select(col("event_type").as("x"), hour(col("ts")).as("y"))
       .groupBy("x", "y").agg(count(lit(1)).as("c"))
     val wAll = Window.partitionBy(lit(1))
@@ -1107,11 +1100,11 @@ object RelOps {
         sum(term(pxy * log(pxy / (col("cx").cast("double") / col("n")) /
           (col("cy").cast("double") / col("n"))))).as("mi10"),
         countDistinct("x").as("nx"), countDistinct("y").as("ny"))
-    val hx = events(s, dir).groupBy(col("event_type").as("x")).agg(count(lit(1)).as("cx"))
+    val hx = Tables.events(s, dir).groupBy(col("event_type").as("x")).agg(count(lit(1)).as("cx"))
       .withColumn("n", sum("cx").over(wAll))
       .agg(sum(term(negate(col("cx").cast("double") / col("n") *
         log(col("cx").cast("double") / col("n"))))).as("hx10"))
-    val hy = events(s, dir).groupBy(hour(col("ts")).as("y")).agg(count(lit(1)).as("cy"))
+    val hy = Tables.events(s, dir).groupBy(hour(col("ts")).as("y")).agg(count(lit(1)).as("cy"))
       .withColumn("n", sum("cy").over(wAll))
       .agg(sum(term(negate(col("cy").cast("double") / col("n") *
         log(col("cy").cast("double") / col("n"))))).as("hy10"))
@@ -1182,7 +1175,7 @@ object RelOps {
     * user-keyed aggregation computes the moments — no window, no
     * sort, two shuffles total, both on user_id. */
   def q129UserTrend(s: SparkSession, dir: String): DataFrame = {
-    val daily = events(s, dir)
+    val daily = Tables.events(s, dir)
       .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("y"))
       .withColumn("x",
@@ -1245,7 +1238,7 @@ object RelOps {
     val wU = Window.partitionBy("user_id")
     val wOrd = wU.orderBy("hour")
     val wPre = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val hourly = events(s, dir)
+    val hourly = Tables.events(s, dir)
       .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("hour"))
       .agg(count(lit(1)).as("c"))
     val pre = hourly
@@ -1311,7 +1304,7 @@ object RelOps {
     * partial agg); each coarser grain aggregates the previous MV —
     * horizon-bounded rows, trivial at any SF. */
   def q131RollupCascade(s: SparkSession, dir: String): DataFrame = {
-    val daily = events(s, dir)
+    val daily = Tables.events(s, dir)
       .groupBy(date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("n"), sum(dec(col("value"), 18, 2)).as("v"),
         min(col("value")).as("mn"), max(col("value")).as("mx"))
@@ -1364,7 +1357,7 @@ object RelOps {
   def q132PitJoin(s: SparkSession, dir: String): DataFrame = {
     val wAll = Window.partitionBy("user_id").orderBy("us", "event_id")
     val wType = Window.partitionBy("user_id", "event_type").orderBy("us", "event_id")
-    val e = events(s, dir)
+    val e = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"), col("event_id"),
         unix_micros(col("ts")).as("us"))
     // state-change points: first event of each q120 run (same
@@ -1541,8 +1534,8 @@ object RelOps {
         |         WHERE o.o_custkey = c.c_custkey
         |         ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) l
         |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin,
-      "graft_l_cust" -> t(s, dir, "customer"),
-      "graft_l_ord" -> t(s, dir, "orders"))
+      "graft_l_cust" -> Tables.read(s, dir, "customer"),
+      "graft_l_ord" -> Tables.read(s, dir, "orders"))
 
   val q134Sql: String =
     """SELECT c.c_custkey, l.o_orderkey, l.o_totalprice
@@ -1573,7 +1566,7 @@ object RelOps {
 
   private def nOrders(s: SparkSession, dir: String): Long = {
     val p = s"$dir/orders.parquet"
-    ordersCount.get(s, p, graft.sources.FsSig.of(p))(t(s, dir, "orders").count())
+    ordersCount.get(s, p, graft.sources.FsSig.of(p))(Tables.read(s, dir, "orders").count())
   }
 
   /** q135: COLUMN PROFILER — the schema-agnostic data-quality
@@ -1611,7 +1604,7 @@ object RelOps {
     * profiles any table — nothing here names a column in the
     * aggregation. */
   def q135Profile(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables.read(s, dir, "orders")
     val canon: Seq[(String, Column)] = Seq(
       "o_orderkey" -> col("o_orderkey").cast("string"),
       "o_custkey" -> col("o_custkey").cast("string"),
@@ -1698,7 +1691,7 @@ object RelOps {
       .foldLeft(lit(0.0)) { case (acc, (p, i)) =>
         when(col("digit") === (i + 1).toString, lit(p)).otherwise(acc)
       }
-    val base = t(s, dir, "orders")
+    val base = Tables.read(s, dir, "orders")
       .filter(col("o_totalprice") > 0)
       .select(substring(floor(col("o_totalprice") * 100).cast("long").cast("string"),
         1, 1).as("digit"))
@@ -1889,7 +1882,7 @@ object RelOps {
     * (cohort, offset) joined to the broadcast cohort sizes. Both
     * engines truncate weeks to ISO Mondays. */
   def q209CohortRetention(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
+    val ev = Tables.events(s, dir)
       .select(col("user_id"), date_trunc("week", col("ts")).as("w"))
       .distinct()
     val first = ev.groupBy("user_id").agg(min("w").as("cw"))
@@ -1949,7 +1942,7 @@ object RelOps {
     * final readout is one scalar row. Strictly-greater timestamps in
     * both engines (ties do NOT advance the funnel). */
   def q210FunnelSteps(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).select(col("user_id"), col("event_type"),
+    val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"),
       col("ts"))
     // count_distinct mirrors SQL's count(DISTINCT ...) NULL exclusion;
     // a bare distinct().count would admit a NULL user_id as one user.
@@ -2044,7 +2037,7 @@ object RelOps {
     * integers is. */
   def q211EventGaps(s: SparkSession, dir: String): DataFrame = {
     val wu = Window.partitionBy("user_id", "event_type").orderBy("us")
-    val gaps = events(s, dir)
+    val gaps = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"),
         expr("unix_micros(ts)").as("us"))
       .withColumn("gap", col("us") - lag("us", 1).over(wu))
@@ -2150,7 +2143,7 @@ object RelOps {
     * three cell-sized histograms; the 1-row boundary frame broadcasts
     * back; final agg is ≤ 4³ rows. */
   def q233RfmSegments(s: SparkSession, dir: String): DataFrame = {
-    val e = events(s, dir)
+    val e = Tables.events(s, dir)
     val mx = e.agg(max(expr("unix_micros(ts)")).as("mx"))
     val users = e.groupBy("user_id")
       .agg(count(lit(1)).as("freq"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -13,12 +14,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * new syntax, same answer).
   */
 object SqlSurfaceOps {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def events(s: SparkSession, dir: String): DataFrame =
-    graft.sources.TsBridge.normalize(t(s, dir, "events"))
 
   // ------------------------------------------------ q159 pipe syntax
 
@@ -42,7 +37,7 @@ object SqlSurfaceOps {
         |     CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
         |   GROUP BY l_returnflag, l_linestatus
         ||> ORDER BY l_returnflag, l_linestatus""".stripMargin,
-      "lineitem" -> t(s, dir, "lineitem"))
+      "lineitem" -> Tables.read(s, dir, "lineitem"))
 
   /** The classic formulation — pipes must plan to exactly this. */
   val q159Sql: String =
@@ -71,7 +66,7 @@ object SqlSurfaceOps {
     * form is the columnar-friendly representation that avoids
     * re-parsing JSON text per access at 100 TB. */
   def q160VariantShred(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.events(s, dir)
       .select(col("event_type"),
         expr("variant_get(parse_json(props), '$.k', 'long')").as("k"),
         expr("try_variant_get(parse_json(props), '$.missing', 'long')").as("miss"))
@@ -111,7 +106,7 @@ object SqlSurfaceOps {
         |FROM mixed_events
         |GROUP BY et_mixed COLLATE UTF8_LCASE
         |ORDER BY event_type""".stripMargin,
-      "mixed_events" -> events(s, dir)
+      "mixed_events" -> Tables.events(s, dir)
         .select(when(col("event_id") % 2 === 1, upper(col("event_type")))
           .otherwise(col("event_type")).as("et_mixed"), col("value")))
 
@@ -149,7 +144,7 @@ object SqlSurfaceOps {
         |WHERE o_orderpriority = :prio AND o_totalprice >= :min_total
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
       Map("prio" -> ParamPriority, "min_total" -> ParamMinTotal),
-      "orders" -> t(s, dir, "orders"))
+      "orders" -> Tables.read(s, dir, "orders"))
 
   val q162Sql: String =
     s"""SELECT o_orderpriority, count(*) AS n,
@@ -177,7 +172,7 @@ object SqlSurfaceOps {
     val w = Window.partitionBy("o_orderpriority")
       .orderBy(col("o_totalprice"), col("o_orderkey"))
     val wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       .withColumn("pr", percent_rank().over(w))
       .withColumn("cd", cume_dist().over(w))
@@ -222,7 +217,7 @@ object SqlSurfaceOps {
     * aggregations on the key — partial-agged, no row-level
     * materialization of the multisets. */
   def q164SetopsAll(s: SparkSession, dir: String): DataFrame =
-    ScopedSql.run(s, dir, q164Sql, "lineitem" -> t(s, dir, "lineitem"))
+    ScopedSql.run(s, dir, q164Sql, "lineitem" -> Tables.read(s, dir, "lineitem"))
 
   val q164Sql: String =
     """WITH a AS (SELECT l_partkey FROM lineitem WHERE l_returnflag = 'R'),
@@ -259,7 +254,7 @@ object SqlSurfaceOps {
     * pushes the boundary predicate down to the scan. */
   def q165Paginate(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val o = t(s, dir, "orders")
+    val o = Tables.read(s, dir, "orders")
     val ord = Seq(col("o_totalprice").desc, col("o_orderkey").asc)
     // 1-row bounded action: the last key of the page before ours
     val boundary = o
@@ -296,7 +291,7 @@ object SqlSurfaceOps {
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem GROUP BY ALL ORDER BY ALL""".stripMargin,
-      "lineitem" -> t(s, dir, "lineitem"))
+      "lineitem" -> Tables.read(s, dir, "lineitem"))
 
   val q166Sql: String =
     """SELECT l_returnflag, l_linestatus, count(*) AS n,
@@ -322,8 +317,8 @@ object SqlSurfaceOps {
     * that isn't; a broadcast OOM) — the engine must honor the
     * override and the override must be safe. */
   def q170JoinHints(s: SparkSession, dir: String): DataFrame = {
-    val cust = t(s, dir, "customer")
-    val nat = t(s, dir, "nation")
+    val cust = Tables.read(s, dir, "customer")
+    val nat = Tables.read(s, dir, "nation")
     def leg(hinted: DataFrame, tag: String): DataFrame =
       cust.join(hinted, col("c_nationkey") === col("n_nationkey"))
         .groupBy("n_name")
@@ -368,7 +363,7 @@ object SqlSurfaceOps {
     * the |labels|-sized final agg. */
   def q171HofZoo(s: SparkSession, dir: String): DataFrame = {
     val v = transform(col("embedding"), x => x.cast("double"))
-    t(s, dir, "embeddings")
+    Tables.read(s, dir, "embeddings")
       .select(col("label"),
         size(filter(v, x => x > 0)).cast("long").as("n_pos"),
         array_max(transform(v, x => abs(x))).as("max_abs"),
@@ -422,7 +417,7 @@ object SqlSurfaceOps {
     * partial-agged groupBy to quarters. */
   def q172CalendarZoo(s: SparkSession, dir: String): DataFrame = {
     val d = col("o_orderdate").cast("timestamp")
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .select(unix_millis(date_trunc("quarter", d)).as("quarter_ms"),
         unix_millis(date_trunc("month", d)).as("month_ms"),
         dayofyear(d).as("doy"),
@@ -512,7 +507,7 @@ object SqlSurfaceOps {
     ScopedSql.run(s, dir,
       q222Body("graft_rev(l_extendedprice, l_discount)",
         "graft_rev_taxed(l_extendedprice, l_discount, l_tax)"),
-      "lineitem" -> t(s, dir, "lineitem"))
+      "lineitem" -> Tables.read(s, dir, "lineitem"))
   }
 
   /** The inline twin — the oracle text AND the baseline the
@@ -525,7 +520,7 @@ object SqlSurfaceOps {
   /** The inline twin executed Spark-side (for the plan-identity
     * spec). */
   private[graft] def q222InlineTwin(s: SparkSession, dir: String): DataFrame =
-    ScopedSql.run(s, dir, q222Sql, "lineitem" -> t(s, dir, "lineitem"))
+    ScopedSql.run(s, dir, q222Sql, "lineitem" -> Tables.read(s, dir, "lineitem"))
 
   // --------------------------------- q235 EXECUTE IMMEDIATE / variables
 
@@ -549,7 +544,7 @@ object SqlSurfaceOps {
     * parse-time work only. */
   def q235ExecImmediate(s: SparkSession, dir: String): DataFrame = {
     val scoped = s"events_${ScopedSql.tag(dir)}"
-    events(s, dir).createOrReplaceTempView(scoped)
+    Tables.events(s, dir).createOrReplaceTempView(scoped)
     s.sql("DECLARE OR REPLACE VARIABLE graft_q235_text STRING")
     s.sql("SET VARIABLE graft_q235_text = " +
       s"'SELECT event_type, count(*) AS n, " +
@@ -599,7 +594,7 @@ object SqlSurfaceOps {
 
   private def q236Body(s: SparkSession, dir: String): DataFrame = {
     val scoped = s"events_${ScopedSql.tag(dir)}"
-    events(s, dir).createOrReplaceTempView(scoped)
+    Tables.events(s, dir).createOrReplaceTempView(scoped)
     s.sql(
       s"""BEGIN
          |  DECLARE n BIGINT;
@@ -669,10 +664,10 @@ object SqlSurfaceOps {
     * reader of scaladoc. */
   def q237SqlTableFn(s: SparkSession, dir: String): DataFrame = {
     val scoped = s"orders_${ScopedSql.tag(dir)}"
-    t(s, dir, "orders").createOrReplaceTempView(scoped)
+    Tables.read(s, dir, "orders").createOrReplaceTempView(scoped)
     val rows = ordersCountCache.get(s, dir,
       graft.sources.FsSig.of(s"$dir/orders.parquet"))(
-      t(s, dir, "orders").count())
+      Tables.read(s, dir, "orders").count())
     val threshold = s.conf.getOption("spark.graft.q237.dispatchRows")
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
       .getOrElse(TableFnDispatchRows)
@@ -746,7 +741,7 @@ object SqlSurfaceOps {
          |    WITHIN GROUP (ORDER BY c_acctbal DESC, c_name) AS top_names
          |FROM ranked WHERE rk <= $ListaggTopK
          |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-      "customer" -> t(s, dir, "customer"))
+      "customer" -> Tables.read(s, dir, "customer"))
 
   val q253Sql: String =
     s"""WITH ranked AS (

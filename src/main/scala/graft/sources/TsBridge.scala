@@ -29,10 +29,4 @@ object TsBridge {
         df.withColumn(c, col(c).cast(TimestampType))
       case _ => df // already TimestampType
     }
-
-  /** The ts type a parquet path stores, read footer-only — streaming
-    * sources must declare their schema up front, so they probe the
-    * staged files with this before building the readStream. */
-  def tsTypeOf(df: DataFrame, c: String = "ts"): DataType =
-    df.schema(c).dataType
 }

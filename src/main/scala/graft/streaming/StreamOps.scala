@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.QueryDef
 import graft.queries.Queries
-import graft.sources.TsBridge
+import graft.sources.{Tables, TsBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
@@ -25,33 +25,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * "consume until target reached, then finish" semantics exactly.
   */
 object StreamOps {
-
-  /** events schema as stored by the driver, parameterized on the ts
-    * vintage ([[graft.sources.TsBridge]]): TIMESTAMP(NANOS) rounds
-    * surface ts as LONG nanos under nanosAsLong; native-micros rounds
-    * surface TIMESTAMP_NTZ. Streaming sources must declare the schema
-    * up front, so callers probe the file footer first ([[tsTypeAt]]). */
-  def eventsSchema(tsType: DataType = LongType): StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("ts", tsType)))
-
-  /** Footer-only probe of the ts vintage stored at `path` (a parquet
-    * file or a directory of them) — the [[TsBridge.tsTypeOf]] probe
-    * over a fresh batch read. MEMOIZED on the file signature: the
-    * probe costs ~80 ms of driver-side listing + footer decode per
-    * call, every streaming runner pays it per source per pass (sq18
-    * builds three sides → 240 ms/pass), and the ts TYPE is pure
-    * metadata of the fixture file — [[graft.sources.FsSig]] keying
-    * invalidates on regeneration exactly like the other driver-side
-    * memos. No row data is cached. */
-  private val tsTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), DataType]()
-  private def tsTypeAt(s: SparkSession, path: String): DataType =
-    tsTypeCache.computeIfAbsent((path, graft.sources.FsSig.of(path)),
-      _ => TsBridge.tsTypeOf(s.read.parquet(path)))
 
   /** Spark's file stream source lists a DIRECTORY; the testdata tables
     * are single parquet files. Stage a temp dir containing a symlink to
@@ -132,13 +105,22 @@ object StreamOps {
   def lastBatchMs(family: String): Seq[(String, Long)] =
     Option(batchMs.get(family)).getOrElse(Seq.empty)
 
+  /** File stream over the parquet table at `path` (a file is staged,
+    * [[stageAsDir]]), declaring its footer's schema ([[Tables.schema]]). */
+  private[graft] def parquetStream(s: SparkSession, path: String): DataFrame =
+    s.readStream.schema(Tables.schema(s, path)).parquet(stageAsDir(path))
+
+  /** An events stream's columns: the stored `props` JSON stays out. */
+  private val EventCols = Seq("event_id", "user_id", "event_type", "value", "ts").map(col)
+
+  /** Events stream over an events file or directory, `ts` normalized. */
+  private def eventsStreamAt(s: SparkSession, path: String): DataFrame =
+    TsBridge.normalize(parquetStream(s, path)).select(EventCols: _*)
+
   /** Streaming source over the events parquet (file source — the
     * offline stand-in for the Kafka source; same DataFrame downstream). */
-  def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    val p = s"$dir/events.parquet"
-    TsBridge.normalize(
-      s.readStream.schema(eventsSchema(tsTypeAt(s, p))).parquet(stageAsDir(p)))
-  }
+  def eventsStream(s: SparkSession, dir: String): DataFrame =
+    eventsStreamAt(s, s"$dir/events.parquet")
 
   /** State-store partition count for the stateful streaming queries.
     *
@@ -159,18 +141,10 @@ object StreamOps {
     * override, the deployment-side state-layer knob, deliberately
     * decoupled from the batch shuffle width. */
   private val envStateParts: Option[Int] = {
-    val raw = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    val parsed = raw
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ >= 1)
-    // round-15 ADVICE: a typo'd deployment override used to be
-    // silently dropped in favour of the default — fail fast instead
-    // (a wrong state-store count is frozen into every checkpoint the
-    // deployment writes, the worst place for a silent fallback)
-    raw.foreach { v =>
-      if (parsed.isEmpty) throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STREAM_STATE_PARTITIONS='$v' is not a positive int")
-    }
-    parsed
+    // a bad value fails fast: a wrong state-store count is frozen into
+    // every checkpoint the deployment writes
+    val name = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
+    sys.env.get(name).map(v => graft.GraftSession.parsePositive(name, Some(v), 0))
   }
 
   val StreamStatePartitions: Int = envStateParts.getOrElse(4)
@@ -254,7 +228,7 @@ object StreamOps {
     // the stream-stream joins reaches on one box). Env-gated so the
     // gate-SF oracle runs stay on the default provider: results are
     // provider-independent, only the state backend changes.
-    if (sys.env.get("SPARK_GRAFT_STATESTORE").exists(_.equalsIgnoreCase("rocksdb"))) {
+    if (rocksdbStoreRequested) {
       fs.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // Changelog checkpointing (round-13 verdict #5): per-batch the
@@ -285,12 +259,20 @@ object StreamOps {
   private def sinkSorted(fs: SparkSession, name: String, order: Column*): DataFrame =
     fs.table(name).coalesce(1).sortWithinPartitions(order: _*)
 
-  /** `SPARK_GRAFT_ROCKSDB_CHANGELOG=true` beside the existing
-    * `SPARK_GRAFT_STATESTORE=rocksdb` surface (README "Streaming state
-    * backends"); only meaningful with the RocksDB provider. */
-  private def rocksdbChangelogRequested: Boolean =
-    sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG")
-      .exists(v => v.equalsIgnoreCase("true") || v == "1")
+  /** `SPARK_GRAFT_STATESTORE=rocksdb` runs every stream on the RocksDB
+    * state store; unset means Spark's default; any other value fails. */
+  private[graft] def parseStateStore(raw: Option[String]): Boolean =
+    graft.GraftSession.parseChoice("SPARK_GRAFT_STATESTORE", raw, "rocksdb" -> true)(false)
+  private val rocksdbStoreRequested = parseStateStore(sys.env.get("SPARK_GRAFT_STATESTORE"))
+
+  /** `SPARK_GRAFT_ROCKSDB_CHANGELOG=true` (or `1`) beside
+    * `SPARK_GRAFT_STATESTORE=rocksdb` (README "Streaming state
+    * backends"); `false`/`0` or unset mean off; any other value fails. */
+  private[graft] def parseRocksdbChangelog(raw: Option[String]): Boolean =
+    graft.GraftSession.parseChoice("SPARK_GRAFT_ROCKSDB_CHANGELOG", raw,
+      "true" -> true, "1" -> true, "false" -> false, "0" -> false)(false)
+  private val rocksdbChangelogRequested =
+    parseRocksdbChangelog(sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG"))
 
   /** SQ1 logical plan: tumbling 1-hour window × event_type, count and
     * exact-DECIMAL value sum — shared verbatim by the batch oracle
@@ -395,7 +377,7 @@ object StreamOps {
   def sq5StreamEnrich(s: SparkSession, dir: String): DataFrame = {
     val name = s"sq5_${System.nanoTime()}"
     withStreamShuffle(s) { fs =>
-      val cust = fs.read.parquet(s"$dir/customer.parquet")
+      val cust = Tables.read(fs, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
       val q = eventsStream(fs, dir)
         .join(broadcast(cust), col("user_id") === col("c_custkey"))
@@ -453,7 +435,7 @@ object StreamOps {
     * the within-bounds boolean reach the output (the q52/q80 rule:
     * raw sketch estimates are engine-specific, so they stay out). */
   def sq8StreamSketch(s: SparkSession, dir: String): DataFrame = {
-    val exact = TsBridge.normalize(s.read.parquet(s"$dir/events.parquet"))
+    val exact = Tables.events(s, dir)
       .groupBy(window(col("ts"), "1 hour").getField("start").as("janela"))
       .agg(countDistinct(col("user_id")).as("exact_users"))
       .select(unix_millis(col("janela")).as("janela_ms"), col("exact_users"))
@@ -494,13 +476,12 @@ object StreamOps {
     val incrMod = graft.llmops.TextOps.IncrMod
     val fp = graft.llmops.TextOps.normText(col("text"))
     withStreamShuffle(s) { fs =>
-      val histFp = fs.read.parquet(s"$dir/documents.parquet")
+      val histFp = Tables.read(fs, dir, "documents")
         .filter(col("doc_id") % incrMod =!= 0)
         .select(md5(graft.llmops.TextOps.normText(col("text"))).as("fp"))
         .distinct()
         .withColumn("x_hit", lit(true))
-      val q = fs.readStream.schema(graft.model.SchemaDef.documentsType)
-        .parquet(stageAsDir(s"$dir/documents.parquet"))
+      val q = parquetStream(fs, s"$dir/documents.parquet")
         .filter(col("doc_id") % incrMod === 0)
         .select(col("doc_id"), md5(fp).as("fp"))
         .join(broadcast(histFp), Seq("fp"), "left")
@@ -539,8 +520,7 @@ object StreamOps {
     val name = s"sq2_${System.nanoTime()}"
     val fp = md5(regexp_replace(lower(trim(col("text"))), "\\s+", " "))
     withStreamShuffle(s) { fs =>
-      val q = fs.readStream.schema(graft.model.SchemaDef.documentsType)
-        .parquet(stageAsDir(s"$dir/documents.parquet"))
+      val q = parquetStream(fs, s"$dir/documents.parquet")
         .select(col("source"), fp.as("fp"))
         .dropDuplicates("source", "fp")
         .writeStream.queryName(name).format("memory")
@@ -951,7 +931,7 @@ object StreamOps {
     * (spec-asserted). Returns closed+final sessions. */
   def sessionizeBatch(s: SparkSession, dir: String, gapUs: Long): DataFrame = {
     import s.implicits._
-    val ev = eventsBatch(s, dir)
+    val ev = Tables.events(s, dir)
     val closed = sessionizeStateful(ev, gapUs).as[Session]
     closed.unionAll(finalOpenSessions(ev, gapUs)).toDF()
       .orderBy("user_id", "sid")
@@ -1010,7 +990,7 @@ object StreamOps {
       fs.table(name)
     }
     streamed.as[Session]
-      .unionAll(finalOpenSessions(eventsBatch(s, dir), gapUs)).toDF()
+      .unionAll(finalOpenSessions(Tables.events(s, dir), gapUs)).toDF()
       .orderBy("user_id", "sid")
   }
 
@@ -1088,9 +1068,7 @@ object StreamOps {
     val name = s"sq6t_${System.nanoTime()}"
     val gapUs = graft.queries.Queries.SessionGapUs
     withStreamShuffle(s) { fs =>
-      val src = TsBridge.normalize(
-        fs.readStream.schema(eventsSchema(tsTypeAt(fs, srcDir)))
-          .parquet(stageAsDir(srcDir)))
+      val src = eventsStreamAt(fs, srcDir)
       val q = sessionizeStatefulTimeout(src, gapUs)
         .writeStream.queryName(name).format("memory")
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
@@ -1112,14 +1090,14 @@ object StreamOps {
     * production shape, driver-hash-checked. */
   /** Stage the events fixture into a temp dir PLUS a flush-tick
     * sentinel one gap + one minute past max(ts) (same ts vintage as
-    * the fixture — the streaming schema probe reads the whole dir).
+    * the fixture — the stream declares one file's footer schema).
     * Empty day: one schema-bearing part file, no tick. Shared by the
     * two timeout sessionizers (sq7 GroupStateTimeout, sq15 V2
     * timers). */
   private def stageWithFlushTick(s: SparkSession, dir: String, gapUs: Long): String = {
     val work = java.nio.file.Files.createTempDirectory("graft_flush_")
     work.toFile.deleteOnExit()
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.read(s, dir, "events")
     val maxRow = TsBridge.normalize(raw).agg(max(unix_micros(col("ts")))).head()
     val staged = if (maxRow.isNullAt(0)) raw.repartition(1) else raw
     staged.write.mode("append").parquet(work.toString)
@@ -1148,11 +1126,6 @@ object StreamOps {
       .orderBy("user_id", "sid")
   }
 
-  /** Batch events with proper timestamps (same conversion as the
-    * streaming source). */
-  def eventsBatch(s: SparkSession, dir: String): DataFrame =
-    TsBridge.normalize(s.read.parquet(s"$dir/events.parquet"))
-
   /** Run SQ1 over a directory INCREMENTALLY with a checkpoint: an
     * AvailableNow pass processes whatever files are new since the last
     * run, restores the aggregation state store, and (complete mode via
@@ -1161,8 +1134,7 @@ object StreamOps {
     * asserts it equals only the NEW data after a restart. */
   def sq1Incremental(s: SparkSession, srcDir: String, checkpoint: String,
       outDir: String): Long = {
-    val src = TsBridge.normalize(
-      s.readStream.schema(eventsSchema(tsTypeAt(s, srcDir))).parquet(srcDir))
+    val src = eventsStreamAt(s, srcDir)
     val q = sq1Plan(src)
       .writeStream
       .option("checkpointLocation", checkpoint)
@@ -1320,7 +1292,7 @@ object StreamOps {
       q.awaitTermination()
       recordStatePeak("sq14_foreach_sink", q)
     }
-    s.read.parquet(out).orderBy("event_type")
+    Tables.read(s, out).orderBy("event_type")
   }
 
   /** SQ14's DuckDB oracle: the batch aggregate the idempotent sink
@@ -1352,8 +1324,7 @@ object StreamOps {
         fs.conf.set("spark.sql.streaming.stateStore.rocksdb" +
           ".changelogCheckpointing.enabled", "true")
       import fs.implicits._
-      val typed = TsBridge.normalize(
-          fs.readStream.schema(eventsSchema(tsTypeAt(fs, srcDir))).parquet(srcDir))
+      val typed = eventsStreamAt(fs, srcDir)
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
         .as[Ev]
       val q = typed.groupByKey(_.user_id)
@@ -1441,8 +1412,7 @@ object StreamOps {
       fs.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import fs.implicits._
-      val typed = TsBridge.normalize(
-          fs.readStream.schema(eventsSchema(tsTypeAt(fs, work))).parquet(stageAsDir(work)))
+      val typed = eventsStreamAt(fs, work)
         .withWatermark("ts", "0 seconds")
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
           col("ts"))
@@ -1753,7 +1723,7 @@ object StreamOps {
     * self-diagnoses instead of presenting as a bare hash mismatch. */
   private def stageByMod3(s: SparkSession, dir: String, staged: String)
       : org.apache.spark.sql.types.StructType = {
-    val e = TsBridge.normalize(s.read.parquet(s"$dir/events.parquet"))
+    val e = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("ts"))
     (0 until 3).foreach { i =>
@@ -1913,7 +1883,7 @@ object StreamOps {
     def band(c: org.apache.spark.sql.Column) =
       least(floor(c / PsiBucketWidth), lit(PsiMaxBucket)).cast("int").as("band")
     withStreamShuffle(s) { fs =>
-      val baseline = TsBridge.normalize(fs.read.parquet(s"$dir/events.parquet"))
+      val baseline = Tables.events(fs, dir)
         .filter(col("event_id") % 2 === 0)
         .groupBy(col("event_type"), band(col("value")))
         .agg(count(lit(1)).as("cb"))
@@ -2099,8 +2069,7 @@ object StreamOps {
         T.minhashSigs(s, dir).filter(col("doc_id") % incrMod =!= 0))
         .select(col("band"), col("bh")).distinct()
       val stream = withInRowBands(
-        fs.readStream.schema(graft.model.SchemaDef.documentsType)
-          .parquet(stageAsDir(s"$dir/documents.parquet"))
+        parquetStream(fs, s"$dir/documents.parquet")
           .filter(col("doc_id") % incrMod === 0))
       val probed = (0 until T.Bands).foldLeft(stream) { (df, bnd) =>
         df.join(broadcast(hist.filter(col("band") === bnd)

@@ -6,10 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import scala.jdk.CollectionConverters._
 
-/** The measurement module — `Bench`'s core loop, clocks, classifier
-  * inputs, artifact and summary line, entry selection and pass-count
-  * parsing, and `ScaleSweep`'s declared skips — on one shared session
-  * built the way the measuring mains build theirs. */
+/** The measurement module — `Bench`'s core loop, clocks, cause
+  * classifier and its inputs, artifact and summary line, entry
+  * selection and pass-count parsing, and `ScaleSweep`'s declared
+  * skips — on one shared session built the way the measuring mains
+  * build theirs. */
 class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
@@ -238,5 +239,63 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(d.get("compiles").size == d.get("timed").size, e)
       assert(d.get("compiles").elements.asScala.forall(_.asLong >= 0), e)
     }
+  }
+
+  // -------------------------------------------- bench cause classes
+
+  private val base = Seq(1.0, 1.0, 1.0)
+
+  test("bench cause classifier: below the 1.5x-and-0.2s threshold is clean; " +
+    "no passes is none") {
+    assert(Bench.causeClass(Seq(1.0, 1.2, 1.4), Seq(1.0, 1.0, 1.0), Seq(1.0, 1.0, 1.0),
+      0.0, 10.0, 10.0, 10.0, 0) == "clean")
+    // ratio over 1.5 but absolute inflation under 0.2s: still clean
+    assert(Bench.causeClass(Seq(0.1, 0.25, 0.25), Seq(1.0, 1.0, 1.0), Seq(1.0, 1.0, 1.0),
+      99.0, 99.0, 99.0, 10.0, 9) == "clean")
+    assert(Bench.causeClass(Seq.empty, Seq.empty, Seq.empty, 0.0, 0.0, 0.0, 10.0, 0) == "none")
+  }
+
+  test("bench cause classifier: priority order — evicted, steal, starved, " +
+    "then the task-clock classes") {
+    val inflated = Seq(1.0, 3.0, 3.0) // min 1.0, median 3.0, inflation 4.0
+    // evictions during the timed window win over everything
+    assert(Bench.causeClass(inflated, base, base, 9.0, 99.0, 99.0, 10.0, 2) == "evicted")
+    // steal >= 25% of inflation
+    assert(Bench.causeClass(inflated, base, base, 1.5, 10.0, 10.0, 10.0, 0) == "steal")
+    // probe at >= 2x its run baseline
+    assert(Bench.causeClass(inflated, base, base, 0.0, 25.0, 10.0, 10.0, 0) == "starved")
+    // worst pass burned 1.5x the best pass's task CPU -> real work
+    assert(Bench.causeClass(inflated, Seq(1.0, 4.0, 4.0), Seq(1.0, 2.0, 2.0),
+      0.0, 10.0, 10.0, 10.0, 0) == "real-work")
+    // task RUN grew with CPU flat -> tasks sat descheduled
+    assert(Bench.causeClass(inflated, Seq(1.0, 4.0, 4.0), Seq(1.0, 1.1, 1.1),
+      0.0, 10.0, 10.0, 10.0, 0) == "descheduled")
+    // wall inflated, executors idle -> driver-side gap
+    assert(Bench.causeClass(inflated, base, base,
+      0.0, 10.0, 10.0, 10.0, 0) == "driver-gap")
+  }
+
+  test("bench cause classifier: missing telemetry degrades to driver-gap, " +
+    "not a crash (steal=-1 sentinel, zero probe baseline, short arrays)") {
+    val inflated = Seq(1.0, 3.0, 3.0)
+    assert(Bench.causeClass(inflated, Seq.empty, Seq.empty,
+      -1.0, 10.0, 10.0, 0.0, 0) == "driver-gap")
+  }
+
+  test("bench eviction clock: registration is remove-then-add idempotent " +
+    "and unpersist events accumulate") {
+    Bench.EvictionClock.register(spark.sparkContext)
+    Bench.EvictionClock.register(spark.sparkContext) // second register: no double-count
+    val (_, u0) = Bench.EvictionClock.snapshot()
+    val df = spark.range(1000).toDF("x").persist()
+    df.count()
+    df.unpersist(blocking = true)
+    val deadline = System.currentTimeMillis() + 15000
+    var snap = Bench.EvictionClock.snapshot()
+    while (snap._2 <= u0 && System.currentTimeMillis() < deadline) {
+      Thread.sleep(50); snap = Bench.EvictionClock.snapshot()
+    }
+    assert(snap._2 == u0 + 1,
+      s"one unpersist must count exactly once (got ${snap._2 - u0})")
   }
 }

@@ -10,8 +10,8 @@ import org.scalatest.BeforeAndAfterAll
 
 /** The per-document MinHash sketch: `DocSketch` against the exploded
   * formulation it replaced, the `minhash_sigs` artifact it builds, the
-  * near-dup answers verified from it, and the declared `documents`
-  * schema its build reads with. */
+  * near-dup answers verified from it, and the build that starts no
+  * job. */
 class DocSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val testdata = s"${sys.props("user.home")}/testdata"
@@ -77,8 +77,7 @@ class DocSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(
       edgeTexts.zipWithIndex.map { case (t, i) => Row(-1L - i, t) }.asJava,
-      org.apache.spark.sql.types.StructType(
-        graft.model.SchemaDef.documentsType.fields.take(2)))
+      graft.sources.Tables.schema(spark, s"$sf001/documents.parquet")(Set("doc_id", "text")))
   }
 
   test("DocSketch equals the exploded formulation on the sf0.01 corpus and edge rows, " +
@@ -153,13 +152,6 @@ class DocSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
       "sq22_stream_neardup_gate" -> ((100, "6ca1b3d4b7d16ee9895a795b0e0be4e5")))
     want.foreach { case (name, d) =>
       assert(digest(SparkEntry.queries(name)(spark, sf001)) == d, name)
-    }
-  }
-
-  test("the declared documents schema equals the footer's at sf0.01 and sf0.1") {
-    Seq(sf001, s"$testdata/sf0.1").foreach { d =>
-      assert(spark.read.parquet(s"$d/documents.parquet").schema ==
-        graft.model.SchemaDef.documentsType, d)
     }
   }
 

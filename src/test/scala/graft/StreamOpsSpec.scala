@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.Queries
+import graft.sources.Tables
 import graft.streaming.StreamOps
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -65,7 +66,7 @@ class StreamOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batchSet = batch.map(_.toSeq).toSet
     assert(streamed.subsetOf(batchSet), "every emitted session must be a q22 session")
     val lastSid = batch.groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).max)
-    val maxUs = StreamOps.eventsBatch(spark, dir)
+    val maxUs = Tables.events(spark, dir)
       .agg(max(unix_micros(col("ts")))).head().getLong(0)
     val withheld = batch.filter(r => !streamed.contains(r.toSeq))
     assert(withheld.nonEmpty, "the fixture's stream-end sessions cannot all have expired")
@@ -106,7 +107,7 @@ class StreamOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("SQ4 sliding-window streaming equals batch; every event in two windows") {
     val streamed = StreamOps.sq4StreamSliding(spark, dir).collect()
-    val batchEvents = StreamOps.eventsBatch(spark, dir)
+    val batchEvents = Tables.events(spark, dir)
     val batch = StreamOps.sq4Plan(batchEvents).orderBy("janela_ms", "event_type").collect()
     assert(streamed.sameElements(batch), "streaming sliding window must equal batch")
     // 1 h windows every 30 min: each event lands in exactly 2 windows
@@ -163,7 +164,7 @@ class StreamOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("SQ3 stream-stream interval join equals the batch interval join") {
     val streamed = StreamOps.sq3StreamJoin(spark, dir).collect()
-    val ev = StreamOps.eventsBatch(spark, dir)
+    val ev = Tables.events(spark, dir)
     val a = ev.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("cts"))
     val b = ev.filter(col("event_type") === "purchase")
@@ -193,7 +194,7 @@ class StreamOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // sketch admits
     val streamed = StreamOps.sq8Streamed(spark, dir)
       .orderBy("janela_ms").collect()
-    val batch = StreamOps.eventsBatch(spark, dir)
+    val batch = Tables.events(spark, dir)
       .groupBy(window(col("ts"), "1 hour").getField("start").as("janela"))
       .agg(count(lit(1)).as("n"),
         approx_count_distinct(col("user_id"), 0.01).as("approx_users"))
@@ -291,5 +292,22 @@ class StreamOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val second = StreamOps.sq2StreamDedup(spark, d).collect().toSeq
     assert(first.nonEmpty && second == first)
     assert(staged().size == 1, s"staging dirs: ${staged()}")
+  }
+
+  test("SPARK_GRAFT_STATESTORE / SPARK_GRAFT_ROCKSDB_CHANGELOG: unset means the default " +
+    "store and no changelog; an unknown value fails fast") {
+    assert(!StreamOps.parseStateStore(None))
+    assert(StreamOps.parseStateStore(Some(" RocksDB ")))
+    assert(!StreamOps.parseRocksdbChangelog(None))
+    Seq("true", "1", "TRUE").foreach(v => assert(StreamOps.parseRocksdbChangelog(Some(v)), v))
+    Seq("false", "0").foreach(v => assert(!StreamOps.parseRocksdbChangelog(Some(v)), v))
+    def failsNaming(name: String, v: String)(parse: Option[String] => Boolean): Unit = {
+      val e = intercept[IllegalArgumentException](parse(Some(v)))
+      assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+    Seq("hdfs", "rocks", "").foreach(v =>
+      failsNaming("SPARK_GRAFT_STATESTORE", v)(StreamOps.parseStateStore))
+    Seq("yes", "on", "2", "").foreach(v =>
+      failsNaming("SPARK_GRAFT_ROCKSDB_CHANGELOG", v)(StreamOps.parseRocksdbChangelog))
   }
 }
