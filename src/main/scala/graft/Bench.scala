@@ -810,13 +810,13 @@ object Bench {
       .filter(_ > 0).map(serdeMsgs / _).getOrElse(0.0)
     val core =
       s"""{"metric":"total","value":${jnum(mins.values.sum, 3)},"unit":"sec",""" +
-        s""""n":${mins.size},"queries":$top10,"sf":"$sfDir","cpus":$cpus,""" +
+        s""""n":${mins.size},"queries":$top10,"sf":${Json.str(sfDir)},"cpus":$cpus,""" +
         s""""avro_e2e_msgs_per_sec":${jnum(msgsAvro, 1)}"""
     // the 1 KB size IS the contract (front-truncating tail capture);
     // the artifact path is a convenience also printed on stderr — drop
     // it rather than let a long SPARK_GRAFT_BENCH_OUT path push the
     // guaranteed-to-fit last line past the budget (round-11 ADVICE)
-    val withPath = core + s""","full_artifact":"$artifactPath"}"""
+    val withPath = core + s""","full_artifact":${Json.str(artifactPath)}}"""
     if (withPath.length <= 1024) withPath else core + "}"
   }
 
@@ -941,7 +941,7 @@ object Bench {
         s""""evicted_blocks_total":${EvictionClock.snapshot()._1},""" +
         s""""pressure_evicted_total":${EvictionClock.pressureSnapshot()},""" +
         s""""unpersisted_rdds_total":${EvictionClock.snapshot()._2},""" +
-        s""""sf":"${ctx.sfDir}","cpus":${ctx.cpus},"serde_msgs":${ctx.serdeMsgs},""" +
+        s""""sf":${Json.str(ctx.sfDir)},"cpus":${ctx.cpus},"serde_msgs":${ctx.serdeMsgs},""" +
         s""""avro_e2e_msgs_per_sec":${num(msgsPerSecAvro, 1)}}"""
     val headline =
       s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$qs,""" +

@@ -798,8 +798,8 @@ object MultimodalOps {
   def q167ChunkManifest(s: SparkSession, dir: String): DataFrame =
     chunkManifestOf(Tables.read(s, MediaPath))
 
-  /** The manifest over any media frame (ScaleCheck drills the 10×
-    * generated table through the same composition). */
+  /** The manifest over any media frame (`graft.Scale` times a
+    * generated 10^i× table through the same composition at rung i). */
   private[graft] def chunkManifestOf(m: DataFrame): DataFrame = {
     val payloadLen = octet_length(col("content")) - HeaderLen
     m

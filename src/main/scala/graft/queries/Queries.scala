@@ -682,11 +682,15 @@ object Queries {
 
   /** Memoized z-ordered events layout per (session, dir): the corpus
     * written `partitionBy(zb)` where zb is the Morton code of the
-    * (user_id, value) grid cell, plus the grid bounds the bucket
-    * arithmetic needs at query time. Same lifecycle as the q50/q60
-    * layouts (signature-guarded, released when superseded). */
+    * (user_id, value) grid cell, its read-back DataFrame, and the grid
+    * bounds the bucket arithmetic needs at query time. Same lifecycle
+    * as the q50/q60 layouts (signature-guarded, released when
+    * superseded); the read-back is memoized as q60's is, because the
+    * layout has more directories than Spark lists in-process, so a
+    * fresh read of it starts a listing job on every build. */
   private val zorderedEvents =
-    new graft.operators.PlanCache[Option[(String, Long, Long, Double, Double)]]("zordered_events")(
+    new graft.operators.PlanCache[Option[(String, DataFrame, Long, Long, Double, Double)]](
+      "zordered_events")(
       (_, e) => e.foreach(x =>
         graft.operators.PlanCache.deleteRecursively(java.nio.file.Paths.get(x._1))),
       e => e.foreach(x =>
@@ -696,7 +700,7 @@ object Queries {
     * partitioned write would leave nothing to read back — an empty day
     * must short-circuit, not crash (empty-tables parity sweep). */
   private def ensureZordered(s: SparkSession, dir: String)
-      : Option[(String, Long, Long, Double, Double)] =
+      : Option[(String, DataFrame, Long, Long, Double, Double)] =
     zorderedEvents.get(s, dir, graft.sources.FsSig.of(s"$dir/events.parquet")) {
       val base = graft.operators.PlanCache.tempDir("graft_zorder_")
       val e = Tables.events(s, dir)
@@ -707,7 +711,7 @@ object Queries {
     }
 
   private def buildZordered(e: DataFrame, base: String,
-      b: org.apache.spark.sql.Row): Option[(String, Long, Long, Double, Double)] = {
+      b: org.apache.spark.sql.Row): Option[(String, DataFrame, Long, Long, Double, Double)] = {
       val (uMin, uMax) = (b.getLong(0), b.getLong(1))
       val (vMin, vMax) = (b.getDouble(2), b.getDouble(3))
       val cells = 1 << ZBits
@@ -725,7 +729,7 @@ object Queries {
       }
       e.withColumn("zb", zb.cast("int"))
         .write.partitionBy("zb").mode("overwrite").parquet(base)
-      Some((base, uMin, uMax, vMin, vMax))
+      Some((base, Tables.read(e.sparkSession, base), uMin, uMax, vMin, vMax))
     }
 
   /** Q76: Z-ORDER layout + 2-D pruned range scan — the multi-column
@@ -756,7 +760,7 @@ object Queries {
           (sum(round(col("value") * 100).cast("long")).cast("double") / 100.0)
             .as("tot_value"))
         .orderBy("event_type")
-    val (base, uMin, uMax, vMin, vMax) = built.get
+    val (_, layout, uMin, uMax, vMin, vMax) = built.get
     val cells = 1 << ZBits
     def ubOf(u: Long): Int =
       if (uMax == uMin) 0
@@ -771,8 +775,8 @@ object Queries {
         vb <- vbOf(math.max(ZLoV, vMin)) to vbOf(math.min(ZHiV, vMax))
       } yield morton(ub, vb)
     val pruned =
-      if (zbs.isEmpty) Tables.read(s, base).filter(lit(false))
-      else Tables.read(s, base).filter(col("zb").isin(zbs: _*))
+      if (zbs.isEmpty) layout.filter(lit(false))
+      else layout.filter(col("zb").isin(zbs: _*))
     pruned
       .filter(col("user_id").between(ZLoU, ZHiU) &&
         col("value").between(ZLoV, ZHiV))

@@ -214,17 +214,7 @@ object HttpSchemaRegistry {
     * control chars) — the schema is itself JSON, so quotes are
     * everywhere. */
   def registerBody(schemaJson: String): String =
-    "{\"schema\": \"" + escape(schemaJson) + "\"}"
-
-  private def escape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
+    "{\"schema\": " + graft.Json.str(schemaJson) + "}"
 
   /** Pull `id` out of a register response (`{"id": 7}`). */
   def idFromResponse(body: String): Int = {

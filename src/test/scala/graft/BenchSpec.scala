@@ -8,9 +8,8 @@ import scala.jdk.CollectionConverters._
 
 /** The measurement module — `Bench`'s core loop, clocks, cause
   * classifier and its inputs, artifact and summary line, entry
-  * selection and pass-count parsing, and `ScaleSweep`'s declared
-  * skips — on one shared session built the way the measuring mains
-  * build theirs. */
+  * selection and pass-count parsing — on one shared session built the
+  * way the measuring mains build theirs. */
 class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
@@ -64,6 +63,21 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(clipped.endsWith("}") && clipped.contains(""""n":301"""))
   }
 
+  test("a dir holding a quote or a backslash stays one JSON string: the " +
+    "bench summary line and a scale skip row parse and return the exact path") {
+    val dir = "/tmp/odd \"rung\" C:\\sf0.1\tx"
+    val json = new ObjectMapper()
+    val results = scala.collection.mutable.LinkedHashMap(
+      "q11_revenue_nation" -> Bench.Timing(1.0, Seq(0.5)))
+    val line = json.readTree(Bench.summaryLine(results, 0, dir, 4,
+      artifactPath = s"$dir/bench_out.json"))
+    assert(line.get("sf").asText == dir)
+    assert(line.get("full_artifact").asText == s"$dir/bench_out.json")
+    val row = json.readTree(Scale.skipRow("sq18_stream_join_chain", dir, "a \"why\""))
+    assert(row.get("dir").asText == dir && row.get("reason").asText == "a \"why\"")
+    assert(row.get("skipped").asBoolean)
+  }
+
   test("bench calibration probe: fixed work, sane wall time, not elided") {
     // JIT warm-up, then the probe must land in a plausible band — wide
     // enough for any box, tight enough to catch an elided loop (<0.1ms)
@@ -71,32 +85,6 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 3).foreach(_ => Bench.probeMs())
     val ms = (1 to 3).map(_ => Bench.probeMs())
     assert(ms.forall(m => m > 0.1 && m < 10000.0), s"probe out of band: $ms")
-  }
-
-  // -------------------------------------------------- sweep skip rows
-
-  test("sweep declared skips: sq18@1000x emits an explicit artifact row; " +
-    "reasons are JSON-safe and carry the measured attempts") {
-    val r = ScaleSweep.skipReason("sq18_stream_join_chain", "/tmp/graft_sf10")
-    assert(r.isDefined, "the sq18 1000x envelope declaration must be a skip ROW")
-    assert(r.get.contains("38 min") && r.get.contains("88 min"),
-      "a declared skip must cite its measured attempts, not just assert")
-    // the reason is interpolated into a JSON string literal unescaped —
-    // keep the registry free of characters that would break the line
-    ScaleSweep.DeclaredSkips.values.foreach { reason =>
-      assert(!reason.exists(c => c == '"' || c == '\\' || c == '\n'),
-        s"skip reason must be JSON-literal-safe: $reason")
-    }
-    // skips are rung-specific: the same op still RUNS below the envelope
-    assert(ScaleSweep.skipReason("sq18_stream_join_chain", "/tmp/graft_sf1").isEmpty)
-    assert(ScaleSweep.skipReason("sq3_stream_join", "/tmp/graft_sf10").isEmpty)
-    // round-13 ADVICE: the match is basename-EXACT — a hypothetical
-    // graft_sf100 rung (or any path merely containing the substring)
-    // must not inherit the graft_sf10 skip; a trailing slash is inert
-    assert(ScaleSweep.skipReason("sq18_stream_join_chain", "/tmp/graft_sf100").isEmpty)
-    assert(ScaleSweep.skipReason("sq18_stream_join_chain",
-      "/tmp/other_graft_sf10_copy").isEmpty)
-    assert(ScaleSweep.skipReason("sq18_stream_join_chain", "/tmp/graft_sf10/").isDefined)
   }
 
   // ------------------------------------------------- bench task clock
@@ -282,6 +270,30 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
       -1.0, 10.0, 10.0, 0.0, 0) == "driver-gap")
   }
 
+  private val rebuildInflated = Seq(1.0, 4.0, 4.0)
+
+  test("causeClass: a measured artifact rebuild covering the inflation " +
+    "labels 'rebuild' and outranks steal/starved") {
+    assert(Bench.causeClass(rebuildInflated, base, base, 9.0, 99.0, 99.0, 10.0, 0,
+      rebuildSecTimed = 3.0) == "rebuild")
+  }
+
+  test("causeClass: pressure evictions still outrank rebuild; zero " +
+    "pressure (explicit unpersists only) falls through to rebuild") {
+    assert(Bench.causeClass(rebuildInflated, base, base, 9.0, 99.0, 99.0, 10.0, 2,
+      rebuildSecTimed = 3.0) == "evicted")
+    assert(Bench.causeClass(rebuildInflated, base, base, 0.0, 10.0, 10.0, 10.0, 0,
+      rebuildSecTimed = 3.0) == "rebuild")
+  }
+
+  test("causeClass: a sub-0.1s rebuild cannot claim a multi-second " +
+    "inflation (falls through to the next cause)") {
+    assert(Bench.causeClass(rebuildInflated, base, base, 9.0, 10.0, 10.0, 10.0, 0,
+      rebuildSecTimed = 0.05) == "steal")
+  }
+
+  // ------------------------------------- eviction clock and artifacts
+
   test("bench eviction clock: registration is remove-then-add idempotent " +
     "and unpersist events accumulate") {
     Bench.EvictionClock.register(spark.sparkContext)
@@ -297,5 +309,44 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(snap._2 == u0 + 1,
       s"one unpersist must count exactly once (got ${snap._2 - u0})")
+  }
+
+  test("EvictionClock: block drops of an explicitly-unpersisted RDD " +
+    "count as dropped but NOT as pressure; drops of other RDDs do " +
+    "(round-14 ADVICE — driven by synthetic listener events, since " +
+    "local-mode removeRdd posts no BlockUpdated)") {
+    import org.apache.spark.scheduler.SparkListenerUnpersistRDD
+    def dropEvt(rddId: Int) = org.apache.spark.graft.TestEventBridge.rddDrop(rddId)
+    val d0 = Bench.EvictionClock.snapshot()._1
+    val p0 = Bench.EvictionClock.pressureSnapshot()
+    // RDD 990042 is explicitly unpersisted FIRST (the bus order the
+    // scaladoc relies on), then its block drops arrive: housekeeping
+    Bench.EvictionClock.onUnpersistRDD(SparkListenerUnpersistRDD(990042))
+    Bench.EvictionClock.onBlockUpdated(dropEvt(990042))
+    assert(Bench.EvictionClock.snapshot()._1 == d0 + 1,
+      "an unpersist-attributable drop still counts as dropped")
+    assert(Bench.EvictionClock.pressureSnapshot() == p0,
+      "an explicitly-unpersisted RDD's drops must not count as pressure")
+    // RDD 990043 was never unpersisted: its drop IS memory pressure
+    Bench.EvictionClock.onBlockUpdated(dropEvt(990043))
+    assert(Bench.EvictionClock.snapshot()._1 == d0 + 2)
+    assert(Bench.EvictionClock.pressureSnapshot() == p0 + 1,
+      "a pressure drop must count")
+  }
+
+  test("Bench.artifactDelta: only active caches appear; caches first " +
+    "registered inside the window read against zero") {
+    val before = Map("a" -> ((2L, 1L, 0.5, 0L)), "idle" -> ((7L, 3L, 1.0, 2L)),
+      "pub" -> ((0L, 0L, 0.0, 1L)))
+    val after = Map("a" -> ((4L, 2L, 0.9, 0L)), "idle" -> ((7L, 3L, 1.0, 2L)),
+      "born" -> ((0L, 1L, 0.3, 0L)), "pub" -> ((0L, 0L, 0.0, 2L)))
+    val ds = Bench.artifactDelta(before, after)
+    assert(ds.map(_.name) == Seq("a", "born", "pub"))
+    val a = ds.find(_.name == "a").get
+    assert(a.built == 1 && a.hit == 2 && math.abs(a.buildSec - 0.4) < 1e-9)
+    val born = ds.find(_.name == "born").get
+    assert(born.built == 1 && born.hit == 0 && born.buildSec == 0.3)
+    assert(ds.find(_.name == "pub").get.published == 1,
+      "a producer-rule publish must mark the entry that stored it")
   }
 }

@@ -157,4 +157,31 @@ class PlanCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     PlanCache.deleteRecursively(java.nio.file.Paths.get(d))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(d)))
   }
+
+  test("PlanCache: get() misses accumulate measured build seconds; " +
+    "hits do not; the registry snapshot exposes all three counters") {
+    val c = new graft.operators.PlanCache[String]("r15_test_cache")((_, _) => ())
+    assert(c.buildSec == 0.0)
+    c.get(spark, "k", 1L) { Thread.sleep(60); "v" }
+    val afterBuild = c.buildSec
+    assert(afterBuild >= 0.05, s"build sleep must be measured: $afterBuild")
+    c.get(spark, "k", 1L) { fail("hit must not rebuild"); "x" }
+    assert(c.buildSec == afterBuild, "a hit must not add build time")
+    val snap = graft.operators.PlanCache.allStats
+    assert(snap.contains("r15_test_cache"))
+    val (h, m, b, p) = snap("r15_test_cache")
+    assert(h == 1 && m == 1 && b == afterBuild && p == 0)
+    // a stored publish counts; a same-sig republish does not
+    c.put(spark, "k2", 5L, "v2")
+    c.put(spark, "k2", 5L, "v2")
+    assert(graft.operators.PlanCache.allStats("r15_test_cache")._4 == 1)
+  }
+
+  test("PlanCache registry: production cache names are unique (the " +
+    "allStats keying contract)") {
+    val names = graft.operators.PlanCache.registeredNames
+      .filterNot(_.startsWith("r15_test"))
+    assert(names.distinct.size == names.size,
+      s"duplicate cache names would shadow in allStats: $names")
+  }
 }

@@ -265,7 +265,7 @@ class Round13Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!phys.contains("ScalaUDF") && !phys.contains("BatchEvalPython"),
       "no opaque UDF node may survive inlining")
     // identical distributed shape: same exchange inventory
-    assert(ScaleSweep.exchangeCounts(udf) == ScaleSweep.exchangeCounts(twin),
+    assert(Scale.exchangeCounts(udf) == Scale.exchangeCounts(twin),
       "a SQL UDF must not add an exchange over the inline twin")
     assert(udf.collect().toSeq == twin.collect().toSeq)
   }

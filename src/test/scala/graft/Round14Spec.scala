@@ -285,7 +285,7 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
          |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS soma
          |FROM $scoped WHERE value >= ${graft.queries.SqlSurfaceOps.ExecImmMinValue}
          |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    assert(ScaleSweep.exchangeCounts(dyn) == ScaleSweep.exchangeCounts(lit),
+    assert(Scale.exchangeCounts(dyn) == Scale.exchangeCounts(lit),
       "dynamic SQL must not add an exchange over the literal twin")
     assert(dyn.collect().toSeq == lit.collect().toSeq)
   }

@@ -5,11 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Engine-side invariants for the round-15 batch (round-14 verdict
-  * items 1/2/5/6/7 + ADVICE):
-  *  - per-entry artifact-cache attribution (PlanCache build-seconds
-  *    counter, registry snapshot deltas, the "rebuild" cause class);
-  *  - eviction pressure split (explicit unpersists no longer satisfy
-  *    the "evicted" classifier);
+  * items 1/2/5/6/7 + ADVICE; the artifact-cache attribution and
+  * eviction-pressure specs live with their modules, in PlanCacheSpec
+  * and BenchSpec):
   *  - q239 incremental IVF add-batch (frozen-codebook reuse — no
   *    Lloyd re-run — plus the row-level balance algebra);
   *  - q237 size-gated surface dispatch (both arms produce identical
@@ -29,99 +27,6 @@ class Round15Spec extends AnyFunSuite with BeforeAndAfterAll {
   private def codebookStats: (Long, Long) = {
     val cs = Seq(graft.llmops.VectorOps.codesCache, graft.llmops.VectorOps.codebookCache)
     (cs.map(_.hits).sum, cs.map(_.misses).sum)
-  }
-
-  // ------------------------------ PlanCache build-seconds + registry
-
-  test("PlanCache: get() misses accumulate measured build seconds; " +
-    "hits do not; the registry snapshot exposes all three counters") {
-    val c = new graft.operators.PlanCache[String]("r15_test_cache")((_, _) => ())
-    assert(c.buildSec == 0.0)
-    c.get(spark, "k", 1L) { Thread.sleep(60); "v" }
-    val afterBuild = c.buildSec
-    assert(afterBuild >= 0.05, s"build sleep must be measured: $afterBuild")
-    c.get(spark, "k", 1L) { fail("hit must not rebuild"); "x" }
-    assert(c.buildSec == afterBuild, "a hit must not add build time")
-    val snap = graft.operators.PlanCache.allStats
-    assert(snap.contains("r15_test_cache"))
-    val (h, m, b, p) = snap("r15_test_cache")
-    assert(h == 1 && m == 1 && b == afterBuild && p == 0)
-    // a stored publish counts; a same-sig republish does not
-    c.put(spark, "k2", 5L, "v2")
-    c.put(spark, "k2", 5L, "v2")
-    assert(graft.operators.PlanCache.allStats("r15_test_cache")._4 == 1)
-  }
-
-  test("PlanCache registry: production cache names are unique (the " +
-    "allStats keying contract)") {
-    val names = graft.operators.PlanCache.registeredNames
-      .filterNot(_.startsWith("r15_test"))
-    assert(names.distinct.size == names.size,
-      s"duplicate cache names would shadow in allStats: $names")
-  }
-
-  test("Bench.artifactDelta: only active caches appear; caches first " +
-    "registered inside the window read against zero") {
-    val before = Map("a" -> ((2L, 1L, 0.5, 0L)), "idle" -> ((7L, 3L, 1.0, 2L)),
-      "pub" -> ((0L, 0L, 0.0, 1L)))
-    val after = Map("a" -> ((4L, 2L, 0.9, 0L)), "idle" -> ((7L, 3L, 1.0, 2L)),
-      "born" -> ((0L, 1L, 0.3, 0L)), "pub" -> ((0L, 0L, 0.0, 2L)))
-    val ds = Bench.artifactDelta(before, after)
-    assert(ds.map(_.name) == Seq("a", "born", "pub"))
-    val a = ds.find(_.name == "a").get
-    assert(a.built == 1 && a.hit == 2 && math.abs(a.buildSec - 0.4) < 1e-9)
-    val born = ds.find(_.name == "born").get
-    assert(born.built == 1 && born.hit == 0 && born.buildSec == 0.3)
-    assert(ds.find(_.name == "pub").get.published == 1,
-      "a producer-rule publish must mark the entry that stored it")
-  }
-
-  // ------------------------------------------- cause classifier v3
-
-  private val base = Seq(1.0, 1.0, 1.0)
-  private val inflated = Seq(1.0, 4.0, 4.0)
-
-  test("causeClass: a measured artifact rebuild covering the inflation " +
-    "labels 'rebuild' and outranks steal/starved") {
-    assert(Bench.causeClass(inflated, base, base, 9.0, 99.0, 99.0, 10.0, 0,
-      rebuildSecTimed = 3.0) == "rebuild")
-  }
-
-  test("causeClass: pressure evictions still outrank rebuild; zero " +
-    "pressure (explicit unpersists only) falls through to rebuild") {
-    assert(Bench.causeClass(inflated, base, base, 9.0, 99.0, 99.0, 10.0, 2,
-      rebuildSecTimed = 3.0) == "evicted")
-    assert(Bench.causeClass(inflated, base, base, 0.0, 10.0, 10.0, 10.0, 0,
-      rebuildSecTimed = 3.0) == "rebuild")
-  }
-
-  test("causeClass: a sub-0.1s rebuild cannot claim a multi-second " +
-    "inflation (falls through to the next cause)") {
-    assert(Bench.causeClass(inflated, base, base, 9.0, 10.0, 10.0, 10.0, 0,
-      rebuildSecTimed = 0.05) == "steal")
-  }
-
-  test("EvictionClock: block drops of an explicitly-unpersisted RDD " +
-    "count as dropped but NOT as pressure; drops of other RDDs do " +
-    "(round-14 ADVICE — driven by synthetic listener events, since " +
-    "local-mode removeRdd posts no BlockUpdated)") {
-    import org.apache.spark.scheduler.SparkListenerUnpersistRDD
-    def dropEvt(rddId: Int) = org.apache.spark.graft.TestEventBridge.rddDrop(rddId)
-    val d0 = Bench.EvictionClock.snapshot()._1
-    val p0 = Bench.EvictionClock.pressureSnapshot()
-    // RDD 990042 is explicitly unpersisted FIRST (the bus order the
-    // scaladoc relies on), then its block drops arrive: housekeeping
-    Bench.EvictionClock.onUnpersistRDD(SparkListenerUnpersistRDD(990042))
-    Bench.EvictionClock.onBlockUpdated(dropEvt(990042))
-    assert(Bench.EvictionClock.snapshot()._1 == d0 + 1,
-      "an unpersist-attributable drop still counts as dropped")
-    assert(Bench.EvictionClock.pressureSnapshot() == p0,
-      "an explicitly-unpersisted RDD's drops must not count as pressure")
-    // RDD 990043 was never unpersisted: its drop IS memory pressure
-    Bench.EvictionClock.onBlockUpdated(dropEvt(990043))
-    assert(Bench.EvictionClock.snapshot()._1 == d0 + 2)
-    assert(Bench.EvictionClock.pressureSnapshot() == p0 + 1,
-      "a pressure drop must count")
   }
 
   // ------------------------------------- q239 incremental IVF add

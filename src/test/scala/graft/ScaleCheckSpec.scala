@@ -4,12 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import scala.jdk.CollectionConverters._
 
-/** Pins the scale-validation corpus construction (PERF.md §3): the
-  * drill is only meaningful if the scaled corpus actually exhibits the
-  * HOT-SHINGLE adversarial regime, so the properties the round-6
-  * numbers were measured under are asserted here — a silent change to
-  * the salting would otherwise turn future drills into soft tests. */
+/** Pins the scale instrument ([[Scale]]). First its corpus construction
+  * (PERF.md §3): the ladder is only meaningful if a materialized rung
+  * actually exhibits the HOT-SHINGLE adversarial regime, so the
+  * properties the round-6 numbers were measured under are asserted here
+  * — a silent change to the salting would otherwise turn future drills
+  * into soft tests. Then its op table, declared skips, ladder checks and
+  * runner. */
 class ScaleCheckSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -44,7 +47,7 @@ class ScaleCheckSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq((10L, "cust10", 1, 5.0, "SEG")).toDF(
       "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.parquet(s"$base/customer.parquet")
-    ScaleCheck.materialize(spark, base, out)
+    Scale.materialize(spark, base, out)
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
@@ -62,8 +65,8 @@ class ScaleCheckSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("salting produces the hot-shingle regime: (salt, word, salt) trigram df tracks word df") {
     val docs = spark.read.parquet(s"$out/documents.parquet")
-    // copy 0 of the base docs: tokens interleaved with salt0
-    val copy0 = docs.filter(col("doc_id") <= 3)
+    // copy 0 of the base docs (ids id*10 + 0): tokens interleaved with salt0
+    val copy0 = docs.filter(col("doc_id") % 10 === 0)
     val toks = copy0.select(col("doc_id"),
       split(col("text"), "\\s+").as("w"))
     // every INTERIOR token is flanked by the salt, so the trigram
@@ -102,11 +105,12 @@ class ScaleCheckSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(salts == (0 until 10).map(c => s"salt$c").toSet)
   }
 
-  test("ScaleSweep.materializeLevel: digit-append ids stay distinct at depth, salt families disjoint") {
+  test("Scale.materialize at level 2: digit-append ids stay distinct at depth, salt families disjoint") {
     val lvl = java.nio.file.Files.createTempDirectory("graft_sclvl_").toString
     // chain on top of the already-materialized 10x dir — the depth
-    // case ScaleCheck's additive offsets cannot survive
-    ScaleSweep.materializeLevel(spark, out, lvl)
+    // case additive id offsets cannot survive
+    Scale.materialize(spark, out, lvl)
+    assert(Scale.levelOf(base) == 0 && Scale.levelOf(out) == 1 && Scale.levelOf(lvl) == 2)
     val docs = spark.read.parquet(s"$lvl/documents.parquet")
     assert(docs.count() == 300, "10x the 30-doc level-1 corpus")
     assert(docs.select("doc_id").distinct().count() == 300,
@@ -125,19 +129,117 @@ class ScaleCheckSpec extends AnyFunSuite with BeforeAndAfterAll {
       "user ids unchanged — the hot-key/bounded-state regime compounds")
   }
 
-  test("ScaleSweep.exchangeCounts separates shuffle from broadcast exchanges") {
+  test("Scale.exchangeCounts separates shuffle from broadcast exchanges") {
     val docs = spark.read.parquet(s"$base/documents.parquet")
     // one groupBy = one shuffle exchange, zero broadcasts
-    val (s1, b1) = ScaleSweep.exchangeCounts(
+    val (s1, b1) = Scale.exchangeCounts(
       docs.groupBy("source").agg(count(lit(1))))
     assert(s1 == 1 && b1 == 0, s"groupBy counted ($s1, $b1)")
     // a broadcast-hinted join adds exactly one broadcast exchange and
     // no shuffle for the joined side
     val dims = docs.select(col("source")).distinct()
-    val (s2, b2) = ScaleSweep.exchangeCounts(
+    val (s2, b2) = Scale.exchangeCounts(
       docs.join(broadcast(dims), Seq("source")).groupBy("lang")
         .agg(count(lit(1))))
     assert(b2 == 1, s"broadcast join counted ($s2, $b2)")
     assert(s2 >= 1 && s2 <= 2, s"distinct+agg shuffles counted ($s2, $b2)")
+  }
+
+  // ------------------------------------------------ op table and skips
+
+  test("sweep declared skips: sq18@1000x emits an explicit artifact row; " +
+    "reasons are JSON-safe and carry the measured attempts") {
+    val r = Scale.skipReason("sq18_stream_join_chain", "/tmp/graft_sf10")
+    assert(r.isDefined, "the sq18 1000x envelope declaration must be a skip ROW")
+    assert(r.get.contains("38 min") && r.get.contains("88 min"),
+      "a declared skip must cite its measured attempts, not just assert")
+    // keep the registry free of characters that would need escaping in
+    // the row's JSON string literal
+    Scale.Table.collect { case (_, Scale.Skip(_, reason)) => reason }.foreach { reason =>
+      assert(!reason.exists(c => c == '"' || c == '\\' || c == '\n'),
+        s"skip reason must be JSON-literal-safe: $reason")
+    }
+    // skips are rung-specific: the same op still RUNS below the envelope
+    assert(Scale.skipReason("sq18_stream_join_chain", "/tmp/graft_sf1").isEmpty)
+    assert(Scale.skipReason("sq3_stream_join", "/tmp/graft_sf10").isEmpty)
+    // round-13 ADVICE: the match is basename-EXACT — a hypothetical
+    // graft_sf100 rung (or any path merely containing the substring)
+    // must not inherit the graft_sf10 skip; a trailing slash is inert
+    assert(Scale.skipReason("sq18_stream_join_chain", "/tmp/graft_sf100").isEmpty)
+    assert(Scale.skipReason("sq18_stream_join_chain",
+      "/tmp/other_graft_sf10_copy").isEmpty)
+    assert(Scale.skipReason("sq18_stream_join_chain", "/tmp/graft_sf10/").isDefined)
+  }
+
+  test("op table: 140 distinct default ops, every one a declared entry; " +
+    "ops left out by reason and skip rows stay out of the default run") {
+    val ops = Scale.DefaultOps
+    val declared = SparkEntry.defs.map(_.name).toSet
+    assert(ops.size == 140 && ops.distinct.size == 140, ops.size)
+    assert(Scale.Table.map(_._1).distinct.size == Scale.Table.size, "one row per op")
+    assert(Scale.Table.map(_._1).filterNot(declared).isEmpty)
+    Seq("q192_margin_align", "q198_ann_rank_eval", "sq18_stream_join_chain",
+      "q243_exact_topk_blocked", "q227_split_survivors").foreach { op =>
+      assert(!ops.contains(op), op)
+    }
+    assert(Scale.treatment("q138_prefix_jaccard") == Scale.OutputBound)
+    assert(Seq("q105_image_phash", "q167_chunk_manifest")
+      .forall(op => Scale.treatment(op).isInstanceOf[Scale.Media]))
+    assert(Scale.treatment("q11_revenue_nation") == Scale.Timed, "an unlisted op is timed")
+  }
+
+  // ------------------------------------------------------- the ladder
+
+  test("SPARK_GRAFT_SWEEP_DIRS: fewer than 2 rungs, a repeated rung or a " +
+    "missing first rung fails naming the variable and its value") {
+    Seq(s" $base , ", s"$base,$out,$base/", s"$base/missing,$out").foreach { v =>
+      val e = intercept[IllegalArgumentException](Scale.ladder(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_SWEEP_DIRS") &&
+        e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+    // trimmed, blanks dropped; a rung above the first may not exist yet
+    assert(Scale.ladder(Some(s" $base ,, $out/next ")) == Seq(base, s"$out/next"))
+  }
+
+  test("runner: one row per (op, rung), growth on the second rung, the " +
+    "declared skip row, and nothing written under the first rung") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ladder_")
+    val rung0 = root.resolve("sf0.001")
+    java.nio.file.Files.createDirectories(rung0)
+    new java.io.File(s"${sys.props("user.home")}/testdata/sf0.001").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.copy(f.toPath, rung0.resolve(f.getName)))
+    // the declared skips sit at the graft_sf10 rung
+    val rung1 = root.resolve("graft_sf10").toString
+    def files(): Map[String, (Long, Long)] = {
+      val w = java.nio.file.Files.walk(rung0)
+      try w.iterator().asScala.map(p => p.toString -> ((p.toFile.length, p.toFile.lastModified))).toMap
+      finally w.close()
+    }
+    val before = files()
+    val ops = Seq("q95_pii_redact", "q121_table_checksum", "q243_exact_topk_blocked")
+    val lines = Scale.run(spark, Seq(rung0.toString, rung1), ops, passes = 1)
+    assert(files() == before, "the first rung must not be written")
+    assert(Scale.levelOf(rung1) == 1)
+
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val rows = lines.map(json.readTree).filter(_.has("op"))
+    assert(rows.map(r => (r.get("op").asText, r.get("dir").asText)) ==
+      ops.flatMap(op => Seq(op -> rung0.toString, op -> rung1)), "one row per (op, rung)")
+    rows.foreach { r =>
+      val (op, dir) = (r.get("op").asText, r.get("dir").asText)
+      if (op == "q243_exact_topk_blocked" && dir == rung1) {
+        assert(r.get("skipped").asBoolean && r.get("reason").asText.contains("551 s"))
+        assert(!r.has("min"))
+      } else {
+        assert(r.get("min").asDouble >= 0 && r.has("shuffle_exchanges") &&
+          r.has("broadcast_exchanges"), r)
+        assert(r.has("growth") == (dir == rung1), r)
+      }
+    }
+    val docs = lines.map(json.readTree).filter(_.has("documents"))
+    assert(docs.map(_.get("documents").asLong) == Seq(docs.head.get("documents").asLong,
+      10 * docs.head.get("documents").asLong))
+    assert(json.readTree(lines.last).get("entries").asInt == 6)
   }
 }

@@ -56,7 +56,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("the footer schema equals the inferred one on tables Spark writes: a " +
     "ScaleCheck rung, multi-file and partitioned directories, non-nullable columns, metadata") {
     val rung = graft.operators.PlanCache.tempDir("graft_tables_rung_")
-    ScaleCheck.materialize(spark, s"$testdata/sf0.001", rung)
+    Scale.materialize(spark, s"$testdata/sf0.001", rung)
     val rungTables = tablesIn(rung)
     assert(rungTables.size == 10, rungTables)
     rungTables.foreach(assertInferred(_))
@@ -112,5 +112,20 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"$name: ${Bench.TaskClock.counts().jobs - before} jobs while building")
       assert(df.columns.nonEmpty, name)
     }
+  }
+
+  test("a second build of q76 at sf0.1 starts no Spark job: the z-order " +
+    "layout's read-back is memoized with the layout") {
+    val sc = spark.sparkContext
+    Bench.TaskClock.register(sc)
+    val q76 = SparkEntry.queries("q76_zorder_pruned")
+    q76(spark, s"$testdata/sf0.1") // the first build writes the layout
+    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+    val before = Bench.TaskClock.counts().jobs
+    val df = q76(spark, s"$testdata/sf0.1")
+    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+    assert(Bench.TaskClock.counts().jobs == before,
+      s"${Bench.TaskClock.counts().jobs - before} jobs while building q76 again")
+    assert(df.columns.nonEmpty)
   }
 }

@@ -29,7 +29,7 @@ def main(out_dir, sf_dir):
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             # driver testdata tables are single files; Spark-written
-            # fixtures (ScaleCheck/ScaleSweep dirs) are directories
+            # fixtures (graft.Scale rungs) are directories
             src = f"{p}/*.parquet" if os.path.isdir(p) else p
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
